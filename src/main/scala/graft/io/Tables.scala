@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Readers for the harness parquet tables (TESTDATA.md) plus the
@@ -81,18 +81,6 @@ object Tables {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
 
-  /** K3 — batch append sink. The reference inserts row-by-row, one
-    * transaction each (postgres_loader.py:293-326); the Spark-native
-    * equivalent is a partitioned batch append with JDBC batching. */
-  def writeJdbc(df: DataFrame, url: String, table: String,
-                props: java.util.Properties, batchSize: Int = 10000): Unit =
-    Jdbc.append(df, url, table, props, batchSize)
-
-  /** S9 — JDBC full-table scan (sql_extraction.py:38-82). */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-               props: java.util.Properties): DataFrame =
-    Jdbc.readTable(spark, url, table, props)
-
   /** File-level storage audit of a written dataset — the compaction /
     * clustering QA tool: one row per partition directory with row
     * count, file count, and the key range its files cover. Small-file
@@ -149,91 +137,123 @@ object Tables {
     * table whose lineage reads the table itself (merged sketch
     * registers, centroid sums): the merged frame is fully written to a
     * sibling temp dir FIRST — reading the live table as input, so
-    * there is no read-while-overwrite — then published with two
-    * filesystem renames. A crash before the publish leaves the OLD
+    * there is no read-while-overwrite — then published by
+    * [[renamePublish]]. A crash before the publish leaves the OLD
     * table intact and valid; a crash inside the (metadata-only)
     * rename window leaves the table MISSING, which fails loudly on
     * the next read instead of silently serving a stale or torn
     * generation. Recovery for either residue: re-run the merge for
     * the batch and delete orphan `__next`/`__old` dirs.
     *
-    * SINGLE-WRITER contract — ENFORCED since r15, no longer just
-    * documented: every store-maintenance path (IVF/PQ appends, the
-    * HLL profile) runs its whole read-merge-publish window under
-    * [[withStoreLock]], and each published generation carries a
-    * `_GEN-<n>` marker (underscore-prefixed — invisible to parquet
-    * readers). `expectedGen` is the CAS: a publisher that read the
-    * store at generation g passes g, and the publish FAILS LOUDLY if
-    * the store moved past g since — the lost-update mode (two
-    * concurrent swappers each merging the same base, second publish
-    * silently dropping the first's contribution) now either
-    * serializes (lock) or raises (CAS), never silently wins. */
+    * Each published generation carries a `_GEN-<n>` marker
+    * (underscore-prefixed — invisible to parquet readers).
+    * `expectedGen` is the CAS: a publisher that read the store at
+    * generation g passes g, and the publish FAILS LOUDLY if the store
+    * moved past g since — two concurrent swappers each merging the
+    * same base either serialize (every merge runs inside
+    * [[readMergePublish]], under [[withStoreLock]]) or raise, and the
+    * second never silently drops the first's contribution.
+    *
+    * `ledger` is the applied-tag ledger: its lines publish INSIDE the
+    * swapped dir, so "data merged" and "batch recorded as applied"
+    * land in the SAME atomic rename. That is what lets a sum-monoid
+    * store (where replayed merges double-count, unlike HLL's
+    * idempotent max) offer exactly-once appends with no separate
+    * commit log: a crash leaves either the old generation (tag absent
+    * → safe to re-run) or the new one (tag present → the re-run
+    * short-circuits), never data without its tag. */
   def swapInParquet(spark: SparkSession, df: DataFrame,
                     dest: String, expectedGen: Long = -1L,
-                    markers: Seq[String] = Nil,
-                    ledger: Seq[String] = Nil): Unit = {
+                    ledger: Seq[String] = Nil): Unit =
+    renamePublish(spark, dest, df.write.mode("overwrite")) { next =>
+      val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // ONE small file per publish (a file per batch would grow the
+      // listing forever), bounded to the most recent MaxAppliedLedger
+      // lines: replays come from at-least-once retries of RECENT
+      // batches (structured-streaming checkpoints advance
+      // monotonically, so the replay window is the last uncommitted
+      // batch), never from antiquity — the truncation is documented
+      // contract, not loss.
+      if (ledger.nonEmpty) {
+        // The header line records the CUMULATIVE applied-batch count so
+        // a wrapped ledger (total > retained lines) is DETECTABLE: a
+        // tag-checked append against a wrapped store cannot prove a
+        // very old tag (e.g. a streaming checkpoint restored from an
+        // ancient backup) was not already applied — see
+        // [[storeLedgerWrapped]].
+        val distinctLedger = ledger.distinct
+        val (priorRetained, priorTotal) = storeLedgerCounts(spark, dest)
+        val total = math.max(priorTotal, priorRetained.toLong) +
+          math.max(0, distinctLedger.size - priorRetained)
+        val out = fs.create(new org.apache.hadoop.fs.Path(next, AppliedLedgerFile), true)
+        out.write((s"#TOTAL-$total\n" +
+          distinctLedger.takeRight(MaxAppliedLedger).mkString("", "\n", "\n"))
+          .getBytes("UTF-8"))
+        out.close()
+      }
+      val gen = storeGeneration(spark, dest)
+      if (expectedGen >= 0L && gen != expectedGen) {
+        fs.delete(next, true)
+        throw new java.io.IOException(
+          s"swapInParquet: $dest is at generation $gen but this publish " +
+            s"merged against generation $expectedGen — a concurrent writer " +
+            "advanced the store since it was read (single-writer contract; " +
+            "re-run the merge against the current generation)")
+      }
+      fs.create(new org.apache.hadoop.fs.Path(next, s"_GEN-${gen + 1L}"),
+        true).close()
+    }
+
+  /** The one read-merge-publish window every mergeable store commits
+    * through — the protocol that makes incremental stores exactly-once
+    * under at-least-once replay. Under the store's lock
+    * ([[withStoreLock]]): a `batchTag` already in the applied ledger
+    * returns before any side effect; otherwise `merge` runs, given the
+    * store's current generation (`None` when the store does not exist
+    * yet, so a create-or-merge caller picks its create face), and the
+    * frame it returns publishes through [[swapInParquet]] with that
+    * generation as the CAS and the tag appended to the ledger. `merge`
+    * may write sibling stores before it returns (staged code files,
+    * graph edges); those writes must converge when a crashed window is
+    * re-run, because the tag only commits with the publish. */
+  def readMergePublish(spark: SparkSession, dest: String,
+                       batchTag: Option[String] = None)(
+      merge: Option[Long] => DataFrame): Unit =
+    withStoreLock(spark, dest) {
+      val applied = storeAppliedLedger(spark, dest)
+      val tagLine = batchTag.map(appliedLedgerLine)
+      if (!tagLine.exists(applied.contains)) {
+        warnIfLedgerWrapped(spark, dest, tagLine)
+        val destPath = new org.apache.hadoop.fs.Path(dest)
+        val exists = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(destPath)
+        val gen = storeGeneration(spark, dest)
+        swapInParquet(spark, merge(if (exists) Some(gen) else None), dest,
+          gen, ledger = applied ++ tagLine)
+      }
+    }
+
+  /** The two-rename publish shared by every whole-store rewrite
+    * ([[swapInParquet]], the compactions): `writer` writes the new
+    * content to a sibling `__next_*` dir, `stamp` adds bookkeeping
+    * files to it (or deletes it and throws to abort), then the live dir
+    * moves aside to `__old_*` and `__next_*` renames into place. A
+    * failed publish rename restores the previous generation. */
+  private def renamePublish(spark: SparkSession, dest: String,
+                            writer: DataFrameWriter[Row])(
+      stamp: org.apache.hadoop.fs.Path => Unit): Unit = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val next = new org.apache.hadoop.fs.Path(s"${dest}__next_$tag")
     val old = new org.apache.hadoop.fs.Path(s"${dest}__old_$tag")
-    df.write.mode("overwrite").parquet(next.toString)
-    // provenance markers ride INSIDE the swapped dir (underscore-
-    // prefixed — invisible to parquet readers), so "data merged" and
-    // "batch recorded as applied" publish in the SAME atomic rename.
-    // This is what lets a sum-monoid store (where replayed merges
-    // double-count, unlike HLL's idempotent max) offer exactly-once
-    // appends with no separate commit log: a crash leaves either the
-    // old generation (marker absent → safe to re-run) or the new one
-    // (marker present → the re-run short-circuits), never data
-    // without its marker.
-    markers.foreach { m =>
-      require(m.startsWith("_"), s"swapInParquet marker must be " +
-        s"underscore-prefixed (invisible to parquet readers): $m")
-      fs.create(new org.apache.hadoop.fs.Path(next, m), true).close()
-    }
-    // the applied-tag LEDGER — same atomicity as `markers` but ONE
-    // small file rewritten per publish instead of one empty file per
-    // batch forever (a maintenance stream would otherwise create O(n)
-    // files per publish, O(n²) cumulative, plus an ever-growing
-    // listStatus). Bounded to the most recent MaxAppliedLedger lines:
-    // replays come from at-least-once retries of RECENT batches
-    // (structured-streaming checkpoints advance monotonically, so the
-    // replay window is the last uncommitted batch), never from
-    // antiquity — the truncation is documented contract, not loss.
-    if (ledger.nonEmpty) {
-      // The header line records the CUMULATIVE applied-batch count so
-      // a wrapped ledger (total > retained lines) is DETECTABLE: a
-      // tag-checked append against a wrapped store cannot prove a
-      // very old tag (e.g. a streaming checkpoint restored from an
-      // ancient backup) was not already applied — see
-      // [[storeLedgerWrapped]] and the appender docs.
-      val distinctLedger = ledger.distinct
-      val (priorRetained, priorTotal) = storeLedgerCounts(spark, dest)
-      val total = math.max(priorTotal, priorRetained.toLong) +
-        math.max(0, distinctLedger.size - priorRetained)
-      val out = fs.create(new org.apache.hadoop.fs.Path(next, AppliedLedgerFile), true)
-      out.write((s"#TOTAL-$total\n" +
-        distinctLedger.takeRight(MaxAppliedLedger).mkString("", "\n", "\n"))
-        .getBytes("UTF-8"))
-      out.close()
-    }
-    val gen = storeGeneration(spark, dest)
-    if (expectedGen >= 0L && gen != expectedGen) {
-      fs.delete(next, true)
-      throw new java.io.IOException(
-        s"swapInParquet: $dest is at generation $gen but this publish " +
-          s"merged against generation $expectedGen — a concurrent writer " +
-          "advanced the store since it was read (single-writer contract; " +
-          "re-run the merge against the current generation)")
-    }
-    fs.create(new org.apache.hadoop.fs.Path(next, s"_GEN-${gen + 1L}"),
-      true).close()
+    writer.parquet(next.toString)
+    stamp(next)
     if (fs.exists(destPath) && !fs.rename(destPath, old))
-      throw new java.io.IOException(s"swapInParquet: cannot move $destPath aside")
+      throw new java.io.IOException(s"publish: cannot move $destPath aside")
     if (!fs.rename(next, destPath)) {
       fs.rename(old, destPath) // restore the previous generation
-      throw new java.io.IOException(s"swapInParquet: cannot publish $next")
+      throw new java.io.IOException(s"publish: cannot publish $next")
     }
     fs.delete(old, true)
   }
@@ -250,11 +270,11 @@ object Tables {
       .maxOption.getOrElse(0L)
   }
 
-  /** The underscore-prefixed provenance markers published with the
-    * store's current generation (see [[swapInParquet]]'s `markers`):
-    * the atomic applied-batch ledger of a sum-monoid store. `_GEN-*`
-    * stamps and Hadoop `_SUCCESS` files are excluded — they are
-    * bookkeeping, not batch provenance. */
+  /** The underscore-prefixed provenance markers in the store's current
+    * generation — legacy one-empty-file-per-batch `_APPLIED-*` markers
+    * from stores written before the single-file ledger. `_GEN-*`
+    * stamps, Hadoop `_SUCCESS` files and the ledger file itself are
+    * excluded — they are bookkeeping, not batch provenance. */
   def storeMarkers(spark: SparkSession, dest: String): Seq[String] = {
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -404,8 +424,8 @@ object Tables {
     * year of daily deltas every cluster directory holds hundreds of
     * small files and scan/listing cost is driven by file count, not
     * bytes (the classic small-files failure at 100 TB). This rewrites
-    * the store to ONE file per partition value and publishes with the
-    * [[swapInParquet]] two-rename dance (read-while-write safe — the
+    * the store to ONE file per partition value and publishes with
+    * [[renamePublish]] (read-while-write safe — the
     * rewrite targets a sibling dir; a crash before the publish leaves
     * the old store intact, inside the rename window leaves it missing
     * = loud, never torn). NO lock is taken here — the caller holds
@@ -415,23 +435,10 @@ object Tables {
     * after which the retry would re-place them — the recovery-order
     * contract, documented on the index-level wrappers). */
   def compactPartitionedParquet(spark: SparkSession, dest: String,
-                                partCol: String): Unit = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = new org.apache.hadoop.fs.Path(s"${dest}__next_$tag")
-    val old = new org.apache.hadoop.fs.Path(s"${dest}__old_$tag")
-    spark.read.parquet(dest)
-      .repartition(org.apache.spark.sql.functions.col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(next.toString)
-    if (!fs.rename(destPath, old))
-      throw new java.io.IOException(s"compact: cannot move $destPath aside")
-    if (!fs.rename(next, destPath)) {
-      fs.rename(old, destPath)
-      throw new java.io.IOException(s"compact: cannot publish $next")
-    }
-    fs.delete(old, true)
-  }
+                                partCol: String): Unit =
+    renamePublish(spark, dest, spark.read.parquet(dest)
+      .repartition(col(partCol))
+      .write.mode("overwrite").partitionBy(partCol))(_ => ())
 
   /** Compact an UNPARTITIONED parquet store to `numFiles` files — the
     * flat-store face of [[compactPartitionedParquet]] (flat PQ/SQ8
@@ -439,28 +446,16 @@ object Tables {
     * there is no partition dir to rewrite per, so the target is a
     * file-count budget the caller derives from the store's size).
     * `coalesce` keeps the rewrite shuffle-free — compaction is an I/O
-    * rewrite, not a repartition. Publishes with the same two-rename
-    * dance (crash before publish leaves the old store; inside the
+    * rewrite, not a repartition. Publishes with [[renamePublish]]
+    * (crash before publish leaves the old store; inside the
     * rename window leaves it missing = loud, never torn; readers
     * tolerate-and-retry the transient window). Caller holds the
     * store's lock. */
   def compactFlatParquet(spark: SparkSession, dest: String,
                          numFiles: Int): Unit = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = new org.apache.hadoop.fs.Path(s"${dest}__next_$tag")
-    val old = new org.apache.hadoop.fs.Path(s"${dest}__old_$tag")
-    spark.read.parquet(dest).coalesce(numFiles)
-      .write.mode("overwrite").parquet(next.toString)
-    if (!fs.rename(destPath, old))
-      throw new java.io.IOException(s"compact: cannot move $destPath aside")
-    if (!fs.rename(next, destPath)) {
-      fs.rename(old, destPath)
-      throw new java.io.IOException(s"compact: cannot publish $next")
-    }
-    fs.delete(old, true)
+    renamePublish(spark, dest,
+      spark.read.parquet(dest).coalesce(numFiles).write.mode("overwrite"))(_ => ())
   }
 
   /** Replace a SUBSET of a `partitionBy` store's partitions with new
@@ -603,16 +598,16 @@ object Tables {
     * with `${dest}__lock` held (atomic create-if-absent — HDFS-atomic,
     * best-effort-atomic on local filesystems), retrying acquisition
     * for up to retries × waitMs before failing loudly. This is what
-    * ENFORCES the single-writer contract: every read-merge-publish
-    * window (HLL profile append, IVF/PQ centroid merge) runs under the
-    * store's lock, so two racing appenders serialize — the second
-    * merges against the first's published generation instead of the
-    * stale base. The lock window is seconds (a tiny-table merge +
-    * two metadata renames), so the default 60 s budget only exhausts
-    * against a CRASHED holder — the failure message names the orphan
-    * lock file; recovery is verifying no writer is live and deleting
-    * it. Not reentrant: compose store operations from the *Unlocked
-    * internals, never by nesting locked public calls. */
+    * ENFORCES the single-writer contract: every
+    * [[readMergePublish]] window runs under the store's lock, so two
+    * racing appenders serialize — the second merges against the
+    * first's published generation instead of the stale base. The lock
+    * window is seconds (a tiny-table merge + two metadata renames), so
+    * the default 60 s budget only exhausts against a CRASHED holder —
+    * the failure message names the orphan lock file; recovery is
+    * verifying no writer is live and deleting it. Not reentrant: a
+    * body must never call another locked operation on the same
+    * store. */
   def withStoreLock[T](spark: SparkSession, dest: String,
                        retries: Int = 240, waitMs: Long = 250L)(body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(s"${dest}__lock")

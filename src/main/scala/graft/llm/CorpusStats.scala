@@ -451,70 +451,55 @@ object CorpusStats {
   def persistHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
                         path: String, n: Int = 2): Unit =
     graft.io.Tables.withStoreLock(docs.sparkSession, s"$path/registers") {
-      persistHllUnlocked(docs, sourceCol, textCol, path, n)
+      graft.io.Tables.swapInParquet(docs.sparkSession,
+        hllNgramRegisters(docs, sourceCol, textCol, n), s"$path/registers")
     }
-
-  /** The bootstrap write, publish-side: through
-    * [[graft.io.Tables.swapInParquet]] (write to a `__next` sibling,
-    * rename into place) so even the FIRST generation is atomic — a
-    * crash mid-bootstrap leaves no torn registers dir for a restart's
-    * append to merge against (the pre-r15 plain overwrite did). */
-  private def persistHllUnlocked(docs: DataFrame, sourceCol: String,
-                                 textCol: String, path: String, n: Int): Unit =
-    graft.io.Tables.swapInParquet(docs.sparkSession,
-      hllNgramRegisters(docs, sourceCol, textCol, n), s"$path/registers")
 
   /** Merge a new batch's registers into a persisted profile —
-    * cell-wise max, atomically published; the base corpus is never
-    * rescanned. The STORE's geometry column (`ng`) is validated
-    * against this call's `n` BEFORE anything merges (the store is a
-    * tiny materialized table — the check reads register rows, never
-    * the corpus): appending a different n-gram order would silently
-    * turn the profile into a mixed-universe estimate. The batch side
-    * is consistent by construction (built here with the same `n`). */
+    * cell-wise max, atomically published through
+    * [[graft.io.Tables.readMergePublish]] (register max is idempotent,
+    * so the append takes no batch tag); the base corpus is never
+    * rescanned. */
   def appendToHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
                          path: String, n: Int = 2): Unit =
-    graft.io.Tables.withStoreLock(docs.sparkSession, s"$path/registers") {
-      appendToHllUnlocked(docs, sourceCol, textCol, path, n)
+    graft.io.Tables.readMergePublish(docs.sparkSession, s"$path/registers") { _ =>
+      mergeHll(docs, sourceCol, textCol, path, n)
     }
 
-  /** The read-merge-publish window, run under the store lock. The
-    * generation captured at read is passed to the publish as a CAS
-    * (defense-in-depth behind the lock: a writer that bypasses the
-    * lock fails loudly rather than silently dropping this merge). */
-  private def appendToHllUnlocked(docs: DataFrame, sourceCol: String,
-                                  textCol: String, path: String, n: Int): Unit = {
-    val spark = docs.sparkSession
-    val gen = graft.io.Tables.storeGeneration(spark, s"$path/registers")
-    val store = spark.read.parquet(s"$path/registers")
+  /** Create-or-merge in ONE locked decision — the streaming-sink entry
+    * point ([[graft.streaming.Streams.hllProfileStream]]): the
+    * exists-check and the chosen write run in the same
+    * [[graft.io.Tables.readMergePublish]] window, so two streams
+    * bootstrapping the same empty path serialize — the loser of the
+    * bootstrap race sees the winner's store and MERGES into it instead
+    * of overwriting it. */
+  def upsertHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
+                       path: String, n: Int = 2): Unit =
+    graft.io.Tables.readMergePublish(docs.sparkSession, s"$path/registers") {
+      case None => hllNgramRegisters(docs, sourceCol, textCol, n)
+      case Some(_) => mergeHll(docs, sourceCol, textCol, path, n)
+    }
+
+  /** The stored registers max-merged with the batch's. The STORE's
+    * geometry column (`ng`) is validated against this call's `n`
+    * BEFORE anything merges (the store is a tiny materialized table —
+    * the check reads register rows, never the corpus): appending a
+    * different n-gram order would silently turn the profile into a
+    * mixed-universe estimate. The batch side is consistent by
+    * construction (built here with the same `n`). */
+  private def mergeHll(docs: DataFrame, sourceCol: String, textCol: String,
+                       path: String, n: Int): DataFrame = {
+    val store = docs.sparkSession.read.parquet(s"$path/registers")
     val orders = store.select(col("ng")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     require(orders == Seq(n.toLong),
       s"appendToHllProfile: store at $path was built with n-gram " +
         s"order(s) ${orders.mkString(", ")} but this append builds n=$n " +
         "registers — pass the n the profile was built with")
-    val merged = hllMergeRegisters(
+    hllMergeRegisters(
       store.unionByName(hllNgramRegisters(docs, sourceCol, textCol, n)),
       sourceCol)
-    graft.io.Tables.swapInParquet(spark, merged, s"$path/registers", gen)
   }
-
-  /** Create-or-merge in ONE locked decision — the streaming-sink entry
-    * point ([[graft.streaming.Streams.hllProfileStream]]): the
-    * exists-check and the chosen write run under the same store lock,
-    * so two streams bootstrapping the same empty path serialize — the
-    * loser of the bootstrap race sees the winner's store and MERGES
-    * into it instead of overwriting it (the pre-r15 unlocked
-    * exists-then-persist lost the first batch's registers). */
-  def upsertHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
-                       path: String, n: Int = 2): Unit =
-    graft.io.Tables.withStoreLock(docs.sparkSession, s"$path/registers") {
-      val regs = new org.apache.hadoop.fs.Path(s"$path/registers")
-      val fs = regs.getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(regs)) appendToHllUnlocked(docs, sourceCol, textCol, path, n)
-      else persistHllUnlocked(docs, sourceCol, textCol, path, n)
-    }
 
   /** Reload a persisted register profile. */
   def readHllProfile(spark: org.apache.spark.sql.SparkSession,
@@ -546,8 +531,8 @@ object CorpusStats {
   // exact integer in both Spark and DuckDB, so estimates replay
   // hash-identically. Unlike HLL's register MAX, count SUM is NOT
   // idempotent — the persisted store therefore publishes each batch's
-  // applied-marker inside the same atomic rename as the merged data
-  // ([[graft.io.Tables.swapInParquet]] `markers`), making appends
+  // applied tag inside the same atomic rename as the merged data
+  // ([[graft.io.Tables.swapInParquet]] `ledger`), making appends
   // exactly-once with no separate commit log.
   // -------------------------------------------------------------------
 
@@ -708,72 +693,55 @@ object CorpusStats {
                      path: String, subBits: Int = 5,
                      batchTag: Option[String] = None): Unit =
     graft.io.Tables.withStoreLock(df.sparkSession, s"$path/registers") {
-      persistLogHistUnlocked(df, groupCol, value, path, subBits, batchTag)
+      graft.io.Tables.swapInParquet(df.sparkSession,
+        logHistRegisters(df, groupCol, value, subBits), s"$path/registers",
+        ledger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
     }
 
-  private def persistLogHistUnlocked(df: DataFrame, groupCol: String,
-                                     value: Column, path: String,
-                                     subBits: Int,
-                                     batchTag: Option[String]): Unit =
-    graft.io.Tables.swapInParquet(df.sparkSession,
-      logHistRegisters(df, groupCol, value, subBits), s"$path/registers",
-      ledger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
-
   /** Merge a new batch's registers into a persisted store — cell-wise
-    * sum, atomically published under the store lock with a read-time
-    * generation CAS; the base corpus is never rescanned. The store's
-    * geometry (`sb`) is validated against this call's `subBits` before
-    * anything merges, and a `batchTag` already marked applied makes
-    * the whole call a no-op — the exactly-once contract for at-least-
-    * once callers (streaming replays, crash-retry loops). */
+    * sum, atomically published through
+    * [[graft.io.Tables.readMergePublish]]; the base corpus is never
+    * rescanned. A `batchTag` already marked applied makes the whole
+    * call a no-op — the exactly-once contract for at-least-once
+    * callers (streaming replays, crash-retry loops). */
   def appendToLogHist(df: DataFrame, groupCol: String, value: Column,
                       path: String, subBits: Int = 5,
                       batchTag: Option[String] = None): Unit =
-    graft.io.Tables.withStoreLock(df.sparkSession, s"$path/registers") {
-      appendToLogHistUnlocked(df, groupCol, value, path, subBits, batchTag)
+    graft.io.Tables.readMergePublish(df.sparkSession, s"$path/registers",
+        batchTag) { _ =>
+      mergeLogHist(df, groupCol, value, path, subBits)
     }
 
-  private def appendToLogHistUnlocked(df: DataFrame, groupCol: String,
-                                      value: Column, path: String,
-                                      subBits: Int,
-                                      batchTag: Option[String]): Unit = {
-    val spark = df.sparkSession
-    val store = s"$path/registers"
-    val applied = graft.io.Tables.storeAppliedLedger(spark, store)
-    val tagLine = batchTag.map(graft.io.Tables.appliedLedgerLine)
-    if (tagLine.exists(applied.contains)) return // replayed batch: no-op
-    graft.io.Tables.warnIfLedgerWrapped(spark, store, tagLine)
-    val gen = graft.io.Tables.storeGeneration(spark, store)
-    val base = spark.read.parquet(store)
+  /** Create-or-merge in ONE locked decision — the streaming-sink entry
+    * point ([[graft.streaming.Streams.logHistStream]]); the same
+    * bootstrap-race contract as [[upsertHllProfile]], plus the
+    * applied-tag check so a replayed FIRST batch is also a no-op (the
+    * tag published with the bootstrap generation). */
+  def upsertLogHist(df: DataFrame, groupCol: String, value: Column,
+                    path: String, subBits: Int = 5,
+                    batchTag: Option[String] = None): Unit =
+    graft.io.Tables.readMergePublish(df.sparkSession, s"$path/registers",
+        batchTag) {
+      case None => logHistRegisters(df, groupCol, value, subBits)
+      case Some(_) => mergeLogHist(df, groupCol, value, path, subBits)
+    }
+
+  /** The stored registers sum-merged with the batch's. The store's
+    * geometry (`sb`) is validated against this call's `subBits` before
+    * anything merges. */
+  private def mergeLogHist(df: DataFrame, groupCol: String, value: Column,
+                           path: String, subBits: Int): DataFrame = {
+    val base = df.sparkSession.read.parquet(s"$path/registers")
     val geoms = base.select(col("sb")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     require(geoms == Seq(subBits.toLong),
       s"appendToLogHist: store at $path was built with subBits " +
         s"${geoms.mkString(", ")} but this append builds subBits=$subBits " +
         "registers — pass the geometry the store was built with")
-    val merged = logHistMerge(
+    logHistMerge(
       base.unionByName(logHistRegisters(df, groupCol, value, subBits)),
       groupCol)
-    graft.io.Tables.swapInParquet(spark, merged, store, gen,
-      ledger = applied ++ tagLine)
   }
-
-  /** Create-or-merge in ONE locked decision — the streaming-sink entry
-    * point ([[graft.streaming.Streams.logHistStream]]); the same
-    * bootstrap-race contract as [[upsertHllProfile]], plus the
-    * applied-marker check so a replayed FIRST batch is also a no-op
-    * (the marker published with the bootstrap generation). */
-  def upsertLogHist(df: DataFrame, groupCol: String, value: Column,
-                    path: String, subBits: Int = 5,
-                    batchTag: Option[String] = None): Unit =
-    graft.io.Tables.withStoreLock(df.sparkSession, s"$path/registers") {
-      val regs = new org.apache.hadoop.fs.Path(s"$path/registers")
-      val fs = regs.getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(regs))
-        appendToLogHistUnlocked(df, groupCol, value, path, subBits, batchTag)
-      else persistLogHistUnlocked(df, groupCol, value, path, subBits, batchTag)
-    }
 
   /** Reload a persisted quantile-sketch register store. */
   def readLogHist(spark: org.apache.spark.sql.SparkSession,

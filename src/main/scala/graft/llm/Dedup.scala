@@ -437,16 +437,15 @@ object Dedup {
   /** End-to-end corpus dedup: keep every document except the
     * non-representative members of a duplicate cluster (the component
     * label, i.e. the cluster's minimum id, is the one kept). The
-    * default broadcast anti-join keeps the corpus un-exchanged — the
+    * broadcast anti-join keeps the corpus un-exchanged — the
     * components frame holds only clustered docs, ≪ the corpus (and the
     * checkpointed frame has no stats, so without the hint Spark plans
-    * a sort-merge join that shuffles the whole corpus). Pass false if
-    * the dup rate is so high the drop list outgrows broadcast. */
-  def keepOnePerCluster(df: DataFrame, idCol: String, components: DataFrame,
-                        broadcastDrops: Boolean = true): DataFrame = {
+    * a sort-merge join that shuffles the whole corpus). */
+  def keepOnePerCluster(df: DataFrame, idCol: String,
+                        components: DataFrame): DataFrame = {
     val drops = components.filter(col("node") =!= col("label"))
       .select(col("node").as(idCol))
-    df.join(if (broadcastDrops) broadcast(drops) else drops, Seq(idCol), "left_anti")
+    df.join(broadcast(drops), Seq(idCol), "left_anti")
   }
 
   /** Multi-signal ensemble dedup: union the pair sets of several
@@ -483,8 +482,7 @@ object Dedup {
     * available), and the drop list broadcasts so the corpus itself
     * crosses no exchange. */
   def keepBestPerCluster(df: DataFrame, idCol: String, scoreCol: String,
-                         components: DataFrame,
-                         broadcastDrops: Boolean = true): DataFrame = {
+                         components: DataFrame): DataFrame = {
     val labeled = components.select(col("node").as(idCol), col("label"))
     val scored = labeled.join(df.select(col(idCol), col(scoreCol)), Seq(idCol))
     val w = Window.partitionBy(col("label"))
@@ -492,7 +490,7 @@ object Dedup {
     val keeps = scored.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).select(col(idCol))
     val drops = labeled.select(col(idCol)).join(keeps, Seq(idCol), "left_anti")
-    df.join(if (broadcastDrops) broadcast(drops) else drops, Seq(idCol), "left_anti")
+    df.join(broadcast(drops), Seq(idCol), "left_anti")
   }
 
   /** SimHash signature (default 16 bits): each bit is the sign of the

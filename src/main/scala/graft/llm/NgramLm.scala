@@ -244,78 +244,56 @@ object NgramLm {
                            batchTag: Option[String] = None): Unit = {
     val spark = ref.sparkSession
     graft.io.Tables.withStoreLock(spark, s"$path/counts") {
-      createCountsLocked(ref, textCol, path, batchTag)
+      // refuse to clobber a live store — an overwrite here would
+      // silently reset the applied ledger, losing every previously
+      // merged batch's replay guard
+      val store = new org.apache.hadoop.fs.Path(s"$path/counts")
+      require(!store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(store),
+        s"persistBackoffCounts: a counts store already exists at $path/counts " +
+          "— overwriting would reset its applied ledger and drop merged " +
+          "batches; use appendToBackoffCounts/upsertBackoffCounts")
+      graft.io.Tables.swapInParquet(spark, flatCounts(ref, textCol),
+        s"$path/counts",
+        ledger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
     }
-  }
-
-  /** The create body, lock ALREADY HELD. Refuses to clobber a live
-    * store — an overwrite here would silently reset the applied
-    * ledger, losing every previously-merged batch's replay guard
-    * (the exact data-loss window two writers racing an empty store
-    * would otherwise open). */
-  private def createCountsLocked(ref: DataFrame, textCol: String,
-                                 path: String,
-                                 batchTag: Option[String]): Unit = {
-    val spark = ref.sparkSession
-    val store = new org.apache.hadoop.fs.Path(s"$path/counts")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(store),
-      s"persistBackoffCounts: a counts store already exists at $path/counts " +
-        "— overwriting would reset its applied ledger and drop merged " +
-        "batches; use appendToBackoffCounts/upsertBackoffCounts")
-    graft.io.Tables.swapInParquet(spark, flatCounts(ref, textCol),
-      s"$path/counts",
-      ledger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
   }
 
   /** Merge one more reference batch into the counts store: union +
-    * per-gram Long sum + swap, lock-serialized; a replayed tag
-    * no-ops. Vocabulary-scale rewrite (distinct grams), never
-    * corpus-scale. */
+    * per-gram Long sum + swap through
+    * [[graft.io.Tables.readMergePublish]]; a replayed tag no-ops.
+    * Vocabulary-scale rewrite (distinct grams), never corpus-scale. */
   def appendToBackoffCounts(ref: DataFrame, textCol: String, path: String,
-                            batchTag: Option[String] = None): Unit = {
-    val spark = ref.sparkSession
-    graft.io.Tables.withStoreLock(spark, s"$path/counts") {
-      appendCountsLocked(ref, textCol, path, batchTag)
+                            batchTag: Option[String] = None): Unit =
+    graft.io.Tables.readMergePublish(ref.sparkSession, s"$path/counts",
+        batchTag) { _ =>
+      mergeCounts(ref, textCol, path)
     }
-  }
 
-  /** The append body, lock ALREADY HELD. */
-  private def appendCountsLocked(ref: DataFrame, textCol: String,
-                                 path: String,
-                                 batchTag: Option[String]): Unit = {
-    val spark = ref.sparkSession
-    val applied = graft.io.Tables.storeAppliedLedger(spark, s"$path/counts")
-    val tagLine = batchTag.map(graft.io.Tables.appliedLedgerLine)
-    if (tagLine.exists(applied.contains)) return // replayed batch
-    graft.io.Tables.warnIfLedgerWrapped(spark, s"$path/counts", tagLine)
-    val gen = graft.io.Tables.storeGeneration(spark, s"$path/counts")
-    val merged = spark.read.parquet(s"$path/counts")
+  /** Create-or-merge in ONE lock acquisition — the entry point for
+    * unattended writers (the streaming counts maintenance): the
+    * create-vs-append decision happens INSIDE the
+    * [[graft.io.Tables.readMergePublish]] window, so two writers
+    * racing the first batch serialize correctly (one creates, the
+    * other appends) instead of both choosing create and one batch's
+    * counts silently vanishing under the other's swap. */
+  def upsertBackoffCounts(ref: DataFrame, textCol: String, path: String,
+                          batchTag: Option[String] = None): Unit =
+    graft.io.Tables.readMergePublish(ref.sparkSession, s"$path/counts",
+        batchTag) {
+      case None => flatCounts(ref, textCol)
+      case Some(_) => mergeCounts(ref, textCol, path)
+    }
+
+  /** The stored gram counts summed with the batch's. */
+  private def mergeCounts(ref: DataFrame, textCol: String,
+                          path: String): DataFrame =
+    ref.sparkSession.read.parquet(s"$path/counts")
       .unionByName(flatCounts(ref, textCol))
       .groupBy(col("n"), col("w2"), col("w1"), col("w"))
       .agg(sum(col("c")).as("c"))
       // the swap overwrites the dir this plan reads
       .localCheckpoint(true)
-    graft.io.Tables.swapInParquet(spark, merged, s"$path/counts", gen,
-      ledger = applied ++ tagLine)
-  }
-
-  /** Create-or-merge in ONE lock acquisition — the entry point for
-    * unattended writers (the streaming counts maintenance): the
-    * create-vs-append decision happens INSIDE the store lock, so two
-    * writers racing the first batch serialize correctly (one creates,
-    * the other appends) instead of both choosing create and one
-    * batch's counts silently vanishing under the other's swap. */
-  def upsertBackoffCounts(ref: DataFrame, textCol: String, path: String,
-                          batchTag: Option[String] = None): Unit = {
-    val spark = ref.sparkSession
-    graft.io.Tables.withStoreLock(spark, s"$path/counts") {
-      val store = new org.apache.hadoop.fs.Path(s"$path/counts")
-      val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(store)) createCountsLocked(ref, textCol, path, batchTag)
-      else appendCountsLocked(ref, textCol, path, batchTag)
-    }
-  }
 
   /** Sweep crash residue (swap leftovers) from the backoff stores.
     * Unlike the ANN index families — whose appenders stage SIBLING

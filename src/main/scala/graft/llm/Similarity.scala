@@ -710,12 +710,7 @@ object Similarity {
                           labelCol: Option[String] = None,
                           batchTag: Option[String] = None): Unit = {
     val spark = df.sparkSession
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      val applied = graft.io.Tables.storeAppliedLedger(spark, s"$path/centroids")
-      val tagLine = batchTag.map(graft.io.Tables.appliedLedgerLine)
-      if (tagLine.exists(applied.contains)) return // replayed batch: no-op
-      graft.io.Tables.warnIfLedgerWrapped(spark, s"$path/centroids", tagLine)
-      val gen = graft.io.Tables.storeGeneration(spark, s"$path/centroids")
+    graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
       val (cent, quant, _) = readIvfSq8Index(spark, path)
       require(quant.length == dim,
         s"append: dim=$dim does not match the index at $path — the stored " +
@@ -725,13 +720,8 @@ object Similarity {
         case None => assignClusters(df, idCol, embCol, cent)
           .select(col(idCol).as("cid"), col("label"))
       }
-      val codes = sq8EncodeFrame(df, idCol, embCol, quant).join(labeled, "cid")
-      tagLine match {
-        case Some(t) => graft.io.Tables.stagedPartitionedAppend(spark, codes,
-          s"$path/codes", "label", t.stripPrefix("_APPLIED-"))
-        case None => codes.write.mode("append").partitionBy("label")
-          .parquet(s"$path/codes")
-      }
+      appendPartitioned(sq8EncodeFrame(df, idCol, embCol, quant)
+        .join(labeled, "cid"), s"$path/codes", "label", batchTag)
       val centNew = labelCol match {
         case Some(lc) => buildIvfIndex(df, idCol, embCol, lc)._1
         case None =>
@@ -740,14 +730,33 @@ object Similarity {
             col(idCol) === col("__cid")).drop("__cid")
           buildIvfIndex(withL, idCol, embCol, "__albl")._1
       }
-      val merged = spark.read.parquet(s"$path/centroids")
-        .unionByName(centNew)
-        .groupBy(col("label"), col("pos"))
-        .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
-      graft.io.Tables.swapInParquet(spark, merged, s"$path/centroids", gen,
-        ledger = applied ++ tagLine)
+      mergeCentroidSums(path, centNew)
     }
   }
+
+  /** The side-file append of the IVF-family and graph-store appenders:
+    * a tagged batch lands through
+    * [[graft.io.Tables.stagedPartitionedAppend]] under deterministic
+    * per-(tag, partition) file names, so a replay after a crash skips
+    * the files already placed; an untagged batch is a plain append
+    * (no replay protection). Both write one file per touched
+    * partition. */
+  private def appendPartitioned(df: DataFrame, dest: String, partCol: String,
+                                batchTag: Option[String]): Unit =
+    batchTag match {
+      case Some(t) => graft.io.Tables.stagedPartitionedAppend(df.sparkSession,
+        df, dest, partCol, graft.io.Tables.appliedLedgerLine(t).stripPrefix("_APPLIED-"))
+      case None => df.repartition(col(partCol)).write.mode("append")
+        .partitionBy(partCol).parquet(dest)
+    }
+
+  /** The additive centroid merge: a batch's (label, pos, s, cnt) sums
+    * folded into the persisted table in exact integers. */
+  private def mergeCentroidSums(path: String, centNew: DataFrame): DataFrame =
+    centNew.sparkSession.read.parquet(s"$path/centroids")
+      .unionByName(centNew)
+      .groupBy(col("label"), col("pos"))
+      .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
 
   /** Compact a persisted cluster-partitioned code store (IVF-SQ8 or
     * IVFPQ) to one file per cluster — the small-files maintenance a
@@ -1560,7 +1569,9 @@ object Similarity {
     * remedy produces. The overflow check precedes every store
     * mutation, so the rebuild always starts from a consistent store;
     * the batch tag commits through the rebuild's centroid swap, so
-    * replays still no-op. Cost is corpus-scale when it fires (a
+    * replays still no-op. If kmeans leaves a cell over the cap, the
+    * geometry retrains at doubled nlist, each retrain publishing in
+    * its own window. Cost is corpus-scale when it fires (a
     * rebuild IS corpus-scale) — the flag is for unattended ingest
     * where loud failure is worse than a rare retrain. */
   def appendToKnnGraphStore(df: DataFrame, idCol: String, embCol: String,
@@ -1568,86 +1579,28 @@ object Similarity {
                             batchTag: Option[String] = None,
                             autoRebuild: Boolean = false): Unit = {
     val spark = df.sparkSession
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      val overflowed = appendGraphLocked(df, idCol, embCol, path, batchTag,
-        failOnOverflow = !autoRebuild)
-      if (overflowed) {
-        // auto mode: the overflow means the geometry is stale for
-        // stored ∪ batch, so retraining on the STORE ALONE could
-        // leave cells the batch still floods (a batch from a region
-        // the store never saw). Instead, rebuild on stored ∪ batch
-        // UNDER THE SAME HELD LOCK (the re-entrancy story — the
-        // Locked bodies never re-acquire): the rebuild rewrites
-        // vectors and edges from the quantized rows wholesale, so it
-        // IS the append — the batch lands through it and the batch
-        // tag commits through its centroid swap (replays keep
-        // no-oping). Geometry sized against the store's own
-        // maxCluster with 2x headroom.
-        val batchEq = df.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("eq"))
-        val nStored = spark.read.parquet(s"$path/vectors")
-          .filter(col("probe") === 1L).count()
-        val nBatch = batchEq.count()
-        val maxCluster = spark.read.parquet(s"$path/meta").head().getLong(2)
-        val target = math.max(1L, maxCluster / 2L)
-        val minNlist = math.max(4L, (nStored + nBatch + target - 1L) / target)
-        rebuildGraphLocked(spark, path, targetCell = target,
-          minNlist = minNlist.toInt, iters = 2, extraEq = Some(batchEq),
-          addLedger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
-        // kmeans gives NO balance guarantee, so sizing nlist for a
-        // target cell is a heuristic, not the invariant — re-verify
-        // the cap the appender relies on against the PUBLISHED
-        // geometry (total probed members per cell, the same count the
-        // overflow check uses) and retrain at doubled nlist until it
-        // holds. The batch already landed through the first rebuild
-        // (and its tag committed), so retries are pure geometry
-        // retrains from the store alone. Without this, a skewed
-        // kmeans could publish a still-over-cap store and the NEXT
-        // append would immediately re-trigger another corpus-scale
-        // rebuild (or throw without autoRebuild).
-        def maxCell(): Long = spark.read.parquet(s"$path/vectors")
-          .groupBy(col("cell")).agg(count(lit(1)).as("__n"))
-          .agg(max(col("__n"))).head().getLong(0)
-        var nl = spark.read.parquet(s"$path/centroids")
-          .select(col("cid")).distinct().count().toInt
-        var attempts = 0
-        while (maxCell() > maxCluster && attempts < 3) {
-          nl = math.max(nl * 2, nl + 1); attempts += 1
-          rebuildGraphLocked(spark, path, targetCell = target,
-            minNlist = nl, iters = 2)
-        }
-        require(maxCell() <= maxCluster,
-          s"appendToKnnGraphStore autoRebuild: the batch LANDED and its " +
-            s"tag committed, but retraining up to nlist=$nl could not " +
-            s"bring every cell under maxCluster=$maxCluster — the store " +
-            s"at $path is PUBLISHED over-cap (a replay of this call " +
-            "no-ops on the applied tag and will not shrink it); the data " +
-            "is too concentrated for this cap: raise maxCluster or " +
-            "rebuild manually with a larger nlist")
-      }
-    }
-  }
-
-  /** The append body, lock ALREADY HELD by the caller. Returns true
-    * iff the batch would overflow a cell and `failOnOverflow` is
-    * false (nothing written in that case — the cap check precedes
-    * every store mutation). */
-  private def appendGraphLocked(df: DataFrame, idCol: String, embCol: String,
-                                path: String, batchTag: Option[String],
-                                failOnOverflow: Boolean): Boolean = {
-    val spark = df.sparkSession
     import spark.implicits._
-    {
-      val applied = graft.io.Tables.storeAppliedLedger(spark, s"$path/centroids")
-      val tagLine = batchTag.map(graft.io.Tables.appliedLedgerLine)
-      if (tagLine.exists(applied.contains)) return false // replayed batch: no-op
-      graft.io.Tables.warnIfLedgerWrapped(spark, s"$path/centroids", tagLine)
+    // autoRebuild's cap verification: the nlist of the last retrain,
+    // and whether a cell still exceeds the cap after it
+    var nl = 0
+    var overCap = false
+    def retrain(minNlist: Int,
+                extraEq: Option[DataFrame]): Seq[(Long, Seq[Long])] = {
+      val maxCluster = spark.read.parquet(s"$path/meta").head().getLong(2)
+      val cents = rebuildGraph(spark, path,
+        targetCell = math.max(1L, maxCluster / 2L), minNlist = minNlist,
+        iters = 2, extraEq = extraEq)
+      overCap = spark.read.parquet(s"$path/vectors")
+        .groupBy(col("cell")).agg(count(lit(1)).as("__n"))
+        .agg(max(col("__n"))).head().getLong(0) > maxCluster
+      cents
+    }
+    graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
       // heal a prior append that crashed inside replacePartitions'
       // rename window BEFORE deriving retry content — a home partition
       // whose only copy sits in edges__old_* would otherwise read as
       // zero rows below and the retry would publish wrong lists
       graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
-      val gen = graft.io.Tables.storeGeneration(spark, s"$path/centroids")
       val cents = readCents(spark, path)
       val metaRow = spark.read.parquet(s"$path/meta").head()
       val (k, nprobe, maxCluster) =
@@ -1680,66 +1633,104 @@ object Similarity {
           (coalesce(col("o"), lit(0L)) + coalesce(col("n"), lit(0L))).as("bc"))
         .collect().map(r => r.getLong(0) -> r.getLong(1))
       val over = cellCounts.filter(_._2 > maxCluster)
+      if (over.nonEmpty && !autoRebuild) throw new IllegalArgumentException(
+        s"appendToKnnGraphStore: batch pushes cell(s) ${over.map(_._1).mkString(", ")} " +
+          s"past maxCluster=$maxCluster at $path — the cell geometry is stale; " +
+          "rebuild the store with a larger nlist (autoNlist), or pass " +
+          "autoRebuild = true")
       if (over.nonEmpty) {
-        if (failOnOverflow) throw new IllegalArgumentException(
-          s"appendToKnnGraphStore: batch pushes cell(s) ${over.map(_._1).mkString(", ")} " +
-            s"past maxCluster=$maxCluster at $path — the cell geometry is stale; " +
-            "rebuild the store with a larger nlist (autoNlist), or pass " +
-            "autoRebuild = true")
-        return true
+        // auto mode: the overflow means the geometry is stale for
+        // stored ∪ batch, so retraining on the STORE ALONE could
+        // leave cells the batch still floods (a batch from a region
+        // the store never saw). Instead, rebuild on stored ∪ batch
+        // inside this same window (the cap check above preceded every
+        // mutation): the rebuild rewrites vectors and edges from the
+        // quantized rows wholesale, so it IS the append — the batch
+        // lands through it and the batch tag commits with the rebuilt
+        // cells (replays keep no-oping). Geometry sized against the
+        // store's own maxCluster with 2x headroom.
+        val batchEq = df.select(col(idCol).as("vid"),
+          quantize(col(embCol)).as("eq"))
+        val nStored = spark.read.parquet(s"$path/vectors")
+          .filter(col("probe") === 1L).count()
+        val nBatch = batchEq.count()
+        val target = math.max(1L, maxCluster / 2L)
+        val minNlist = math.max(4L, (nStored + nBatch + target - 1L) / target)
+        val rebuilt = retrain(minNlist.toInt, Some(batchEq))
+        nl = rebuilt.size
+        centsFrame(spark, rebuilt)
+      } else {
+        val valid = cellCounts.filter(_._2 >= 2L).map(_._1)
+        val mN = newAsg.filter(col("cell").isin(valid: _*))
+          .select(col("cid").as("vid"), col("eq"), col("cell"))
+        val mO = oldMembers.filter(col("cell").isin(valid: _*))
+          .select(col("cid").as("vid"), col("eq"), col("cell"))
+        val cNew = scoreCellPairs(mN, mO.unionByName(mN)).distinct()
+          .localCheckpoint(false)
+        // old→new candidates are the MIRROR of cNew's new→old subset
+        // (cosine is symmetric, the zero-norm guard too) — derived, not
+        // re-joined: this halves the append's pair-scoring work
+        val cOld = cNew
+          .join(broadcast(batchIds.withColumnRenamed("cid", "b")),
+            Seq("b"), "left_anti")
+          .select(col("b").as("a"), col("a").as("b"), col("cosine"))
+          .localCheckpoint(false)
+        val newLists = knnTopK(cNew, k)
+        val affected = cOld.select(col("a")).distinct()
+        val oldHome = oldMembers.select(col("cid").as("a"), col("home")).distinct()
+        val affHomes = oldHome.join(affected, "a")
+          .select(col("home")).distinct().as[Long].collect().toSeq
+        val edgesStore = spark.read.parquet(s"$path/edges")
+        val storedAff = edgesStore.filter(col("home").isin(affHomes: _*))
+          .join(affected, Seq("a"))
+          .select(col("a"), col("b"), col("cosine"))
+        // distinct: a retry re-generates candidates a half-published
+        // store already merged — identical (a, b, cosine) rows collapse
+        val mergedOld = knnTopK(storedAff.unionByName(cOld).distinct(), k)
+        val newHome = newAsg.select(col("cid").as("a"), col("home")).distinct()
+        val updated = newLists.join(broadcast(newHome), "a")
+          .unionByName(mergedOld.join(oldHome, "a"))
+          .localCheckpoint(false)
+        val homes = updated.select(col("home")).distinct().as[Long].collect().toSeq
+        val keep = edgesStore.filter(col("home").isin(homes: _*))
+          .join(updated.select(col("a")).distinct(), Seq("a"), "left_anti")
+        val content = keep.select(col("a"), col("b"), col("rank"),
+            col("cosine"), col("home"))
+          .unionByName(updated.select(col("a"), col("b"), col("rank"),
+            col("cosine"), col("home")))
+        // publish order: vectors (staged, skip-placed) -> edges
+        // (idempotent partition rewrite) -> centroids (tag commits)
+        appendPartitioned(newAsg, s"$path/vectors", "cell", batchTag)
+        if (homes.nonEmpty)
+          graft.io.Tables.replacePartitions(spark, content, s"$path/edges", "home")
+        centsFrame(spark, cents)
       }
-      val valid = cellCounts.filter(_._2 >= 2L).map(_._1)
-      val mN = newAsg.filter(col("cell").isin(valid: _*))
-        .select(col("cid").as("vid"), col("eq"), col("cell"))
-      val mO = oldMembers.filter(col("cell").isin(valid: _*))
-        .select(col("cid").as("vid"), col("eq"), col("cell"))
-      val cNew = scoreCellPairs(mN, mO.unionByName(mN)).distinct()
-        .localCheckpoint(false)
-      // old→new candidates are the MIRROR of cNew's new→old subset
-      // (cosine is symmetric, the zero-norm guard too) — derived, not
-      // re-joined: this halves the append's pair-scoring work
-      val cOld = cNew
-        .join(broadcast(batchIds.withColumnRenamed("cid", "b")),
-          Seq("b"), "left_anti")
-        .select(col("b").as("a"), col("a").as("b"), col("cosine"))
-        .localCheckpoint(false)
-      val newLists = knnTopK(cNew, k)
-      val affected = cOld.select(col("a")).distinct()
-      val oldHome = oldMembers.select(col("cid").as("a"), col("home")).distinct()
-      val affHomes = oldHome.join(affected, "a")
-        .select(col("home")).distinct().as[Long].collect().toSeq
-      val edgesStore = spark.read.parquet(s"$path/edges")
-      val storedAff = edgesStore.filter(col("home").isin(affHomes: _*))
-        .join(affected, Seq("a"))
-        .select(col("a"), col("b"), col("cosine"))
-      // distinct: a retry re-generates candidates a half-published
-      // store already merged — identical (a, b, cosine) rows collapse
-      val mergedOld = knnTopK(storedAff.unionByName(cOld).distinct(), k)
-      val newHome = newAsg.select(col("cid").as("a"), col("home")).distinct()
-      val updated = newLists.join(broadcast(newHome), "a")
-        .unionByName(mergedOld.join(oldHome, "a"))
-        .localCheckpoint(false)
-      val homes = updated.select(col("home")).distinct().as[Long].collect().toSeq
-      val keep = edgesStore.filter(col("home").isin(homes: _*))
-        .join(updated.select(col("a")).distinct(), Seq("a"), "left_anti")
-      val content = keep.select(col("a"), col("b"), col("rank"),
-          col("cosine"), col("home"))
-        .unionByName(updated.select(col("a"), col("b"), col("rank"),
-          col("cosine"), col("home")))
-      // publish order: vectors (staged, skip-placed) -> edges
-      // (idempotent partition rewrite) -> centroids (tag commits)
-      tagLine match {
-        case Some(t) => graft.io.Tables.stagedPartitionedAppend(spark,
-          newAsg, s"$path/vectors", "cell", t.stripPrefix("_APPLIED-"))
-        case None => newAsg.repartition(col("cell")).write.mode("append")
-          .partitionBy("cell").parquet(s"$path/vectors")
-      }
-      if (homes.nonEmpty)
-        graft.io.Tables.replacePartitions(spark, content, s"$path/edges", "home")
-      graft.io.Tables.swapInParquet(spark, centsFrame(spark, cents),
-        s"$path/centroids", gen, ledger = applied ++ tagLine)
-      false
     }
+    // kmeans gives NO balance guarantee, so sizing nlist for a target
+    // cell is a heuristic, not the invariant — the retrain verified the
+    // cap the appender relies on against the published geometry (total
+    // probed members per cell, the same count the overflow check uses);
+    // retrain at doubled nlist until it holds. The batch already landed
+    // and its tag committed, so each retry is a pure geometry retrain
+    // from the store alone, published in its own window. Without this,
+    // a skewed kmeans could leave a still-over-cap store and the NEXT
+    // append would immediately re-trigger another corpus-scale rebuild
+    // (or throw without autoRebuild).
+    var attempts = 0
+    while (overCap && attempts < 3) {
+      nl = math.max(nl * 2, nl + 1); attempts += 1
+      graft.io.Tables.readMergePublish(spark, s"$path/centroids") { _ =>
+        centsFrame(spark, retrain(nl, None))
+      }
+    }
+    require(!overCap,
+      s"appendToKnnGraphStore autoRebuild: the batch LANDED and its " +
+        s"tag committed, but retraining up to nlist=$nl could not " +
+        s"bring every cell under the store's maxCluster — the store " +
+        s"at $path is PUBLISHED over-cap (a replay of this call " +
+        "no-ops on the applied tag and will not shrink it); the data " +
+        "is too concentrated for this cap: raise maxCluster or " +
+        "rebuild manually with a larger nlist")
   }
 
   /** Compact the graph store's VECTORS side to one file per cell —
@@ -1786,57 +1777,52 @@ object Similarity {
   def rebuildKnnGraphStore(spark: org.apache.spark.sql.SparkSession,
                            path: String, targetCell: Long = 500L,
                            minNlist: Int = 4, iters: Int = 2): Unit =
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      rebuildGraphLocked(spark, path, targetCell, minNlist, iters)
+    graft.io.Tables.readMergePublish(spark, s"$path/centroids") { _ =>
+      centsFrame(spark, rebuildGraph(spark, path, targetCell, minNlist, iters))
     }
 
-  /** The rebuild body, lock ALREADY HELD by the caller — shared by
-    * the public rebuild and [[appendToKnnGraphStore]]'s autoRebuild
-    * overflow path (which must retrain without re-acquiring).
+  /** Retrain the cells and rewrite vectors + edges, returning the new
+    * cells for the caller's centroid publish — shared by the public
+    * rebuild and [[appendToKnnGraphStore]]'s autoRebuild overflow
+    * path, both inside the centroids' read-merge-publish window.
     * `extraEq` rows (vid, eq) join the stored rows for training AND
     * the vectors/edges rewrite (stored rows with the same vid are
     * superseded — replay safety for a batch a crashed attempt half
-    * placed), and `addLedger` lines publish with the centroid swap —
-    * together they make the rebuild double as an append. */
-  private def rebuildGraphLocked(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, targetCell: Long,
-                                 minNlist: Int, iters: Int,
-                                 extraEq: Option[DataFrame] = None,
-                                 addLedger: Seq[String] = Nil): Unit = {
-      import spark.implicits._
-      val applied = graft.io.Tables.storeAppliedLedger(spark, s"$path/centroids")
-      val gen = graft.io.Tables.storeGeneration(spark, s"$path/centroids")
-      graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
-      val metaRow = spark.read.parquet(s"$path/meta").head()
-      val (k, nprobe, maxCluster) =
-        (metaRow.getLong(0).toInt, metaRow.getLong(1).toInt,
-          metaRow.getLong(2).toInt)
-      // EAGER snapshot: the rewrite below overwrites the dir this
-      // frame reads — a lazy checkpoint would race the truncation
-      val stored = spark.read.parquet(s"$path/vectors")
-        .filter(col("probe") === 1L)
-        .select(col("cid").as("vid"), col("eq"))
-      val eq0 = extraEq.fold(stored)(x =>
-          stored.join(x.select(col("vid")), Seq("vid"), "left_anti")
-            .unionByName(x))
-        .localCheckpoint(true)
-      val nlist = math.max(minNlist, (eq0.count() / targetCell).toInt)
-      val cents = kmeansTrain(eq0, nlist, iters)
-      val asg = graphAssignmentsEq(eq0.select(col("vid").as("cid"), col("eq")),
-        cents, nprobe)
-      asg.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
-      val graph = knnTopK(
-        cellPairsTrainedEq(eq0, cents, maxCluster, nprobe, ordered = false)
-          .select(col("a"), col("b"), col("cosine")), k)
-      val homes = asg.filter(col("probe") === 1L)
-        .select(col("cid").as("a"), col("home"))
-      graph.join(homes, "a")
-        .repartition(col("home"))
-        .write.mode("overwrite").partitionBy("home").parquet(s"$path/edges")
-      graft.io.Tables.swapInParquet(spark, centsFrame(spark, cents),
-        s"$path/centroids", gen, ledger = applied ++ addLedger)
-    }
+    * placed), which makes the rebuild double as an append. */
+  private def rebuildGraph(spark: org.apache.spark.sql.SparkSession,
+                           path: String, targetCell: Long,
+                           minNlist: Int, iters: Int,
+                           extraEq: Option[DataFrame] = None): Seq[(Long, Seq[Long])] = {
+    graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
+    val metaRow = spark.read.parquet(s"$path/meta").head()
+    val (k, nprobe, maxCluster) =
+      (metaRow.getLong(0).toInt, metaRow.getLong(1).toInt,
+        metaRow.getLong(2).toInt)
+    // EAGER snapshot: the rewrite below overwrites the dir this
+    // frame reads — a lazy checkpoint would race the truncation
+    val stored = spark.read.parquet(s"$path/vectors")
+      .filter(col("probe") === 1L)
+      .select(col("cid").as("vid"), col("eq"))
+    val eq0 = extraEq.fold(stored)(x =>
+        stored.join(x.select(col("vid")), Seq("vid"), "left_anti")
+          .unionByName(x))
+      .localCheckpoint(true)
+    val nlist = math.max(minNlist, (eq0.count() / targetCell).toInt)
+    val cents = kmeansTrain(eq0, nlist, iters)
+    val asg = graphAssignmentsEq(eq0.select(col("vid").as("cid"), col("eq")),
+      cents, nprobe)
+    asg.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
+    val graph = knnTopK(
+      cellPairsTrainedEq(eq0, cents, maxCluster, nprobe, ordered = false)
+        .select(col("a"), col("b"), col("cosine")), k)
+    val homes = asg.filter(col("probe") === 1L)
+      .select(col("cid").as("a"), col("home"))
+    graph.join(homes, "a")
+      .repartition(col("home"))
+      .write.mode("overwrite").partitionBy("home").parquet(s"$path/edges")
+    cents
+  }
 
   /** Maintenance diagnostic for the graph store (the k11 file-audit
     * convention): per partitioned store, partition-dir / file / row
@@ -2091,21 +2077,13 @@ object Similarity {
     * offline rebuild). */
   def appendToIvfIndex(df: DataFrame, idCol: String, embCol: String,
                        labelCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    // whole append (file adds + centroid merge) under the store lock:
-    // two racing appenders serialize, so neither merges a stale base
-    // and the assignments/centroids pair can never tear (r15 —
-    // single-writer contract enforced, not just documented)
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      val gen = graft.io.Tables.storeGeneration(spark, s"$path/centroids")
+    // whole append (file adds + centroid merge) in one window: two
+    // racing appenders serialize, so neither merges a stale base and
+    // the assignments/centroids pair can never tear
+    graft.io.Tables.readMergePublish(df.sparkSession, s"$path/centroids") { _ =>
       val (centNew, eqNew) = buildIvfIndex(df, idCol, embCol, labelCol)
-      eqNew.write.mode("append").partitionBy("label")
-        .parquet(s"$path/assignments")
-      val merged = spark.read.parquet(s"$path/centroids")
-        .unionByName(centNew)
-        .groupBy(col("label"), col("pos"))
-        .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
-      graft.io.Tables.swapInParquet(spark, merged, s"$path/centroids", gen)
+      appendPartitioned(eqNew, s"$path/assignments", "label", None)
+      mergeCentroidSums(path, centNew)
     }
   }
 
@@ -2212,33 +2190,18 @@ object Similarity {
                          labelCol: String, path: String, m: Int = 4,
                          dim: Int = 64, batchTag: Option[String] = None): Unit = {
     val spark = df.sparkSession
-    // same enforced single-writer window as appendToIvfIndex; same
-    // applied-ledger + staged-codes exactly-once contract as
-    // appendToIvfSq8Index when `batchTag` is given
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      val applied = graft.io.Tables.storeAppliedLedger(spark, s"$path/centroids")
-      val tagLine = batchTag.map(graft.io.Tables.appliedLedgerLine)
-      if (tagLine.exists(applied.contains)) return // replayed batch: no-op
-      graft.io.Tables.warnIfLedgerWrapped(spark, s"$path/centroids", tagLine)
-      val gen = graft.io.Tables.storeGeneration(spark, s"$path/centroids")
+    // same window as appendToIvfIndex; same applied-ledger +
+    // staged-codes exactly-once contract as appendToIvfSq8Index when
+    // `batchTag` is given
+    graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
       val (byLabel, _) = readPqIndex(spark, path)
       validateCodebooks(spark, byLabel, m, dim, path)
       val (centNew, eqNew) = buildIvfIndex(df, idCol, embCol, labelCol)
       val codes = pqEncodeFrameQ(eqNew.select(col("cid"), col("eq").as("ce")),
           byLabel, m, dim)
         .join(eqNew.select(col("cid"), col("label")), "cid")
-      tagLine match {
-        case Some(t) => graft.io.Tables.stagedPartitionedAppend(spark, codes,
-          s"$path/codes", "label", t.stripPrefix("_APPLIED-"))
-        case None => codes.write.mode("append").partitionBy("label")
-          .parquet(s"$path/codes")
-      }
-      val merged = spark.read.parquet(s"$path/centroids")
-        .unionByName(centNew)
-        .groupBy(col("label"), col("pos"))
-        .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
-      graft.io.Tables.swapInParquet(spark, merged, s"$path/centroids", gen,
-        ledger = applied ++ tagLine)
+      appendPartitioned(codes, s"$path/codes", "label", batchTag)
+      mergeCentroidSums(path, centNew)
     }
   }
 

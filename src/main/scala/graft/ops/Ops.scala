@@ -136,19 +136,15 @@ object Ops {
   /** J1 — auth-enrichment join (firebase_service.py:79-106, driven
     * per-row at :155). The reference's N+1 RPC loop with
     * exception→default is exactly a left-outer equi-join with
-    * null-fill. `broadcastAuth = true` (default) fits the reference's
+    * null-fill. The auth side broadcasts: it fits the reference's
     * reality — a bounded auth snapshot — and avoids shuffling the huge
-    * users side; pass false when the auth table scales with users
-    * (1:1 at 100 TB), letting Catalyst plan a shuffle join over
-    * co-partitioned/bucketed inputs instead. */
-  def enrichFromAuth(users: DataFrame, auth: DataFrame, key: String,
-                     broadcastAuth: Boolean = true): DataFrame = {
-    val a0 = auth.select(
+    * users side. */
+  def enrichFromAuth(users: DataFrame, auth: DataFrame, key: String): DataFrame = {
+    val a = broadcast(auth.select(
       col(key),
       col("email").as("__auth_email"),
       col("email_verified").as("__auth_verified"),
-      col("provider_ids").as("__auth_providers"))
-    val a = if (broadcastAuth) broadcast(a0) else a0
+      col("provider_ids").as("__auth_providers")))
     users.join(a, Seq(key), "left_outer")
       .withColumn("provider",
         when(array_contains(coalesce(col("__auth_providers"), array()), "google.com"), lit("google.com"))
@@ -168,12 +164,9 @@ object Ops {
     * id exists get a fresh uuid-20; the reference's O(n·m) Python list
     * scan becomes a broadcast anti/semi join pair + union (§2.9). */
   def resolveIdConflicts(incoming: DataFrame, existing: DataFrame, idCol: String,
-                         newId: Column = Exprs.uuid20,
-                         broadcastKeys: Boolean = true): DataFrame = {
-    val keys0 = existing.select(col(idCol)).distinct()
-    // default broadcast matches the reference's in-memory id list; at
-    // scale (existing table ~ data size) pass false for shuffle joins.
-    val keys = if (broadcastKeys) broadcast(keys0) else keys0
+                         newId: Column = Exprs.uuid20): DataFrame = {
+    // broadcast matches the reference's in-memory id list
+    val keys = broadcast(existing.select(col(idCol)).distinct())
     val clean = incoming.join(keys, Seq(idCol), "left_anti")
     val rewritten = incoming.join(keys, Seq(idCol), "left_semi")
       .withColumn(idCol, newId.cast(incoming.schema(idCol).dataType))
@@ -446,16 +439,14 @@ object Ops {
     * facts + expanded dims (intervals/binWidth), the classic interval
     * join at scale. Dim tables are typically tiny → broadcast. */
   def rangeJoinBinned(fact: DataFrame, ranges: DataFrame, factVal: String,
-                      lo: String, hi: String, binWidth: Double,
-                      broadcastRanges: Boolean = true): DataFrame = {
+                      lo: String, hi: String, binWidth: Double): DataFrame = {
     // floor(hi/W) may add one empty trailing bin when hi sits exactly on
     // a bin boundary — harmless (the residual predicate drops it). An
     // epsilon subtraction instead would silently LOSE facts whose value
     // lands within the epsilon above the boundary.
-    val expanded = ranges.withColumn("__bin",
+    val dims = broadcast(ranges.withColumn("__bin",
       explode(sequence(floor(col(lo) / binWidth).cast("long"),
-        floor(col(hi) / binWidth).cast("long"))))
-    val dims = if (broadcastRanges) broadcast(expanded) else expanded
+        floor(col(hi) / binWidth).cast("long")))))
     fact.withColumn("__bin", floor(col(factVal) / binWidth).cast("long"))
       .join(dims, Seq("__bin"))
       .filter(col(factVal) >= col(lo) && col(factVal) < col(hi))

@@ -4167,7 +4167,7 @@ object LlmQueries {
     // The persisted incremental quantile store — register SUM is NOT
     // replay-idempotent (unlike HLL max), so each batch's applied-
     // marker publishes inside the SAME atomic rename as the merged
-    // data (Tables.swapInParquet markers): the second delta-1 append
+    // data (Tables.swapInParquet ledger): the second delta-1 append
     // below is a deliberate replay and must be a no-op — if the
     // exactly-once marker failed, counts double and every quantile
     // shifts, so the shared full-build oracle hash-catches it.

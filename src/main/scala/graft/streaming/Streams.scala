@@ -924,7 +924,7 @@ object Streams {
     * Register sum is NOT idempotent — a replayed batch would
     * double-count — so each batch publishes its applied-marker INSIDE
     * the same atomic rename as the merged data
-    * ([[graft.io.Tables.swapInParquet]] `markers`, keyed by
+    * ([[graft.io.Tables.swapInParquet]] `ledger`, keyed by
     * (checkpoint lineage, batch id) like the commit-log sinks): a
     * crash leaves either the old generation (marker absent — the
     * replay re-merges) or the new one (marker present — the replay

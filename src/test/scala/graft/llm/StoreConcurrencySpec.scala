@@ -2,9 +2,11 @@ package graft.llm
 
 import graft.SparkSpec
 import graft.io.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** The r15 single-writer enforcement: swap-published stores
   * (HLL registers, IVF/PQ centroids) now run every read-merge-publish
@@ -162,55 +164,75 @@ class StoreConcurrencySpec extends SparkSpec {
       "racing code appends lost or duplicated a batch")
   }
 
-  test("tagged appendToIvfSq8Index: replay no-ops; a crash between codes and swap resumes exactly-once") {
-    def vecs(ids: Seq[Long]) = ids.map { i =>
-      (i, Array.tabulate(4)(d => (i * 4 + d).toDouble / 10.0), i % 2)
-    }.toDF("vec_id", "embedding", "label")
-    val path = Files.createTempDirectory("ivfsq8_tag_").toString + "/idx"
-    Similarity.persistIvfSq8Index(vecs(0L to 3L), "vec_id", "embedding",
-      "label", path, train = Some(vecs(0L to 11L)))
-    Similarity.appendToIvfSq8Index(vecs(4L to 7L), "vec_id", "embedding",
-      path, dim = 4, labelCol = Some("label"), batchTag = Some("batch-1"))
-    val genAfter = Tables.storeGeneration(spark, s"$path/centroids")
-    def state() = (
-      spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq,
-      spark.read.parquet(s"$path/centroids").orderBy("label", "pos").collect().toSeq)
-    val after1 = state()
-    // at-least-once replay of a COMPLETED batch: the whole call no-ops
-    Similarity.appendToIvfSq8Index(vecs(4L to 7L), "vec_id", "embedding",
-      path, dim = 4, labelCol = Some("label"), batchTag = Some("batch-1"))
-    assert(state() === after1, "a replayed tagged append must change nothing")
-    assert(Tables.storeGeneration(spark, s"$path/centroids") === genAfter,
-      "a replayed tagged append must not publish a generation")
-    // CRASH WINDOW: batch-2's codes land (staged, deterministic names)
-    // but the centroid swap never happens — the previously-unsafe
-    // residue. Stage them twice for good measure (idempotent moves).
-    val tag2 = Tables.appliedLedgerLine("batch-2").stripPrefix("_APPLIED-")
-    val (_, quant, _) = Similarity.readIvfSq8Index(spark, path)
-    def codes2 = Similarity.sq8EncodeFrame(vecs(8L to 11L), "vec_id",
-        "embedding", quant)
-      .join(vecs(8L to 11L).select(col("vec_id").as("cid"),
-        col("label")), "cid")
-    Tables.stagedPartitionedAppend(spark, codes2, s"$path/codes", "label", tag2)
-    Tables.stagedPartitionedAppend(spark, codes2, s"$path/codes", "label", tag2)
-    // the retry of the WHOLE batch: skips the placed code files,
-    // merges centroids once, publishes the applied tag
-    Similarity.appendToIvfSq8Index(vecs(8L to 11L), "vec_id", "embedding",
-      path, dim = 4, labelCol = Some("label"), batchTag = Some("batch-2"))
-    val scratch = Files.createTempDirectory("ivfsq8_tag_scratch_").toString + "/idx"
-    Similarity.persistIvfSq8Index(vecs(0L to 11L), "vec_id", "embedding",
-      "label", scratch)
-    val (_, _, codesW) = Similarity.readIvfSq8Index(spark, scratch)
-    assert(state()._1 === codesW.orderBy("cid").collect().toSeq,
-      "crash-window retry duplicated or lost code rows")
-    assert(state()._2 === spark.read.parquet(s"$scratch/centroids")
-      .orderBy("label", "pos").collect().toSeq,
-      "crash-window retry double-merged or lost centroid sums")
-    // and one more full replay of batch-2 is a no-op
-    val settled = state()
-    Similarity.appendToIvfSq8Index(vecs(8L to 11L), "vec_id", "embedding",
-      path, dim = 4, labelCol = Some("label"), batchTag = Some("batch-2"))
-    assert(state() === settled)
+  /** A cluster-partitioned code family with tagged appends: how to
+    * persist it, append a tagged batch, and encode a batch's codes the
+    * way its appender stages them. */
+  private case class TaggedCodeFamily(
+      appender: String,
+      persist: (DataFrame, String, Option[DataFrame]) => Unit,
+      append: (DataFrame, String, String) => Unit,
+      batchCodes: (DataFrame, String) => DataFrame)
+
+  private val taggedCodeFamilies = Seq(
+    TaggedCodeFamily("appendToIvfSq8Index",
+      (df, path, train) => Similarity.persistIvfSq8Index(df, "vec_id",
+        "embedding", "label", path, train = train),
+      (df, path, tag) => Similarity.appendToIvfSq8Index(df, "vec_id",
+        "embedding", path, dim = 4, labelCol = Some("label"),
+        batchTag = Some(tag)),
+      (df, path) => Similarity.sq8EncodeFrame(df, "vec_id", "embedding",
+        Similarity.readIvfSq8Index(spark, path)._2)),
+    TaggedCodeFamily("appendToIvfPqIndex",
+      (df, path, train) => Similarity.persistIvfPqIndex(df, "vec_id",
+        "embedding", "label", path, m = 2, dim = 4, train = train),
+      (df, path, tag) => Similarity.appendToIvfPqIndex(df, "vec_id",
+        "embedding", "label", path, m = 2, dim = 4, batchTag = Some(tag)),
+      (df, path) => Similarity.pqEncodeFrame(df, "vec_id", "embedding",
+        Similarity.readIvfPqIndex(spark, path)._2, 2, 4)))
+
+  taggedCodeFamilies.foreach { f =>
+    test(s"tagged ${f.appender}: replay no-ops; a crash between codes and swap resumes exactly-once") {
+      def vecs(ids: Seq[Long]) = ids.map { i =>
+        (i, Array.tabulate(4)(d => (i * 4 + d).toDouble / 10.0), i % 2)
+      }.toDF("vec_id", "embedding", "label")
+      val path = Files.createTempDirectory("ivf_tag_").toString + "/idx"
+      f.persist(vecs(0L to 3L), path, Some(vecs(0L to 11L)))
+      f.append(vecs(4L to 7L), path, "batch-1")
+      val genAfter = Tables.storeGeneration(spark, s"$path/centroids")
+      def state() = (
+        spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq,
+        spark.read.parquet(s"$path/centroids").orderBy("label", "pos").collect().toSeq)
+      val after1 = state()
+      // at-least-once replay of a COMPLETED batch: the whole call no-ops
+      f.append(vecs(4L to 7L), path, "batch-1")
+      assert(state() === after1, "a replayed tagged append must change nothing")
+      assert(Tables.storeGeneration(spark, s"$path/centroids") === genAfter,
+        "a replayed tagged append must not publish a generation")
+      // CRASH WINDOW: batch-2's codes land (staged, deterministic names)
+      // but the centroid swap never happens — the previously-unsafe
+      // residue. Stage them twice for good measure (idempotent moves).
+      val tag2 = Tables.appliedLedgerLine("batch-2").stripPrefix("_APPLIED-")
+      def codes2 = f.batchCodes(vecs(8L to 11L), path)
+        .join(vecs(8L to 11L).select(col("vec_id").as("cid"),
+          col("label")), "cid")
+      Tables.stagedPartitionedAppend(spark, codes2, s"$path/codes", "label", tag2)
+      Tables.stagedPartitionedAppend(spark, codes2, s"$path/codes", "label", tag2)
+      // the retry of the WHOLE batch: skips the placed code files,
+      // merges centroids once, publishes the applied tag
+      f.append(vecs(8L to 11L), path, "batch-2")
+      val scratch = Files.createTempDirectory("ivf_tag_scratch_").toString + "/idx"
+      f.persist(vecs(0L to 11L), scratch, None)
+      val codesW = spark.read.parquet(s"$scratch/codes")
+      assert(state()._1 === codesW.orderBy("cid").collect().toSeq,
+        "crash-window retry duplicated or lost code rows")
+      assert(state()._2 === spark.read.parquet(s"$scratch/centroids")
+        .orderBy("label", "pos").collect().toSeq,
+        "crash-window retry double-merged or lost centroid sums")
+      // and one more full replay of batch-2 is a no-op
+      val settled = state()
+      f.append(vecs(8L to 11L), path, "batch-2")
+      assert(state() === settled)
+    }
   }
 
   test("logHist applied ledger: one file, legacy markers migrate, replays no-op") {
@@ -919,5 +941,28 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(spark.read.parquet(s"$path/counts")
       .orderBy("n", "w2", "w1", "w").collect().toSeq === before,
       "the refused persist must leave the store untouched")
+  }
+
+  test("the store commit protocol lives only in io/Tables.scala") {
+    // the ledger check, wrap warning and generation read are the
+    // read-merge-publish window's internals: every other module goes
+    // through Tables.readMergePublish instead of re-implementing them
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.exists(root.resolve("graft/io/Tables.scala")),
+      s"run from the repository root: $root has no graft/io/Tables.scala")
+    val protocol = "storeAppliedLedger|warnIfLedgerWrapped|storeGeneration\\(".r
+    val stream = Files.walk(root)
+    val offenders = try stream.iterator().asScala.toList
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/io/Tables.scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if protocol.findFirstIn(l).nonEmpty =>
+            s"${root.relativize(p)}:${i + 1}: ${l.trim}"
+        }
+      }
+    finally stream.close()
+    assert(offenders.isEmpty,
+      "store commit protocol copied out of io/Tables.scala — route the " +
+        s"store through Tables.readMergePublish:\n${offenders.mkString("\n")}")
   }
 }
