@@ -1,9 +1,11 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Structured Streaming extension (SURVEY.md §2.10: the reference is
   * strictly batch; this is the incremental path a live RTDB/event source
@@ -188,13 +190,6 @@ object Streams {
       .drop("c_uid")
   }
 
-  /** Validation split as a stream: same §2.8 error-channel expressions,
-    * applied to a streaming frame (checks are stateless projections, so
-    * they stream trivially). */
-  def flaggedStream(events: DataFrame,
-                    checks: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
-    graft.ops.Ops.withErrors(checks)(events)
-
   /** Streaming → JDBC sink via foreachBatch: each micro-batch goes
     * through the same batched, partition-parallel append as the batch
     * path (K3), so the DB sees one transaction batch per partition per
@@ -203,13 +198,10 @@ object Streams {
     * upstream dedup (dropDuplicatesWithinWatermark) — same contract as
     * any foreachBatch sink. Returns the started query. */
   def toJdbc(df: DataFrame, url: String, table: String,
-             checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.io.Jdbc.append(batch.toDF(), url, table)
-      }
-      .start()
+             checkpointDir: String): StreamingQuery =
+    startBatches(df, checkpointDir) { (batch, _) =>
+      graft.io.Jdbc.append(batch, url, table)
+    }
 
   /** Streaming incremental near-dup dedup — the daily-crawl pipeline
     * composed end to end: each micro-batch of documents is deduped
@@ -242,17 +234,14 @@ object Streams {
                              indexTable: String, pairsTable: String,
                              idCol: String, textCol: String,
                              checkpointDir: String, threshold: Double = 0.5,
-                             indexBuckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
+                             indexBuckets: Int = 8): StreamingQuery = {
     require(!docs.columns.contains(HashCol),
       s"incrementalDedupStream reserves the $HashCol column name (the corpus " +
         "sink maintains it as the precomputed content hash)")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dedupBatch(batch.toDF(), corpusTable, indexTable, pairsTable,
-          idCol, textCol, threshold, indexBuckets, checkpointDir, batchId)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      dedupBatch(batch, corpusTable, indexTable, pairsTable,
+        idCol, textCol, threshold, indexBuckets, checkpointDir, batchId)
+    }
   }
 
   /** Delta-gated variant of [[incrementalDedupStream]] for RE-CRAWL
@@ -284,22 +273,15 @@ object Streams {
                                   indexTable: String, pairsTable: String,
                                   idCol: String, textCol: String,
                                   checkpointDir: String, threshold: Double = 0.5,
-                                  indexBuckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
+                                  indexBuckets: Int = 8): StreamingQuery = {
     require(!docs.columns.contains(HashCol),
       s"incrementalDeltaDedupStream reserves the $HashCol column name (the " +
         "corpus sink maintains it as the precomputed content hash)")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        val spark = b.sparkSession
-        val kept =
-          if (!spark.catalog.tableExists(corpusTable)) b
-          else deltaGate(b, spark.table(corpusTable), idCol, textCol)
-        dedupBatch(kept, corpusTable, indexTable, pairsTable,
-          idCol, textCol, threshold, indexBuckets, checkpointDir, batchId)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      dedupBatch(recrawlGate(batch, corpusTable, idCol, textCol), corpusTable,
+        indexTable, pairsTable, idCol, textCol, threshold, indexBuckets,
+        checkpointDir, batchId)
+    }
   }
 
   /** Streaming repeated-span trim — the last batch-only stage of the
@@ -326,8 +308,8 @@ object Streams {
     * Per-batch cost is bounded by the batch and its blast radius:
     * batch windows O(batch tokens); index reads are semi-join-pruned
     * to the batch's window keys and the newly-qualifying keys'
-    * documents; nothing corpus-scale shuffles. Exactly-once via the
-    * [[dedupBatch]] commit-log recipe; a crash between the sink
+    * documents; nothing corpus-scale shuffles. Exactly-once via
+    * [[commitOnce]]; a crash between the sink
     * appends and the commit row replays with correct VALUES (the
     * overlap rule reads the index minus the batch's ids) leaving only
     * exact-duplicate rows, which the latest-version fold absorbs. */
@@ -335,15 +317,12 @@ object Streams {
                      corpusTable: String, indexTable: String,
                      trimmedTable: String, checkpointDir: String,
                      k: Int = 8, minDf: Long = 2L,
-                     indexBuckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
+                     indexBuckets: Int = 8): StreamingQuery = {
     requireSpanTrimCols(docs)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        spanTrimBatch(batch.toDF(), corpusTable, indexTable, trimmedTable,
-          idCol, textCol, k, minDf, indexBuckets, checkpointDir, batchId)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      spanTrimBatch(batch, corpusTable, indexTable, trimmedTable,
+        idCol, textCol, k, minDf, indexBuckets, checkpointDir, batchId)
+    }
   }
 
   /** Delta-gated [[spanTrimStream]] for RE-CRAWL sources that
@@ -373,20 +352,13 @@ object Streams {
                           corpusTable: String, indexTable: String,
                           trimmedTable: String, checkpointDir: String,
                           k: Int = 8, minDf: Long = 2L,
-                          indexBuckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
+                          indexBuckets: Int = 8): StreamingQuery = {
     requireSpanTrimCols(docs)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        val spark = b.sparkSession
-        val kept =
-          if (!spark.catalog.tableExists(corpusTable)) b
-          else deltaGate(b, spark.table(corpusTable), idCol, textCol)
-        spanTrimBatch(kept, corpusTable, indexTable, trimmedTable,
-          idCol, textCol, k, minDf, indexBuckets, checkpointDir, batchId)
-      }
-      .start()
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      spanTrimBatch(recrawlGate(batch, corpusTable, idCol, textCol),
+        corpusTable, indexTable, trimmedTable, idCol, textCol, k, minDf,
+        indexBuckets, checkpointDir, batchId)
+    }
   }
 
   private def requireSpanTrimCols(docs: DataFrame): Unit =
@@ -403,99 +375,83 @@ object Streams {
                                    streamId: String = "",
                                    batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
-    val commits = commitsTableFor(trimmedTable)
-    if (batchId >= 0 && spark.catalog.tableExists(commits) &&
-        spark.table(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    val b = batch.localCheckpoint(false)
-    val bKeys = graft.llm.Dedup.spanKeys(b, idCol, textCol, k)
-      .localCheckpoint(false)
-    val bIds = b.select(col(idCol).as("__nid"))
-    val idxSchema = org.apache.spark.sql.types.StructType(Seq(
-      b.schema(idCol),
-      org.apache.spark.sql.types.StructField("start",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("h",
-        org.apache.spark.sql.types.StringType, nullable = true)))
-    // overlap rule: a replayed batch's keys are already in the index —
-    // the new frame wins, so df never double-counts (the
-    // incrementalNearDupPairs convention)
-    val idx = tableOr(spark, indexTable, idxSchema)
-      .join(broadcast(bIds), col(idCol) === col("__nid"), "left_anti")
-    // df before/after for the batch's window keys only
-    val bH = bKeys.select(col("h")).distinct()
-    val dfBefore = idx.join(bH, Seq("h"), "left_semi")
-      .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__dfb"))
-    val dfBatch = bKeys.groupBy(col("h"))
-      .agg(countDistinct(col(idCol)).as("__dfn"))
-    val dfAfter = dfBatch.join(dfBefore, Seq("h"), "left")
-      .select(col("h"),
-        (coalesce(col("__dfb"), lit(0L)) + col("__dfn")).as("__dfa"),
-        coalesce(col("__dfb"), lit(0L)).as("__dfb"))
-      .localCheckpoint(false)
-    val qualNow = dfAfter.filter(col("__dfa") >= minDf).select(col("h"))
-    // the batch's own trim: coverage from its qualifying windows
-    val bCov = bKeys.join(qualNow, "h")
-      .select(col(idCol),
-        explode(sequence(col("start"), col("start") + lit(k - 1))).as("pos"))
-      .distinct()
-    val bTrim = graft.llm.Dedup.trimWithCoverage(b, bCov, idCol, textCol)
-    // the blast radius: keys that qualify NOW but did not before pull
-    // their standing documents in for a re-trim against the FULL
-    // (index ∪ batch) statistics of every key those documents carry
-    val newlyQ = dfAfter.filter(col("__dfa") >= minDf &&
-      col("__dfb") < minDf).select(col("h"))
-    val affIds = idx.join(newlyQ, Seq("h"), "left_semi")
-      .select(col(idCol)).distinct().localCheckpoint(false)
-    val affKeys = idx.join(affIds, Seq(idCol), "left_semi")
-      .localCheckpoint(false)
-    val affH = affKeys.select(col("h")).distinct()
-    val gDf = idx.join(affH, Seq("h"), "left_semi")
-      .select(col("h"), col(idCol))
-      .unionByName(bKeys.join(affH, Seq("h"), "left_semi")
-        .select(col("h"), col(idCol)))
-      .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__g"))
-    val qualAff = gDf.filter(col("__g") >= minDf).select(col("h"))
-    val affCov = affKeys.join(qualAff, "h")
-      .select(col(idCol),
-        explode(sequence(col("start"), col("start") + lit(k - 1))).as("pos"))
-      .distinct()
-    val corpusSchema = org.apache.spark.sql.types.StructType(
-      b.select(col(idCol), col(textCol)).schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(HashCol,
-          org.apache.spark.sql.types.StringType, nullable = true),
-        org.apache.spark.sql.types.StructField(SeqCol,
-          org.apache.spark.sql.types.LongType, nullable = false)))
-    val verW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col(SeqCol).desc)
-    val affDocs = tableOr(spark, corpusTable, corpusSchema)
-      .join(affIds, Seq(idCol), "left_semi")
+    commitOnce(spark, TableLog(commitsTableFor(trimmedTable)), streamId, batchId) {
+      val b = batch.localCheckpoint(false)
+      val bKeys = graft.llm.Dedup.spanKeys(b, idCol, textCol, k)
+        .localCheckpoint(false)
+      val bIds = b.select(col(idCol).as("__nid"))
+      val idxSchema = StructType(Seq(b.schema(idCol),
+        StructField("start", LongType, nullable = false),
+        StructField("h", StringType, nullable = true)))
+      // overlap rule: a replayed batch's keys are already in the index —
+      // the new frame wins, so df never double-counts (the
+      // incrementalNearDupPairs convention)
+      val idx = tableOr(spark, indexTable, idxSchema)
+        .join(broadcast(bIds), col(idCol) === col("__nid"), "left_anti")
+      // df before/after for the batch's window keys only
+      val bH = bKeys.select(col("h")).distinct()
+      val dfBefore = idx.join(bH, Seq("h"), "left_semi")
+        .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__dfb"))
+      val dfBatch = bKeys.groupBy(col("h"))
+        .agg(countDistinct(col(idCol)).as("__dfn"))
+      val dfAfter = dfBatch.join(dfBefore, Seq("h"), "left")
+        .select(col("h"),
+          (coalesce(col("__dfb"), lit(0L)) + col("__dfn")).as("__dfa"),
+          coalesce(col("__dfb"), lit(0L)).as("__dfb"))
+        .localCheckpoint(false)
+      val qualNow = dfAfter.filter(col("__dfa") >= minDf).select(col("h"))
+      // the batch's own trim: coverage from its qualifying windows
+      val bCov = bKeys.join(qualNow, "h")
+        .select(col(idCol),
+          explode(sequence(col("start"), col("start") + lit(k - 1))).as("pos"))
+        .distinct()
+      val bTrim = graft.llm.Dedup.trimWithCoverage(b, bCov, idCol, textCol)
+      // the blast radius: keys that qualify NOW but did not before pull
+      // their standing documents in for a re-trim against the FULL
+      // (index ∪ batch) statistics of every key those documents carry
+      val newlyQ = dfAfter.filter(col("__dfa") >= minDf &&
+        col("__dfb") < minDf).select(col("h"))
+      val affIds = idx.join(newlyQ, Seq("h"), "left_semi")
+        .select(col(idCol)).distinct().localCheckpoint(false)
+      val affKeys = idx.join(affIds, Seq(idCol), "left_semi")
+        .localCheckpoint(false)
+      val affH = affKeys.select(col("h")).distinct()
+      val gDf = idx.join(affH, Seq("h"), "left_semi")
+        .select(col("h"), col(idCol))
+        .unionByName(bKeys.join(affH, Seq("h"), "left_semi")
+          .select(col("h"), col(idCol)))
+        .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__g"))
+      val qualAff = gDf.filter(col("__g") >= minDf).select(col("h"))
+      val affCov = affKeys.join(qualAff, "h")
+        .select(col(idCol),
+          explode(sequence(col("start"), col("start") + lit(k - 1))).as("pos"))
+        .distinct()
+      val corpusSchema = StructType(
+        b.select(col(idCol), col(textCol)).schema.fields ++ Seq(
+          StructField(HashCol, StringType, nullable = true),
+          StructField(SeqCol, LongType, nullable = false)))
       // the re-trim tokenization must see each document once, and —
       // the re-crawl case — its LATEST stored version: fold by __seq
       // (exact-duplicate rows from a mid-batch crash replay tie on
       // __seq and are interchangeable). Window over the id-bucketed
       // scan: exchange-free.
-      .withColumn("__rn", row_number().over(verW))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col(textCol))
-    val affTrim = graft.llm.Dedup.trimWithCoverage(affDocs, affCov,
-      idCol, textCol)
-    // sinks: versioned trims, then the standing state, commit LAST
-    bTrim.unionByName(affTrim).withColumn("batch_seq", lit(batchId))
-      .write.mode("append").format("parquet").saveAsTable(trimmedTable)
-    bKeys.write.mode("append").bucketBy(indexBuckets, "h").sortBy("h")
-      .format("parquet").saveAsTable(indexTable)
-    b.select(col(idCol), col(textCol))
-      .withColumn(HashCol, graft.llm.Text.contentHash(col(textCol)))
-      .withColumn(SeqCol, lit(batchId))
-      .write.mode("append")
-      .bucketBy(indexBuckets, idCol).sortBy(idCol)
-      .format("parquet").saveAsTable(corpusTable)
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"),
-          lit(batchId).as("batch_id"))
-        .write.mode("append").format("parquet").saveAsTable(commits)
+      val affDocs = latestPerId(tableOr(spark, corpusTable, corpusSchema)
+          .join(affIds, Seq(idCol), "left_semi"), idCol, SeqCol)
+        .select(col(idCol), col(textCol))
+      val affTrim = graft.llm.Dedup.trimWithCoverage(affDocs, affCov,
+        idCol, textCol)
+      // sinks: versioned trims, then the standing state
+      bTrim.unionByName(affTrim).withColumn("batch_seq", lit(batchId))
+        .write.mode("append").format("parquet").saveAsTable(trimmedTable)
+      bKeys.write.mode("append").bucketBy(indexBuckets, "h").sortBy("h")
+        .format("parquet").saveAsTable(indexTable)
+      b.select(col(idCol), col(textCol))
+        .withColumn(HashCol, graft.llm.Text.contentHash(col(textCol)))
+        .withColumn(SeqCol, lit(batchId))
+        .write.mode("append")
+        .bucketBy(indexBuckets, idCol).sortBy(idCol)
+        .format("parquet").saveAsTable(corpusTable)
+    }
   }
 
   /** The span-trim product: the LATEST version of every document in
@@ -510,12 +466,7 @@ object Streams {
   def readSpanTrimmed(spark: SparkSession, trimmedTable: String,
                       idCol: String): DataFrame = {
     spark.catalog.refreshTable(trimmedTable)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("batch_seq").desc)
-    spark.table(trimmedTable)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "batch_seq")
+    latestPerId(spark.table(trimmedTable), idCol, "batch_seq").drop("batch_seq")
   }
 
   /** Compact the versioned trimmed table to ONE row per document (its
@@ -530,19 +481,11 @@ object Streams {
     * concurrently with the stream (catalog renames race appends). */
   def compactSpanTrimmed(spark: SparkSession, trimmedTable: String,
                          idCol: String): Unit =
-    if (spark.catalog.tableExists(trimmedTable)) {
-      val tmp = trimmedTable + "__compact"
-      spark.sql(s"DROP TABLE IF EXISTS $tmp")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(idCol))
-        .orderBy(col("batch_seq").desc)
-      spark.table(trimmedTable)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-        .write.format("parquet").saveAsTable(tmp)
-      spark.sql(s"DROP TABLE $trimmedTable")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $trimmedTable")
-    }
+    if (spark.catalog.tableExists(trimmedTable))
+      swapTable(spark, trimmedTable, "__compact") { tmp =>
+        latestPerId(spark.table(trimmedTable), idCol, "batch_seq")
+          .write.format("parquet").saveAsTable(tmp)
+      }
 
   /** Full rebuild of the span gate's standing state from the corpus's
     * LATEST versions — the remedy for [[spanTrimDeltaStream]]'s
@@ -581,21 +524,15 @@ object Streams {
     require(spark.catalog.tableExists(corpusTable),
       s"rebuildSpanTrim: corpus table $corpusTable does not exist")
     spark.catalog.refreshTable(corpusTable)
-    val verW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col(SeqCol).desc)
-    val latest = spark.table(corpusTable)
-      .withColumn("__rn", row_number().over(verW))
-      .filter(col("__rn") === 1)
+    val latest = latestPerId(spark.table(corpusTable), idCol, SeqCol)
       .select(col(idCol), col(textCol))
       .localCheckpoint(false)
     // 1. the index: latest versions' window keys only
     val keys = graft.llm.Dedup.spanKeys(latest, idCol, textCol, k)
-    val idxTmp = indexTable + "__rebuild"
-    spark.sql(s"DROP TABLE IF EXISTS $idxTmp")
-    keys.write.bucketBy(indexBuckets, "h").sortBy("h")
-      .format("parquet").saveAsTable(idxTmp)
-    spark.sql(s"DROP TABLE IF EXISTS $indexTable")
-    spark.sql(s"ALTER TABLE $idxTmp RENAME TO $indexTable")
+    swapTable(spark, indexTable, "__rebuild") { tmp =>
+      keys.write.bucketBy(indexBuckets, "h").sortBy("h")
+        .format("parquet").saveAsTable(tmp)
+    }
     // 2. the product: the one-shot trim over the same versions, ONE
     // row per document at the standing max seq (future batches, all
     // strictly newer, keep winning the fold)
@@ -608,11 +545,22 @@ object Streams {
     val oneShot = graft.llm.Dedup.trimRepeatedSpans(latest, idCol, textCol,
         k, minDf)
       .withColumn("batch_seq", lit(seqMax))
-    val trimTmp = trimmedTable + "__rebuild"
-    spark.sql(s"DROP TABLE IF EXISTS $trimTmp")
-    oneShot.write.format("parquet").saveAsTable(trimTmp)
-    spark.sql(s"DROP TABLE IF EXISTS $trimmedTable")
-    spark.sql(s"ALTER TABLE $trimTmp RENAME TO $trimmedTable")
+    swapTable(spark, trimmedTable, "__rebuild") { tmp =>
+      oneShot.write.format("parquet").saveAsTable(tmp)
+    }
+  }
+
+  /** The side-by-side catalog swap: build `name + suffix` (the temp
+    * name, cleared of any crashed predecessor first), drop `name`,
+    * rename the temp in. Readers never see a half-written table, but
+    * can briefly miss the name between the DROP and the RENAME. */
+  private def swapTable(spark: SparkSession, name: String, suffix: String)
+                       (build: String => Unit): Unit = {
+    val tmp = name + suffix
+    spark.sql(s"DROP TABLE IF EXISTS $tmp")
+    build(tmp)
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    spark.sql(s"ALTER TABLE $tmp RENAME TO $name")
   }
 
   /** Rebuild-cadence metric for the span gate: how stale is the
@@ -640,11 +588,7 @@ object Streams {
   def spanTrimIndexDebtFrames(corpus: DataFrame, idx: DataFrame,
                               idCol: String, textCol: String,
                               k: Int = 8): DataFrame = {
-    val verW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col(SeqCol).desc)
-    val latest = corpus
-      .withColumn("__rn", row_number().over(verW))
-      .filter(col("__rn") === 1)
+    val latest = latestPerId(corpus, idCol, SeqCol)
       .select(col(idCol), col(textCol))
     val latestKeys = graft.llm.Dedup.spanKeys(latest, idCol, textCol, k)
     val stale = idx.join(latestKeys,
@@ -688,13 +632,21 @@ object Streams {
     }
   }
 
+  /** The latest version of every id: its row with the highest
+    * `seqCol`. Ties (exact crash-replay copies) are interchangeable. */
+  private def latestPerId(df: DataFrame, idCol: String,
+                          seqCol: String): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(col(idCol)).orderBy(col(seqCol).desc)))
+      .filter(col("__rn") === 1).drop("__rn")
+
   /** First batch: the standing tables don't exist yet — dedup against
     * empty frames, then create them via the first append. */
   private def tableOr(spark: SparkSession, name: String,
-                      schema: org.apache.spark.sql.types.StructType): DataFrame =
+                      schema: StructType): DataFrame =
     if (spark.catalog.tableExists(name)) spark.table(name)
     else spark.createDataFrame(spark.sparkContext
-      .emptyRDD[org.apache.spark.sql.Row], schema)
+      .emptyRDD[Row], schema)
 
   /** Name of the content-hash column the corpus sink maintains. */
   val HashCol = "__h"
@@ -730,14 +682,83 @@ object Streams {
       .drop(HashCol, "__hset")
   }
 
+  /** The delta-gated streams' gate step: [[deltaGate]] against the
+    * standing corpus, or the whole batch before the corpus exists. */
+  private def recrawlGate(b: DataFrame, corpusTable: String, idCol: String,
+                          textCol: String): DataFrame = {
+    val spark = b.sparkSession
+    if (!spark.catalog.tableExists(corpusTable)) b
+    else deltaGate(b, spark.table(corpusTable), idCol, textCol)
+  }
+
   /** Name of the per-stream batch commit log: one tiny row per
-    * successfully-committed micro-batch (see the idempotence note on
-    * [[incrementalDedupStream]]). Keyed by (stream_id, batch_id) —
-    * batch ids are only unique WITHIN one checkpoint lineage, so the
-    * checkpoint dir is the stream key; a fresh stream (new checkpoint,
-    * ids restarting at 0) writing to the same tables is never
-    * mistaken for a replay. */
+    * successfully-committed micro-batch (see [[commitOnce]]). */
   def commitsTableFor(corpusTable: String): String = corpusTable + "_commits"
+
+  private val CommitSchema = StructType(Seq(
+    StructField("stream_id", StringType), StructField("batch_id", LongType)))
+
+  /** Where a sink's commit log lives. The table sinks keep it in the
+    * catalog table [[commitsTableFor]]; the SQ8 sink, whose index lives
+    * at a path, keeps it as a parquet dir under that path. */
+  private sealed trait CommitLog {
+    /** The log's rows, or None before the first commit. */
+    def read(spark: SparkSession): Option[DataFrame]
+    def append(row: DataFrame): Unit
+  }
+
+  private final case class TableLog(table: String) extends CommitLog {
+    def read(spark: SparkSession): Option[DataFrame] =
+      if (spark.catalog.tableExists(table)) Some(spark.table(table)) else None
+    def append(row: DataFrame): Unit =
+      row.write.mode("append").format("parquet").saveAsTable(table)
+  }
+
+  private final case class PathLog(dir: String) extends CommitLog {
+    // the explicit schema matters: a crash during the first commit
+    // leaves the dir holding only `_temporary`, which schema inference
+    // cannot read, while a typed read of it is simply empty
+    def read(spark: SparkSession): Option[DataFrame] = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+      else Some(spark.read.schema(CommitSchema).parquet(dir))
+    }
+    def append(row: DataFrame): Unit = row.write.mode("append").parquet(dir)
+  }
+
+  /** The commit-log recipe every durable table sink and the SQ8 sink
+    * share, which makes an at-least-once foreachBatch sink exactly-once
+    * under clean replay. A (streamId, batchId) row already in `log`
+    * means a previous attempt finished `write`, so the call returns
+    * before any side effect. Otherwise `write` runs and the commit row
+    * is appended LAST: a crash anywhere in `write` leaves the id
+    * un-logged, so the batch replays (at-least-once) rather than being
+    * lost, and a replay after such a crash may re-append exact
+    * duplicates ([[compactSinks]] and the keep-latest folds absorb
+    * them). Batch ids are unique only WITHIN one checkpoint lineage, so
+    * the checkpoint dir is the stream id: a fresh stream (ids
+    * restarting at 0) writing to the same sinks is never mistaken for a
+    * replay. The log has one row per batch, so the probe reads
+    * O(batches) rows. `batchId < 0` bypasses the log. */
+  private def commitOnce(spark: SparkSession, log: CommitLog, streamId: String,
+                         batchId: Long)(write: => Unit): Unit =
+    if (batchId < 0) write
+    else if (!log.read(spark).exists(_.filter(col("stream_id") === streamId &&
+        col("batch_id") === batchId).head(1).nonEmpty)) {
+      write
+      log.append(spark.range(1).select(lit(streamId).as("stream_id"),
+        lit(batchId).as("batch_id")))
+    }
+
+  /** Start a checkpointed Append-mode stream that hands each
+    * micro-batch and its id to `body`. */
+  private def startBatches(df: DataFrame, checkpointDir: String)
+                          (body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .foreachBatch(body)
+      .start()
 
   private[graft] def dedupBatch(batch: DataFrame, corpusTable: String,
                                 indexTable: String, pairsTable: String,
@@ -745,39 +766,26 @@ object Streams {
                                 threshold: Double, indexBuckets: Int,
                                 streamId: String = "", batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
-    val commits = commitsTableFor(corpusTable)
-    // replay short-circuit: a (stream, batch) id already in the commit
-    // log means every sink append below landed on a previous attempt.
-    // The log has one row per batch, so this probe reads O(batches) rows
-    if (batchId >= 0 && spark.catalog.tableExists(commits) &&
-        spark.table(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    val b = batch.localCheckpoint(false) // feeds pairs + index + corpus appends
-    val corpusRows = b.withColumn(HashCol, graft.llm.Text.contentHash(col(textCol)))
-    val idxSchema = org.apache.spark.sql.types.StructType(Seq(
-      b.schema(idCol),
-      org.apache.spark.sql.types.StructField("band",
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val pairs = graft.llm.Dedup.incrementalNearDupPairs(
-      b, tableOr(spark, corpusTable, corpusRows.schema).drop(HashCol),
-      tableOr(spark, indexTable, idxSchema),
-      idCol, textCol, threshold)
-    pairs.write.mode("append").format("parquet").saveAsTable(pairsTable)
-    graft.llm.Dedup.bandIndex(b, idCol, textCol).write.mode("append")
-      .bucketBy(indexBuckets, "band").sortBy("band")
-      .format("parquet").saveAsTable(indexTable)
-    // id-bucketed so the delta gate and the incremental corpus
-    // semi-join both read it exchange-free (see [[deltaGate]]); the
-    // bucket count mirrors the band index's
-    corpusRows.write.mode("append")
-      .bucketBy(indexBuckets, idCol).sortBy(idCol)
-      .format("parquet").saveAsTable(corpusTable)
-    // committed LAST: a crash anywhere above leaves the id un-logged,
-    // so the batch replays (at-least-once) rather than being lost
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"), lit(batchId).as("batch_id"))
-        .write.mode("append").format("parquet").saveAsTable(commits)
+    commitOnce(spark, TableLog(commitsTableFor(corpusTable)), streamId, batchId) {
+      val b = batch.localCheckpoint(false) // feeds pairs + index + corpus appends
+      val corpusRows = b.withColumn(HashCol, graft.llm.Text.contentHash(col(textCol)))
+      val idxSchema = StructType(Seq(b.schema(idCol),
+        StructField("band", StringType, nullable = false)))
+      val pairs = graft.llm.Dedup.incrementalNearDupPairs(
+        b, tableOr(spark, corpusTable, corpusRows.schema).drop(HashCol),
+        tableOr(spark, indexTable, idxSchema),
+        idCol, textCol, threshold)
+      pairs.write.mode("append").format("parquet").saveAsTable(pairsTable)
+      graft.llm.Dedup.bandIndex(b, idCol, textCol).write.mode("append")
+        .bucketBy(indexBuckets, "band").sortBy("band")
+        .format("parquet").saveAsTable(indexTable)
+      // id-bucketed so the delta gate and the incremental corpus
+      // semi-join both read it exchange-free (see [[deltaGate]]); the
+      // bucket count mirrors the band index's
+      corpusRows.write.mode("append")
+        .bucketBy(indexBuckets, idCol).sortBy(idCol)
+        .format("parquet").saveAsTable(corpusTable)
+    }
   }
 
   /** Exact-duplicate compaction for the three streaming sink tables —
@@ -796,25 +804,16 @@ object Streams {
   def compactSinks(spark: SparkSession, corpusTable: String,
                    indexTable: String, pairsTable: String,
                    idCol: String, indexBuckets: Int = 8): Unit = {
-    def swapIn(name: String)(write: DataFrame => Unit): Unit =
-      if (spark.catalog.tableExists(name)) {
-        val tmp = name + "__compact"
-        spark.sql(s"DROP TABLE IF EXISTS $tmp")
-        write(spark.table(name).distinct())
-        spark.sql(s"DROP TABLE $name")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $name")
-      }
-    swapIn(corpusTable) { df =>
-      df.write.bucketBy(indexBuckets, idCol).sortBy(idCol)
-        .format("parquet").saveAsTable(corpusTable + "__compact")
-    }
-    swapIn(indexTable) { df =>
-      df.write.bucketBy(indexBuckets, "band").sortBy("band")
-        .format("parquet").saveAsTable(indexTable + "__compact")
-    }
-    swapIn(pairsTable) { df =>
-      df.write.format("parquet").saveAsTable(pairsTable + "__compact")
-    }
+    def compact(name: String)(
+        layout: DataFrameWriter[Row] => DataFrameWriter[Row]): Unit =
+      if (spark.catalog.tableExists(name))
+        swapTable(spark, name, "__compact") { tmp =>
+          layout(spark.table(name).distinct().write)
+            .format("parquet").saveAsTable(tmp)
+        }
+    compact(corpusTable)(_.bucketBy(indexBuckets, idCol).sortBy(idCol))
+    compact(indexTable)(_.bucketBy(indexBuckets, "band").sortBy("band"))
+    compact(pairsTable)(identity)
   }
 
   /** Memory-sink runner for tests: processes all available data once. */
@@ -845,7 +844,7 @@ object Streams {
   def annServeStream(queries: DataFrame, indexPath: String, store: DataFrame,
                      qId: String, embCol: String, k: Int, m: Int = 4,
                      dim: Int = 64, coarse: Int = 20, nprobe: Int = 1)
-                    (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+                    (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = queries.sparkSession
     val (cent, byCode, codes) = graft.llm.Similarity.readIvfPqIndex(spark, indexPath)
     val centPinned = cent.localCheckpoint(true)
@@ -859,14 +858,9 @@ object Streams {
       .start()
   }
 
-  /** Durable [[annServeStream]]: answers append to `ansTable` under
-    * the SAME commit-log idempotence recipe as the dedup/web-gate
-    * sinks ([[dedupBatch]]) — the (stream, batch) id lands in
-    * `commitsTableFor(ansTable)` AFTER the append, a replayed id
-    * short-circuits before touching the sink, and batch ids are keyed
-    * by checkpoint lineage so a fresh stream reusing id 0 is never
-    * mistaken for a replay. foreachBatch is at-least-once; with the
-    * log, a clean restart replays as a no-op (spec'd), and the
+  /** Durable [[annServeStream]]: answers append to `ansTable` through
+    * [[commitOnce]] with its log in `commitsTableFor(ansTable)`. A
+    * clean restart replays as a no-op (spec'd), and the
     * mid-batch-crash residue (answers appended, commit row missing)
     * re-appends exact duplicate ANSWER rows — per-query top-k rows are
     * deterministic given the frozen index, so downstream readers
@@ -874,18 +868,14 @@ object Streams {
   def annServeToTable(queries: DataFrame, indexPath: String, store: DataFrame,
                       qId: String, embCol: String, k: Int, ansTable: String,
                       checkpointDir: String, m: Int = 4, dim: Int = 64,
-                      coarse: Int = 20, nprobe: Int = 1): org.apache.spark.sql.streaming.StreamingQuery = {
+                      coarse: Int = 20, nprobe: Int = 1): StreamingQuery = {
     val spark = queries.sparkSession
     val (cent, byCode, codes) = graft.llm.Similarity.readIvfPqIndex(spark, indexPath)
     val centPinned = cent.localCheckpoint(true)
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annServeBatch(batch, centPinned, byCode, codes, store, qId, embCol,
-          k, m, dim, coarse, nprobe, ansTable, checkpointDir, batchId)
-      }
-      .start()
+    startBatches(queries, checkpointDir) { (batch, batchId) =>
+      annServeBatch(batch, centPinned, byCode, codes, store, qId, embCol,
+        k, m, dim, coarse, nprobe, ansTable, checkpointDir, batchId)
+    }
   }
 
   /** Streaming maintenance of the persisted native-HLL profile
@@ -907,15 +897,11 @@ object Streams {
     * max monoid makes every order equal). */
   def hllProfileStream(docs: DataFrame, sourceCol: String, textCol: String,
                        path: String, checkpointDir: String,
-                       n: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.CorpusStats.upsertHllProfile(batch, sourceCol, textCol,
-          path, n)
-      }
-      .start()
+                       n: Int = 2): StreamingQuery =
+    startBatches(docs, checkpointDir) { (batch, _) =>
+      graft.llm.CorpusStats.upsertHllProfile(batch, sourceCol, textCol,
+        path, n)
+    }
 
   /** Streaming maintenance of a persisted log-linear quantile-sketch
     * store ([[graft.llm.CorpusStats.persistLogHist]]): each
@@ -936,15 +922,11 @@ object Streams {
     * SQL expression over the batch's columns (e.g. "length(text)"). */
   def logHistStream(docs: DataFrame, groupCol: String, valueSql: String,
                     path: String, checkpointDir: String,
-                    subBits: Int = 5): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.llm.CorpusStats.upsertLogHist(batch, groupCol, expr(valueSql),
-          path, subBits, batchTag = Some(s"$checkpointDir#$batchId"))
-      }
-      .start()
+                    subBits: Int = 5): StreamingQuery =
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      graft.llm.CorpusStats.upsertLogHist(batch, groupCol, expr(valueSql),
+        path, subBits, batchTag = Some(s"$checkpointDir#$batchId"))
+    }
 
   /** Streaming BPE encode against a FROZEN persisted tokenizer
     * ([[graft.llm.Bpe.persistTokenizer]]) — the tokenize-on-ingest
@@ -954,29 +936,19 @@ object Streams {
     * an offline artifact; a tokenizer that drifted per-batch would
     * tokenize the same document differently over time). Unseen
     * symbols encode as UNK 0 ([[graft.llm.Bpe.encodeWith]]).
-    * Durability follows the [[annServeToTable]] recipe: per-batch
-    * commit log written AFTER the append, so a committed batch
-    * replays as a no-op and a mid-batch crash re-appends
-    * deterministic duplicate rows a downstream reader can dedup
-    * exactly. */
+    * Durability is [[commitOnce]]'s: a committed batch replays as a
+    * no-op and a mid-batch crash re-appends deterministic duplicate
+    * rows a downstream reader can dedup exactly. */
   def bpeEncodeToTable(docs: DataFrame, idCol: String, textCol: String,
                        tokenizerPath: String, outTable: String,
-                       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val (merges, ids) = graft.llm.Bpe.readTokenizer(spark, tokenizerPath)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bpeEncodeBatch(batch, idCol, textCol, merges, ids, outTable,
-          checkpointDir, batchId)
-      }
-      .start()
+                       checkpointDir: String): StreamingQuery = {
+    val (merges, ids) = graft.llm.Bpe.readTokenizer(docs.sparkSession, tokenizerPath)
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      bpeEncodeBatch(batch, idCol, textCol, merges, ids, outTable,
+        checkpointDir, batchId)
+    }
   }
 
-  /** One streaming-encode micro-batch, committed through the batch
-    * log — factored for replay-semantics testing without a running
-    * stream (the [[dedupBatch]]/[[annServeBatch]] pattern). */
   /** Streaming unigram encode with a FROZEN stored tokenizer — the
     * [[bpeEncodeToTable]] shape for the other tokenizer family: each
     * micro-batch Viterbi-encodes against the persisted piece table
@@ -986,17 +958,12 @@ object Streams {
     * drifting live corpus can never silently drop words. */
   def unigramEncodeToTable(docs: DataFrame, idCol: String, textCol: String,
                            tokenizerPath: String, outTable: String,
-                           checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val pieces = graft.llm.Unigram.readTokenizer(spark, tokenizerPath)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unigramEncodeBatch(batch, idCol, textCol, pieces, outTable,
-          checkpointDir, batchId)
-      }
-      .start()
+                           checkpointDir: String): StreamingQuery = {
+    val pieces = graft.llm.Unigram.readTokenizer(docs.sparkSession, tokenizerPath)
+    startBatches(docs, checkpointDir) { (batch, batchId) =>
+      unigramEncodeBatch(batch, idCol, textCol, pieces, outTable,
+        checkpointDir, batchId)
+    }
   }
 
   private[graft] def unigramEncodeBatch(batch: DataFrame, idCol: String,
@@ -1004,20 +971,12 @@ object Streams {
                                         pieces: Seq[(String, Long, Long)],
                                         outTable: String,
                                         streamId: String = "",
-                                        batchId: Long = -1L): Unit = {
-    val spark = batch.sparkSession
-    val commits = commitsTableFor(outTable)
-    if (batchId >= 0 && spark.catalog.tableExists(commits) &&
-        spark.table(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    graft.llm.Unigram.encode(batch, idCol, textCol, pieces)
-      .write.mode("append").format("parquet").saveAsTable(outTable)
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"),
-          lit(batchId).as("batch_id"))
-        .write.mode("append").format("parquet").saveAsTable(commits)
-  }
+                                        batchId: Long = -1L): Unit =
+    commitOnce(batch.sparkSession, TableLog(commitsTableFor(outTable)),
+        streamId, batchId) {
+      graft.llm.Unigram.encode(batch, idCol, textCol, pieces)
+        .write.mode("append").format("parquet").saveAsTable(outTable)
+    }
 
   /** Streaming CCNet gate: score each micro-batch's documents
     * against a FROZEN stupid-backoff model
@@ -1052,7 +1011,7 @@ object Streams {
     * hook as the backstop). */
   def backoffScoreStream(docs: DataFrame, idCol: String, textCol: String,
                          modelPath: String, outTable: String,
-                         checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+                         checkpointDir: String): StreamingQuery = {
     val spark = docs.sparkSession
     val snapDir = graft.util.Scratch.dir("graft_backoff_frozen")
     // the snapshot copy runs under the store lock: a concurrent
@@ -1065,14 +1024,10 @@ object Streams {
         .write.parquet(s"$snapDir/backoff")
     }
     val model = graft.llm.NgramLm.readBackoffModel(spark, snapDir)
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        backoffScoreBatch(batch, idCol, textCol, model, outTable,
-          checkpointDir, batchId)
-      }
-      .start()
+    val query = startBatches(docs, checkpointDir) { (batch, batchId) =>
+      backoffScoreBatch(batch, idCol, textCol, model, outTable,
+        checkpointDir, batchId)
+    }
     val qid = query.id
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -1106,47 +1061,40 @@ object Streams {
                                        streamId: String = "",
                                        batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
-    val commits = commitsTableFor(outTable)
-    if (batchId >= 0 && spark.catalog.tableExists(commits) &&
-        spark.table(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    val scored = graft.llm.NgramLm.scoreBackoff(batch, idCol, textCol, model)
-      .withColumn("__sid", lit(streamId)).withColumn("__bid", lit(batchId))
-    if (!spark.catalog.tableExists(outTable))
-      scored.write.partitionBy("__sid", "__bid").format("parquet")
-        .saveAsTable(outTable)
-    else {
-      // STATIC-partition INSERT OVERWRITE: the partition spec names
-      // the batch's own (__sid, __bid), so exactly that partition is
-      // replaced — under ANY partitionOverwriteMode and with no
-      // session-conf mutation. The previous shape toggled the
-      // session-global overwrite mode around insertInto; two scoring
-      // streams (or any concurrent foreachBatch writer) in one
-      // SparkSession could race the set/restore and one batch's
-      // insert would then run under 'static' dynamic-less overwrite
-      // and wipe every other (__sid, __bid) partition. (A per-write
-      // DataFrameWriter option cannot fix this: insertInto does not
-      // forward writer options to the V1 insert plan — verified by
-      // spec, the option was silently ignored.)
-      val v = "graft_scores_batch_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      scored.drop("__sid", "__bid").createOrReplaceTempView(v)
-      val sidLit = streamId.replace("'", "''")
-      // backtick-quote each identifier part: a table name with
-      // spaces/keywords/backticks that worked through the
-      // DataFrameWriter API must not break (or inject into) the SQL
-      val outTableQ = outTable.split('.')
-        .map(p => "`" + p.replace("`", "``") + "`").mkString(".")
-      try spark.sql(s"INSERT OVERWRITE TABLE $outTableQ " +
-        s"PARTITION (__sid = '$sidLit', __bid = $batchId) " +
-        s"SELECT * FROM $v")
-      finally spark.catalog.dropTempView(v)
+    commitOnce(spark, TableLog(commitsTableFor(outTable)), streamId, batchId) {
+      val scored = graft.llm.NgramLm.scoreBackoff(batch, idCol, textCol, model)
+        .withColumn("__sid", lit(streamId)).withColumn("__bid", lit(batchId))
+      if (!spark.catalog.tableExists(outTable))
+        scored.write.partitionBy("__sid", "__bid").format("parquet")
+          .saveAsTable(outTable)
+      else {
+        // STATIC-partition INSERT OVERWRITE: the partition spec names
+        // the batch's own (__sid, __bid), so exactly that partition is
+        // replaced — under ANY partitionOverwriteMode and with no
+        // session-conf mutation. The previous shape toggled the
+        // session-global overwrite mode around insertInto; two scoring
+        // streams (or any concurrent foreachBatch writer) in one
+        // SparkSession could race the set/restore and one batch's
+        // insert would then run under 'static' dynamic-less overwrite
+        // and wipe every other (__sid, __bid) partition. (A per-write
+        // DataFrameWriter option cannot fix this: insertInto does not
+        // forward writer options to the V1 insert plan — verified by
+        // spec, the option was silently ignored.)
+        val v = "graft_scores_batch_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        scored.drop("__sid", "__bid").createOrReplaceTempView(v)
+        val sidLit = streamId.replace("'", "''")
+        // backtick-quote each identifier part: a table name with
+        // spaces/keywords/backticks that worked through the
+        // DataFrameWriter API must not break (or inject into) the SQL
+        val outTableQ = outTable.split('.')
+          .map(p => "`" + p.replace("`", "``") + "`").mkString(".")
+        try spark.sql(s"INSERT OVERWRITE TABLE $outTableQ " +
+          s"PARTITION (__sid = '$sidLit', __bid = $batchId) " +
+          s"SELECT * FROM $v")
+        finally spark.catalog.dropTempView(v)
+      }
     }
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"),
-          lit(batchId).as("batch_id"))
-        .write.mode("append").format("parquet").saveAsTable(commits)
   }
 
   /** Streaming maintenance of the incremental backoff-counts store
@@ -1159,42 +1107,28 @@ object Streams {
     * Empty batches skip (an empty first batch would otherwise create
     * an empty store that fails the trainer's total>0 require). */
   def backoffCountsStream(ref: DataFrame, textCol: String, path: String,
-                          checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ref.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.head(1).nonEmpty) {
-          val tag = Some(s"backoff-$checkpointDir-$batchId")
-          // create-vs-append decided INSIDE the store lock (upsert):
-          // an exists probe out here could race another writer's
-          // first batch and lose one side's counts to a double-create
-          graft.llm.NgramLm.upsertBackoffCounts(batch, textCol, path, tag)
-        }
+                          checkpointDir: String): StreamingQuery =
+    startBatches(ref, checkpointDir) { (batch, batchId) =>
+      if (batch.head(1).nonEmpty) {
+        val tag = Some(s"backoff-$checkpointDir-$batchId")
+        // create-vs-append decided INSIDE the store lock (upsert):
+        // an exists probe out here could race another writer's
+        // first batch and lose one side's counts to a double-create
+        graft.llm.NgramLm.upsertBackoffCounts(batch, textCol, path, tag)
       }
-      .start()
+    }
 
   private[graft] def bpeEncodeBatch(batch: DataFrame, idCol: String,
                                     textCol: String,
                                     merges: Seq[(String, String)],
                                     ids: Seq[(String, Long)],
                                     outTable: String, streamId: String = "",
-                                    batchId: Long = -1L): Unit = {
-    val spark = batch.sparkSession
-    val commits = commitsTableFor(outTable)
-    if (batchId >= 0 && spark.catalog.tableExists(commits) &&
-        spark.table(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    graft.llm.Bpe.encodeWith(batch, idCol, textCol, merges, ids)
-      .write.mode("append").format("parquet").saveAsTable(outTable)
-    // committed LAST — a crash above leaves the id un-logged, so the
-    // batch replays (at-least-once) rather than being lost
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"),
-          lit(batchId).as("batch_id"))
-        .write.mode("append").format("parquet").saveAsTable(commits)
-  }
+                                    batchId: Long = -1L): Unit =
+    commitOnce(batch.sparkSession, TableLog(commitsTableFor(outTable)),
+        streamId, batchId) {
+      graft.llm.Bpe.encodeWith(batch, idCol, textCol, merges, ids)
+        .write.mode("append").format("parquet").saveAsTable(outTable)
+    }
 
   /** Streaming SQ8 index maintenance — encode-on-ingest against the
     * FROZEN persisted per-dim quantizer
@@ -1205,52 +1139,34 @@ object Streams {
     * quantizer loads ONCE at stream start (a grid reloaded per batch
     * could re-quantize the same vector differently after an offline
     * rebuild). Code-file appends are NOT idempotent — a replayed
-    * batch would duplicate code rows — so each batch commits through
-    * a per-(lineage, batch-id) log under `indexPath/commits`, written
-    * AFTER the append (the [[annServeToTable]]/[[bpeEncodeToTable]]
-    * recipe): a committed batch replays as a no-op; a mid-batch crash
-    * re-appends deterministic duplicates a reader can dedup exactly. */
+    * batch would duplicate code rows — so each batch goes through
+    * [[commitOnce]] with its log under `indexPath/commits`: a
+    * committed batch replays as a no-op; a mid-batch crash re-appends
+    * deterministic duplicates a reader can dedup exactly. */
   def sq8IndexStream(vecs: DataFrame, idCol: String, embCol: String,
                      indexPath: String, checkpointDir: String
-                    ): org.apache.spark.sql.streaming.StreamingQuery = {
+                    ): StreamingQuery = {
     val (quant, _) = graft.llm.Similarity.readSq8Index(vecs.sparkSession, indexPath)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sq8AppendBatch(batch, idCol, embCol, quant, indexPath,
-          checkpointDir, batchId)
-      }
-      .start()
+    startBatches(vecs, checkpointDir) { (batch, batchId) =>
+      sq8AppendBatch(batch, idCol, embCol, quant, indexPath,
+        checkpointDir, batchId)
+    }
   }
 
-  /** One SQ8 streaming-append micro-batch, committed through the
-    * path-local batch log — factored for replay-semantics testing
-    * without a running stream (the [[bpeEncodeBatch]] pattern, with
-    * the log under the index path since the index lives at a path,
-    * not in the catalog). */
+  /** One SQ8 streaming-append micro-batch — factored for
+    * replay-semantics testing without a running stream. The log lives
+    * under the index path, since the index lives at a path, not in the
+    * catalog. */
   private[graft] def sq8AppendBatch(batch: DataFrame, idCol: String,
                                     embCol: String,
                                     quant: IndexedSeq[(Long, Long)],
                                     indexPath: String, streamId: String = "",
-                                    batchId: Long = -1L): Unit = {
-    val spark = batch.sparkSession
-    val commits = s"$indexPath/commits"
-    val cPath = new org.apache.hadoop.fs.Path(commits)
-    val fs = cPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (batchId >= 0 && fs.exists(cPath) &&
-        spark.read.parquet(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    graft.llm.Similarity.sq8EncodeFrame(batch, idCol, embCol, quant)
-      .write.mode("append").parquet(s"$indexPath/codes")
-    // committed LAST — a crash above leaves the id un-logged, so the
-    // batch replays (at-least-once) rather than being lost
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"),
-          lit(batchId).as("batch_id"))
-        .write.mode("append").parquet(commits)
-  }
+                                    batchId: Long = -1L): Unit =
+    commitOnce(batch.sparkSession, PathLog(s"$indexPath/commits"),
+        streamId, batchId) {
+      graft.llm.Similarity.sq8EncodeFrame(batch, idCol, embCol, quant)
+        .write.mode("append").parquet(s"$indexPath/codes")
+    }
 
   /** Streaming IVF-SQ8 index maintenance — the cluster-partitioned
     * twin of [[sq8IndexStream]], but with a STRICTLY STRONGER
@@ -1269,16 +1185,12 @@ object Streams {
   def ivfSq8IndexStream(vecs: DataFrame, idCol: String, embCol: String,
                         indexPath: String, checkpointDir: String,
                         dim: Int = 64, labelCol: Option[String] = None
-                       ): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.llm.Similarity.appendToIvfSq8Index(batch, idCol, embCol,
-          indexPath, dim, labelCol,
-          batchTag = Some(s"$checkpointDir#$batchId"))
-      }
-      .start()
+                       ): StreamingQuery =
+    startBatches(vecs, checkpointDir) { (batch, batchId) =>
+      graft.llm.Similarity.appendToIvfSq8Index(batch, idCol, embCol,
+        indexPath, dim, labelCol,
+        batchTag = Some(s"$checkpointDir#$batchId"))
+    }
 
   /** Streaming maintenance of a persisted kNN-graph store
     * ([[graft.llm.Similarity.persistKnnGraphStore]]): each micro-batch
@@ -1289,15 +1201,11 @@ object Streams {
     * for the graph artifact (StreamingPipelineSpec differential). */
   def knnGraphStream(vecs: DataFrame, idCol: String, embCol: String,
                      storePath: String, checkpointDir: String
-                    ): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.llm.Similarity.appendToKnnGraphStore(batch, idCol, embCol,
-          storePath, batchTag = Some(s"$checkpointDir#$batchId"))
-      }
-      .start()
+                    ): StreamingQuery =
+    startBatches(vecs, checkpointDir) { (batch, batchId) =>
+      graft.llm.Similarity.appendToKnnGraphStore(batch, idCol, embCol,
+        storePath, batchTag = Some(s"$checkpointDir#$batchId"))
+    }
 
   /** One ANN-serving micro-batch against the frozen index, committed
     * through the batch log — factored out so the replay semantics are
@@ -1308,21 +1216,11 @@ object Streams {
                                    qId: String, embCol: String, k: Int,
                                    m: Int, dim: Int, coarse: Int, nprobe: Int,
                                    ansTable: String, streamId: String = "",
-                                   batchId: Long = -1L): Unit = {
-    val spark = batch.sparkSession
-    val commits = commitsTableFor(ansTable)
-    if (batchId >= 0 && spark.catalog.tableExists(commits) &&
-        spark.table(commits).filter(col("stream_id") === streamId &&
-          col("batch_id") === batchId).head(1).nonEmpty)
-      return
-    graft.llm.Similarity.ivfPqTopK(cent, byCode, codes, store, batch.toDF(),
-        qId, embCol, k, m, dim, coarse, nprobe)
-      .write.mode("append").format("parquet").saveAsTable(ansTable)
-    // committed LAST — a crash above leaves the id un-logged, so the
-    // batch replays (at-least-once) rather than being lost
-    if (batchId >= 0)
-      spark.range(1).select(lit(streamId).as("stream_id"),
-          lit(batchId).as("batch_id"))
-        .write.mode("append").format("parquet").saveAsTable(commits)
-  }
+                                   batchId: Long = -1L): Unit =
+    commitOnce(batch.sparkSession, TableLog(commitsTableFor(ansTable)),
+        streamId, batchId) {
+      graft.llm.Similarity.ivfPqTopK(cent, byCode, codes, store, batch,
+          qId, embCol, k, m, dim, coarse, nprobe)
+        .write.mode("append").format("parquet").saveAsTable(ansTable)
+    }
 }

@@ -425,6 +425,21 @@ class StreamingPipelineSpec extends SparkSpec {
       Seq((999L, vec(5))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", qI, path, "freshCk", 0L)
     assert(Similarity.readSq8Index(spark, path)._2.count() === n0 + 1)
+    // a crash during the FIRST commit-row write leaves commits/ holding
+    // only _temporary: the log must read as empty, so the batch still
+    // processes (and commits, so its replay no-ops)
+    val crashed = graft.util.Scratch.dir("sq8stream_crashed") + "/idx"
+    Similarity.persistSq8Index(base.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", crashed,
+      train = Some(all.toDF("vec_id", "embedding")))
+    Files.createDirectories(
+      java.nio.file.Paths.get(s"$crashed/commits/_temporary/0"))
+    for (_ <- 1 to 2)
+      graft.streaming.Streams.sq8AppendBatch(b1.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", qI, crashed, "crashedCk", 0L)
+    assert(Similarity.readSq8Index(spark, crashed)._2.count() ===
+      base.size + b1.size,
+      "a torn first commit must neither block the batch nor its replay guard")
   }
 
   test("ivfSq8IndexStream: streamed appends == full build; committed replay no-ops the whole batch") {
@@ -1153,5 +1168,43 @@ class StreamingPipelineSpec extends SparkSpec {
       // and the commit log survived compaction (it is not a sink)
       assert(t("sc_corpus_commits").count() == 2)
     } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("the micro-batch commit log and stream starter live only in Streams' helpers") {
+    // every durable sink probes and appends its commit log through
+    // Streams.commitOnce, and every checkpointed stream starts through
+    // Streams.startBatches; annServeStream is the one uncheckpointed
+    // foreachBatch stream
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val streams = root.resolve("graft/streaming/Streams.scala")
+    assert(Files.exists(streams),
+      s"run from the repository root: $root has no graft/streaming/Streams.scala")
+    val Def = """^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+)*def\s+(\w+).*""".r
+    val allowed = Set("startBatches", "annServeStream")
+    val walk = Files.walk(root)
+    val lines = try walk.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        var enclosing = ""
+        Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) =>
+          l match { case Def(name) => enclosing = name; case _ => }
+          (p, enclosing, l, s"${root.relativize(p)}:${i + 1}: ${l.trim}")
+        }
+      }
+    finally walk.close()
+    val probes = lines.collect {
+      case (_, _, l, at) if l.contains("\"batch_id\") === batchId") => at
+    }
+    val starts = lines.collect {
+      case (p, d, l, at) if l.contains(".foreachBatch") &&
+          !(p.endsWith(streams) && allowed(d)) => at
+    }
+    assert(probes.size <= 1,
+      "commit-log probe copied out of Streams.commitOnce:\n" +
+        probes.mkString("\n"))
+    assert(starts.isEmpty,
+      "foreachBatch stream started outside Streams.startBatches:\n" +
+        starts.mkString("\n"))
   }
 }
