@@ -446,25 +446,23 @@ case class PqSubLut(child: Expression, books: Seq[IndexedSeq[Long]],
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
-    val out = new Array[Any](bookArr.length)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      val off = s * sub
-      var ok = arr.numElements() >= off + sub
-      var i = 0
-      while (ok && i < sub) { if (arr.isNullAt(off + i)) ok = false; i += 1 }
-      if (ok) {
-        var l = 0
-        while (l < bookArr.length) {
-          val b = bookArr(l)
-          var acc = 0L; var j = 0
-          while (j < sub) { acc += arr.getLong(off + j) * b(off + j); j += 1 }
-          out(l) = acc
-          l += 1
-        }
-      }
+    if (v == null) return new GenericArrayData(new Array[Any](bookArr.length))
+    val arr = v.asInstanceOf[ArrayData]
+    val off = s * sub
+    var ok = arr.numElements() >= off + sub
+    var i = 0
+    while (ok && i < sub) { if (arr.isNullAt(off + i)) ok = false; i += 1 }
+    if (!ok) return new GenericArrayData(new Array[Any](bookArr.length))
+    val out = new Array[Long](bookArr.length)
+    var l = 0
+    while (l < bookArr.length) {
+      val b = bookArr(l)
+      var acc = 0L; var j = 0
+      while (j < sub) { acc += arr.getLong(off + j) * b(off + j); j += 1 }
+      out(l) = acc
+      l += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -477,31 +475,108 @@ case class PqSubLut(child: Expression, books: Seq[IndexedSeq[Long]],
     ev.copy(code =
       code"""
         |${childGen.code}
-        |Object[] $out = new Object[$booksRef.length];
-        |if (!${childGen.isNull}) {
-        |  org.apache.spark.sql.catalyst.util.ArrayData $arr = ${childGen.value};
-        |  boolean $ok = $arr.numElements() >= ${off + sub};
-        |  for (int $i = 0; $ok && $i < $sub; $i++) {
-        |    if ($arr.isNullAt($off + $i)) $ok = false;
-        |  }
-        |  if ($ok) {
-        |    for (int $l = 0; $l < $booksRef.length; $l++) {
-        |      long $acc = 0L;
-        |      for (int $i = 0; $i < $sub; $i++) {
-        |        $acc += $arr.getLong($off + $i) * $booksRef[$l][$off + $i];
-        |      }
-        |      $out[$l] = java.lang.Long.valueOf($acc);
-        |    }
-        |  }
+        |boolean $ok = !${childGen.isNull};
+        |org.apache.spark.sql.catalyst.util.ArrayData $arr = ${childGen.value};
+        |if ($ok) $ok = $arr.numElements() >= ${off + sub};
+        |for (int $i = 0; $ok && $i < $sub; $i++) {
+        |  if ($arr.isNullAt($off + $i)) $ok = false;
         |}
         |boolean ${ev.isNull} = false;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value};
+        |if ($ok) {
+        |  long[] $out = new long[$booksRef.length];
+        |  for (int $l = 0; $l < $booksRef.length; $l++) {
+        |    long $acc = 0L;
+        |    for (int $i = 0; $i < $sub; $i++) {
+        |      $acc += $arr.getLong($off + $i) * $booksRef[$l][$off + $i];
+        |    }
+        |    $out[$l] = $acc;
+        |  }
+        |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
+        |} else {
+        |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        |    new Object[$booksRef.length]);
+        |}
       """.stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqSubLut =
     copy(child = newChild)
+}
+
+/** PQ asymmetric distance of one code row against one flat lookup
+  * table: Σ_{s<m} lut[s·k + codes[s]] — the m table reads of the ADC
+  * scan in one loop, where the per-subspace form ran m `element_at`
+  * lookups with their own index casts on every (query, candidate) row.
+  * `lut` is the m per-subspace [[PqSubLut]] arrays concatenated (k
+  * entries each). A code outside [0, k), or a code row shorter than m,
+  * throws — a corrupt or foreign code store fails the serve loudly and
+  * never reads another subspace's slot (the ANSI `element_at` contract
+  * of the per-subspace form). A null code or a null table entry makes
+  * the score null. */
+case class PqAdc(left: Expression, right: Expression, m: Int, k: Int)
+  extends BinaryExpression {
+  require(m >= 1 && k >= 1, s"need m >= 1 and k >= 1, got m=$m, k=$k")
+
+  override def dataType: DataType = LongType
+  // a null code or table entry nulls the score even when neither input
+  // array is null
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_pq_adc"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val lut = a.asInstanceOf[ArrayData]; val codes = b.asInstanceOf[ArrayData]
+    PqAdc.checkShape(lut.numElements(), codes.numElements(), m, k)
+    var acc = 0L; var isNull = false; var s = 0
+    while (s < m) {
+      if (codes.isNullAt(s)) isNull = true
+      else {
+        val i = PqAdc.slot(codes.getLong(s), s, k)
+        if (lut.isNullAt(i)) isNull = true else acc += lut.getLong(i)
+      }
+      s += 1
+    }
+    if (isNull) null else acc
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (lut, codes) => {
+      val s = ctx.freshName("s"); val i = ctx.freshName("i")
+      val acc = ctx.freshName("acc"); val nul = ctx.freshName("adcNull")
+      s"""
+         |graft.expr.kernels.PqAdc.checkShape($lut.numElements(), $codes.numElements(), $m, $k);
+         |long $acc = 0L;
+         |boolean $nul = false;
+         |for (int $s = 0; $s < $m; $s++) {
+         |  if ($codes.isNullAt($s)) { $nul = true; }
+         |  else {
+         |    int $i = graft.expr.kernels.PqAdc.slot($codes.getLong($s), $s, $k);
+         |    if ($lut.isNullAt($i)) { $nul = true; } else { $acc += $lut.getLong($i); }
+         |  }
+         |}
+         |${ev.isNull} = $nul;
+         |${ev.value} = $acc;
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdc =
+    copy(left = l, right = r)
+}
+
+object PqAdc {
+  def checkShape(lutLen: Int, codesLen: Int, m: Int, k: Int): Unit = {
+    if (codesLen < m) throw new ArrayIndexOutOfBoundsException(
+      s"PQ code row has $codesLen codes, the index needs $m")
+    if (lutLen < m * k) throw new ArrayIndexOutOfBoundsException(
+      s"PQ lookup table has $lutLen entries, the index needs ${m * k}")
+  }
+
+  /** The flat table slot of `code` in subspace `s`, bounds-checked. */
+  def slot(code: Long, s: Int, k: Int): Int = {
+    if (code < 0L || code >= k) throw new ArrayIndexOutOfBoundsException(
+      s"PQ code $code in subspace $s is outside [0, $k)")
+    s * k + code.toInt
+  }
 }
 
 /** MinHash signature over hashed shingles: one pass over the array
@@ -1098,6 +1173,104 @@ case class TopNCentroids(child: Expression, ids: Seq[Long],
     copy(child = newChild)
 }
 
+/** The IVF probe: a query's best `n` coarse labels (best first) by
+  * centroid mean-dot against the centroid SUM table,
+  * score(label) = (double) Σ_pos qe[pos]·s(label, pos) / cnt(label),
+  * score descending, ties to the LOWER label (labels must ascend;
+  * strict `>` on insertion keeps the earlier label ahead). Each label
+  * carries its sum-table rows as (pos, s) pairs and its count, as
+  * reference objects, so generated code is fixed-size at any nlist.
+  * Null semantics follow the row form it replaces (posexplode(qe) ⋈
+  * sums on pos → sum → row_number): a position past the end of the
+  * query matches nothing, a null element contributes nothing, a label
+  * none of whose positions match is not a candidate, and a label whose
+  * matched elements are all null scores NULL and ranks after every
+  * scored label. n is clamped to the candidate count; a null query
+  * yields null. */
+case class IvfProbe(child: Expression, ids: Seq[Long], pos: Seq[IndexedSeq[Int]],
+                    sums: Seq[IndexedSeq[Long]], cnts: Seq[Long], n: Int)
+  extends UnaryExpression {
+  require(ids.nonEmpty && ids.length == pos.length && ids.length == sums.length &&
+    ids.length == cnts.length,
+    s"need one (pos, sums, cnt) per label, got ${ids.length} labels")
+  require(pos.zip(sums).forall { case (p, s) => p.length == s.length },
+    "every label needs one sum per position")
+  require(ids.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
+    "labels must be strictly ascending (the tie-break contract)")
+  require(cnts.forall(_ >= 1L), "every label needs a positive count")
+  require(n >= 1, s"n must be >= 1, got $n")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_ivf_probe"
+
+  @transient private lazy val idArr: Array[Long] = ids.toArray
+  @transient private lazy val posArr: Array[Array[Int]] = pos.map(_.toArray).toArray
+  @transient private lazy val sumArr: Array[Array[Long]] = sums.map(_.toArray).toArray
+  @transient private lazy val cntArr: Array[Long] = cnts.toArray
+
+  override def nullSafeEval(v: Any): Any =
+    IvfProbe.top(v.asInstanceOf[ArrayData], idArr, posArr, sumArr, cntArr, n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idsRef = ctx.addReferenceObj("probeIds", idArr, "long[]")
+    val posRef = ctx.addReferenceObj("probePos", posArr, "int[][]")
+    val sumsRef = ctx.addReferenceObj("probeSums", sumArr, "long[][]")
+    val cntsRef = ctx.addReferenceObj("probeCnts", cntArr, "long[]")
+    defineCodeGen(ctx, ev, x =>
+      s"graft.expr.kernels.IvfProbe.top($x, $idsRef, $posRef, $sumsRef, $cntsRef, $n)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): IvfProbe =
+    copy(child = newChild)
+}
+
+object IvfProbe {
+  def top(x: ArrayData, ids: Array[Long], pos: Array[Array[Int]],
+          sums: Array[Array[Long]], cnts: Array[Long], n: Int): ArrayData = {
+    val dim = x.numElements()
+    val keep = math.min(n, ids.length)
+    val bs = new Array[Double](keep)
+    val bnull = new Array[Boolean](keep)
+    val bid = new Array[Long](keep)
+    var cnt = 0
+    var j = 0
+    while (j < ids.length) {
+      val p = pos(j); val s = sums(j)
+      var dot = 0L; var matched = false; var scored = false
+      var t = 0
+      while (t < p.length) {
+        val i = p(t)
+        if (i < dim) {
+          matched = true
+          if (!x.isNullAt(i)) { scored = true; dot += x.getLong(i) * s(t) }
+        }
+        t += 1
+      }
+      if (matched) {
+        val sc = if (scored) dot.toDouble / cnts(j).toDouble else 0.0
+        // first slot this label ranks strictly ahead of; a NULL score
+        // is never ahead of anything
+        var at = cnt
+        t = 0
+        while (t < cnt && at == cnt) {
+          if (scored && (bnull(t) || sc > bs(t))) at = t
+          t += 1
+        }
+        if (at < keep) {
+          var q = math.min(cnt, keep - 1)
+          while (q > at) {
+            bs(q) = bs(q - 1); bnull(q) = bnull(q - 1); bid(q) = bid(q - 1); q -= 1
+          }
+          bs(at) = sc; bnull(at) = !scored; bid(at) = ids(j)
+          if (cnt < keep) cnt += 1
+        }
+      }
+      j += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(bid, cnt))
+  }
+}
+
 case class SearchSortedDouble(child: Expression, bounds: Seq[Double])
   extends UnaryExpression {
   require(bounds.nonEmpty && bounds.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
@@ -1348,6 +1521,9 @@ object NativeFns {
   def simHash(c: Column, bits: Int = 16): Column = column(SimHashExpr(expression(c), bits))
   def topK(c: Column, k: Int): Column =
     column(TopKLongs(expression(c), k).toAggregateExpression())
+  def topKRows(score: Column, id: Column, payload: Column, k: Int): Column =
+    column(TopKRows(expression(score), expression(id), expression(payload), k)
+      .toAggregateExpression())
   // long casts up front: the expressions assume LongType inputs (the
   // private[sql] ExpectsInputTypes machinery is closed to third parties)
   def morton2(a: Column, b: Column): Column =
@@ -1363,6 +1539,13 @@ object NativeFns {
   def topNCentroids(eq: Column, cents: Seq[(Long, Seq[Long])], n: Int): Column =
     column(TopNCentroids(expression(eq), cents.map(_._1),
       cents.map(_._2.toIndexedSeq), n))
+  /** `sums` is one (label, pos, s, cnt) row per centroid-table row. */
+  def ivfProbe(qe: Column, sums: Seq[(Long, Int, Long, Long)], n: Int): Column = {
+    val byLabel = sums.groupBy(_._1).toSeq.sortBy(_._1)
+    column(IvfProbe(expression(qe), byLabel.map(_._1),
+      byLabel.map(_._2.map(_._2).toIndexedSeq), byLabel.map(_._2.map(_._3).toIndexedSeq),
+      byLabel.map(_._2.map(_._4).max), n))
+  }
   def quantizeArr(e: Column, scale: Int = 1000): Column =
     column(QuantizeArray(expression(e.cast("array<double>")), scale))
   def absMaxArr(e: Column): Column =
@@ -1374,6 +1557,8 @@ object NativeFns {
     column(TinyDot(expression(a), expression(b)))
   def pqSubLut(qe: Column, books: Seq[IndexedSeq[Long]], s: Int, sub: Int): Column =
     column(PqSubLut(expression(qe), books, s, sub))
+  def pqAdc(lut: Column, codes: Column, m: Int, k: Int): Column =
+    column(PqAdc(expression(lut), expression(codes), m, k))
   def sq8Encode(q: Column, quant: Seq[(Long, Long)]): Column =
     column(Sq8Encode(expression(q), quant.map(_._1), quant.map(_._2)))
   def sq8Decode(codes: Column, quant: Seq[(Long, Long)]): Column =

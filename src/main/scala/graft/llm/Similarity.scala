@@ -165,10 +165,12 @@ object Similarity {
     * integer sub-distances per vector; sub-slices materialize as
     * columns first — interpreted HOF lambdas get no CSE). The coarse
     * scan projects ONLY (cid, m codes) — at 100 TB the per-query scan
-    * reads the m-byte code column, never the vectors — against
-    * broadcast per-query LUTs; WindowGroupLimit partials cut each
-    * partition to `coarse` rows before the exchange; the exact rescore
-    * touches coarse×|queries| vectors only. */
+    * reads the m-byte code column, never the vectors — against one
+    * broadcast flat m·k LUT per query, scored by the fused
+    * [[graft.expr.kernels.PqAdc]] loop; the bounded
+    * [[graft.expr.kernels.TopKRows]] aggregate keeps `coarse` rows per
+    * query in each map task, so no stage sorts the candidates; the
+    * exact rescore touches coarse×|queries| vectors only. */
   def pqTopK(queries: DataFrame, candidates: DataFrame, qId: String,
              cId: String, embCol: String, labelCol: String, k: Int,
              m: Int = 4, dim: Int = 64, coarse: Int = 20): DataFrame = {
@@ -315,80 +317,74 @@ object Similarity {
               embCol: String, k: Int, m: Int, dim: Int,
               coarse: Int): DataFrame = {
     require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    val (qLut, adc) = pqLutAndAdc(byLabel, queries, qId, embCol, m, dim)
-    val scored = codes.crossJoin(broadcast(qLut)).withColumn("adc", adc)
-    pqCoarseRescore(scored, queries, qId, embCol, store, k, coarse)
+    val q = quantizedQueries(queries, qId, embCol)
+    val (withLuts, adc) = pqLutAndAdc(byLabel, m, dim)
+    val scored = codes.crossJoin(broadcast(withLuts(q).drop("qe"))).withColumn("adc", adc)
+    pqCoarseRescore(scored, q, store, k, coarse)
   }
 
-  /** The per-query ADC machinery shared by [[pqServe]] and
-    * [[ivfPqTopK]]: a (qid, __lut0..__lut{m-1}) frame (tiny — one row
-    * per query, each lut an array of k exact-integer sub-dots) and the
-    * ADC expression over a joined `codes` column.
+  /** The (qid, qe) frame every serving path quantizes its queries into
+    * ONCE per call: the probe, the LUT build and the exact rescore all
+    * read this one frame. Query ids are unique per batch. */
+  private def quantizedQueries(queries: DataFrame, qId: String,
+                               embCol: String): DataFrame =
+    queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
+
+  /** The per-query ADC machinery shared by [[pqServe]] and the IVFPQ
+    * paths: a step that adds the lookup-table columns to a frame
+    * carrying the quantized query `qe`, and the ADC expression over a
+    * joined `codes` column.
     *
-    * O(1) ADC per (row, subspace): each subspace's per-query lookup
-    * table materializes as ONE array column on the (tiny, broadcast)
-    * query side, and a candidate's ADC is m positional element_at
-    * lookups on its codes — not a when-chain evaluating k comparisons
-    * per subspace per row (O(m·k) work AND O(m·k) generated code,
-    * unsustainable at the standard k=256). Positional indexing needs
-    * the codeword ids dense 0..k-1 (true for the trained codebooks
-    * here and in any production build); a sparse id space falls back
-    * to the comparison chain. For codes encoded against the SAME
-    * codebooks — the index invariant — the two forms are
-    * bit-identical (exact integers, identical sum order); a
-    * foreign/corrupt code would read NULL under indexing vs 0 under
-    * the chain, both of which sink it in the ranking. */
+    * Dense codeword ids 0..k-1 (every trainer here, and any production
+    * build): the m per-subspace [[graft.expr.kernels.PqSubLut]] tables
+    * concatenate into ONE flat m·k array `__lut`, and a candidate's ADC
+    * is the fused [[graft.expr.kernels.PqAdc]] loop
+    * Σ_s lut[s·k + code_s] — one codegen'd loop per (query, candidate)
+    * row with no per-subspace casts, and generated code that does not
+    * grow with k. A sparse id space falls back to per-label scalar
+    * tables and a comparison chain (O(m·k) per row; never produced by
+    * the trainers here). For codes encoded against the SAME codebooks
+    * — the index invariant — both forms give the same exact integers.
+    * A foreign or corrupt code outside [0, k) makes the dense serve
+    * THROW (the kernel bounds-checks every code and never reads
+    * another subspace's slot — the ANSI `element_at` behaviour of the
+    * per-subspace lookups it replaced), where the sparse chain scores
+    * it 0. */
   private def pqLutAndAdc(byLabel: Map[Long, IndexedSeq[Long]],
-                          queries: DataFrame, qId: String, embCol: String,
-                          m: Int, dim: Int): (DataFrame, Column) = {
+                          m: Int, dim: Int): (DataFrame => DataFrame, Column) = {
     val sub = dim / m
     val labels = byLabel.keys.toSeq.sorted
-    val dense = labels == (0L until labels.size.toLong)
-    val q0 = queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
-    val qLut =
-      if (dense) {
-        // native kernel: ONE codegen'd double loop per (query,
-        // subspace) with the codebooks as a reference object — the
-        // aggregate×zip_with form ran an interpreted lambda per
-        // element per (query, label, subspace) on every serve AND
-        // inlined O(k·dim) literals into the plan (the Janino-ceiling
-        // disease ArgminCentroid closed for the assign path).
-        // [[pqSubLutHof]] keeps the HOF form as the bit-equality
-        // anchor (NativeExprSpec differential, both eval paths).
-        val books = labels.map(byLabel)
-        (0 until m).foldLeft(q0) { (d, s) =>
-          d.withColumn(s"__lut$s",
-            graft.expr.kernels.NativeFns.pqSubLut(col("qe"), books, s, sub))
-        }.drop("qe")
-      } else {
-        // sparse-label fallback (never produced by the trainers here):
-        // per-label scalar luts via the HOF form
-        val qSubs = (0 until m).foldLeft(q0) { (d, s) =>
-          d.withColumn(s"__qsub$s", slice(col("qe"), s * sub + 1, sub))
+    if (labels == (0L until labels.size.toLong)) {
+      // native kernels: the codebooks ride as ONE reference object per
+      // subspace table (the aggregate×zip_with form ran an interpreted
+      // lambda per element and inlined O(k·dim) literals into the
+      // plan); [[pqSubLutHof]] keeps that form as the bit-equality
+      // anchor (NativeExprSpec differential, both eval paths)
+      val books = labels.map(byLabel)
+      val lut = concat((0 until m).map(s =>
+        graft.expr.kernels.NativeFns.pqSubLut(col("qe"), books, s, sub)): _*)
+      ((d: DataFrame) => d.withColumn("__lut", lut),
+        graft.expr.kernels.NativeFns.pqAdc(col("__lut"), col("codes"), m, labels.size))
+    } else {
+      def lutFor(s: Int, l: Long): Column =
+        aggregate(zip_with(col(s"__qsub$s"),
+          array(byLabel(l).slice(s * sub, (s + 1) * sub).map(lit): _*),
+          (x, y) => x * y), lit(0L), (a, v) => a + v)
+      val withLuts = (d: DataFrame) => {
+        val qSubs = (0 until m).foldLeft(d) { (d1, s) =>
+          d1.withColumn(s"__qsub$s", slice(col("qe"), s * sub + 1, sub))
         }
-        def lutFor(s: Int, l: Long): Column =
-          aggregate(zip_with(col(s"__qsub$s"),
-            array(byLabel(l).slice(s * sub, (s + 1) * sub).map(lit): _*),
-            (x, y) => x * y), lit(0L), (a, v) => a + v)
-        val dropCols = "qe" +: (0 until m).map(s => s"__qsub$s")
-        labels.foldLeft(qSubs) { (d, l) =>
-          (0 until m).foldLeft(d) { (d2, s) =>
+        labels.foldLeft(qSubs) { (d1, l) =>
+          (0 until m).foldLeft(d1) { (d2, s) =>
             d2.withColumn(s"__lut_${s}_$l", lutFor(s, l))
           }
-        }.drop(dropCols: _*)
+        }.drop((0 until m).map(s => s"__qsub$s"): _*)
       }
-    val adc =
-      if (dense)
-        (0 until m).map { s =>
-          element_at(col(s"__lut$s"),
-            (element_at(col("codes"), s + 1) + lit(1L)).cast("int"))
-        }.reduce(_ + _)
-      else
-        (0 until m).map { s =>
-          labels.map(l => when(element_at(col("codes"), s + 1) === l,
-            col(s"__lut_${s}_$l")).otherwise(0L)).reduce(_ + _)
-        }.reduce(_ + _)
-    (qLut, adc)
+      (withLuts, (0 until m).map { s =>
+        labels.map(l => when(element_at(col("codes"), s + 1) === l,
+          col(s"__lut_${s}_$l")).otherwise(0L)).reduce(_ + _)
+      }.reduce(_ + _))
+    }
   }
 
   /** The aggregate×zip_with LUT build the [[graft.expr.kernels.PqSubLut]]
@@ -404,23 +400,45 @@ object Similarity {
     }: _*)
 
   /** Coarse top-`coarse` by ADC then exact rescore to top-`k` — the
-    * tail shared by [[pqServe]] and [[ivfPqTopK]]. `scored` must carry
-    * (qid, cid, adc). */
-  private def pqCoarseRescore(scored: DataFrame, queries: DataFrame,
-                              qId: String, embCol: String, store: DataFrame,
-                              k: Int, coarse: Int): DataFrame = {
-    val wCoarse = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("cid"))
-    val coarseSet = scored.withColumn("__rn", row_number().over(wCoarse))
-      .filter(col("__rn") <= coarse)
-      .select(col("qid"), col("cid"), col("adc"))
-    val qe = queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
-    val rescored = coarseSet.join(qe, "qid").join(store, "cid")
+    * tail shared by [[pqServe]], [[sq8Serve]], [[ivfSq8TopK]],
+    * [[ivfPqTopK]], [[ivfPqResidualTopK]] and [[coarseRescore]].
+    * `scored` must carry (qid, cid, adc); `q` is the (qid, qe) frame
+    * of [[quantizedQueries]]. Both cuts are the bounded
+    * [[graft.expr.kernels.TopKRows]] aggregate grouped by qid, in the
+    * exact total order of `row_number() over (partition by qid order
+    * by score desc, cid)`: each map task keeps at most `coarse` (then
+    * `k`) rows per query and nothing sorts the candidates; rank =
+    * position + 1. Output (qid, cid, rank, dot, adc). */
+  private def pqCoarseRescore(scored: DataFrame, q: DataFrame,
+                              store: DataFrame, k: Int,
+                              coarse: Int): DataFrame = {
+    val cidType = scored.schema("cid").dataType
+    val coarseSet = topRowsPerQuery(scored, col("adc"), lit(null).cast("long"), coarse)
+      .select(col("qid"), col("__t.id").cast(cidType).as("cid"),
+        col("__t.score").as("adc"))
+    // store first: the exchange that meets the store carries the narrow
+    // (qid, cid, adc) rows, and the (tiny) query side joins after it.
+    // A shuffled hash join built on the coarse set: no sort, the store
+    // streams through it whatever its size, and runtime re-planning
+    // cannot turn it into a broadcast whose local shuffle read would
+    // put a single-file store's rows on one task
+    val rescored = coarseSet.hint("shuffle_hash").join(store, "cid").join(q, "qid")
       .withColumn("dot", dotQ(col("qe"), col("ce")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid"))
-    rescored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("rank"), col("dot"), col("adc"))
+    topRowsPerQuery(rescored, col("dot"), col("adc"), k)
+      .select(col("qid"), col("__t.id").cast(cidType).as("cid"),
+        col("__t.rank").as("rank"), col("__t.score").as("dot"),
+        col("__t.payload").as("adc"))
   }
+
+  /** One row per (qid, kept candidate): `__t` is the
+    * (rank, score, id = cid, payload) struct of [[pqCoarseRescore]]'s
+    * per-query cut. */
+  private def topRowsPerQuery(df: DataFrame, score: Column, payload: Column,
+                              k: Int): DataFrame =
+    df.groupBy(col("qid"))
+      .agg(graft.expr.kernels.NativeFns.topKRows(score, col("cid"), payload, k)
+        .as("__top"))
+      .select(col("qid"), explode(col("__top")).as("__t"))
 
   /** Persist a PQ index: `path/codebooks` (lbl, pos, c) and
     * `path/codes` (cid, codes array<long>) — the write-once artifact;
@@ -595,10 +613,10 @@ object Similarity {
                embCol: String, k: Int, coarse: Int): DataFrame = {
     require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
     val dec = codes.withColumn("__dec", sq8Decode(col("codes"), quant))
-    val q = queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
+    val q = quantizedQueries(queries, qId, embCol)
     val scored = dec.crossJoin(broadcast(q))
       .withColumn("adc", dotQ(col("qe"), col("__dec")))
-    pqCoarseRescore(scored, queries, qId, embCol, store, k, coarse)
+    pqCoarseRescore(scored, q, store, k, coarse)
   }
 
   /** Persist an SQ8 index: `path/quantizer` (pos, vmin, vdiff) and
@@ -867,13 +885,13 @@ object Similarity {
                  nprobe: Int = 1): DataFrame = {
     require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
-    val probed = ivfProbe(cent, q, nprobe).join(q, "qid")
+    val q = quantizedQueries(queries, qId, embCol)
+    val probed = probeRows(cent, centroidRows(cent), q, nprobe)
     val dec = codes.withColumn("__dec", sq8Decode(col("codes"), quant))
     val scored = dec.join(broadcast(probed), "label")
       .withColumn("adc", dotQ(col("qe"), col("__dec")))
       .select(col("qid"), col("cid"), col("adc"))
-    pqCoarseRescore(scored, queries, qId, embCol, store, k, coarse)
+    pqCoarseRescore(scored, q, store, k, coarse)
   }
 
   def dot(a: Column, b: Column): Column =
@@ -2043,16 +2061,9 @@ object Similarity {
     * exchange, ties break on the lower label. Returns (idCol, label). */
   def assignClusters(df: DataFrame, idCol: String, embCol: String,
                      cent: DataFrame): DataFrame = {
-    val rows = cent.select(col("label").cast("long"), col("pos").cast("int"),
-        col("s").cast("long"), col("cnt").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getInt(1),
-        r.getLong(2), r.getLong(3)))
+    val rows = centroidRows(cent)
     require(rows.nonEmpty, "assignClusters: empty centroid table")
-    val cents = rows.groupBy(_._1).toSeq.map { case (label, ps) =>
-      label -> ps.sortBy(_._2).map { case (_, _, s, cnt) =>
-        math.floorDiv(s, math.max(cnt, 1L))
-      }.toSeq
-    }.sortBy(_._1)
+    val cents = centroidMeans(rows).toSeq.sortBy(_._1)
     // materialize the quantized vector once, then the dot-identity
     // argmin as in kmeansClusters/pqEncodeFrame — same order, same
     // ties; the native kernel keeps the generated code fixed-size at
@@ -2107,10 +2118,10 @@ object Similarity {
                      idCol: String, embCol: String, k: Int,
                      nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = queries.select(col(idCol).as("qid"), quantize(col(embCol)).as("qe"))
-    val best = ivfProbe(cent, q, nprobe)
+    val q = quantizedQueries(queries, idCol, embCol)
     // fine search within the probed clusters only
-    val scored = q.join(best, "qid").join(eq, "label")
+    val scored = probeRows(cent, centroidRows(cent), q, nprobe)
+      .join(eq, "label")
       .filter(col("cid") =!= col("qid"))
       .withColumn("dot", dotQ(col("qe"), col("eq")))
     val wTop = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid"))
@@ -2119,23 +2130,48 @@ object Similarity {
       .select(col("qid"), col("label"), col("cid"), col("rank"), col("dot"))
   }
 
-  /** Per-query best-`nprobe` coarse clusters by centroid mean-dot
-    * against the broadcast centroid sum table — the IVF probe step,
-    * shared by [[ivfTopKIndexed]] and [[ivfPqTopK]] (public so the
-    * recall/scan ledgers can measure the probed fraction in-engine).
-    * Input `q` is (qid, qe); centroids are nlist × dim rows, always
-    * broadcastable. Ties break on the lower label. */
-  def ivfProbe(cent: DataFrame, q: DataFrame,
-               nprobe: Int): DataFrame = {
-    val qexpl = q.select(col("qid"), posexplode(col("qe")).as(Seq("pos", "qv")))
-    val assign = qexpl.join(broadcast(cent), "pos")
-      .groupBy(col("qid"), col("label"))
-      .agg(sum(col("qv") * col("s")).as("qdot"), max(col("cnt")).as("cnt"))
-      .withColumn("score", col("qdot").cast("double") / col("cnt"))
-    val wBest = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("label"))
-    assign.withColumn("rn", row_number().over(wBest))
-      .filter(col("rn") <= nprobe).select(col("qid"), col("label"))
+  /** Per-query best-`nprobe` coarse clusters by centroid mean-dot —
+    * the IVF probe step, shared by every IVF serving path (public so
+    * the recall/scan ledgers can measure the probed fraction
+    * in-engine). Input `q` is (qid, qe); output one (qid, label) row
+    * per probed cluster. The centroid sum table (nlist × dim rows, tiny
+    * by the k-means contract) collects once per call and rides into
+    * the native [[graft.expr.kernels.IvfProbe]] kernel as reference
+    * objects, so each query is probed from its own row: score =
+    * (double) Σ_pos qe[pos]·s / cnt, best first, ties on the lower
+    * label — no per-(query, dimension) rows, no join, no exchange, no
+    * window. */
+  def ivfProbe(cent: DataFrame, q: DataFrame, nprobe: Int): DataFrame =
+    probeRows(cent, centroidRows(cent), q, nprobe).select(col("qid"), col("label"))
+
+  /** `q`'s rows (every column kept) times their probed clusters, one
+    * row per probe with its `label`; whatever `q` computes per query
+    * (a lookup table) is computed once per query, not once per probe.
+    * `label` keeps the centroid table's type, so the equi-join against
+    * a cluster-partitioned store plans (and prunes) as it always has.
+    * `rows` is [[centroidRows]] of `cent`. An empty centroid table
+    * probes nothing. */
+  private def probeRows(cent: DataFrame, rows: Array[(Long, Int, Long, Long)],
+                        q: DataFrame, nprobe: Int): DataFrame = {
+    val labelType = cent.schema("label").dataType
+    if (rows.isEmpty) return q.withColumn("label", lit(null).cast(labelType)).limit(0)
+    val labels = rows.map(_._1)
+    // Spark plans dynamic partition pruning only when the filtering
+    // side of the join carries a selective-looking Filter; the nprobe
+    // cut happens inside the kernel where the planner cannot see it,
+    // so the (always true) label range is stated as that Filter
+    q.select(col("*"), explode(graft.expr.kernels.NativeFns.ivfProbe(col("qe"),
+        rows.toSeq, nprobe)).as("label"))
+      .filter(col("label").between(labels.min, labels.max))
+      .withColumn("label", col("label").cast(labelType))
   }
+
+  /** The centroid sum table as (label, pos, s, cnt) tuples — one
+    * bounded collect (nlist × dim rows). */
+  private def centroidRows(cent: DataFrame): Array[(Long, Int, Long, Long)] =
+    cent.select(col("label").cast("long"), col("pos").cast("int"),
+        col("s").cast("long"), col("cnt").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
 
   /** Persist an IVFPQ index — the FAISS IVFPQ composition (Jégou,
     * Douze & Schmid, TPAMI 2011 §V — public method; the non-residual
@@ -2231,8 +2267,9 @@ object Similarity {
                 dim: Int = 64, coarse: Int = 20, nprobe: Int = 1): DataFrame = {
     require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    pqCoarseRescore(ivfPqScoredCandidates(cent, byLabel, codes, queries,
-      qId, embCol, m, dim, nprobe), queries, qId, embCol, store, k, coarse)
+    val q = quantizedQueries(queries, qId, embCol)
+    pqCoarseRescore(ivfPqScored(cent, byLabel, codes, q, m, dim, nprobe),
+      q, store, k, coarse)
   }
 
   /** The ADC-scored candidate frame (qid, cid, adc) of IVFPQ serving —
@@ -2240,16 +2277,25 @@ object Similarity {
     * tuning sweep (the grid ledger) can score each nprobe ONCE and
     * apply several coarse widths to the same frame: the probe, DPP
     * scan and ADC are identical across coarse settings, only the
-    * downstream top-`coarse` window changes. */
+    * downstream top-`coarse` cut changes. */
   def ivfPqScoredCandidates(cent: DataFrame, byLabel: Map[Long, IndexedSeq[Long]],
                             codes: DataFrame, queries: DataFrame, qId: String,
                             embCol: String, m: Int = 4, dim: Int = 64,
                             nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
-    val best = ivfProbe(cent, q, nprobe)
-    val (qLut, adc) = pqLutAndAdc(byLabel, queries, qId, embCol, m, dim)
-    val probed = best.join(qLut, "qid")
+    ivfPqScored(cent, byLabel, codes, quantizedQueries(queries, qId, embCol),
+      m, dim, nprobe)
+  }
+
+  /** [[ivfPqScoredCandidates]] over an already-quantized (qid, qe)
+    * frame: the probe and the LUT build share one projection of the
+    * queries, then one (query, probed cluster, flat LUT) row per probe
+    * — tiny, broadcast — joins the code store on `label`. */
+  private def ivfPqScored(cent: DataFrame, byLabel: Map[Long, IndexedSeq[Long]],
+                          codes: DataFrame, q: DataFrame, m: Int, dim: Int,
+                          nprobe: Int): DataFrame = {
+    val (withLuts, adc) = pqLutAndAdc(byLabel, m, dim)
+    val probed = probeRows(cent, centroidRows(cent), withLuts(q), nprobe).drop("qe")
     codes.join(broadcast(probed), "label")
       .withColumn("adc", adc)
       .select(col("qid"), col("cid"), col("adc"))
@@ -2262,7 +2308,7 @@ object Similarity {
                     embCol: String, store: DataFrame, k: Int,
                     coarse: Int): DataFrame = {
     require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    pqCoarseRescore(scored, queries, qId, embCol, store, k, coarse)
+    pqCoarseRescore(scored, quantizedQueries(queries, qId, embCol), store, k, coarse)
   }
 
   /** Per-cluster exact-integer mean vectors from the centroid SUM
@@ -2272,10 +2318,10 @@ object Similarity {
     * floor(CAST(s AS DOUBLE) / cnt), identical for |s| < 2^53).
     * nlist × dim longs — tiny by the k-means contract. */
   private def centroidMeans(cent: DataFrame): Map[Long, IndexedSeq[Long]] =
-    cent.select(col("label").cast("long"), col("pos").cast("int"),
-        col("s").cast("long"), col("cnt").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-      .groupBy(_._1)
+    centroidMeans(centroidRows(cent))
+
+  private def centroidMeans(rows: Array[(Long, Int, Long, Long)]): Map[Long, IndexedSeq[Long]] =
+    rows.groupBy(_._1)
       .view.mapValues(_.sortBy(_._2)
         .map(t => math.floorDiv(t._3, math.max(t._4, 1L))).toIndexedSeq)
       .toMap
@@ -2391,20 +2437,19 @@ object Similarity {
                         nprobe: Int = 1): DataFrame = {
     require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
-    val best = ivfProbe(cent, q, nprobe)
-    val means = centroidMeans(cent)
-    val (qLut, adcR) = pqLutAndAdc(byCode, queries, qId, embCol, m, dim)
-    // (qid, label, luts, __qc): one row per (query, probe) — tiny;
+    val q = quantizedQueries(queries, qId, embCol)
+    val rows = centroidRows(cent)
+    val (withLuts, adcR) = pqLutAndAdc(byCode, m, dim)
+    // (qid, label, __qc, luts): one row per (query, probe) — tiny;
     // __qc is the exact centroid dot the residual ADC is offset by
-    val probed = best.join(qLut, "qid").join(q, "qid")
-      .withColumn("__carr", centroidArrCol(means))
+    val probed = probeRows(cent, rows, withLuts(q), nprobe)
+      .withColumn("__carr", centroidArrCol(centroidMeans(rows)))
       .withColumn("__qc",
         graft.expr.kernels.NativeFns.longDot(col("qe"), col("__carr")))
       .drop("qe", "__carr")
     val scored = codes.join(broadcast(probed), "label")
       .withColumn("adc", adcR + col("__qc"))
       .select(col("qid"), col("cid"), col("adc"))
-    pqCoarseRescore(scored, queries, qId, embCol, store, k, coarse)
+    pqCoarseRescore(scored, q, store, k, coarse)
   }
 }

@@ -978,6 +978,38 @@ class LlmSpec extends SparkSpec {
       s"code-store scan must read codes only:\n${codeScans.mkString("\n")}")
   }
 
+  test("IVFPQ: a stored code outside the codebook fails the serve loudly") {
+    val dim = 16
+    def vec(base: Float): Seq[Float] = Seq.tabulate(dim)(i => base + (i % 5) * 0.01f)
+    val rows = (0 until 8).flatMap { c =>
+      (0 until 25).map(i => (c * 100L + i, vec(c.toFloat - 4), c.toLong))
+    }
+    val df = rows.toDF("vec_id", "embedding", "label")
+    val queries = df.filter(col("vec_id") % 100 === 0 && col("vec_id") < 300)
+    val store = df.select(col("vec_id").as("cid"),
+      Similarity.quantize(col("embedding")).as("ce"))
+    val dir = graft.util.Scratch.dir("ivfpqbad")
+    Similarity.persistIvfPqIndex(df, "vec_id", "embedding", "label", s"$dir/idx",
+      m = 4, dim = dim)
+    val (cent, byLabel, codes) = Similarity.readIvfPqIndex(spark, s"$dir/idx")
+    assert(byLabel.size == 8, "8 dense codewords: valid codes are 0..7")
+    def serve(c: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfPqTopK(cent, byLabel, c, store, queries, "vec_id",
+        "embedding", k = 3, m = 4, dim = dim, coarse = 10, nprobe = 8).collect()
+    assert(serve(codes).length == 9, "the intact store serves every query")
+    // one stored vector's first code is 8: unchecked, the flat table
+    // read would land on subspace 1's first slot and score silently
+    codes.withColumn("codes", when(col("cid") === 105L,
+        array(lit(8L) +: (1 to 3).map(s => element_at(col("codes"), s + 1)): _*))
+        .otherwise(col("codes")))
+      .write.partitionBy("label").parquet(s"$dir/bad")
+    val bad = spark.read.parquet(s"$dir/bad")
+    val e = intercept[Exception](serve(bad))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("PQ code 8 in subspace 0 is outside [0, 8)"))),
+      s"expected the out-of-range code to fail the serve, got: $e")
+  }
+
   test("IVF-SQ8: full probe equals flat SQ8 serving; codes scan DPP-pruned and code-only") {
     val dim = 16
     def vec(base: Float): Seq[Float] = Seq.tabulate(dim)(i => base + (i % 5) * 0.01f)

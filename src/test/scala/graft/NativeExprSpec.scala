@@ -321,6 +321,150 @@ class NativeExprSpec extends SparkSpec {
     assert(viaSql == List(5L, 3L))
   }
 
+  test("IvfProbe == posexplode ⋈ centroids → groupBy → row_number (both eval paths)") {
+    import org.apache.spark.sql.expressions.Window
+    // 6 labels over dim 4: labels 1 and 2 are exact duplicates, and
+    // label 4 has twice label 3's sums over twice its count — two ways
+    // to tie a score; the lower label must win both
+    val sums = Seq(
+      (0L, Seq(5L, -3L, 2L, 7L), 3L), (1L, Seq(-4L, 6L, 1L, 0L), 2L),
+      (2L, Seq(-4L, 6L, 1L, 0L), 2L), (3L, Seq(2L, 2L, -1L, 3L), 1L),
+      (4L, Seq(4L, 4L, -2L, 6L), 2L), (5L, Seq(-9L, -1L, 8L, 2L), 4L))
+    val cent = sums.flatMap { case (l, v, c) =>
+      v.zipWithIndex.map { case (x, pos) => (l, pos, x, c) } }
+      .toDF("label", "pos", "s", "cnt")
+    val rnd = new scala.util.Random(5)
+    val qs: Seq[(Long, Option[Seq[Option[Long]]])] =
+      (0 until 40).map(i => (i.toLong,
+        Some(Seq.fill(4)(Some(rnd.nextInt(21).toLong - 10L)): Seq[Option[Long]]))) ++ Seq(
+        (100L, None),                                        // null vector
+        (101L, Some(Seq(Some(3L), None, Some(-2L), None))),  // null elements
+        (102L, Some(Seq(None, None, None, None))),           // every score NULL
+        (103L, Some(Seq(Some(1L), Some(1L)))),               // shorter than dim
+        (104L, Some(Seq.empty[Option[Long]])),               // empty
+        (105L, Some(Seq(Some(0L), Some(0L), Some(0L), Some(0L)))))  // all tie at 0
+    val dir = graft.util.Scratch.dir("ivfprobe")
+    qs.toDF("qid", "qe").write.parquet(s"$dir/q")
+    val q = spark.read.parquet(s"$dir/q")
+    val rows = cent.select(col("label"), col("pos").cast("int"), col("s"), col("cnt"))
+      .as[(Long, Int, Long, Long)].collect().toSeq
+    def rowForm(nprobe: Int) = {
+      val assign = q.select(col("qid"), posexplode(col("qe")).as(Seq("pos", "qv")))
+        .join(broadcast(cent), "pos")
+        .groupBy(col("qid"), col("label"))
+        .agg(sum(col("qv") * col("s")).as("qdot"), max(col("cnt")).as("cnt"))
+        .withColumn("score", col("qdot").cast("double") / col("cnt"))
+      val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("label"))
+      assign.withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
+        .select(col("qid"), col("label"), col("rn").cast("long"))
+        .as[(Long, Long, Long)].collect().toSet
+    }
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        for (nprobe <- Seq(1, 2, 3, 6, 9)) {
+          val kernel = q.select(col("qid"),
+              posexplode(NativeFns.ivfProbe(col("qe"), rows, nprobe)).as(Seq("p", "label")))
+            .select(col("qid"), col("label"), (col("p") + 1L).as("rn"))
+            .as[(Long, Long, Long)].collect().toSet
+          val want = rowForm(nprobe)
+          assert(kernel == want, s"nprobe=$nprobe mode $mode: ${kernel.diff(want)} vs ${want.diff(kernel)}")
+          val probed = Similarity.ivfProbe(cent, q, nprobe).as[(Long, Long)].collect().toSet
+          assert(probed == want.map(t => (t._1, t._2)), s"ivfProbe nprobe=$nprobe mode $mode")
+        }
+      } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+    // the cases the fixture is built to hit, spelled out
+    val top = rowForm(9).groupBy(_._1).map { case (qid, r) => qid -> r.toSeq.sortBy(_._3).map(_._2) }
+    assert(!top.contains(100L) && !top.contains(104L), "null and empty vectors probe nothing")
+    assert(top(102L) == (0L to 5L), "all-NULL scores rank by label")
+    assert(top(105L) == (0L to 5L), "tied scores rank by label")
+    assert(top.values.forall(ls => ls.indexOf(1L) < ls.indexOf(2L) && ls.indexOf(3L) < ls.indexOf(4L)),
+      "exact ties keep the lower label ahead")
+  }
+
+  test("TopKRows == row_number over (score desc, id) filtered to k; any partitioning") {
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(13)
+    // scores from a small range (ties everywhere), ~6% NULL scores,
+    // unique ids per group with one NULL id in group 3
+    val bulk: Seq[(Int, Option[Long], Option[Long], Option[Long])] = (0 until 2000).map { i =>
+      val g = i % 13
+      val score = if (rnd.nextInt(16) == 0) None else Some(rnd.nextInt(30).toLong)
+      val id = if (g == 3 && i == 3) None else Some(i.toLong)
+      (g, score, id, Some(rnd.nextLong()))
+    }
+    val small: Seq[(Int, Option[Long], Option[Long], Option[Long])] = Seq(
+      (20, Some(4L), Some(1L), Some(10L)), (20, None, Some(2L), None),  // < k, one NULL score
+      (21, None, Some(9L), Some(1L)), (21, None, Some(8L), Some(2L)),   // only NULL scores
+      (22, Some(7L), Some(5L), Some(3L)), (22, Some(7L), Some(4L), Some(4L)))  // tie: lower id first
+    val rows = bulk ++ small
+    for (k <- Seq(1, 3, 40); parts <- Seq(1, 7)) {
+      val df = rows.toDF("g", "score", "id", "payload").repartition(parts)
+      val got = df.groupBy(col("g"))
+        .agg(NativeFns.topKRows(col("score"), col("id"), col("payload"), k).as("t"))
+        .select(col("g"), explode(col("t")).as("r"))
+        .select(col("g"), col("r.rank"), col("r.score"), col("r.id"), col("r.payload"))
+        .collect().map(_.toSeq).toSet
+      val w = Window.partitionBy(col("g")).orderBy(col("score").desc, col("id"))
+      val want = df.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("g"), col("rank"), col("score"), col("id"), col("payload"))
+        .collect().map(_.toSeq).toSet
+      assert(got == want, s"k=$k parts=$parts: ${got.diff(want).take(5)} vs ${want.diff(got).take(5)}")
+    }
+    val g = rows.toDF("g", "score", "id", "payload").filter(col("g") >= 20)
+      .groupBy(col("g")).agg(NativeFns.topKRows(col("score"), col("id"), col("payload"), 3).as("t"))
+      .collect().map(r => r.getInt(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(_.toSeq)).toMap
+    assert(g(20) == Seq(Seq(1L, 4L, 1L, 10L), Seq(2L, null, 2L, null)),
+      "a NULL score ranks last and is kept while the group has fewer than k rows")
+    assert(g(21).map(_(2)) == Seq(8L, 9L), "all-NULL scores rank by id")
+    assert(g(22).map(_(2)) == Seq(4L, 5L), "a tie goes to the lower id")
+  }
+
+  test("PqAdc == Σ element_at over the per-subspace tables; a code outside [0, k) throws (both eval paths)") {
+    val (m, k) = (4, 5)
+    val rnd = new scala.util.Random(3)
+    val lut = Seq.fill(m * k)(rnd.nextInt(2001).toLong - 1000L)
+    val dir = graft.util.Scratch.dir("pqadc")
+    val codes: Seq[Option[Seq[Option[Long]]]] =
+      (0 until 60).map(_ => Some(Seq.fill(m)(Some(rnd.nextInt(k).toLong)): Seq[Option[Long]])) ++
+        Seq(None, Some(Seq(Some(1L), None, Some(2L), Some(0L))))
+    codes.toDF("codes").write.parquet(s"$dir/codes")
+    val c = spark.read.parquet(s"$dir/codes").withColumn("lut", typedLit(lut))
+    // the per-subspace element_at form the kernel replaced, over the
+    // same flat table
+    val perSub = (0 until m).map { s =>
+      element_at(col("lut"), (element_at(col("codes"), s + 1) + lit(s * k + 1L)).cast("int"))
+    }.reduce(_ + _)
+    val both = c.select(col("codes"),
+      NativeFns.pqAdc(col("lut"), col("codes"), m, k).as("native"), perSub.as("ref"))
+    // the differential runs on complete code rows only: under
+    // whole-stage codegen the element_at reference itself scores a NULL
+    // code as if it were -1 (a non-null sum), so NULL rows are checked
+    // against the kernel's contract directly
+    val complete = both.filter(col("codes").isNotNull && !exists(col("codes"), _.isNull))
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        assert(complete.count() == 60)
+        assert(complete.filter(not(col("native") <=> col("ref"))).count() == 0, s"mode $mode")
+        assert(both.filter(col("native").isNull).count() == 2, s"null codes score NULL, mode $mode")
+        for (bad <- Seq(k.toLong, -1L)) {
+          val e = intercept[Exception] {
+            Seq(Seq(0L, bad, 0L, 0L)).toDF("codes").repartition(1)
+              .select(NativeFns.pqAdc(typedLit(lut), col("codes"), m, k)).collect()
+          }
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => Option(t.getMessage).exists(
+              _.contains(s"PQ code $bad in subspace 1 is outside [0, $k)"))),
+            s"code $bad, mode $mode: $e")
+        }
+      } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
+
   test("F-series scalar layer reachable from SQL via extensions") {
     graft.expr.kernels.GraftExtensions.install(spark)
     val r = spark.sql(
@@ -494,7 +638,14 @@ class NativeExprSpec extends SparkSpec {
         // 600 centroids: above the literal-chain compile ceiling —
         // only the reference-object kernel survives codegen here
         NativeFns.argminCentroid(col("q"), (0L until 600L).map(l =>
-          l -> Seq.tabulate(8)(i => (l + i) % 37)))).collect()
+          l -> Seq.tabulate(8)(i => (l + i) % 37))),
+        NativeFns.ivfProbe(col("q"), for (l <- 0L until 600L; p <- 0 until 8)
+          yield (l, p, (l + p) % 37, 1L + l % 5), 3),
+        NativeFns.pqAdc(concat(NativeFns.pqSubLut(col("q"),
+          (0 until 3).map(l => IndexedSeq.tabulate(8)(i => (l + i).toLong)), 0, 4),
+          NativeFns.pqSubLut(col("q"),
+          (0 until 3).map(l => IndexedSeq.tabulate(8)(i => (l - i).toLong)), 1, 4)),
+          array(lit(2L), lit(1L)), 2, 3)).collect()
       assert(failures.isEmpty,
         s"codegen fell back to interpreted:\n${failures.toArray.mkString("\n")}")
       // detector self-check: a synthetic CodeGenerator error must be

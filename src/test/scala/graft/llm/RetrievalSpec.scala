@@ -178,6 +178,30 @@ class RetrievalSpec extends SparkSpec {
       s"code-store scan must not read vectors:\n${scanLines.mkString("\n")}")
   }
 
+  test("ivfPqTopK plan: no window, no window-group limit, no posexplode") {
+    val dim = 16
+    def vec(base: Float): Seq[Float] = Seq.tabulate(dim)(i => base + (i % 5) * 0.01f)
+    val df = (0 until 4).flatMap { c =>
+      (0 until 20).map(i => (c * 100L + i, vec(c.toFloat - 2), c.toLong))
+    }.toDF("vec_id", "embedding", "label")
+    val path = graft.util.Scratch.dir("ivfpq_plan") + "/idx"
+    Similarity.persistIvfPqIndex(df, "vec_id", "embedding", "label", path,
+      m = 4, dim = dim)
+    val (cent, byLabel, codes) = Similarity.readIvfPqIndex(spark, path)
+    val store = df.select(col("vec_id").as("cid"),
+      Similarity.quantize(col("embedding")).as("ce"))
+    val served = Similarity.ivfPqTopK(cent, byLabel, codes, store,
+      df.filter(col("vec_id") % 100 === 3), "vec_id", "embedding", k = 3,
+      m = 4, dim = dim, coarse = 10, nprobe = 2)
+    assert(served.count() === 12)
+    served.collect()
+    // the probe is one kernel row per query and both cuts are the
+    // bounded top-k aggregate: nothing sorts the candidates
+    val plan = served.queryExecution.executedPlan.toString
+    for (node <- Seq("Window", "WindowGroupLimit", "posexplode"))
+      assert(!plan.contains(node), s"unexpected $node in the serving plan:\n$plan")
+  }
+
   test("editDistancePairs: in-block typo pairs; cap drops hot block; null never pairs") {
     val docs = Seq(
       (1L, "hello world and more"),     // base
