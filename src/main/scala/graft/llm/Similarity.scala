@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -214,18 +214,11 @@ object Similarity {
   def pqEncodeFrame(df: DataFrame, idCol: String, embCol: String,
                     byLabel: Map[Long, IndexedSeq[Long]], m: Int,
                     dim: Int): DataFrame =
-    pqEncodeFrameQ(df.select(col(idCol).as("cid"),
-      quantize(col(embCol)).as("ce")), byLabel, m, dim)
+    encodeRows(PqCodec(byLabel, m, dim), df, idCol, embCol)
 
-  /** The encoder over a pre-quantized (cid, ce) frame — shared with
-    * the residual path, where `ce` carries residual arrays. */
-  private def pqEncodeFrameQ(dfQ: DataFrame,
-                             byLabel: Map[Long, IndexedSeq[Long]], m: Int,
-                             dim: Int): DataFrame =
-    pqEncodeKeepCe(dfQ, byLabel, m, dim).select(col("cid"), col("codes"))
-
-  /** [[pqEncodeFrameQ]] keeping the quantized vector column — the
-    * refinement loop reads (ce, codes) together without a self-join. */
+  /** The PQ encoder over a pre-quantized (cid, ce) frame, keeping the
+    * quantized vector column — the refinement loop reads (ce, codes)
+    * together without a self-join. */
   private def pqEncodeKeepCe(dfQ: DataFrame,
                              byLabel: Map[Long, IndexedSeq[Long]], m: Int,
                              dim: Int): DataFrame = {
@@ -255,7 +248,7 @@ object Similarity {
   /** Lloyd-REFINED PQ codebooks — the FAISS training practice (~25
     * refinement iterations per subspace) where [[pqCodebooks]] alone
     * is the label init plus a single half-step: each round re-assigns
-    * every sub-vector to its nearest codeword (the [[pqEncodeFrameQ]]
+    * every sub-vector to its nearest codeword (the [[pqEncodeKeepCe]]
     * argmin — exact integer distances, ties on lowest codeword) and
     * recomputes each codeword as the floor-mean of its assigned
     * sub-vectors, keeping a codeword UNCHANGED when no vector picks
@@ -307,21 +300,15 @@ object Similarity {
     books
   }
 
-  /** ADC serving over a code store: per-query exact-integer lookup
-    * tables (m×k sub-dots, broadcast), coarse top-`coarse` by m table
-    * lookups against the (cid, codes) column only, exact rescore of
-    * the coarse set from the full store. Trains nothing — the serving
-    * path of [[persistPqIndex]]. */
+  /** Flat PQ serving over a code store ([[persistPqIndex]]'s
+    * layout): the [[serveAdc]] body with the PQ codec. Trains
+    * nothing. */
   def pqServe(byLabel: Map[Long, IndexedSeq[Long]], codes: DataFrame,
               store: DataFrame, queries: DataFrame, qId: String,
               embCol: String, k: Int, m: Int, dim: Int,
-              coarse: Int): DataFrame = {
-    require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    val q = quantizedQueries(queries, qId, embCol)
-    val (withLuts, adc) = pqLutAndAdc(byLabel, m, dim)
-    val scored = codes.crossJoin(broadcast(withLuts(q).drop("qe"))).withColumn("adc", adc)
-    pqCoarseRescore(scored, q, store, k, coarse)
-  }
+              coarse: Int): DataFrame =
+    serveAdc(PqCodec(byLabel, m, dim), codes, store, queries, qId, embCol,
+      k, coarse, None)
 
   /** The (qid, qe) frame every serving path quantizes its queries into
     * ONCE per call: the probe, the LUT build and the exact rescore all
@@ -330,10 +317,9 @@ object Similarity {
                                embCol: String): DataFrame =
     queries.select(col(qId).as("qid"), quantize(col(embCol)).as("qe"))
 
-  /** The per-query ADC machinery shared by [[pqServe]] and the IVFPQ
-    * paths: a step that adds the lookup-table columns to a frame
-    * carrying the quantized query `qe`, and the ADC expression over a
-    * joined `codes` column.
+  /** The per-query ADC machinery of [[PqCodec]]: a step that adds the
+    * lookup-table columns to a frame carrying the quantized query `qe`,
+    * and the ADC expression over a joined `codes` column.
     *
     * Dense codeword ids 0..k-1 (every trainer here, and any production
     * build): the m per-subspace [[graft.expr.kernels.PqSubLut]] tables
@@ -400,8 +386,7 @@ object Similarity {
     }: _*)
 
   /** Coarse top-`coarse` by ADC then exact rescore to top-`k` — the
-    * tail shared by [[pqServe]], [[sq8Serve]], [[ivfSq8TopK]],
-    * [[ivfPqTopK]], [[ivfPqResidualTopK]] and [[coarseRescore]].
+    * tail of [[serveAdc]] and [[coarseRescore]].
     * `scored` must carry (qid, cid, adc); `q` is the (qid, qe) frame
     * of [[quantizedQueries]]. Both cuts are the bounded
     * [[graft.expr.kernels.TopKRows]] aggregate grouped by qid, in the
@@ -440,94 +425,288 @@ object Similarity {
         .as("__top"))
       .select(col("qid"), explode(col("__top")).as("__t"))
 
-  /** Persist a PQ index: `path/codebooks` (lbl, pos, c) and
-    * `path/codes` (cid, codes array<long>) — the write-once artifact;
-    * serving reloads both and touches the original store only for the
-    * final rescore. `train` optionally supplies the codebook-training
-    * frame (the production shape: codebooks train ONCE on a
-    * representative sample, codes are written for the current corpus
-    * and later batches [[appendToPqIndex]] against the frozen books);
-    * it defaults to `df` itself. */
-  def persistPqIndex(df: DataFrame, idCol: String, embCol: String,
-                     labelCol: String, path: String, m: Int = 4,
-                     dim: Int = 64, train: Option[DataFrame] = None): Unit = {
-    val byLabel = pqCodebooks(train.getOrElse(df), embCol, labelCol)
-    writePqCodebooks(df.sparkSession, byLabel, path)
-    pqEncodeFrame(df, idCol, embCol, byLabel, m, dim)
-      .write.mode("overwrite").parquet(s"$path/codes")
+  /** The ADC vector indexes — flat PQ, flat SQ8, IVF-PQ, IVF-SQ8 and
+    * residual IVF-PQ — are one store with two independent parts.
+    *
+    * The CODEC ([[PqCodec]] or [[Sq8Codec]]) is the trained artifact
+    * and the code arithmetic, the only part that changes between
+    * forms. It is frozen once trained: a batch encodes against the
+    * persisted artifact as a pure per-row function, so an append equals
+    * a rebuild bit for bit, serve answers included (SQ8 values outside
+    * the trained range clamp, the FAISS convention).
+    *
+    * The LAYOUT is where the codes live:
+    *  - flat: (cid, codes) in `path/codes`. An append takes the `codes`
+    *    store lock, as [[compactFlatCodes]] does, and adds plain files.
+    *    A serve is a broadcast cross join of queries and codes.
+    *  - IVF: the coarse sum table in `path/centroids`, codes partitioned
+    *    by `label`. An append runs in [[graft.io.Tables.readMergePublish]]
+    *    on `centroids` with [[appendPartitioned]] and
+    *    [[mergeCentroidSums]], exactly-once under a `batchTag`. A serve
+    *    probes each query's best `nprobe` cells ([[probeRows]]) and
+    *    broadcast-joins them on `label`, which prunes the code scan to
+    *    the probed cells' files and the code column.
+    *
+    * Every serve ends in [[pqCoarseRescore]]. Create and replace writes
+    * (`persist*`) are plain overwrites with no lock; they must not run
+    * beside appends. */
+  private sealed trait AdcCodec {
+    /** The artifact's directory under the index path. */
+    def dir: String
+    /** The artifact as the rows [[writeAdc]] persists. */
+    def artifact(spark: SparkSession): DataFrame
+    /** The declared dimension, stored code length and both as the
+      * append guard reports them. */
+    def dim: Int
+    def codeLen: Int
+    def shape: String
+    /** The lengths of the artifact's vectors, each of which must be `dim`. */
+    def artifactDims: Iterable[Int]
+    /** (cid, ce) → (cid, codes). */
+    def encode(dfQ: DataFrame): DataFrame
+    /** Add the columns [[score]] reads: once per query to a (qid, qe)
+      * frame, once per code to a code store. */
+    def queryStep(q: DataFrame): DataFrame
+    def codeStep(codes: DataFrame): DataFrame
+    /** The ADC score of a joined (query, code) row. */
+    def score: Column
   }
 
-  private def writePqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                               byLabel: Map[Long, IndexedSeq[Long]],
-                               path: String): Unit = {
-    import spark.implicits._
-    byLabel.toSeq.sortBy(_._1)
-      .flatMap { case (l, cw) => cw.zipWithIndex.map { case (c, p) => (l, p, c) } }
-      .toDF("lbl", "pos", "c")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
+  /** A codec's persisted artifact: its directory and row parser. */
+  private sealed abstract class AdcArtifact[A](val dir: String) {
+    def parse(rows: Array[Row]): A
   }
 
-  /** Append a new batch to a persisted PQ index WITHOUT retraining —
-    * the daily-embedding-delta path, mirroring [[appendToIvfIndex]]:
-    * codebooks are FROZEN after training (retraining is a deliberate
-    * offline rebuild, the standard PQ practice), so the batch encodes
-    * map-side against the reloaded books and its codes append as new
-    * files; the base code store is never rewritten or rescanned.
-    * Encoding is a pure per-row function of the frozen codebooks, so
-    * index-after-append EQUALS index-rebuilt-from-scratch bit-for-bit
-    * — and so does every serving answer (LlmSpec differential; the
-    * llm_ann_pq_append oracle row shares the full-build oracle). */
-  def appendToPqIndex(df: DataFrame, idCol: String, embCol: String,
-                      path: String, m: Int = 4, dim: Int = 64): Unit =
-    // under the CODES lock so appends serialize with compactFlatCodes
-    // (which renames the codes dir aside mid-publish); plain file
-    // appends otherwise — no replay protection, the pre-existing
-    // contract for the flat family
-    graft.io.Tables.withStoreLock(df.sparkSession, s"$path/codes") {
-      val (byLabel, _) = readPqIndex(df.sparkSession, path)
-      validateCodebooks(df.sparkSession, byLabel, m, dim, path)
-      pqEncodeFrame(df, idCol, embCol, byLabel, m, dim)
-        .write.mode("append").parquet(s"$path/codes")
+  /** Product quantization (codebooks in `codebooks/` as (lbl, pos, c)):
+    * [[pqEncodeKeepCe]] encodes, the flat m·k lookup table of
+    * [[pqLutAndAdc]] is the query step, codes score as they are. */
+  private final case class PqCodec(byLabel: Map[Long, IndexedSeq[Long]],
+                                   m: Int, dim: Int) extends AdcCodec {
+    def dir: String = PqCodec.dir
+    def artifact(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      byLabel.toSeq.sortBy(_._1)
+        .flatMap { case (l, cw) => cw.zipWithIndex.map { case (c, p) => (l, p, c) } }
+        .toDF("lbl", "pos", "c")
+    }
+    def codeLen: Int = m
+    def shape: String = s"(m=$m, dim=$dim)"
+    def artifactDims: Iterable[Int] = byLabel.values.map(_.length)
+    def encode(dfQ: DataFrame): DataFrame =
+      pqEncodeKeepCe(dfQ, byLabel, m, dim).select(col("cid"), col("codes"))
+    private lazy val lutAndAdc = pqLutAndAdc(byLabel, m, dim)
+    def queryStep(q: DataFrame): DataFrame = lutAndAdc._1(q)
+    def codeStep(codes: DataFrame): DataFrame = codes
+    def score: Column = lutAndAdc._2
+  }
+
+  private object PqCodec extends AdcArtifact[Map[Long, IndexedSeq[Long]]]("codebooks") {
+    def parse(rows: Array[Row]): Map[Long, IndexedSeq[Long]] = rows.groupBy(_.getLong(0))
+      .view.mapValues(_.sortBy(_.getInt(1)).map(_.getLong(2)).toIndexedSeq).toMap
+  }
+
+  /** Scalar quantization (the grid in `quantizer/` as (pos, vmin,
+    * vdiff)): the native Sq8Encode kernel encodes, the query is its
+    * own milli-quantized vector, and each code decodes once
+    * ([[sq8Decode]]) for an exact integer dot. */
+  private final case class Sq8Codec(quant: IndexedSeq[(Long, Long)],
+                                    dim: Int) extends AdcCodec {
+    def dir: String = Sq8Codec.dir
+    def artifact(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      quant.zipWithIndex.map { case ((mn, vd), p) => (p, mn, vd) }
+        .toDF("pos", "vmin", "vdiff")
+    }
+    def codeLen: Int = dim
+    def shape: String = s"dim=$dim"
+    def artifactDims: Iterable[Int] = if (quant.isEmpty) Nil else Seq(quant.length)
+    def encode(dfQ: DataFrame): DataFrame = dfQ.select(col("cid"),
+      graft.expr.kernels.NativeFns.sq8Encode(col("ce"), quant).as("codes"))
+    def queryStep(q: DataFrame): DataFrame = q.withColumn("__qv", col("qe"))
+    def codeStep(codes: DataFrame): DataFrame =
+      codes.withColumn("__dec", sq8Decode(col("codes"), quant))
+    def score: Column = dotQ(col("__qv"), col("__dec"))
+  }
+
+  private object Sq8Codec extends AdcArtifact[IndexedSeq[(Long, Long)]]("quantizer") {
+    def parse(rows: Array[Row]): IndexedSeq[(Long, Long)] =
+      rows.sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(2))).toIndexedSeq
+    /** The codec of a grid at its own dimension. */
+    def apply(quant: IndexedSeq[(Long, Long)]): Sq8Codec = Sq8Codec(quant, quant.length)
+  }
+
+  /** A codec's (cid, codes) rows for a raw (id, embedding) frame. */
+  private def encodeRows(codec: AdcCodec, df: DataFrame, idCol: String,
+                         embCol: String): DataFrame =
+    codec.encode(df.select(col(idCol).as("cid"), quantize(col(embCol)).as("ce")))
+
+  /** A batch's IVF frames: its centroid sums and its codes with their
+    * `label` cell ([[buildIvfIndex]] over `labelCol`). */
+  private def ivfCodes(codec: AdcCodec, df: DataFrame, idCol: String,
+                       embCol: String, labelCol: String): (DataFrame, DataFrame) = {
+    val (cent, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
+    (cent, encodeRows(codec, df, idCol, embCol)
+      .join(eq.select(col("cid"), col("label")), "cid"))
+  }
+
+  /** The one persist body: flat when `labelCol` is None, else IVF with
+    * its cells from `labelCol`. */
+  private def persistAdc(df: DataFrame, idCol: String, embCol: String,
+                         labelCol: Option[String], path: String,
+                         codec: AdcCodec): Unit = labelCol match {
+    case None => writeAdc(path, codec, None, encodeRows(codec, df, idCol, embCol))
+    case Some(lc) =>
+      val (cent, codes) = ivfCodes(codec, df, idCol, embCol, lc)
+      writeAdc(path, codec, Some(cent), codes)
+  }
+
+  /** Overwrites an index's stores: the centroid table (IVF), the
+    * codec's artifact — the one writer of `codebooks/` and
+    * `quantizer/` — and the codes. */
+  private def writeAdc(path: String, codec: AdcCodec, cent: Option[DataFrame],
+                       codes: DataFrame): Unit = {
+    cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
+    codec.artifact(codes.sparkSession).write.mode("overwrite")
+      .parquet(s"$path/${codec.dir}")
+    writeCodes(codes, path, ivf = cent.isDefined, append = false)
+  }
+
+  /** The one writer of a code store: flat files, or IVF files
+    * partitioned by `label`, created or appended ([[appendPartitioned]]
+    * stages a tagged IVF batch). */
+  private def writeCodes(codes: DataFrame, path: String, ivf: Boolean,
+                         append: Boolean, batchTag: Option[String] = None): Unit =
+    if (ivf && append) appendPartitioned(codes, s"$path/codes", "label", batchTag)
+    else {
+      val w = codes.write.mode(if (append) "append" else "overwrite")
+      (if (ivf) w.partitionBy("label") else w).parquet(s"$path/codes")
     }
 
-  /** Fail-loud layout check for append-against-frozen-codebooks: the
-    * caller's (m, dim) must match the persisted index, or the reloaded
-    * codeword arrays would slice wrong and the batch would encode (and
-    * then SERVE) garbage codes silently — mis-sliced sub-vectors still
-    * argmin to *some* codeword, so nothing downstream errors. `dim`
-    * is checked against the codebook vector lengths; `m` is checked
-    * against ONE stored code row's array length (codebooks alone
-    * cannot catch a wrong-but-divisible m, e.g. m=2 against an m=4
-    * index at the same dim — the appended codes arrays would be the
-    * wrong length and serving would element_at past their end,
-    * silently nulling ADC for appended vectors). */
-  private def validateCodebooks(spark: org.apache.spark.sql.SparkSession,
-                                byLabel: Map[Long, IndexedSeq[Long]],
-                                m: Int, dim: Int, path: String): Unit = {
-    require(byLabel.nonEmpty, s"append: no codebooks found under $path")
-    require(m >= 1 && dim % m == 0,
-      s"append: dim=$dim must divide into m=$m subspaces")
-    val badLen = byLabel.collect { case (l, cw) if cw.length != dim => l -> cw.length }
-    require(badLen.isEmpty,
-      s"append: dim=$dim does not match the index at $path — codebook " +
-        s"vectors have length ${badLen.head._2} (label ${badLen.head._1}); " +
-        "pass the (m, dim) the index was built with")
-    val storedM = spark.read.parquet(s"$path/codes")
-      .select(size(col("codes"))).head(1)
-    storedM.foreach(r => require(r.getInt(0) == m,
-      s"append: m=$m does not match the index at $path — stored code " +
-        s"arrays have length ${r.getInt(0)}; pass the (m, dim) the index " +
-        "was built with"))
+  /** The one read body: the artifact (its one reader) and the codes. */
+  private def readAdc[A](spark: SparkSession, path: String,
+                         kind: AdcArtifact[A]): (A, DataFrame) =
+    (kind.parse(spark.read.parquet(s"$path/${kind.dir}").collect()),
+      spark.read.parquet(s"$path/codes"))
+
+  /** An IVF append's batch: its cell column (None labels each vector
+    * with its nearest current centroid, [[assignClusters]]) and its
+    * replay tag. */
+  private final case class IvfBatch(labelCol: Option[String],
+                                    batchTag: Option[String])
+
+  /** The one append body, flat when `ivf` is None. `codec` is read
+    * from the index inside the store lock or publish window. */
+  private def appendAdc(df: DataFrame, idCol: String, embCol: String,
+                        path: String, codec: => AdcCodec,
+                        ivf: Option[IvfBatch]): Unit = {
+    val spark = df.sparkSession
+    ivf match {
+      case None =>
+        graft.io.Tables.withStoreLock(spark, s"$path/codes") {
+          writeCodes(encodeRows(appendGuard(spark, codec, path), df, idCol, embCol),
+            path, ivf = false, append = true)
+        }
+      case Some(IvfBatch(labelCol, batchTag)) =>
+        graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
+          val c = appendGuard(spark, codec, path)
+          val (labeled, lc) = labelCol match {
+            case Some(lc) => (df, lc)
+            case None =>
+              val assigned = assignClusters(df, idCol, embCol,
+                  spark.read.parquet(s"$path/centroids"))
+                .select(col(idCol).as("__cid"), col("label").as("__albl"))
+              (df.join(assigned, col(idCol) === col("__cid")).drop("__cid"), "__albl")
+          }
+          val (centNew, codes) = ivfCodes(c, labeled, idCol, embCol, lc)
+          writeCodes(codes, path, ivf = true, append = true, batchTag)
+          mergeCentroidSums(path, centNew)
+        }
+    }
   }
+
+  /** The one append guard: the caller's layout must match the
+    * persisted index, or the batch would encode — and then serve —
+    * garbage codes silently (mis-sliced sub-vectors still argmin to
+    * some codeword). `dim` is checked against the artifact's vectors;
+    * the code length against ONE stored code row, since the artifact
+    * alone cannot catch a wrong-but-divisible m (m=2 against an m=4
+    * index at the same dim). Returns `codec`. */
+  private def appendGuard(spark: SparkSession, codec: AdcCodec,
+                          path: String): AdcCodec = {
+    def mismatch(what: String, n: Int) =
+      s"append: ${codec.shape} does not match the index at $path — $what " +
+        s"length $n; pass the layout the index was built with"
+    require(codec.artifactDims.nonEmpty, s"append: no ${codec.dir} found under $path")
+    val bad = codec.artifactDims.find(_ != codec.dim)
+    require(bad.isEmpty, mismatch(s"${codec.dir} vectors have", bad.get))
+    spark.read.parquet(s"$path/codes").select(size(col("codes"))).head(1)
+      .foreach(r => require(r.getInt(0) == codec.codeLen,
+        mismatch("stored code arrays have", r.getInt(0))))
+    codec
+  }
+
+  /** The IVF half of a serve: the centroid sum table, the probe width,
+    * and whether the codes are residuals from their cell's centroid. */
+  private final case class Probe(cent: DataFrame, nprobe: Int,
+                                 residual: Boolean = false)
+
+  /** The one serve body: [[scoreAdc]], then [[pqCoarseRescore]]. */
+  private def serveAdc(codec: AdcCodec, codes: DataFrame, store: DataFrame,
+                       queries: DataFrame, qId: String, embCol: String,
+                       k: Int, coarse: Int, probe: Option[Probe]): DataFrame = {
+    require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
+    val q = quantizedQueries(queries, qId, embCol)
+    pqCoarseRescore(scoreAdc(codec, codes, q, probe), q, store, k, coarse)
+  }
+
+  /** The (qid, cid, adc) candidates of a serve. The query step runs
+    * once per query, before any probe, and the query side is
+    * broadcast. Residual codes add each probe's exact dot(query,
+    * centroid) — one integer per (query, probe) — to the ADC, the
+    * FAISS `by_residual` decomposition. */
+  private def scoreAdc(codec: AdcCodec, codes: DataFrame, q: DataFrame,
+                       probe: Option[Probe]): DataFrame = {
+    val perQuery = codec.queryStep(q)
+    val scored = probe match {
+      case None =>
+        codec.codeStep(codes).crossJoin(broadcast(perQuery.drop("qe")))
+          .withColumn("adc", codec.score)
+      case Some(Probe(cent, nprobe, residual)) =>
+        require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+        val rows = centroidRows(cent)
+        val probed = probeRows(cent, rows, perQuery, nprobe)
+        val (side, score) =
+          if (!residual) (probed, codec.score)
+          else (probed.withColumn("__qc", dotQ(col("qe"),
+            centroidArrCol(centroidMeans(rows)))), codec.score + col("__qc"))
+        codec.codeStep(codes).join(broadcast(side.drop("qe")), "label")
+          .withColumn("adc", score)
+    }
+    scored.select(col("qid"), col("cid"), col("adc"))
+  }
+
+  /** Persist a flat PQ index. `train` optionally supplies the codebook
+    * training frame (the production shape: codebooks train ONCE on a
+    * representative sample, and later batches [[appendToPqIndex]]
+    * against the frozen books); it defaults to `df` itself. */
+  def persistPqIndex(df: DataFrame, idCol: String, embCol: String,
+                     labelCol: String, path: String, m: Int = 4,
+                     dim: Int = 64, train: Option[DataFrame] = None): Unit =
+    persistAdc(df, idCol, embCol, None, path,
+      PqCodec(pqCodebooks(train.getOrElse(df), embCol, labelCol), m, dim))
+
+  /** Append a batch to a flat PQ index against its frozen codebooks —
+    * the daily-embedding-delta path; the base code store is never
+    * rewritten. Fails loudly when (m, dim) does not match the index. */
+  def appendToPqIndex(df: DataFrame, idCol: String, embCol: String,
+                      path: String, m: Int = 4, dim: Int = 64): Unit =
+    appendAdc(df, idCol, embCol, path,
+      PqCodec(readAdc(df.sparkSession, path, PqCodec)._1, m, dim), None)
 
   /** Reload a persisted PQ index → (codebooks map, codes frame). */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  path: String): (Map[Long, IndexedSeq[Long]], DataFrame) = {
-    val byLabel = spark.read.parquet(s"$path/codebooks").collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(1)).map(_.getLong(2)).toIndexedSeq).toMap
-    (byLabel, spark.read.parquet(s"$path/codes"))
-  }
+                  path: String): (Map[Long, IndexedSeq[Long]], DataFrame) =
+    readAdc(spark, path, PqCodec)
 
   /** Trained per-dimension scalar quantizer (the FAISS ScalarQuantizer
     * QT_8bit family — public method): per-dim [vmin, vmax] learned
@@ -568,9 +747,7 @@ object Similarity {
     * integer distance >= 1/vdiff >> the 2^-53 rounding error). */
   def sq8EncodeFrame(df: DataFrame, idCol: String, embCol: String,
                      quant: IndexedSeq[(Long, Long)]): DataFrame =
-    df.select(col(idCol).as("cid"),
-      graft.expr.kernels.NativeFns.sq8Encode(quantize(col(embCol)), quant)
-        .as("codes"))
+    encodeRows(Sq8Codec(quant), df, idCol, embCol)
 
   /** The zip_with encode the native kernel replaced — differential
     * anchor (NativeExprSpec). */
@@ -599,158 +776,70 @@ object Similarity {
     zip_with(scaled, sq8VminArr(quant), (x, mn) => x + mn)
   }
 
-  /** SQ8 ANN serving: decode each stored code ONCE to its milli-scale
-    * reconstruction, score every (query, candidate) with the exact
-    * integer dot against the full-precision query (asymmetric
-    * distance — the query never quantizes), take the top-`coarse` per
-    * query, then rescore those EXACTLY — the [[rerankTopK]] /
-    * [[pqServe]] recall-cost dial with a dim-byte code instead of
-    * dim floats (8× narrower than the milli store) or m bytes (PQ).
-    * The coarse scan streams (cid, dim-byte codes) against broadcast
-    * queries; vectors are touched only in the bounded rescore. */
+  /** Flat SQ8 serving: the [[serveAdc]] body with the scalar codec —
+    * the [[rerankTopK]] / [[pqServe]] recall-cost dial with a dim-byte
+    * code instead of dim floats (8× narrower than the milli store) or
+    * m bytes (PQ). The query never quantizes (asymmetric distance). */
   def sq8Serve(quant: IndexedSeq[(Long, Long)], codes: DataFrame,
                store: DataFrame, queries: DataFrame, qId: String,
-               embCol: String, k: Int, coarse: Int): DataFrame = {
-    require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    val dec = codes.withColumn("__dec", sq8Decode(col("codes"), quant))
-    val q = quantizedQueries(queries, qId, embCol)
-    val scored = dec.crossJoin(broadcast(q))
-      .withColumn("adc", dotQ(col("qe"), col("__dec")))
-    pqCoarseRescore(scored, q, store, k, coarse)
-  }
+               embCol: String, k: Int, coarse: Int): DataFrame =
+    serveAdc(Sq8Codec(quant), codes, store, queries, qId,
+      embCol, k, coarse, None)
 
-  /** Persist an SQ8 index: `path/quantizer` (pos, vmin, vdiff) and
-    * `path/codes` (cid, codes) — [[persistPqIndex]]'s artifact shape
-    * for the scalar family. `train` optionally supplies the quantizer-
-    * training frame (the production shape: the grid trains once on a
-    * representative sample; later batches append against it). */
+  /** Persist a flat SQ8 index. `train` optionally supplies the
+    * quantizer-training frame (the production shape: the grid trains
+    * once on a representative sample; later batches append against
+    * it). */
   def persistSq8Index(df: DataFrame, idCol: String, embCol: String,
-                      path: String, train: Option[DataFrame] = None): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val quant = sq8Train(train.getOrElse(df), embCol)
-    quant.zipWithIndex.map { case ((mn, vd), p) => (p, mn, vd) }
-      .toDF("pos", "vmin", "vdiff")
-      .write.mode("overwrite").parquet(s"$path/quantizer")
-    sq8EncodeFrame(df, idCol, embCol, quant)
-      .write.mode("overwrite").parquet(s"$path/codes")
-  }
+                      path: String, train: Option[DataFrame] = None): Unit =
+    persistAdc(df, idCol, embCol, None, path,
+      Sq8Codec(sq8Train(train.getOrElse(df), embCol)))
 
-  /** Append a batch against the FROZEN quantizer — new code files
-    * only, the base store is never rewritten ([[appendToPqIndex]]'s
-    * contract). Encoding is a pure per-row function of the quantizer,
-    * so append == full rebuild bit-for-bit whenever the batch lies in
-    * the trained range (out-of-range values clamp — the documented
-    * FAISS-style degradation, priced by the recall ledger, never an
-    * error). Fails loudly if `dim` does not match the persisted
-    * quantizer or the stored code arrays (the [[validateCodebooks]]
-    * guard for the scalar family). */
+  /** Append a batch to a flat SQ8 index against its frozen grid; the
+    * base code store is never rewritten. Fails loudly when `dim` does
+    * not match the index. */
   def appendToSq8Index(df: DataFrame, idCol: String, embCol: String,
                        path: String, dim: Int = 64): Unit =
-    // codes lock: serializes with compactFlatCodes (see appendToPqIndex)
-    graft.io.Tables.withStoreLock(df.sparkSession, s"$path/codes") {
-      val (quant, _) = readSq8Index(df.sparkSession, path)
-      require(quant.nonEmpty, s"append: no quantizer found under $path")
-      require(quant.length == dim,
-        s"append: dim=$dim does not match the index at $path — the stored " +
-          s"quantizer has ${quant.length} positions; pass the dim the index " +
-          "was built with")
-      val storedDim = df.sparkSession.read.parquet(s"$path/codes")
-        .select(size(col("codes"))).head(1)
-      storedDim.foreach(r => require(r.getInt(0) == dim,
-        s"append: dim=$dim does not match the index at $path — stored code " +
-          s"arrays have length ${r.getInt(0)}"))
-      sq8EncodeFrame(df, idCol, embCol, quant)
-        .write.mode("append").parquet(s"$path/codes")
-    }
+    appendAdc(df, idCol, embCol, path,
+      Sq8Codec(readAdc(df.sparkSession, path, Sq8Codec)._1, dim), None)
+
+  /** [[appendToSq8Index]] against a grid the caller loaded earlier —
+    * the streamed SQ8 sink's batch write, which freezes the grid at
+    * stream start. */
+  private[graft] def appendToSq8IndexWith(df: DataFrame, idCol: String,
+                                          embCol: String, path: String,
+                                          quant: IndexedSeq[(Long, Long)]): Unit =
+    appendAdc(df, idCol, embCol, path, Sq8Codec(quant), None)
 
   /** Reload a persisted SQ8 index → (quantizer, codes frame). */
   def readSq8Index(spark: org.apache.spark.sql.SparkSession,
-                   path: String): (IndexedSeq[(Long, Long)], DataFrame) = {
-    val quant = spark.read.parquet(s"$path/quantizer").collect()
-      .sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(2)))
-      .toIndexedSeq
-    (quant, spark.read.parquet(s"$path/codes"))
-  }
+                   path: String): (IndexedSeq[(Long, Long)], DataFrame) =
+    readAdc(spark, path, Sq8Codec)
 
-  /** IVF-SQ8 — the FAISS `IndexIVFScalarQuantizer` composition: the
-    * coarse IVF quantizer partitions the corpus into cells, each
-    * vector stores as its dim-byte SQ8 code PARTITIONED BY CLUSTER
-    * (one directory per label, the partition-pruning unit), and the
-    * per-dim grid is the one trained artifact besides the centroid
-    * sum table. Completes the persisted index family: IVF (raw
-    * milli vectors), PQ (m-byte codes, no cells), IVFPQ (cells +
-    * m-byte codes), IVF-SQ8 (cells + dim-byte codes) — the middle
+  /** Persist an IVF-SQ8 index — the FAISS `IndexIVFScalarQuantizer`
+    * composition: coarse cells plus dim-byte scalar codes, the middle
     * point a deployment picks when PQ's recall at m bytes is too low
-    * but raw vectors are 8× too much I/O. */
+    * but raw vectors are 8× too much I/O. `labelCol` carries the
+    * cells; `train` as in [[persistSq8Index]]. */
   def persistIvfSq8Index(df: DataFrame, idCol: String, embCol: String,
                          labelCol: String, path: String,
-                         train: Option[DataFrame] = None): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val (cent, _) = buildIvfIndex(df, idCol, embCol, labelCol)
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    val quant = sq8Train(train.getOrElse(df), embCol)
-    quant.zipWithIndex.map { case ((mn, vd), p) => (p, mn, vd) }
-      .toDF("pos", "vmin", "vdiff")
-      .write.mode("overwrite").parquet(s"$path/quantizer")
-    sq8EncodeFrame(df, idCol, embCol, quant)
-      .join(df.select(col(idCol).as("cid"), col(labelCol).as("label")), "cid")
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
+                         train: Option[DataFrame] = None): Unit =
+    persistAdc(df, idCol, embCol, Some(labelCol), path,
+      Sq8Codec(sq8Train(train.getOrElse(df), embCol)))
 
-  /** Append a batch to a persisted IVF-SQ8 index — frozen grid +
-    * frozen-centroid labeling + additive centroid merge, composing
-    * the [[appendToSq8Index]] and [[appendToIvfIndex]] contracts:
-    * the batch labels against the CURRENT centroid means
-    * ([[assignClusters]]), encodes against the frozen per-dim grid
-    * (clamp out of range), appends as new files under the touched
-    * clusters' partition dirs, and the centroid sum table merges in
-    * exact integers under the store lock. When the caller supplies
-    * the same labels a full rebuild would (the harness shape: labels
-    * carried on the data), append == rebuild bit-for-bit and the
-    * serve answers are identical — the shared-oracle contract.
-    *
-    * `batchTag` makes the append EXACTLY-ONCE under crash-replay (the
-    * at-least-once retry loops and streaming maintainers): a tag
-    * already in the centroid store's applied ledger short-circuits the
-    * WHOLE call (codes included), the tag publishes INSIDE the same
-    * atomic rename as the merged centroids, and the codes land via
-    * [[graft.io.Tables.stagedPartitionedAppend]] under deterministic
-    * per-(tag, cluster) file names — so a crash in the window between
-    * the code adds and the centroid swap (previously: retry
-    * double-appends codes) now resumes by skipping the already-placed
-    * code files and re-running only the centroid merge against the
-    * unmoved base. Untagged calls keep plain file appends (no replay
-    * protection — the pre-existing contract). */
+  /** Append a batch to an IVF-SQ8 index: the frozen grid encodes it,
+    * `labelCol` carries its cells (None labels it against the current
+    * centroid means), and `batchTag` makes the whole call exactly-once
+    * under replay. When the batch carries the labels a full rebuild
+    * would, append == rebuild bit for bit. Fails loudly when `dim`
+    * does not match the index. */
   def appendToIvfSq8Index(df: DataFrame, idCol: String, embCol: String,
                           path: String, dim: Int = 64,
                           labelCol: Option[String] = None,
-                          batchTag: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
-      val (cent, quant, _) = readIvfSq8Index(spark, path)
-      require(quant.length == dim,
-        s"append: dim=$dim does not match the index at $path — the stored " +
-          s"quantizer has ${quant.length} positions")
-      val labeled = labelCol match {
-        case Some(lc) => df.select(col(idCol).as("cid"), col(lc).as("label"))
-        case None => assignClusters(df, idCol, embCol, cent)
-          .select(col(idCol).as("cid"), col("label"))
-      }
-      appendPartitioned(sq8EncodeFrame(df, idCol, embCol, quant)
-        .join(labeled, "cid"), s"$path/codes", "label", batchTag)
-      val centNew = labelCol match {
-        case Some(lc) => buildIvfIndex(df, idCol, embCol, lc)._1
-        case None =>
-          val withL = df.join(
-            labeled.select(col("cid").as("__cid"), col("label").as("__albl")),
-            col(idCol) === col("__cid")).drop("__cid")
-          buildIvfIndex(withL, idCol, embCol, "__albl")._1
-      }
-      mergeCentroidSums(path, centNew)
-    }
-  }
+                          batchTag: Option[String] = None): Unit =
+    appendAdc(df, idCol, embCol, path,
+      Sq8Codec(readAdc(df.sparkSession, path, Sq8Codec)._1, dim),
+      Some(IvfBatch(labelCol, batchTag)))
 
   /** The side-file append of the IVF-family and graph-store appenders:
     * a tagged batch lands through
@@ -852,7 +941,7 @@ object Similarity {
     graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
       graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
       val underCentroids =
-        Seq("centroids", "quantizer", "codebooks", "vectors", "edges",
+        Seq("centroids", Sq8Codec.dir, PqCodec.dir, "vectors", "edges",
           "meta").flatMap { d =>
           graft.io.Tables.vacuumStoreUnlocked(spark, s"$path/$d")
         }
@@ -866,33 +955,19 @@ object Similarity {
     * codes). */
   def readIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
                       path: String): (DataFrame, IndexedSeq[(Long, Long)], DataFrame) = {
-    val quant = spark.read.parquet(s"$path/quantizer").collect()
-      .sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(2)))
-      .toIndexedSeq
-    (spark.read.parquet(s"$path/centroids"), quant,
-      spark.read.parquet(s"$path/codes"))
+    val (quant, codes) = readAdc(spark, path, Sq8Codec)
+    (spark.read.parquet(s"$path/centroids"), quant, codes)
   }
 
-  /** IVF-SQ8 serving: probe each query's best `nprobe` cells
-    * (broadcast centroid table), dynamic-partition-pruned scan of
-    * ONLY those cells' code files, decode-once + integer-ADC against
-    * the full-precision query, coarse cut, exact rescore — the
-    * [[ivfPqTopK]] plan shape with the scalar codec. At 100 TB the
-    * fine search reads ~nprobe/nlist of the dim-byte code column. */
+  /** IVF-SQ8 serving: the [[serveAdc]] body with the scalar codec and
+    * the IVF probe — the [[ivfPqTopK]] plan shape. At 100 TB the fine
+    * search reads ~nprobe/nlist of the dim-byte code column. */
   def ivfSq8TopK(cent: DataFrame, quant: IndexedSeq[(Long, Long)],
                  codes: DataFrame, store: DataFrame, queries: DataFrame,
                  qId: String, embCol: String, k: Int, coarse: Int = 20,
-                 nprobe: Int = 1): DataFrame = {
-    require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = quantizedQueries(queries, qId, embCol)
-    val probed = probeRows(cent, centroidRows(cent), q, nprobe)
-    val dec = codes.withColumn("__dec", sq8Decode(col("codes"), quant))
-    val scored = dec.join(broadcast(probed), "label")
-      .withColumn("adc", dotQ(col("qe"), col("__dec")))
-      .select(col("qid"), col("cid"), col("adc"))
-    pqCoarseRescore(scored, q, store, k, coarse)
-  }
+                 nprobe: Int = 1): DataFrame =
+    serveAdc(Sq8Codec(quant), codes, store, queries, qId, embCol, k, coarse,
+      Some(Probe(cent, nprobe)))
 
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
@@ -1623,7 +1698,7 @@ object Similarity {
       val metaRow = spark.read.parquet(s"$path/meta").head()
       val (k, nprobe, maxCluster) =
         (metaRow.getLong(0).toInt, metaRow.getLong(1).toInt, metaRow.getLong(2))
-      // fail-loud dim guard (the validateCodebooks precedent): the
+      // fail-loud dim guard (the [[appendGuard]] precedent): the
       // assignment kernel dots over min(dim, |centroid|), so a
       // wrong-dim batch would silently mis-assign instead of erroring
       val storeDim = cents.head._2.length
@@ -2174,48 +2249,23 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
 
   /** Persist an IVFPQ index — the FAISS IVFPQ composition (Jégou,
-    * Douze & Schmid, TPAMI 2011 §V — public method; the non-residual
-    * variant, FAISS `by_residual=false`, so every score stays
-    * exact-integer and oracle-replayable). ONE on-disk artifact:
-    *   - `centroids`: the coarse IVF sum table (tiny; broadcast at
-    *     serve time),
-    *   - `codebooks`: the PQ codebooks,
-    *   - `codes`: the m-small-int PQ codes PARTITIONED BY COARSE
-    *     CLUSTER — the serving layout; each cluster is a partition
-    *     directory, the partition-pruning unit.
-    * [[ivfPqTopK]] then probes each query's best `nprobe` clusters,
-    * reads ONLY those clusters' code files (the label equi-join drives
-    * dynamic partition pruning), ADC-ranks the codes, and exactly
-    * rescores the coarse set from the full store. At 100 TB a query
-    * batch touches ~nprobe/nlist of the CODE column bytes and never
-    * the vectors — where plain [[pqServe]] ADC-scans EVERY code row
-    * per batch and plain [[ivfTopKIndexed]] rescans raw vectors inside
-    * the probed clusters. `labelCol` carries the coarse cluster ids
-    * (label a new corpus with [[assignClusters]] against a trained
-    * quantizer first); the PQ codebooks train on the same label init —
-    * the deterministic replay convention of [[pqCodebooks]]. */
+    * Douze & Schmid, TPAMI 2011 §V; the non-residual variant, so every
+    * score stays exact-integer and oracle-replayable): cells from
+    * `labelCol` (label a new corpus with [[assignClusters]] first) plus
+    * PQ codes whose books train on [[pqCodebooks]]' label init, over
+    * `train` when given. A query batch reads ~nprobe/nlist of the code
+    * bytes and never the vectors. */
   def persistIvfPqIndex(df: DataFrame, idCol: String, embCol: String,
                         labelCol: String, path: String, m: Int = 4,
-                        dim: Int = 64, train: Option[DataFrame] = None): Unit = {
-    val (cent, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    val byLabel = train.map(pqCodebooks(_, embCol, labelCol))
-      .getOrElse(pqCodebooks(df, embCol, labelCol))
-    writePqCodebooks(df.sparkSession, byLabel, path)
-    pqEncodeFrame(df, idCol, embCol, byLabel, m, dim)
-      .join(eq.select(col("cid"), col("label")), "cid")
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
+                        dim: Int = 64, train: Option[DataFrame] = None): Unit =
+    persistAdc(df, idCol, embCol, Some(labelCol), path,
+      PqCodec(pqCodebooks(train.getOrElse(df), embCol, labelCol), m, dim))
 
-  /** Append a batch to a persisted (non-residual) IVFPQ index — the
-    * daily-crawl serving-index delta, composing the two append paths
-    * the engine already proves: codes encode against the FROZEN
-    * codebooks and land as new files under their clusters' partition
-    * dirs ([[appendToPqIndex]]'s contract), and the centroid sum
-    * table merges additively in exact integers
-    * ([[appendToIvfIndex]]'s contract) — so the appended index serves
-    * IDENTICALLY to a full rebuild (llm_ann_ivfpq_append shares the
-    * full-build oracle; LlmSpec differential).
+  /** Append a batch to a (non-residual) IVFPQ index against its
+    * frozen codebooks, its cells from `labelCol`; `batchTag` makes the
+    * whole call exactly-once under replay. The appended index serves
+    * identically to a full rebuild. Fails loudly when (m, dim) does
+    * not match the index.
     *
     * The RESIDUAL variant deliberately has NO append: residual codes
     * depend on the centroid means, which an append shifts — a
@@ -2224,53 +2274,27 @@ object Similarity {
     * same reason; retrain-and-rebuild is the correct operation there. */
   def appendToIvfPqIndex(df: DataFrame, idCol: String, embCol: String,
                          labelCol: String, path: String, m: Int = 4,
-                         dim: Int = 64, batchTag: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    // same window as appendToIvfIndex; same applied-ledger +
-    // staged-codes exactly-once contract as appendToIvfSq8Index when
-    // `batchTag` is given
-    graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
-      val (byLabel, _) = readPqIndex(spark, path)
-      validateCodebooks(spark, byLabel, m, dim, path)
-      val (centNew, eqNew) = buildIvfIndex(df, idCol, embCol, labelCol)
-      val codes = pqEncodeFrameQ(eqNew.select(col("cid"), col("eq").as("ce")),
-          byLabel, m, dim)
-        .join(eqNew.select(col("cid"), col("label")), "cid")
-      appendPartitioned(codes, s"$path/codes", "label", batchTag)
-      mergeCentroidSums(path, centNew)
-    }
-  }
+                         dim: Int = 64, batchTag: Option[String] = None): Unit =
+    appendAdc(df, idCol, embCol, path,
+      PqCodec(readAdc(df.sparkSession, path, PqCodec)._1, m, dim),
+      Some(IvfBatch(Some(labelCol), batchTag)))
 
   /** Load a persisted IVFPQ index → (centroids, codebooks, codes). */
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String): (DataFrame, Map[Long, IndexedSeq[Long]], DataFrame) = {
-    val (byLabel, codes) = readPqIndex(spark, path)
+    val (byLabel, codes) = readAdc(spark, path, PqCodec)
     (spark.read.parquet(s"$path/centroids"), byLabel, codes)
   }
 
-  /** IVFPQ serving — the composition of the IVF probe and the PQ ADC
-    * scan: probe each query's best `nprobe` coarse clusters
-    * ([[ivfProbe]]), join the (query, probed cluster, lut-arrays)
-    * frame — one row per (query, probe), always tiny — against the
-    * cluster-partitioned code store on the PARTITION column, ADC-rank
-    * only the probed clusters' codes, exact-rescore the coarse set.
-    * The broadcast equi-join on `label` is what drives dynamic
-    * partition pruning on the code store: the scan reads the probed
-    * clusters' files only, and only the (cid, codes, label) columns
-    * (plan-asserted in LlmSpec). Clusters are disjoint, so probes
-    * introduce no duplicate candidates. Same output shape and exact
-    * arithmetic as [[pqServe]] — on a probe set covering every
-    * cluster the two are bit-identical. */
+  /** IVFPQ serving: the [[serveAdc]] body with the PQ codec and the
+    * IVF probe. On a probe set covering every cluster it is
+    * bit-identical to [[pqServe]]. */
   def ivfPqTopK(cent: DataFrame, byLabel: Map[Long, IndexedSeq[Long]],
                 codes: DataFrame, store: DataFrame, queries: DataFrame,
                 qId: String, embCol: String, k: Int, m: Int = 4,
-                dim: Int = 64, coarse: Int = 20, nprobe: Int = 1): DataFrame = {
-    require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = quantizedQueries(queries, qId, embCol)
-    pqCoarseRescore(ivfPqScored(cent, byLabel, codes, q, m, dim, nprobe),
-      q, store, k, coarse)
-  }
+                dim: Int = 64, coarse: Int = 20, nprobe: Int = 1): DataFrame =
+    serveAdc(PqCodec(byLabel, m, dim), codes, store, queries, qId, embCol,
+      k, coarse, Some(Probe(cent, nprobe)))
 
   /** The ADC-scored candidate frame (qid, cid, adc) of IVFPQ serving —
     * [[ivfPqTopK]] minus the coarse cut and rescore. Public so a
@@ -2281,25 +2305,9 @@ object Similarity {
   def ivfPqScoredCandidates(cent: DataFrame, byLabel: Map[Long, IndexedSeq[Long]],
                             codes: DataFrame, queries: DataFrame, qId: String,
                             embCol: String, m: Int = 4, dim: Int = 64,
-                            nprobe: Int = 1): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    ivfPqScored(cent, byLabel, codes, quantizedQueries(queries, qId, embCol),
-      m, dim, nprobe)
-  }
-
-  /** [[ivfPqScoredCandidates]] over an already-quantized (qid, qe)
-    * frame: the probe and the LUT build share one projection of the
-    * queries, then one (query, probed cluster, flat LUT) row per probe
-    * — tiny, broadcast — joins the code store on `label`. */
-  private def ivfPqScored(cent: DataFrame, byLabel: Map[Long, IndexedSeq[Long]],
-                          codes: DataFrame, q: DataFrame, m: Int, dim: Int,
-                          nprobe: Int): DataFrame = {
-    val (withLuts, adc) = pqLutAndAdc(byLabel, m, dim)
-    val probed = probeRows(cent, centroidRows(cent), withLuts(q), nprobe).drop("qe")
-    codes.join(broadcast(probed), "label")
-      .withColumn("adc", adc)
-      .select(col("qid"), col("cid"), col("adc"))
-  }
+                            nprobe: Int = 1): DataFrame =
+    scoreAdc(PqCodec(byLabel, m, dim), codes,
+      quantizedQueries(queries, qId, embCol), Some(Probe(cent, nprobe)))
 
   /** Coarse top-`coarse` by ADC + exact rescore over a scored
     * candidate frame — the public face of the serving tail, paired
@@ -2376,9 +2384,7 @@ object Similarity {
                                 dim: Int = 64, nCodewords: Int = 8): Unit = {
     val (cent, byCode, codes) =
       buildIvfPqResidual(df, idCol, embCol, labelCol, m, dim, nCodewords)
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    writePqCodebooks(df.sparkSession, byCode, path)
-    codes.write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
+    writeAdc(path, PqCodec(byCode, m, dim), Some(cent), codes)
   }
 
   /** The in-memory residual-IVFPQ build — (centroid sums, residual
@@ -2420,36 +2426,20 @@ object Similarity {
       if (refineRounds == 0) initBooks
       else refineBooksQ(resid.select(col("cid"), col("ce")), initBooks, m, dim,
         refineRounds)
-    val codes = pqEncodeFrameQ(resid, byCode, m, dim)
+    val codes = PqCodec(byCode, m, dim).encode(resid)
       .join(eq.select(col("cid"), col("label")), "cid")
     (cent, byCode, codes)
   }
 
-  /** Residual IVFPQ serving: probe → per-probe exact centroid dot →
-    * DPP-pruned residual-ADC scan of the probed clusters' codes →
-    * exact rescore. approx(q, x) = dot(q, c_label(x)) + Σ_s
+  /** Residual IVFPQ serving: the [[serveAdc]] body with the PQ codec
+    * over residual codes. approx(q, x) = dot(q, c_label(x)) + Σ_s
     * LUT_s[code_s(x)] — the FAISS ADC decomposition, all exact
     * integers. */
   def ivfPqResidualTopK(cent: DataFrame, byCode: Map[Long, IndexedSeq[Long]],
                         codes: DataFrame, store: DataFrame, queries: DataFrame,
                         qId: String, embCol: String, k: Int, m: Int = 4,
                         dim: Int = 64, coarse: Int = 20,
-                        nprobe: Int = 1): DataFrame = {
-    require(coarse >= k, s"coarse depth $coarse must be >= k=$k")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val q = quantizedQueries(queries, qId, embCol)
-    val rows = centroidRows(cent)
-    val (withLuts, adcR) = pqLutAndAdc(byCode, m, dim)
-    // (qid, label, __qc, luts): one row per (query, probe) — tiny;
-    // __qc is the exact centroid dot the residual ADC is offset by
-    val probed = probeRows(cent, rows, withLuts(q), nprobe)
-      .withColumn("__carr", centroidArrCol(centroidMeans(rows)))
-      .withColumn("__qc",
-        graft.expr.kernels.NativeFns.longDot(col("qe"), col("__carr")))
-      .drop("qe", "__carr")
-    val scored = codes.join(broadcast(probed), "label")
-      .withColumn("adc", adcR + col("__qc"))
-      .select(col("qid"), col("cid"), col("adc"))
-    pqCoarseRescore(scored, q, store, k, coarse)
-  }
+                        nprobe: Int = 1): DataFrame =
+    serveAdc(PqCodec(byCode, m, dim), codes, store, queries, qId, embCol, k,
+      coarse, Some(Probe(cent, nprobe, residual = true)))
 }

@@ -1154,9 +1154,10 @@ object Streams {
   }
 
   /** One SQ8 streaming-append micro-batch — factored for
-    * replay-semantics testing without a running stream. The log lives
-    * under the index path, since the index lives at a path, not in the
-    * catalog. */
+    * replay-semantics testing without a running stream. The codes land
+    * through the flat index append (`codes` store lock, dim guard). The
+    * log lives under the index path, since the index lives at a path,
+    * not in the catalog. */
   private[graft] def sq8AppendBatch(batch: DataFrame, idCol: String,
                                     embCol: String,
                                     quant: IndexedSeq[(Long, Long)],
@@ -1164,8 +1165,8 @@ object Streams {
                                     batchId: Long = -1L): Unit =
     commitOnce(batch.sparkSession, PathLog(s"$indexPath/commits"),
         streamId, batchId) {
-      graft.llm.Similarity.sq8EncodeFrame(batch, idCol, embCol, quant)
-        .write.mode("append").parquet(s"$indexPath/codes")
+      graft.llm.Similarity.appendToSq8IndexWith(batch, idCol, embCol,
+        indexPath, quant)
     }
 
   /** Streaming IVF-SQ8 index maintenance — the cluster-partitioned

@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Round-12 retrieval/curation additions: reciprocal-rank fusion,
   * SemDeDup semantic dedup, and DSIR importance weights. */
@@ -188,18 +189,46 @@ class RetrievalSpec extends SparkSpec {
     Similarity.persistIvfPqIndex(df, "vec_id", "embedding", "label", path,
       m = 4, dim = dim)
     val (cent, byLabel, codes) = Similarity.readIvfPqIndex(spark, path)
+    val resPath = graft.util.Scratch.dir("ivfpq_res_plan") + "/idx"
+    Similarity.persistIvfPqResidualIndex(df, "vec_id", "embedding", "label",
+      resPath, m = 4, dim = dim)
+    val (centR, byCode, codesR) = Similarity.readIvfPqIndex(spark, resPath)
+    val sq8Path = graft.util.Scratch.dir("ivfsq8_plan") + "/idx"
+    Similarity.persistIvfSq8Index(df, "vec_id", "embedding", "label", sq8Path)
+    val (centS, quant, codesS) = Similarity.readIvfSq8Index(spark, sq8Path)
     val store = df.select(col("vec_id").as("cid"),
       Similarity.quantize(col("embedding")).as("ce"))
-    val served = Similarity.ivfPqTopK(cent, byLabel, codes, store,
-      df.filter(col("vec_id") % 100 === 3), "vec_id", "embedding", k = 3,
-      m = 4, dim = dim, coarse = 10, nprobe = 2)
-    assert(served.count() === 12)
-    served.collect()
-    // the probe is one kernel row per query and both cuts are the
-    // bounded top-k aggregate: nothing sorts the candidates
-    val plan = served.queryExecution.executedPlan.toString
-    for (node <- Seq("Window", "WindowGroupLimit", "posexplode"))
-      assert(!plan.contains(node), s"unexpected $node in the serving plan:\n$plan")
+    val queries = df.filter(col("vec_id") % 100 === 3)
+    val serves = Seq(
+      "ivfPqTopK" -> Similarity.ivfPqTopK(cent, byLabel, codes, store,
+        queries, "vec_id", "embedding", k = 3, m = 4, dim = dim, coarse = 10,
+        nprobe = 2),
+      "ivfPqResidualTopK" -> Similarity.ivfPqResidualTopK(centR, byCode,
+        codesR, store, queries, "vec_id", "embedding", k = 3, m = 4,
+        dim = dim, coarse = 10, nprobe = 2),
+      "ivfSq8TopK" -> Similarity.ivfSq8TopK(centS, quant, codesS, store,
+        queries, "vec_id", "embedding", k = 3, coarse = 10, nprobe = 2))
+    for ((name, served) <- serves) {
+      assert(served.count() === 12, name)
+      served.collect()
+      // the probe is one kernel row per query and both cuts are the
+      // bounded top-k aggregate: nothing sorts the candidates
+      val plan = served.queryExecution.executedPlan.toString
+      for (node <- Seq("Window", "WindowGroupLimit", "posexplode"))
+        assert(!plan.contains(node), s"unexpected $node in the $name plan:\n$plan")
+    }
+    // the residual serve prunes its code-store scan to the probed cells
+    // and reads the code column only, as the other IVF serves do
+    val resPlan = serves(1)._2.queryExecution.executedPlan.toString
+    assert(resPlan.contains("dynamicpruning"),
+      s"expected dynamic partition pruning on the code-store scan:\n$resPlan")
+    val codeScans = resPlan.linesIterator
+      .filter(l => l.contains("FileScan") && l.contains("codes:array<bigint>")).toSeq
+    assert(codeScans.nonEmpty, s"expected a code-store FileScan:\n$resPlan")
+    val readCols = codeScans.map(l => "(\\w+):".r
+      .findAllMatchIn(l.split("ReadSchema: ").last).map(_.group(1)).toSet)
+    assert(readCols.forall(_ == Set("cid", "codes")),
+      s"code-store scan must read codes only:\n${codeScans.mkString("\n")}")
   }
 
   test("editDistancePairs: in-block typo pairs; cap drops hot block; null never pairs") {
@@ -571,6 +600,20 @@ class RetrievalSpec extends SparkSpec {
       Similarity.appendToIvfPqIndex(df.withColumn("vec_id", col("vec_id") + 1000L),
         "vec_id", "embedding", "label", path2, m = 4, dim = 32)
     }
+    // the IVF-SQ8 append takes the same guard, before any code file lands
+    val path3 = graft.util.Scratch.dir("ivfsq8_dimchk") + "/idx"
+    Similarity.persistIvfSq8Index(df, "vec_id", "embedding", "label", path3)
+    def codeFiles = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$path3/codes"))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally walk.close()
+    }
+    val filesBefore = codeFiles
+    intercept[IllegalArgumentException] {
+      Similarity.appendToIvfSq8Index(df.withColumn("vec_id", col("vec_id") + 1000L),
+        "vec_id", "embedding", path3, dim = 32, labelCol = Some("label"))
+    }
+    assert(codeFiles === filesBefore, "a rejected append must not land code files")
     // a correct-shape append publishes the merged centroids via the
     // crash-consistent temp+rename swap: table readable, no orphan
     // __next/__old generation dirs left behind

@@ -944,25 +944,80 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("the store commit protocol lives only in io/Tables.scala") {
-    // the ledger check, wrap warning and generation read are the
-    // read-merge-publish window's internals: every other module goes
-    // through Tables.readMergePublish instead of re-implementing them
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(Files.exists(root.resolve("graft/io/Tables.scala")),
       s"run from the repository root: $root has no graft/io/Tables.scala")
-    val protocol = "storeAppliedLedger|warnIfLedgerWrapped|storeGeneration\\(".r
+    // every source line as (file, enclosing def/object/class, listing)
+    val decl = "\\b(?:def|object|class|trait) (\\w+)".r
+    def isComment(l: String) = Seq("*", "/*", "//").exists(l.trim.startsWith)
     val stream = Files.walk(root)
-    val offenders = try stream.iterator().asScala.toList
-      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/io/Tables.scala"))
+    val lines = try stream.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (l, i) if protocol.findFirstIn(l).nonEmpty =>
-            s"${root.relativize(p)}:${i + 1}: ${l.trim}"
+        val file = root.relativize(p).toString
+        var site = file
+        Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) =>
+          if (!isComment(l)) decl.findFirstMatchIn(l).foreach(m => site = s"$file#${m.group(1)}")
+          (file, site, l, s"$file:${i + 1}: ${l.trim}")
         }
       }
     finally stream.close()
+    // the ledger check, wrap warning and generation read are the
+    // read-merge-publish window's internals: every other module goes
+    // through Tables.readMergePublish instead of re-implementing them
+    val protocol = "storeAppliedLedger|warnIfLedgerWrapped|storeGeneration\\(".r
+    val offenders = lines.collect {
+      case (f, _, l, at) if f != "graft/io/Tables.scala" &&
+        protocol.findFirstIn(l).nonEmpty => at
+    }
     assert(offenders.isEmpty,
       "store commit protocol copied out of io/Tables.scala — route the " +
         s"store through Tables.readMergePublish:\n${offenders.mkString("\n")}")
+    // the vector indexes' stores have one body each: one site adds rows
+    // to a `codes` store (compactions rewrite it through Tables), and one
+    // site names each codec artifact, which the shared read and write
+    // bodies then reach through the codec
+    val adcStores = Seq(
+      "adds code rows" ->
+        """(?<!read)\.parquet\(s"[^"]*/codes"|(appendPartitioned|stagedPartitionedAppend)\(.*/codes"""".r,
+      "names the codebooks artifact" -> """["/]codebooks"""".r,
+      "names the quantizer artifact" -> """["/]quantizer"""".r)
+    for ((what, re) <- adcStores) {
+      val sites = lines.collect {
+        case (_, site, l, at) if !isComment(l) && re.findFirstIn(l).nonEmpty => site -> at
+      }.groupBy(_._1)
+      assert(sites.size == 1, s"expected one site that $what, found " +
+        s"${sites.size}:\n${sites.values.flatten.map(_._2).mkString("\n")}")
+    }
+  }
+
+  test("sq8AppendBatch waits for the codes lock flat compactions hold, then lands once") {
+    def vecs(ids: Seq[Long]) = ids.map { i =>
+      (i, Seq.tabulate(8)(d => ((i * (d + 1)) % 13) * 0.05f - 0.3f))
+    }.toDF("vec_id", "embedding")
+    val path = Files.createTempDirectory("sq8_lock_").toString + "/idx"
+    Similarity.persistSq8Index(vecs(0L until 20L), "vec_id", "embedding", path)
+    val (quant, _) = Similarity.readSq8Index(spark, path)
+    def batch(): Unit = graft.streaming.Streams.sq8AppendBatch(
+      vecs(20L until 25L), "vec_id", "embedding", quant, path, "lockCk", 0L)
+    def codeIds = spark.read.parquet(s"$path/codes").select("cid").as[Long]
+      .collect().toSeq.sorted
+    val codesLock = java.nio.file.Paths.get(s"$path/codes__lock")
+    Files.createFile(codesLock)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val fut = pool.submit(new Runnable { def run(): Unit = batch() })
+      Thread.sleep(2000) // > the lock's 250 ms retry interval
+      assert(codeIds === (0L until 20L),
+        "a streamed SQ8 batch landed while the codes lock was held")
+      Files.delete(codesLock)
+      fut.get(90, TimeUnit.SECONDS)
+    } finally {
+      Files.deleteIfExists(codesLock)
+      pool.shutdown()
+    }
+    assert(codeIds === (0L until 25L), "the batch must land exactly once")
+    batch() // its committed replay is a no-op
+    assert(codeIds === (0L until 25L))
   }
 }
