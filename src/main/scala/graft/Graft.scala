@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Public facade — the one-stop API a user of the reference pipeline
-  * switches to. Thin delegations; each capability lives in its own
-  * package (see README / COVERAGE.md).
+/** Public facade — the entry points the reference pipeline's lifecycle
+  * and the benchmark call. Thin delegations; each capability lives in
+  * its own package and is called there directly for everything else
+  * (see README / COVERAGE.md).
   *
   * The reference's `main.py` lifecycle (SURVEY.md §3.1) becomes:
   * {{{
-  * val raw    = Graft.readRtdbSnapshot(spark, "export.json")     // EXTRACT (S1)
+  * val raw    = Graft.readRtdbSharded(spark, "export.json", 8)   // EXTRACT (S1)
   * val users  = Graft.transformUsers(fields(raw))                // VALIDATE+TRANSFORM+DEDUP
   * val (ok, bad) = Graft.validateSplit(users, model.User.checks) // §2.8 split
   * val fixed  = Graft.resolveIdConflicts(ok, existingIds, "id")  // J2
@@ -19,38 +20,12 @@ import org.apache.spark.sql.functions._
 object Graft {
 
   // -- sources / sinks ------------------------------------------------
-  def readRtdbSnapshot(spark: SparkSession, path: String): DataFrame =
-    io.Tables.readRtdbSnapshot(spark, path)
-
   /** Key-range-sharded DSv2 variant for big snapshots. */
   def readRtdbSharded(spark: SparkSession, path: String, partitions: Int): DataFrame =
     spark.read.format("graft.sources.RtdbSnapshotSource")
       .option("path", path).option("numPartitions", partitions.toString).load()
 
-  /** One-time streaming conversion of a monolithic export into
-    * byte-range-splittable JSONL shards — the 100 TB offline path. */
-  def stageRtdbJsonl(exportPath: String, outDir: String, shards: Int = 8): Long =
-    sources.RtdbJsonl.stage(exportPath, outDir, shards)
-
-  /** Cluster-parallel read of a staged JSONL directory (id, uid, json). */
-  def readRtdbJsonl(spark: SparkSession, dir: String): DataFrame =
-    sources.RtdbJsonl.read(spark, dir)
-
-  /** Incremental RTDB tailing as a streaming frame — key-cursor
-    * micro-batches over the same DSv2 source (see RtdbMicroBatchStream
-    * for the append-only contract). */
-  def tailRtdb(spark: SparkSession, path: String, partitions: Int = 4): DataFrame =
-    spark.readStream.format("graft.sources.RtdbSnapshotSource")
-      .option("path", path).option("numPartitions", partitions.toString).load()
-
-  def writeJson(df: DataFrame, path: String): Unit = io.Tables.writeJson(df, path)
   def writeCsv(df: DataFrame, path: String): Unit = io.Tables.writeCsv(df, path)
-
-  /** Sort-clustered, size-bounded parquet (disjoint per-file key
-    * ranges → footer min/max skipping on selective scans). */
-  def writeSorted(df: DataFrame, path: String, sortCols: Seq[String],
-                  files: Int, maxRecordsPerFile: Long = 0L): Unit =
-    io.Tables.writeSorted(df, path, sortCols, files, maxRecordsPerFile)
 
   // -- the ETL operator set ------------------------------------------
   /** `keepInvalidEmails = true` diverges from the reference: null-email
@@ -101,11 +76,6 @@ object Graft {
   def sessionize(df: DataFrame, keys: Seq[String], ts: String, gapSeconds: Long): DataFrame =
     ops.Ops.sessionize(keys, ts, gapSeconds)(df)
 
-  /** Interval/range join via bin expansion (never a cartesian). */
-  def rangeJoin(fact: DataFrame, ranges: DataFrame, factVal: String,
-                lo: String, hi: String, binWidth: Double): DataFrame =
-    ops.Ops.rangeJoinBinned(fact, ranges, factVal, lo, hi, binWidth)
-
   // -- LLM-pipeline operators ----------------------------------------
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame =
     llm.Dedup.exactDedup(df, textCol, idCol)
@@ -127,34 +97,6 @@ object Graft {
                         blockExpr: Column, n: Int = 2,
                         threshold: Double = 0.15): DataFrame =
     llm.Dedup.ngramJaccardPairs(df, idCol, textCol, blockExpr, n, threshold)
-
-  /** Corpus-level boilerplate removal (the CCNet/RefinedWeb line-dedup
-    * step): segments shared by more than `maxDocFreq` distinct docs
-    * drop from every document; survivors rejoin in original order. */
-  def dropBoilerplate(df: DataFrame, idCol: String, textCol: String,
-                      sep: String = ". ", maxDocFreq: Int = 1): DataFrame =
-    llm.Dedup.dropBoilerplate(df, idCol, textCol, sep, maxDocFreq)
-
-  /** Exact substring dedup: every `windowTokens`-token window content
-    * keeps only its first corpus-wide occurrence; later occurrences'
-    * spans are removed from their documents (overlaps merge). */
-  def dropDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                         windowTokens: Int = 50): DataFrame =
-    llm.Dedup.dropDuplicateSpans(df, idCol, textCol, windowTokens)
-
-  /** Persistable LSH band index — build once per corpus, reuse across
-    * incremental batches. */
-  def bandIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    llm.Dedup.bandIndex(df, idCol, textCol)
-
-  /** Incremental near-dup pairs: a new batch against a standing corpus
-    * via its precomputed band index — only the batch pays signature
-    * CPU. */
-  def incrementalNearDupPairs(newDocs: DataFrame, corpus: DataFrame,
-                              corpusIndex: DataFrame, idCol: String, textCol: String,
-                              threshold: Double = 0.5): DataFrame =
-    llm.Dedup.incrementalNearDupPairs(newDocs, corpus, corpusIndex, idCol, textCol,
-      threshold)
 
   /** Full near-dup dedup: LSH pairs → connected components → drop
     * non-representative cluster members (one survivor per cluster). */
@@ -180,12 +122,6 @@ object Graft {
 
   /** Hash-deterministic Bernoulli sampling with Horvitz–Thompson
     * weights; `weightPerMille` is the integer keep-probability ×1000. */
-  /** Deterministic stratified hash split (append-stable: labels never
-    * drift as the corpus grows). */
-  def hashSplit(df: DataFrame, idCol: String, splits: Seq[(String, Int)],
-                salt: String = "split:"): DataFrame =
-    llm.Curate.hashSplit(df, idCol, splits, salt)
-
   def importanceSample(df: DataFrame, keyCol: String,
                        weightPerMille: Column): DataFrame =
     llm.Curate.importanceSample(df, keyCol, weightPerMille)
@@ -197,58 +133,12 @@ object Graft {
                           tokensCol: String, budget: Long): DataFrame =
     llm.Curate.selectByTokenBudget(docs, idCol, scoreCol, tokensCol, budget)
 
-  /** Grouped token-budget selection: [[selectByTokenBudget]] per
-    * group/source, batched so the corpus is scanned <= 3 times total
-    * regardless of the group count. */
-  def selectByTokenBudgetGrouped(docs: DataFrame, groupCol: String, idCol: String,
-                                 scoreCol: String, tokensCol: String,
-                                 budgetPerGroup: Long): DataFrame =
-    llm.Curate.selectByTokenBudgetGrouped(docs, groupCol, idCol, scoreCol,
-      tokensCol, budgetPerGroup)
-
   /** Corpus mixture balancing: max-min fair token allocation across
     * sources, applied as deterministic per-source hash sampling. Rows
     * return with a rate_pm column (the source's acceptance per-mille). */
   def mixCorpus(docs: DataFrame, sourceCol: String, tokensCol: String,
                 idCol: String, budgetTokens: Long): DataFrame =
     llm.Curate.mixCorpus(docs, sourceCol, tokensCol, idCol, budgetTokens)
-
-  /** Quality-aware mixing: best-N-tokens-per-source selection feeding
-    * max-min fair water-filling (the two-stage curation recipe). */
-  def budgetThenMix(docs: DataFrame, sourceCol: String, scoreCol: String,
-                    tokensCol: String, idCol: String,
-                    perSourceBudget: Long, totalBudget: Long): DataFrame =
-    llm.Curate.budgetThenMix(docs, sourceCol, scoreCol, tokensCol, idCol,
-      perSourceBudget, totalBudget)
-
-  /** The streaming daily-crawl pipeline: tail a document stream, dedup
-    * each micro-batch against the persisted band index, append pairs,
-    * and join the batch into the standing corpus + bucketed index. */
-  def incrementalDedupStream(docs: DataFrame, corpusTable: String,
-                             indexTable: String, pairsTable: String,
-                             idCol: String, textCol: String,
-                             checkpointDir: String,
-                             threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
-    streaming.Streams.incrementalDedupStream(docs, corpusTable, indexTable,
-      pairsTable, idCol, textCol, checkpointDir, threshold)
-
-  /** Same, delta-gated for re-crawl sources that redeliver everything:
-    * only new-or-changed docs pay signature CPU and appends. */
-  def incrementalDeltaDedupStream(docs: DataFrame, corpusTable: String,
-                                  indexTable: String, pairsTable: String,
-                                  idCol: String, textCol: String,
-                                  checkpointDir: String,
-                                  threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
-    streaming.Streams.incrementalDeltaDedupStream(docs, corpusTable, indexTable,
-      pairsTable, idCol, textCol, checkpointDir, threshold)
-
-  /** Exact-duplicate compaction of the streaming sink tables — run on
-    * restart after an unclean shutdown (see Streams.compactSinks). */
-  def compactDedupSinks(spark: SparkSession, corpusTable: String,
-                        indexTable: String, pairsTable: String,
-                        idCol: String): Unit =
-    streaming.Streams.compactSinks(spark, corpusTable, indexTable,
-      pairsTable, idCol)
 
   /** Leakage-free train/val split: duplicate clusters stay in one
     * split; decision is a pure hash of the cluster label. */
@@ -262,20 +152,8 @@ object Graft {
                    strideWords: Int = 150): DataFrame =
     llm.Curate.chunkSliding(docs, textCol, idCol, chunkWords, strideWords)
 
-  /** Deterministic seed-keyed corpus shuffle: (shard, pos) permutation
-    * with no global ordering step. */
-  def globalShuffle(docs: DataFrame, idCol: String, seed: String,
-                    shards: Int): DataFrame =
-    llm.Order.globalShuffle(docs, idCol, seed, shards)
-
-  /** Weighted source interleave (fair-queueing virtual-finish keys);
-    * the corpus order is the returned `okey` sort key. */
-  def interleaveBySource(docs: DataFrame, sourceCol: String, idCol: String,
-                         weights: Map[String, Long], seed: String = "ilv"): DataFrame =
-    llm.Order.interleaveBySource(docs, sourceCol, idCol, weights, seed)
-
   /** Emit the corpus as disjoint-range training shard files in the
-    * seeded [[globalShuffle]] order; reading files in name order
+    * seeded `llm.Order.globalShuffle` order; reading files in name order
     * reproduces the exact permutation. */
   def writeShuffledShards(docs: DataFrame, idCol: String, seed: String,
                           shards: Int, path: String): Unit =
@@ -299,132 +177,10 @@ object Graft {
   def ngramLmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     llm.NgramLm.score(docs, idCol, textCol)
 
-  /** The full CCNet recipe: stupid-backoff trigram LM trained on a
-    * curated reference slice, per-doc micro-nat NLL, per-language
-    * head/middle/tail percentile buckets. */
-  def backoffLmTrain(ref: DataFrame, textCol: String): llm.NgramLm.BackoffModel =
-    llm.NgramLm.trainBackoff(ref, textCol)
-  def backoffLmScore(docs: DataFrame, idCol: String, textCol: String,
-                     model: llm.NgramLm.BackoffModel): DataFrame =
-    llm.NgramLm.scoreBackoff(docs, idCol, textCol, model)
-  def ccnetBuckets(scores: DataFrame, idCol: String, langCol: String,
-                   headMille: Int = 330, middleMille: Int = 660): DataFrame =
-    llm.NgramLm.ccnetBuckets(scores, idCol, langCol, headMille, middleMille)
-
-  /** Incremental backoff-counts store: additive per-batch gram-count
-    * merges with ledger idempotence; scores derive at read. */
-  def persistBackoffCounts(ref: DataFrame, textCol: String, path: String,
-                           batchTag: Option[String] = None): Unit =
-    llm.NgramLm.persistBackoffCounts(ref, textCol, path, batchTag)
-  def appendToBackoffCounts(ref: DataFrame, textCol: String, path: String,
-                            batchTag: Option[String] = None): Unit =
-    llm.NgramLm.appendToBackoffCounts(ref, textCol, path, batchTag)
-  def readBackoffModelFromCounts(spark: SparkSession,
-                                 path: String): llm.NgramLm.BackoffModel =
-    llm.NgramLm.readBackoffModelFromCounts(spark, path)
-
-  /** Heavy-hitter word n-grams with occurrence + distinct-doc counts. */
-  def topNgrams(docs: DataFrame, idCol: String, textCol: String,
-                n: Int = 2, k: Int = 20): DataFrame =
-    llm.CorpusStats.topNgrams(docs, idCol, textCol, n, k)
-
-  /** Document-length histogram (integer buckets of `width`). */
-  def lengthHistogram(docs: DataFrame, lenCol: String, width: Long = 200L): DataFrame =
-    llm.CorpusStats.lengthHistogram(docs, lenCol, width)
-
-  /** Curriculum ordering: LM-quality buckets, seeded shuffle within. */
-  def curriculumOrder(docs: DataFrame, idCol: String, textCol: String,
-                      width: Long = 250000L, seed: String = "cur"): DataFrame =
-    llm.Order.curriculumOrder(docs, idCol, textCol, width, seed)
-
-  /** Per-source distinct-n-gram profile as mergeable HLL sketches. */
-  def sourceNgramSketch(docs: DataFrame, sourceCol: String, idCol: String,
-                        textCol: String, n: Int = 2, lgK: Int = 12): DataFrame =
-    llm.CorpusStats.sourceNgramSketch(docs, sourceCol, idCol, textCol, n, lgK)
-
-  /** Merge per-source sketch rows to one corpus row (no re-scan). */
-  def unionNgramSketch(sketches: DataFrame,
-                       sketchCol: String = "ngram_sketch"): DataFrame =
-    llm.CorpusStats.unionNgramSketch(sketches, sketchCol)
-
-  /** Engine-native md5-convention HLL profile (per-source distinct
-    * n-grams) — registers merge by cell-wise max; every value is
-    * oracle-replayable, unlike the Datasketches twin. */
-  def sourceNgramHll(docs: DataFrame, sourceCol: String, textCol: String,
-                     n: Int = 2): DataFrame =
-    llm.CorpusStats.sourceNgramHll(docs, sourceCol, textCol, n)
-
-  def hllNgramRegisters(docs: DataFrame, sourceCol: String, textCol: String,
-                        n: Int = 2): DataFrame =
-    llm.CorpusStats.hllNgramRegisters(docs, sourceCol, textCol, n)
-
-  def hllMergeRegisters(regs: DataFrame, sourceCol: String = "source"): DataFrame =
-    llm.CorpusStats.hllMergeRegisters(regs, sourceCol)
-
-  def hllEstimate(regs: DataFrame, sourceCol: String = "source"): DataFrame =
-    llm.CorpusStats.hllEstimate(regs, sourceCol)
-
-  /** Persisted incremental HLL profile store (crash-consistent
-    * cell-wise-max appends; register max is idempotent — replays are
-    * log-free no-ops). */
-  def persistHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
-                        path: String, n: Int = 2): Unit =
-    llm.CorpusStats.persistHllProfile(docs, sourceCol, textCol, path, n)
-
-  def appendToHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
-                         path: String, n: Int = 2): Unit =
-    llm.CorpusStats.appendToHllProfile(docs, sourceCol, textCol, path, n)
-
-  def readHllProfile(spark: SparkSession, path: String): DataFrame =
-    llm.CorpusStats.readHllProfile(spark, path)
-
-  /** Duplicate-cluster size histogram over a components frame. */
-  def clusterSizeHistogram(components: DataFrame): DataFrame =
-    llm.CorpusStats.clusterSizeHistogram(components)
-
-  /** Keep the highest-`scoreCol` member of each duplicate cluster. */
-  def keepBestPerCluster(df: DataFrame, idCol: String, scoreCol: String,
-                         components: DataFrame): DataFrame =
-    llm.Dedup.keepBestPerCluster(df, idCol, scoreCol, components)
-
-  /** Incremental-crawl snapshot diff: new/changed/unchanged/deleted. */
-  def snapshotDelta(prev: DataFrame, cur: DataFrame, idCol: String,
-                    textCol: String): DataFrame =
-    llm.Curate.snapshotDelta(prev, cur, idCol, textCol)
-
   /** Bounded top-k aggregate (custom TypedImperativeAggregate). */
   def topK(c: Column, k: Int): Column = _root_.graft.expr.kernels.NativeFns.topK(c, k)
 
-  def kmeansClusters(df: DataFrame, idCol: String, embCol: String,
-                     k: Int, iters: Int = 2): DataFrame =
-    llm.Similarity.kmeansClusters(df, idCol, embCol, k, iters)
-
-  def annTopKAuto(data: DataFrame, queries: DataFrame, idCol: String,
-                  embCol: String, k: Int, nlist: Int = 4): DataFrame =
-    llm.Similarity.ivfTopKAuto(data, queries, idCol, embCol, k, nlist)
-
   // -- round-12 additions --------------------------------------------
-  /** Persist / serve / incrementally maintain an IVF ANN index (see
-    * graft.llm.Similarity for the 100 TB serving story). */
-  def persistIvfIndex(df: DataFrame, idCol: String, embCol: String,
-                      labelCol: String, path: String): Unit =
-    llm.Similarity.persistIvfIndex(df, idCol, embCol, labelCol, path)
-
-  def appendToIvfIndex(df: DataFrame, idCol: String, embCol: String,
-                       labelCol: String, path: String): Unit =
-    llm.Similarity.appendToIvfIndex(df, idCol, embCol, labelCol, path)
-
-  def annTopKIndexed(spark: SparkSession, indexPath: String,
-                     queries: DataFrame, idCol: String, embCol: String,
-                     k: Int, nprobe: Int = 1): DataFrame = {
-    val (cent, eq) = llm.Similarity.readIvfIndex(spark, indexPath)
-    llm.Similarity.ivfTopKIndexed(cent, eq, queries, idCol, embCol, k, nprobe)
-  }
-
-  def assignClusters(df: DataFrame, idCol: String, embCol: String,
-                     centroids: DataFrame): DataFrame =
-    llm.Similarity.assignClusters(df, idCol, embCol, centroids)
-
   /** Perceptual media dedup over the real JDK decoders. */
   def imageNearDupPairs(spark: SparkSession, df: DataFrame, idCol: String,
                         binCol: String, maxHamming: Int = 6): DataFrame =
@@ -432,13 +188,8 @@ object Graft {
       llm.Multimodal.dHashes(spark, df, idCol, binCol), idCol,
       maxHamming = maxHamming)
 
-  def audioNearDupPairs(spark: SparkSession, df: DataFrame, idCol: String,
-                        binCol: String, maxHamming: Int = 6): DataFrame =
-    llm.Dedup.audioNearDupPairs(
-      llm.Multimodal.audioFingerprints(spark, df, idCol, binCol), idCol,
-      maxHamming = maxHamming)
-
-  /** Funnel family: k-scan, conversion-windowed, one-scan, timings. */
+  /** Funnel family: k-scan and one-scan (`ops.Ops` also has the
+    * conversion-windowed and timing forms). */
   def funnel(events: DataFrame, keyCol: String, stepCol: String,
              tsCol: String, steps: Seq[String],
              maxGap: Option[Column] = None): DataFrame =
@@ -448,11 +199,6 @@ object Graft {
                        tsCol: String, steps: Seq[String],
                        maxGap: Option[Column] = None): DataFrame =
     ops.Ops.funnelSinglePass(events, keyCol, stepCol, tsCol, steps, maxGap)
-
-  def funnelTimings(events: DataFrame, keyCol: String, stepCol: String,
-                    tsCol: String, steps: Seq[String],
-                    maxGap: Option[Column] = None): DataFrame =
-    ops.Ops.funnelTimings(events, keyCol, stepCol, tsCol, steps, maxGap)
 
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: Option[String] = None, iters: Int = 3): DataFrame =
@@ -466,140 +212,6 @@ object Graft {
   def tfIdfTopTerms(docs: DataFrame, idCol: String, textCol: String,
                     k: Int = 3): DataFrame =
     llm.CorpusStats.tfIdfTopTerms(docs, idCol, textCol, k)
-
-  def pmiBigrams(docs: DataFrame, idCol: String, textCol: String,
-                 minCount: Int = 5, k: Int = 20): DataFrame =
-    llm.CorpusStats.pmiBigrams(docs, idCol, textCol, minCount, k)
-
-  /** Hybrid retrieval: reciprocal-rank fusion of per-system top-k
-    * rankings (exact integer ppm scores). */
-  def rrfFuse(rankings: Seq[DataFrame], idCol: String,
-              rankCol: String = "rank", kRrf: Int = 60): DataFrame =
-    llm.Text.rrfFuse(rankings, idCol, rankCol, kRrf)
-
-  /** Multi-signal ensemble dedup: union several detectors' pair sets
-    * into one duplicate graph, keep the component-min id. */
-  def multiSignalKeepOne(universe: DataFrame, idCol: String,
-                         pairs: Seq[DataFrame]): DataFrame =
-    llm.Dedup.multiSignalKeepOne(universe, idCol, pairs)
-
-  /** SemDeDup semantic dedup: k-means cells → within-cell cosine
-    * near-dup pairs → keep the component-min id. */
-  def semanticDedup(df: DataFrame, idCol: String, embCol: String,
-                    threshold: Double, nlist: Int = 4, iters: Int = 2,
-                    maxCluster: Int = 4096): DataFrame =
-    llm.Similarity.semanticDedup(df, idCol, embCol, threshold, nlist,
-      iters, maxCluster)
-
-  /** DSIR hashed-unigram importance weights vs a target corpus
-    * (micro-nat log-ratios, exact Long per-doc sums). */
-  def dsirWeights(docs: DataFrame, target: DataFrame, idCol: String,
-                  textCol: String, nBuckets: Int = 1024): DataFrame =
-    llm.Curate.dsirWeights(docs, target, idCol, textCol, nBuckets)
-
-  /** Model-based quality filter (fastText/DCLM recipe): hashed-feature
-    * logistic regression trained in-engine on a labeled seed with
-    * unrolled exact-replay gradient steps, and the corpus scored with
-    * the learned weights. */
-  def qualityLrTrain(labeled: DataFrame, idCol: String, textCol: String,
-                     labelCol: String, nBuckets: Int = 256, steps: Int = 2,
-                     lrPpm: Long = 500000L): (Seq[(Long, Long)], Long) =
-    llm.Curate.qualityLrTrain(labeled, idCol, textCol, labelCol, nBuckets,
-      steps, lrPpm)
-  def qualityLrScore(docs: DataFrame, idCol: String, textCol: String,
-                     weights: Seq[(Long, Long)], bias: Long,
-                     nBuckets: Int = 256): DataFrame =
-    llm.Curate.qualityLrScore(docs, idCol, textCol, weights, bias, nBuckets)
-
-  /** Hard-negative mining for contrastive/retrieval training: per
-    * anchor, the top-k most similar different-label vectors from its
-    * LSH bucket. */
-  def hardNegatives(df: DataFrame, idCol: String, embCol: String,
-                    labelCol: String, k: Int): DataFrame =
-    llm.Similarity.hardNegatives(df, idCol, embCol, labelCol, k)
-
-  /** Per-group rank normalization in exact per-mille — cross-source
-    * comparable quality thresholds. */
-  def rankNormalize(df: DataFrame, groupCol: String, scoreCol: String,
-                    idCol: String): DataFrame =
-    llm.Curate.rankNormalize(df, groupCol, scoreCol, idCol)
-
-  /** Two-stage ANN serving: int8 coarse top-m re-ranked exactly to
-    * top-k. */
-  def annRerank(queries: DataFrame, candidates: DataFrame, qId: String,
-                cId: String, embCol: String, k: Int, m: Int): DataFrame =
-    llm.Similarity.rerankTopK(queries, candidates, qId, cId, embCol, k, m)
-
-  /** Contrastive triplet export: hardest same-bucket positive and
-    * negative per anchor with the exact-integer margin. */
-  def tripletMine(df: DataFrame, idCol: String, embCol: String,
-                  labelCol: String): DataFrame =
-    llm.Similarity.tripletMine(df, idCol, embCol, labelCol)
-
-  /** Sequence-length bucketing efficiency: exact per-mille padding
-    * per length band. */
-  def paddingStats(docs: DataFrame, tokensCol: String,
-                   boundaries: Seq[Long]): DataFrame =
-    llm.Curate.paddingStats(docs, tokensCol, boundaries)
-
-  /** BPE tokenizer merge training — ONE corpus aggregation, then the
-    * greedy loop runs driver-local over the collected vocab (identical
-    * merge list to the distributed rounds, spec-differential). */
-  def bpeTrainMerges(docs: DataFrame, textCol: String,
-                     nMerges: Int): Seq[(Int, String, String, Long)] =
-    llm.Bpe.trainMergesLocal(docs, textCol, nMerges)
-
-  def bpeTokenCounts(docs: DataFrame, idCol: String, textCol: String,
-                     merges: Seq[(String, String)]): DataFrame =
-    llm.Bpe.tokenCounts(docs, idCol, textCol, merges)
-
-  /** Pairwise exact shingle-Jaccard between sources (mirror-feed /
-    * double-ingestion audit). */
-  def sourceOverlap(docs: DataFrame, sourceCol: String, textCol: String,
-                    n: Int = 3, maxSources: Int = 64): DataFrame =
-    llm.CorpusStats.sourceOverlap(docs, sourceCol, textCol, n, maxSources)
-
-  def heavyHitters(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3, threshold: Long = 6,
-                   capacity: Int = 65536): DataFrame =
-    llm.CorpusStats.heavyHitters(docs, idCol, textCol, n, threshold, capacity)
-
-  def robustOutliers(docs: DataFrame, groupCol: String, valueCol: String,
-                     idCol: String, k: Int = 3): DataFrame =
-    llm.CorpusStats.robustOutliers(docs, groupCol, valueCol, idCol, k)
-
-  def charEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    llm.Text.charEntropyFrame(docs, idCol, textCol)
-
-  def partialStats(docs: DataFrame, groupCol: String, valueCol: String,
-                   shard: org.apache.spark.sql.Column): DataFrame =
-    llm.CorpusStats.partialStats(docs, groupCol, valueCol, shard)
-
-  def mergeStats(parts: DataFrame, groupCol: String): DataFrame =
-    llm.CorpusStats.mergeStats(parts, groupCol)
-
-  def sftConversations(events: DataFrame, keyCol: String, tsCol: String,
-                       idCol: String, roleCol: String,
-                       contentCol: String): DataFrame =
-    ops.Ops.sftConversations(events, keyCol, tsCol, idCol, roleCol, contentCol)
-
-  def annPqTopK(queries: DataFrame, candidates: DataFrame, qId: String,
-                cId: String, embCol: String, labelCol: String, k: Int,
-                m: Int = 4, dim: Int = 64, coarse: Int = 20): DataFrame =
-    llm.Similarity.pqTopK(queries, candidates, qId, cId, embCol, labelCol,
-      k, m, dim, coarse)
-
-  def persistPqIndex(df: DataFrame, idCol: String, embCol: String,
-                     labelCol: String, path: String, m: Int = 4,
-                     dim: Int = 64, train: Option[DataFrame] = None): Unit =
-    llm.Similarity.persistPqIndex(df, idCol, embCol, labelCol, path, m, dim,
-      train)
-
-  /** Append a batch to a persisted PQ index against its FROZEN
-    * codebooks — append == rebuild bit-for-bit. */
-  def appendToPqIndex(df: DataFrame, idCol: String, embCol: String,
-                      path: String, m: Int = 4, dim: Int = 64): Unit =
-    llm.Similarity.appendToPqIndex(df, idCol, embCol, path, m, dim)
 
   /** Build the FAISS-shape IVFPQ index: PQ codes partitioned by coarse
     * cluster + centroid/codebook tables. */
@@ -620,59 +232,6 @@ object Graft {
       embCol, k, m, dim, coarse, nprobe)
   }
 
-  /** Append a batch to a persisted IVFPQ index (frozen codebooks +
-    * additive centroid merge — append == rebuild bit-for-bit). */
-  def appendToIvfPqIndex(df: DataFrame, idCol: String, embCol: String,
-                         labelCol: String, path: String, m: Int = 4,
-                         dim: Int = 64): Unit =
-    llm.Similarity.appendToIvfPqIndex(df, idCol, embCol, labelCol, path, m, dim)
-
-  /** Lloyd-refined PQ codebooks (the FAISS training practice; the
-    * label init plus bounded refinement rounds — recall priced at
-    * identical serving cost by the pq_it2 / ivfpq_probe2_it2 ledger
-    * rows). */
-  def pqCodebooksRefined(candidates: DataFrame, idCol: String, embCol: String,
-                         labelCol: String, m: Int = 4, dim: Int = 64,
-                         rounds: Int = 2): Map[Long, IndexedSeq[Long]] =
-    llm.Similarity.pqCodebooksRefined(candidates, idCol, embCol, labelCol,
-      m, dim, rounds)
-
-  /** Residual IVFPQ (FAISS by_residual=true): build and serve. */
-  def persistIvfPqResidualIndex(df: DataFrame, idCol: String, embCol: String,
-                                labelCol: String, path: String, m: Int = 4,
-                                dim: Int = 64, nCodewords: Int = 8): Unit =
-    llm.Similarity.persistIvfPqResidualIndex(df, idCol, embCol, labelCol,
-      path, m, dim, nCodewords)
-
-  def annIvfPqResidualTopK(spark: SparkSession, indexPath: String,
-                           store: DataFrame, queries: DataFrame, qId: String,
-                           embCol: String, k: Int, m: Int = 4, dim: Int = 64,
-                           coarse: Int = 20, nprobe: Int = 1): DataFrame = {
-    val (cent, byCode, codes) = llm.Similarity.readIvfPqIndex(spark, indexPath)
-    llm.Similarity.ivfPqResidualTopK(cent, byCode, codes, store, queries,
-      qId, embCol, k, m, dim, coarse, nprobe)
-  }
-
-  /** Deterministic ±1 JL sign projection of an embedding store to r
-    * dims (exact integers; recall priced by llm_jl_recall). */
-  def jlProject(df: DataFrame, idCol: String, embCol: String,
-                r: Int = 16, dim: Int = 64): DataFrame =
-    llm.Similarity.jlProject(df, idCol, embCol, r, dim)
-
-  /** Per-dimension embedding-store QA stats (exact monoids). */
-  def embedDimStats(df: DataFrame, embCol: String): DataFrame =
-    llm.CorpusStats.embedDimStats(df, embCol)
-
-  /** Count-min sketch build / point estimates (constant-size,
-    * shard-mergeable by cell-wise sum; estimates overestimate only). */
-  def countMinSketch(docs: DataFrame, textCol: String, depth: Int = 4,
-                     width: Int = 64): DataFrame =
-    llm.CorpusStats.countMinSketch(docs, textCol, depth, width)
-
-  def cmsEstimate(cms: DataFrame, terms: Seq[String], depth: Int = 4,
-                  width: Int = 64): DataFrame =
-    llm.CorpusStats.cmsEstimate(cms, terms, depth, width)
-
   def gopherFlags(text: org.apache.spark.sql.Column, minWords: Long,
                   maxWords: Long, minMeanWordLen: Double,
                   maxMeanWordLen: Double,
@@ -680,185 +239,7 @@ object Graft {
     llm.Text.gopherFlags(text, minWords, maxWords, minMeanWordLen,
       maxMeanWordLen, minStopwords)
 
-  /** Gopher's within-doc repetition battery (dup lines, top-n-gram
-    * and dup-n-gram char coverage) in exact per-mille. */
-  def gopherRepetition(docs: DataFrame, idCol: String,
-                       textCol: String): DataFrame =
-    llm.Curate.gopherRepetition(docs, idCol, textCol)
-
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    ops.Ops.triangleCounts(edges, srcCol, dstCol)
-
-  /** Feature-store as-of with a staleness bound: matches older than
-    * toleranceSeconds become NULL payload. */
-  def asofJoinTolerance(left: DataFrame, right: DataFrame, keys: Seq[String],
-                        leftTs: String, rightTs: String, payload: Seq[String],
-                        toleranceSeconds: Long): DataFrame =
-    ops.Ops.asofJoinTolerance(left, right, keys, leftTs, rightTs, payload,
-      toleranceSeconds)
-
-  /** Filter with zero-extra-pass accounting (Dataset.observe): the
-    * rows-in/rows-kept counters ride the gate's own job. */
-  def observedGate(df: DataFrame, gateName: String,
-                   cond: org.apache.spark.sql.Column): DataFrame =
-    ops.Ops.observedGate(df, gateName, cond)
-
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    llm.Text.invertedIndex(docs, idCol, textCol)
-
-  def canonicalUrl(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    llm.Text.canonicalUrl(url)
-
-  def joinBlowupEstimate(left: DataFrame, right: DataFrame,
-                         leftKey: String, rightKey: String,
-                         k: Int = 10): DataFrame =
-    ops.Ops.joinBlowupEstimate(left, right, leftKey, rightKey, k)
-
-  def mergeInvertedIndexParts(parts: DataFrame): DataFrame =
-    llm.Text.mergeInvertedIndexParts(parts)
-
-  def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
-                        maxDist: Int = 2): DataFrame =
-    llm.Dedup.editDistancePairs(df, idCol, textCol, maxDist)
-
-  def charEntropyNative(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    llm.Text.charEntropyNativeFrame(docs, idCol, textCol)
-
-  /** Corpus monitoring. */
-  def tokenDistributionDrift(base: DataFrame, cur: DataFrame,
-                             textCol: String, k: Int = 15): DataFrame =
-    llm.CorpusStats.tokenDistributionDrift(base, cur, textCol, k)
-
   def weightedQuantiles(docs: DataFrame, valueCol: String, weightCol: String,
                         quantilesPm: Seq[Int] = Seq(250, 500, 750)): DataFrame =
     llm.CorpusStats.weightedQuantiles(docs, valueCol, weightCol, quantilesPm)
-
-  // -- §2.11 reporting ------------------------------------------------
-  /** `display_users_formatted` (sql_extraction.py:168-191): N/A-filled
-    * preview — `na.fill` + `show` instead of a row loop. */
-  def displayFormatted(df: DataFrame, n: Int = 20): Unit =
-    df.na.fill("N/A").show(n, truncate = false)
-
-  def validationReport(flagged: DataFrame): DataFrame = ops.Ops.validationReport(flagged)
-
-  // -- round-17 additions ----------------------------------------------
-  /** HTML-to-text extraction — the first stage of a crawl pipeline
-    * (strip, block-segment, link-density boilerplate cut, entity
-    * decode); pure map-side scan projection. */
-  def htmlToText(html: Column): Column = llm.Text.htmlToText(html)
-
-  /** Bulk kNN graph with the multi-probe recall dial (each vector
-    * searched in its `nprobe` nearest k-means cells — boundary
-    * neighbors recovered; volume/recall both ledgered in-engine). */
-  def knnGraph(df: DataFrame, idCol: String, embCol: String, k: Int,
-               nlist: Int = 4, iters: Int = 2, maxCluster: Int = 4096,
-               nprobe: Int = 1): DataFrame =
-    llm.Similarity.knnGraph(df, idCol, embCol, k, nlist, iters,
-      maxCluster, nprobe)
-
-  // -- round-18 additions ----------------------------------------------
-  /** The kNN graph as a persisted, incrementally-maintained store:
-    * build once, append batches (exactly-once under a batch tag),
-    * stream-maintain via Streams.knnGraphStream; append == rebuild
-    * bit-for-bit while the frozen cell geometry holds. */
-  def persistKnnGraphStore(df: DataFrame, idCol: String, embCol: String,
-                           path: String, k: Int, nlist: Int = 4,
-                           iters: Int = 2, maxCluster: Int = 4096,
-                           nprobe: Int = 1,
-                           train: Option[DataFrame] = None): Unit =
-    llm.Similarity.persistKnnGraphStore(df, idCol, embCol, path, k, nlist,
-      iters, maxCluster, nprobe, train)
-  def appendToKnnGraphStore(df: DataFrame, idCol: String, embCol: String,
-                            path: String,
-                            batchTag: Option[String] = None): Unit =
-    llm.Similarity.appendToKnnGraphStore(df, idCol, embCol, path, batchTag)
-  def readKnnGraphStore(spark: SparkSession, path: String)
-      : (Seq[(Long, Seq[Long])], DataFrame, DataFrame) =
-    llm.Similarity.readKnnGraphStore(spark, path)
-  def compactGraphVectors(spark: SparkSession, path: String): Unit =
-    llm.Similarity.compactGraphVectors(spark, path)
-
-  /** Corpus-scaled cell count (max(minNlist, n/targetCell)) — the knob
-    * rule that keeps cell-join cost constant per vector at any sf. */
-  def autoNlist(df: DataFrame, targetCell: Long = 500L,
-                minNlist: Int = 4): Int =
-    llm.Similarity.autoNlist(df, targetCell, minNlist)
-
-  /** Cross-document exact repeated k-token spans (substring-dedup
-    * signal) and the trim that removes them while keeping every
-    * document. */
-  def repeatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int = 8, minDf: Long = 2L): DataFrame =
-    llm.Dedup.repeatedSpans(docs, idCol, textCol, k, minDf)
-  def trimRepeatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 8, minDf: Long = 2L): DataFrame =
-    llm.Dedup.trimRepeatedSpans(docs, idCol, textCol, k, minDf)
-  def maximalRepeatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                           k: Int = 8, minDf: Long = 2L): DataFrame =
-    llm.Dedup.maximalRepeatedSpans(docs, idCol, textCol, k, minDf)
-
-  /** Byte-fallback tokenizer surface: reserved byte/special ids, OOV
-    * symbols expand to UTF-8 byte tokens, decode re-fuses them. */
-  def bpeSymbolIdsFallback(docs: DataFrame, textCol: String,
-                           merges: Seq[(String, String)]): Seq[(String, Long)] =
-    llm.Bpe.symbolIdsFallback(docs, textCol, merges)
-  def bpeEncodeFallback(docs: DataFrame, idCol: String, textCol: String,
-                        merges: Seq[(String, String)],
-                        ids: Seq[(String, Long)]): DataFrame =
-    llm.Bpe.encodeFallback(docs, idCol, textCol, merges, ids)
-  def bpeDecodeFallback(stream: DataFrame, idCol: String,
-                        ids: Seq[(String, Long)]): DataFrame =
-    llm.Bpe.decodeFallback(stream, idCol, ids)
-
-  /** The unigram-LM tokenizer family (Kudo 2018, SentencePiece's
-    * other algorithm): hard-EM training, vocabSize-targeted pruning
-    * by exact micro-nat removal loss, corpus encode. */
-  def unigramTrain(docs: DataFrame, textCol: String, rounds: Int = 2,
-                   maxPieceLen: Int = 4, minCount: Long = 2L,
-                   seedSize: Int = 1000): Seq[(String, Long, Long)] =
-    llm.Unigram.trainLocal(docs, textCol, rounds, maxPieceLen, minCount,
-      seedSize)
-  def unigramPruneToVocab(pieces: Seq[(String, Long, Long)], vocabSize: Int,
-                          maxPieceLen: Int = 4): Seq[(String, Long, Option[Long], Long)] =
-    llm.Unigram.pruneToVocab(pieces, vocabSize, maxPieceLen)
-  def unigramEncode(docs: DataFrame, idCol: String, textCol: String,
-                    pieces: Seq[(String, Long, Long)],
-                    maxPieceLen: Int = 4): DataFrame =
-    llm.Unigram.encode(docs, idCol, textCol, pieces, maxPieceLen)
-  def unigramTokenCounts(docs: DataFrame, idCol: String, textCol: String,
-                         pieces: Seq[(String, Long, Long)],
-                         maxPieceLen: Int = 4): DataFrame =
-    llm.Unigram.tokenCounts(docs, idCol, textCol, pieces, maxPieceLen)
-
-  /** Window-side packing boundaries — the per-(shard, pack) document
-    * segments with in-window offsets (the sample-mask metadata). */
-  def packBoundaries(counts: DataFrame, idCol: String = "doc_id",
-                     tokensCol: String = "tokens", budget: Int = 512,
-                     shards: Int = 8): DataFrame =
-    llm.Curate.packBoundaries(counts, idCol, tokensCol, budget, shards)
-
-  /** Persisted-index maintenance: one-file-per-cluster compaction and
-    * crash-residue vacuum, both lock-serialized with appends. */
-  def compactIndexCodes(spark: SparkSession, indexPath: String): Unit =
-    llm.Similarity.compactIndexCodes(spark, indexPath)
-  def compactFlatCodes(spark: SparkSession, indexPath: String,
-                       targetRowsPerFile: Long = 8L * 1024 * 1024): Unit =
-    llm.Similarity.compactFlatCodes(spark, indexPath, targetRowsPerFile)
-  def vacuumStore(spark: SparkSession, dest: String): Seq[String] =
-    io.Tables.vacuumStore(spark, dest)
-  def vacuumIndexStores(spark: SparkSession, indexPath: String): Seq[String] =
-    llm.Similarity.vacuumIndexStores(spark, indexPath)
-
-  // -- live-service / in-DB utilities ---------------------------------
-  /** W2 pushed to the database (`cleanup_duplicates`): one set-based
-    * DELETE keeps the newest row per key; returns rows removed. */
-  def cleanupDuplicatesInDb(url: String, table: String, keyCol: String,
-                            tsCol: String, idCol: String): Int =
-    io.Jdbc.deleteDuplicatesKeepNewest(url, table, keyCol, tsCol, idCol)
-
-  /** Batched executor-side Auth lookups (replaces the reference's N+1
-    * RPC loop); output feeds `enrichFromAuth`. */
-  def fetchAuthUsers(uids: DataFrame, uidCol: String,
-                     client: sources.AuthRestClient, batchSize: Int = 100): DataFrame =
-    sources.AuthRestClient.fetchAuthUsers(uids, uidCol, client, batchSize)
 }

@@ -448,8 +448,8 @@ object Similarity {
     *    the probed cells' files and the code column.
     *
     * Every serve ends in [[pqCoarseRescore]]. Create and replace writes
-    * (`persist*`) are plain overwrites with no lock; they must not run
-    * beside appends. */
+    * (`persist*`, [[writeAdc]]) overwrite under the same lock as the
+    * layout's appends, so a persist and an append serialize. */
   private sealed trait AdcCodec {
     /** The artifact's directory under the index path. */
     def dir: String
@@ -562,14 +562,18 @@ object Similarity {
 
   /** Overwrites an index's stores: the centroid table (IVF), the
     * codec's artifact — the one writer of `codebooks/` and
-    * `quantizer/` — and the codes. */
+    * `quantizer/` — and the codes. Runs under the lock the layout's
+    * appends take (`codes` flat, `centroids` IVF), so an append never
+    * encodes against one artifact and lands beside another's codes. */
   private def writeAdc(path: String, codec: AdcCodec, cent: Option[DataFrame],
-                       codes: DataFrame): Unit = {
-    cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
-    codec.artifact(codes.sparkSession).write.mode("overwrite")
-      .parquet(s"$path/${codec.dir}")
-    writeCodes(codes, path, ivf = cent.isDefined, append = false)
-  }
+                       codes: DataFrame): Unit =
+    graft.io.Tables.withStoreLock(codes.sparkSession,
+        s"$path/${if (cent.isDefined) "centroids" else "codes"}") {
+      cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
+      codec.artifact(codes.sparkSession).write.mode("overwrite")
+        .parquet(s"$path/${codec.dir}")
+      writeCodes(codes, path, ivf = cent.isDefined, append = false)
+    }
 
   /** The one writer of a code store: flat files, or IVF files
     * partitioned by `label`, created or appended ([[appendPartitioned]]
@@ -2115,11 +2119,13 @@ object Similarity {
     * at 1000 executors the fine search touches ~|probed|/nlist of the
     * corpus bytes instead of scanning everything. */
   def persistIvfIndex(df: DataFrame, idCol: String, embCol: String,
-                      labelCol: String, path: String): Unit = {
-    val (cent, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
-    eq.write.mode("overwrite").partitionBy("label").parquet(s"$path/assignments")
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-  }
+                      labelCol: String, path: String): Unit =
+    // the centroids lock, which appendToIvfIndex's publish window holds
+    graft.io.Tables.withStoreLock(df.sparkSession, s"$path/centroids") {
+      val (cent, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
+      eq.write.mode("overwrite").partitionBy("label").parquet(s"$path/assignments")
+      cent.write.mode("overwrite").parquet(s"$path/centroids")
+    }
 
   /** Load a persisted index: (centroids, assignments). */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,

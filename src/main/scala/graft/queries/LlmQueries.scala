@@ -4442,7 +4442,6 @@ object LlmQueries {
        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w
        |        FROM documents WHERE $docWhere) t0
        |  WHERE len(w) >= 3)""".stripMargin
-  private val shingleCte = shingleCteFor("TRUE")
 
   private val minhashExprs = Dedup.Seeds.map { case (a, b) =>
     s"list_min(list_transform(hs, h -> ($a * h + $b) % $P))"

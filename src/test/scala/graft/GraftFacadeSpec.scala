@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Facade smoke: every Graft entry point drives its real implementation. */
 class GraftFacadeSpec extends SparkSpec {
@@ -150,5 +152,25 @@ class GraftFacadeSpec extends SparkSpec {
     val kept = Graft.dedupNearDuplicates(docs, "doc_id", "text", threshold = 0.8)
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 3L), "cluster min id survives, distinct doc untouched")
+  }
+
+  test("every Graft entry point has a caller in the specs or the benchmark") {
+    val facade = Paths.get("src/main/scala/graft/Graft.scala")
+    assert(Files.exists(facade), s"run from the repository root: no $facade")
+    val defs = "(?m)^\\s+def (\\w+)".r
+      .findAllMatchIn(Files.readString(facade)).map(_.group(1)).toSet
+    val roots = Seq("src/test/scala", "perfbench/src").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repository root: no $r"))
+    val called = roots.flatMap { r =>
+      val stream = Files.walk(r)
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    }.flatMap { p =>
+      "\\bGraft\\.(\\w+)".r.findAllMatchIn(Files.readString(p)).map(_.group(1))
+    }.toSet
+    val uncalled = (defs -- called).toSeq.sorted
+    assert(uncalled.isEmpty, s"${uncalled.size} Graft methods have no caller under " +
+      s"${roots.mkString(" or ")} — call the module method directly and delete " +
+      s"the forwarder: ${uncalled.mkString(", ")}")
   }
 }

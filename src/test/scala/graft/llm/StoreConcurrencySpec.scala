@@ -1020,4 +1020,39 @@ class StoreConcurrencySpec extends SparkSpec {
     batch() // its committed replay is a no-op
     assert(codeIds === (0L until 25L))
   }
+
+  test("vector-index persists wait for the lock their layout's appends take, then land") {
+    def vecs(ids: Seq[Long]) = ids.map { i =>
+      (i, Array.tabulate(4)(d => (i * 4 + d).toDouble / 10.0), i % 2)
+    }.toDF("vec_id", "embedding", "label")
+    // (entry point, the store whose lock the layout's appends hold, persist)
+    val inputs = Seq[(String, String, (DataFrame, String) => Unit)](
+      ("persistPqIndex", "codes", (df, path) => Similarity.persistPqIndex(df,
+        "vec_id", "embedding", "label", path, m = 2, dim = 4)),
+      ("persistIvfPqIndex", "centroids", (df, path) => Similarity.persistIvfPqIndex(df,
+        "vec_id", "embedding", "label", path, m = 2, dim = 4)))
+    for ((name, store, persist) <- inputs) {
+      val path = Files.createTempDirectory("persist_lock_").toString + "/idx"
+      persist(vecs(0L until 20L), path)
+      def codeIds = spark.read.parquet(s"$path/codes").select("cid").as[Long]
+        .collect().toSeq.sorted
+      val lock = java.nio.file.Paths.get(s"$path/${store}__lock")
+      Files.createFile(lock)
+      val pool = Executors.newSingleThreadExecutor()
+      try {
+        val fut = pool.submit(new Runnable {
+          def run(): Unit = persist(vecs(0L until 25L), path)
+        })
+        Thread.sleep(2000) // > the lock's 250 ms retry interval
+        assert(codeIds === (0L until 20L),
+          s"$name overwrote the codes while the $store lock was held")
+        Files.delete(lock)
+        fut.get(90, TimeUnit.SECONDS)
+      } finally {
+        Files.deleteIfExists(lock)
+        pool.shutdown()
+      }
+      assert(codeIds === (0L until 25L), s"$name must land once the lock is free")
+    }
+  }
 }
