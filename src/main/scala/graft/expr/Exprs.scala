@@ -60,11 +60,6 @@ object Exprs {
     timestamp_seconds(when(secs.rlike("^-?[0-9]+$"), secs).cast(LongType))
   }
 
-  /** F3 struct overload for typed sources where the Firebase Timestamp
-    * survives as a struct column rather than a JSON string. */
-  def parseTimestampStruct(c: Column): Column =
-    timestamp_seconds(c.getField("seconds").cast(LongType))
-
   /** F3 — `_parse_datetime` (user_transformer.py:83-148): null tokens →
     * NULL, then the 5-layout strptime ladder in reference order, then
     * the Firebase `Timestamp.seconds` object branch, then the epoch

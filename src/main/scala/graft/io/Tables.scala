@@ -129,10 +129,6 @@ object Tables {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(path)
 
-  /** S12 — schema introspection (sql_extraction.py:107-135). */
-  def tableInfo(df: DataFrame): Seq[(String, String)] =
-    df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
-
   /** Crash-consistent replacement for `mode("overwrite")` on a SMALL
     * table whose lineage reads the table itself (merged sketch
     * registers, centroid sums): the merged frame is fully written to a

@@ -192,8 +192,9 @@ object Curate {
   /** Walk a (key, groupTokens) table in keep order: whole groups that
     * fit the budget stay; the FIRST straddler (strictly-partial only)
     * is the boundary; everything after cannot fit (prefix sums
-    * increase — tokens are >= 1 by contract). Shared by the global and
-    * grouped token-budget selections so their semantics cannot drift. */
+    * increase — tokens are >= 1 by contract). Called only by
+    * [[budgetCut]], the one body of both token-budget selections
+    * (CurateSpec's source scan holds that). */
   private def walkBudget(groups: Seq[(Long, Long)], start: Long,
                          budget: Long): (Seq[Long], Option[(Long, Long)]) = {
     var before = start
@@ -203,11 +204,6 @@ object Curate {
       else return (whole.result(), if (before < budget) Some((k, before)) else None)
     }
     (whole.result(), None)
-  }
-
-  private def numAt(r: org.apache.spark.sql.Row, i: Int, msg: => String): Long = {
-    if (r.isNullAt(i)) throw new IllegalArgumentException(msg)
-    r.getAs[Number](i).longValue
   }
 
   /** Above this many groups the grouped selection switches from
@@ -734,79 +730,13 @@ object Curate {
     *       buckets become one more map-side predicate.
     *   L3: only the ONE boundary bucket — ≤ band/buckets of the band —
     *       pays a per-doc ordered window.
-    * Requires an integral score column and tokens >= 1 per row. */
+    * Requires an integral score column and tokens >= 1 per row. This is
+    * [[selectByTokenBudgetGrouped]]'s body over one constant group. */
   def selectByTokenBudget(docs0: DataFrame, idCol: String, scoreCol: String,
                           tokensCol: String, budget: Long,
-                          salt: String = "sel:", buckets: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.types._
-    docs0.schema(scoreCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => ()
-      case d => throw new IllegalArgumentException(
-        s"selectByTokenBudget needs an integral score column, got $d")
-    }
-    require(!docs0.columns.exists(Set("__h", "__b", "__cum")),
-      "selectByTokenBudget reserves the __h/__b/__cum column names")
-    val outCols = docs0.columns.map(col).toSeq
-    val bucketWidth = (Text.HashP + buckets - 1) / buckets
-    val h = Text.md5Hash(concat(lit(salt), col(idCol).cast("string")))
-    val bkt = (h / bucketWidth).cast(LongType)
-    def walk(groups: Seq[(Long, Long)], start: Long) =
-      walkBudget(groups, start, budget)
-    def num(r: org.apache.spark.sql.Row, i: Int): Long =
-      numAt(r, i, s"selectByTokenBudget: NULL ${if (i == 0) scoreCol else s"sum($tokensCol)"} " +
-        "encountered — score and tokens must be non-null")
-    // L1 — ONE agg job; at most |score domain| rows reach the driver
-    // (same bounded-collect contract as the k-means trainer). The
-    // thresholds then inline as literals, so the final plan is pure
-    // pushed filters — the earlier broadcast-prefix formulation
-    // recomputed the corpus aggregate once per union branch.
-    val l1rows = docs0.groupBy(col(scoreCol).cast(LongType).as("__s"))
-      .agg(sum(col(tokensCol)).as("__gt"), min(col(tokensCol)).as("__mt"))
-      .collect()
-    // walk()'s early return and the L2 prefix argument need strictly
-    // increasing prefix sums — enforce tokens >= 1 rather than return a
-    // silently wrong selection (the min rides the same agg job, free)
-    l1rows.find(r => num(r, 2) < 1).foreach { r =>
-      throw new IllegalArgumentException(
-        s"selectByTokenBudget needs $tokensCol >= 1 per row; " +
-          s"score group ${num(r, 0)} has min($tokensCol) = ${num(r, 2)}")
-    }
-    val l1 = l1rows.map(r => (num(r, 0), num(r, 1))).sortBy(-_._1).toSeq
-    val (wholeScores, boundary) = walk(l1, 0L)
-    // whole scores are a PREFIX of the descending score order, so the
-    // membership test collapses to one range predicate
-    val keepWholeScores: Column =
-      if (wholeScores.isEmpty) lit(false)
-      else col(scoreCol).cast(LongType) >= wholeScores.min
-    boundary match {
-      case None => docs0.filter(keepWholeScores)
-      case Some((bScore, bBefore)) =>
-        val inBand = col(scoreCol).cast(LongType) === bScore
-        // L2 — one more tiny agg job, over the (scan-pruned) band only
-        val l2 = docs0.filter(inBand).groupBy(bkt.as("__b"))
-          .agg(sum(col(tokensCol)).as("__gt"))
-          .collect().map(r => (num(r, 0), num(r, 1))).sortBy(_._1).toSeq
-        val (wholeBuckets, boundary2) = walk(l2, bBefore)
-        val keepWholeBuckets: Column =
-          if (wholeBuckets.isEmpty) lit(false)
-          else inBand && bkt <= wholeBuckets.max
-        val wholeFilter = docs0.filter(keepWholeScores || keepWholeBuckets)
-        boundary2 match {
-          case None => wholeFilter
-          case Some((bBkt, before2)) =>
-            // L3 — the ONE boundary bucket (≤ band/buckets rows) pays
-            // the only per-doc ordered window
-            val w3 = Window.partitionBy(col("__b")).orderBy(col("__h"), col(idCol))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            val partial = docs0.filter(inBand)
-              .withColumn("__h", h).withColumn("__b", bkt)
-              .filter(col("__b") === bBkt)
-              .withColumn("__cum", lit(before2) + sum(col(tokensCol)).over(w3))
-              .filter(col("__cum") <= budget)
-            wholeFilter.unionByName(partial.select(outCols: _*))
-        }
-    }
-  }
+                          salt: String = "sel:", buckets: Int = 1024): DataFrame =
+    budgetCut("selectByTokenBudget", docs0, None, idCol, scoreCol, tokensCol,
+      budget, salt, buckets)
 
   /** Grouped token-budget selection — [[selectByTokenBudget]] applied
     * independently to EVERY group (source/domain/language), but with
@@ -824,40 +754,56 @@ object Curate {
   def selectByTokenBudgetGrouped(docs0: DataFrame, groupCol: String, idCol: String,
                                  scoreCol: String, tokensCol: String,
                                  budgetPerGroup: Long, salt: String = "sel:",
-                                 buckets: Int = 1024): DataFrame = {
+                                 buckets: Int = 1024): DataFrame =
+    budgetCut("selectByTokenBudgetGrouped", docs0, Some(groupCol), idCol,
+      scoreCol, tokensCol, budgetPerGroup, salt, buckets)
+
+  /** The one body of both token-budget selections. `groupCol = None` is
+    * the global cut: one constant group, whose group terms constant-fold
+    * out of every predicate, leaving the global range and band filters. */
+  private def budgetCut(op: String, docs0: DataFrame, groupCol: Option[String],
+                        idCol: String, scoreCol: String, tokensCol: String,
+                        budget: Long, salt: String, buckets: Int): DataFrame = {
     import org.apache.spark.sql.types._
     docs0.schema(scoreCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType => ()
       case d => throw new IllegalArgumentException(
-        s"selectByTokenBudgetGrouped needs an integral score column, got $d")
+        s"$op needs an integral score column, got $d")
     }
-    require(!docs0.columns.exists(Set("__h", "__b", "__cum", "__g",
-      "__ws", "__bs", "__wb", "__b2s", "__b2b", "__off", "__bandg", "__bands")),
-      "selectByTokenBudgetGrouped reserves the __h/__b/__cum/__g and " +
-        "__ws/__bs/__wb/__b2s/__b2b/__off/__bandg/__bands column names")
+    val reserved = Seq("__h", "__b", "__cum", "__g", "__ws", "__bs", "__wb",
+      "__b2s", "__b2b", "__off", "__bandg", "__bands")
+    require(!docs0.columns.exists(reserved.toSet),
+      s"$op reserves the ${reserved.mkString("/")} column names")
     val outCols = docs0.columns.map(col).toSeq
-    val g = col(groupCol).cast("string")
+    val g = groupCol.fold(lit(""))(c => col(c).cast("string"))
     val score = col(scoreCol).cast(LongType)
     val bucketWidth = (Text.HashP + buckets - 1) / buckets
     val h = Text.md5Hash(concat(lit(salt), col(idCol).cast("string")))
     val bkt = (h / bucketWidth).cast(LongType)
-    def num(r: org.apache.spark.sql.Row, i: Int): Long =
-      numAt(r, i, s"selectByTokenBudgetGrouped: NULL at column $i — group, score and " +
-        s"sum($tokensCol) must be non-null")
-    def walk(grps: Seq[(Long, Long)], start: Long) =
-      walkBudget(grps, start, budgetPerGroup)
-    // L1 — ONE job for every group at once
+    def num(r: org.apache.spark.sql.Row, i: Int): Long = {
+      if (r.isNullAt(i)) throw new IllegalArgumentException(
+        s"$op: NULL at column $i — group, score and sum($tokensCol) must be non-null")
+      r.getAs[Number](i).longValue
+    }
+    def walk(grps: Seq[(Long, Long)], start: Long) = walkBudget(grps, start, budget)
+    // L1 — ONE job for every group at once. walk()'s early return and
+    // the L2 prefix argument need strictly increasing prefix sums, so
+    // tokens >= 1 per row is enforced rather than a silently wrong
+    // selection returned; the min rides the same job, and reads a NULL
+    // count as 0 (a bare min() skips NULLs)
     val l1rows = docs0.groupBy(g.as("__g"), score.as("__s"))
-      .agg(sum(col(tokensCol)).as("__gt"), min(col(tokensCol)).as("__mt"))
+      .agg(sum(col(tokensCol)).as("__gt"),
+        min(coalesce(col(tokensCol), lit(0))).as("__mt"))
       .collect()
     l1rows.find(_.isNullAt(0)).foreach { _ =>
       throw new IllegalArgumentException(
-        s"selectByTokenBudgetGrouped: NULL $groupCol encountered — groups must be non-null")
+        s"$op: NULL ${groupCol.mkString} encountered — groups must be non-null")
     }
     l1rows.find(r => num(r, 3) < 1).foreach { r =>
       throw new IllegalArgumentException(
-        s"selectByTokenBudgetGrouped needs $tokensCol >= 1 per row; group " +
-          s"'${r.getString(0)}' score ${num(r, 1)} has min($tokensCol) = ${num(r, 3)}")
+        s"$op needs non-null $tokensCol >= 1 per row; " +
+          groupCol.fold("")(_ => s"group '${r.getString(0)}' ") +
+          s"score ${num(r, 1)} has min($tokensCol) = ${num(r, 3)} (NULL as 0)")
     }
     val l1 = l1rows.groupBy(_.getString(0)).view.mapValues(
       _.map(r => (num(r, 1), num(r, 2))).sortBy(-_._1).toSeq).toMap
@@ -899,35 +845,26 @@ object Curate {
     val boundary2s = boundary2sB.result()
     val wholeScores = walked.collect {
       case (grp, (whole, _)) if whole.nonEmpty => (grp, whole.min) }.toSeq
-    val w3 = Window.partitionBy(col("__g")).orderBy(col("__h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    if (literalPath) {
+    // each path yields the frame to cut, the whole-group filter, the
+    // boundary-bucket filter and the L3 running-sum offset
+    val tagged = docs0.withColumn("__g", g)
+    val (base, keep, inB2, offset) = if (literalPath) {
       // inlined literal predicates: pure pushed scan filters — the
       // best plan, but one expression term per group
-      val keep = (wholeScores.map { case (grp, mn) => g === grp && score >= mn } ++
-        wholeBuckets.map { case (grp, bScore, mx) =>
-          g === grp && score === bScore && bkt <= mx })
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val wholeFilter = docs0.filter(keep)
-      if (boundary2s.isEmpty) wholeFilter
-      else {
-        // L3 — every group's ONE boundary bucket pays the only per-doc
-        // window, all together, PARTITION BY group (one bucket/group)
-        val inB2 = boundary2s.map { case (grp, bScore, bBkt, _) =>
-          g === grp && score === bScore && bkt === bBkt }.reduce(_ || _)
-        val offset = boundary2s.foldLeft(lit(0L)) { case (acc, (grp, _, _, before2)) =>
-          when(g === grp, lit(before2)).otherwise(acc) }
-        val partial = docs0.filter(inB2)
-          .withColumn("__g", g).withColumn("__h", h)
-          .withColumn("__cum", offset + sum(col(tokensCol)).over(w3))
-          .filter(col("__cum") <= budgetPerGroup)
-        wholeFilter.unionByName(partial.select(outCols: _*))
-      }
+      def any(terms: Seq[Column]) = terms.reduceOption(_ || _).getOrElse(lit(false))
+      (tagged,
+        any(wholeScores.map { case (grp, mn) => g === grp && score >= mn } ++
+          wholeBuckets.map { case (grp, bScore, mx) =>
+            g === grp && score === bScore && bkt <= mx }),
+        any(boundary2s.map { case (grp, bScore, bBkt, _) =>
+          g === grp && score === bScore && bkt === bBkt }),
+        boundary2s.foldLeft(lit(0L)) { case (acc, (grp, _, _, before2)) =>
+          when(g === grp, lit(before2)).otherwise(acc) })
     } else {
       // broadcast threshold-table path: one small join, O(1) expression
       // size at ANY group count (a when-chain per group overflows the
       // Catalyst stack at the domain-granularity cardinalities the
-      // scaladoc invites). Same selection semantics as the literal path.
+      // scaladoc invites)
       val wsMap = wholeScores.toMap
       val wbMap = wholeBuckets.map { case (grp, bs, mx) => grp -> ((bs, mx)) }.toMap
       val b2Map = boundary2s.map { case (grp, bs, bk, off) => grp -> ((bs, bk, off)) }.toMap
@@ -935,20 +872,22 @@ object Curate {
         (grp, wsMap.get(grp), wbMap.get(grp).map(_._1), wbMap.get(grp).map(_._2),
           b2Map.get(grp).map(_._1), b2Map.get(grp).map(_._2), b2Map.get(grp).map(_._3))
       }.toDF("__g", "__ws", "__bs", "__wb", "__b2s", "__b2b", "__off")
-      val joined = docs0.withColumn("__g", g).join(broadcast(thr), Seq("__g"))
-      val keep = (col("__ws").isNotNull && score >= col("__ws")) ||
-        (col("__bs").isNotNull && score === col("__bs") && bkt <= col("__wb"))
-      val wholeFilter = joined.filter(keep).select(outCols: _*)
-      if (boundary2s.isEmpty) wholeFilter
-      else {
-        val partial = joined
-          .filter(col("__b2s").isNotNull && score === col("__b2s") &&
-            bkt === col("__b2b"))
-          .withColumn("__h", h)
-          .withColumn("__cum", col("__off") + sum(col(tokensCol)).over(w3))
-          .filter(col("__cum") <= budgetPerGroup)
-        wholeFilter.unionByName(partial.select(outCols: _*))
-      }
+      (tagged.join(broadcast(thr), Seq("__g")),
+        (col("__ws").isNotNull && score >= col("__ws")) ||
+          (col("__bs").isNotNull && score === col("__bs") && bkt <= col("__wb")),
+        col("__b2s").isNotNull && score === col("__b2s") && bkt === col("__b2b"),
+        col("__off"))
+    }
+    val wholeFilter = base.filter(keep).select(outCols: _*)
+    if (boundary2s.isEmpty) wholeFilter
+    else {
+      // L3 — every group's ONE boundary bucket pays the only per-doc
+      // window, all together, PARTITION BY group (one bucket/group)
+      val w3 = Window.partitionBy(col("__g")).orderBy(col("__h"), col(idCol))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      wholeFilter.unionByName(base.filter(inB2).withColumn("__h", h)
+        .withColumn("__cum", offset + sum(col(tokensCol)).over(w3))
+        .filter(col("__cum") <= budget).select(outCols: _*))
     }
   }
 
@@ -971,22 +910,8 @@ object Curate {
                 idCol: String, budgetTokens: Long,
                 salt: String = "mix:"): DataFrame = {
     require(budgetTokens >= 0, s"budgetTokens must be >= 0, got $budgetTokens")
-    require(!docs.columns.exists(Set("__src", "rate_pm")),
-      "mixCorpus reserves the __src and rate_pm column names")
-    val spark = docs.sparkSession
-    val totals = docs.groupBy(col(sourceCol).cast("string").as("__src"))
-      .agg(sum(col(tokensCol)).as("__t"))
-      .collect().map { r =>
-        // fail fast like selectByTokenBudget: a NULL source would NPE
-        // the driver sort below (and its rows would silently vanish in
-        // the rate join); an all-NULL tokens group has a NULL sum
-        if (r.isNullAt(0)) throw new IllegalArgumentException(
-          s"mixCorpus: NULL $sourceCol encountered — sources must be non-null")
-        if (r.isNullAt(1)) throw new IllegalArgumentException(
-          s"mixCorpus: source '${r.getString(0)}' has NULL sum($tokensCol)")
-        (r.getString(0), r.getLong(1))
-      }
-      .sortBy(t => (t._2, t._1)).toSeq
+    val totals = sourceTotals("mixCorpus", docs, sourceCol, tokensCol)
+      .sortBy(t => (t._2, t._1))
     // ascending walk: a source below the running fair share is kept
     // whole; the first source above it fixes the water level F for
     // every remaining (larger) source. Rates go through BigInt — at
@@ -1012,11 +937,7 @@ object Curate {
         else { level = fair; (s, rateOf(level, t)) }
       } else (s, rateOf(level, t))
     }
-    import spark.implicits._
-    val rateDf = rates.toDF("__src", "rate_pm")
-    docs.join(broadcast(rateDf), col(sourceCol).cast("string") === col("__src"))
-      .filter(hashAccept(salt, col(idCol), col("rate_pm")))
-      .drop("__src")
+    applySourceRates(docs, sourceCol, idCol, rates, salt)
   }
 
   /** Per-group document cap — the per-domain/per-source ceiling every
@@ -1118,18 +1039,7 @@ object Curate {
                      salt: String = "tmix:"): DataFrame = {
     require(budgetTokens >= 0, s"budgetTokens must be >= 0, got $budgetTokens")
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(!docs.columns.exists(Set("__src", "rate_pm")),
-      "temperatureMix reserves the __src and rate_pm column names")
-    val spark = docs.sparkSession
-    val totals = docs.groupBy(col(sourceCol).cast("string").as("__src"))
-      .agg(sum(col(tokensCol)).as("__t"))
-      .collect().map { r =>
-        if (r.isNullAt(0)) throw new IllegalArgumentException(
-          s"temperatureMix: NULL $sourceCol encountered — sources must be non-null")
-        if (r.isNullAt(1)) throw new IllegalArgumentException(
-          s"temperatureMix: source '${r.getString(0)}' has NULL sum($tokensCol)")
-        (r.getString(0), r.getLong(1))
-      }.toSeq
+    val totals = sourceTotals("temperatureMix", docs, sourceCol, tokensCol)
     val weights = totals.map { case (s, t) =>
       require(t >= 0, s"temperatureMix: source '$s' has negative tokens $t")
       val w = if (alpha == 0.5) BigInt(isqrt(t))
@@ -1145,6 +1055,34 @@ object Curate {
         .max(if (alloc > 0) 1 else 0)
       (s, pm.toLong)
     }
+    applySourceRates(docs, sourceCol, idCol, rates, salt)
+  }
+
+  /** The rate mixers' one driver collect: per-source token totals
+    * (|sources| rows). Fails fast on a NULL source, which would NPE the
+    * driver sort and whose rows would silently vanish in the rate join,
+    * and on an all-NULL tokens source, whose sum is NULL. */
+  private def sourceTotals(op: String, docs: DataFrame, sourceCol: String,
+                           tokensCol: String): Seq[(String, Long)] = {
+    require(!docs.columns.exists(Set("__src", "rate_pm")),
+      s"$op reserves the __src and rate_pm column names")
+    docs.groupBy(col(sourceCol).cast("string").as("__src"))
+      .agg(sum(col(tokensCol)).as("__t"))
+      .collect().map { r =>
+        if (r.isNullAt(0)) throw new IllegalArgumentException(
+          s"$op: NULL $sourceCol encountered — sources must be non-null")
+        if (r.isNullAt(1)) throw new IllegalArgumentException(
+          s"$op: source '${r.getString(0)}' has NULL sum($tokensCol)")
+        (r.getString(0), r.getLong(1))
+      }.toSeq
+  }
+
+  /** The rate mixers' one apply step: a broadcast join of the
+    * per-source per-mille rates, then the shared hash-Bernoulli accept.
+    * `rate_pm` stays on the output as the audit column. */
+  private def applySourceRates(docs: DataFrame, sourceCol: String, idCol: String,
+                               rates: Seq[(String, Long)], salt: String): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
     docs.join(broadcast(rates.toDF("__src", "rate_pm")),
         col(sourceCol).cast("string") === col("__src"))

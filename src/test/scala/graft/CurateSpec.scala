@@ -8,6 +8,45 @@ class CurateSpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
+  /** The naive token-budget cut: a running token sum per group in
+    * (score desc, salted hash, id) order, kept while it fits. */
+  private def naiveBudgetCut(df: org.apache.spark.sql.DataFrame, groupCol: String,
+                             budget: Long): Set[Long] = {
+    import org.apache.spark.sql.expressions.Window
+    df.withColumn("__h", graft.llm.Text.md5Hash(concat(lit("sel:"), col("doc_id"))))
+      .withColumn("cum", sum("tokens").over(Window.partitionBy(groupCol)
+        .orderBy(col("score").desc, col("__h"), col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter(col("cum") <= budget).select("doc_id").as[Long].collect().toSet
+  }
+
+  /** Spark SQL executions started while `body` runs (the listener bus
+    * is async, so the count is polled until it settles). */
+  private def sqlExecutions(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val t0 = System.currentTimeMillis()
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart if e.time >= t0 => execs.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        val now = execs.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+        Thread.sleep(100)
+      }
+      last
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("packSequences: within-shard token stream is gapless and budget-aligned") {
     val df = docs((0L until 40L).map(i =>
       i -> (1 to (i % 7 + 1).toInt * 3).map(j => s"w$j").mkString(" ")): _*)
@@ -163,6 +202,76 @@ class CurateSpec extends SparkSpec {
     }
   }
 
+  test("token-budget selections: 2/3/2 SQL executions at budgets 0/1500/10000") {
+    // L1 collect + the final count; a cut inside a score band adds the
+    // one L2 collect (budget 1500 also reaches L3, which rides the
+    // final plan). Global form and the grouped literal-predicate path.
+    val df = (1L to 400L).map(i => (i, s"g${i % 2}", (i * i) % 5, i % 17 + 1))
+      .toDF("doc_id", "grp", "score", "tokens")
+    for ((budget, want) <- Seq(0L -> 2, 1500L -> 3, 10000L -> 2)) {
+      val global = sqlExecutions(Curate.selectByTokenBudget(df, "doc_id", "score",
+        "tokens", budget, buckets = 7).count())
+      val grouped = sqlExecutions(Curate.selectByTokenBudgetGrouped(df, "grp",
+        "doc_id", "score", "tokens", budget, buckets = 7).count())
+      assert((global, grouped) == ((want, want)),
+        s"budget=$budget: SQL executions global=$global grouped=$grouped, want $want")
+    }
+  }
+
+  test("token-budget selections refuse bad scores, NULL or zero tokens, NULL groups") {
+    // four docs share score 5; each input spoils doc 2 only, so the
+    // score group's other rows still have min(tokens) >= 1
+    val ok = (1L to 4L).map(i => (i, "a", 5L, 3L)).toDF("doc_id", "grp", "score", "tokens")
+    def spoil(c: String, v: org.apache.spark.sql.Column) =
+      ok.withColumn(c, when(col("doc_id") === 2L, v).otherwise(col(c)))
+    val bad = Seq(
+      "non-integral score" -> ok.withColumn("score", col("score").cast("double")),
+      "NULL score" -> spoil("score", lit(null)),
+      "NULL tokens" -> spoil("tokens", lit(null)),
+      "zero tokens" -> spoil("tokens", lit(0L)))
+    def global(df: org.apache.spark.sql.DataFrame) =
+      Curate.selectByTokenBudget(df, "doc_id", "score", "tokens", 10L).count()
+    def grouped(df: org.apache.spark.sql.DataFrame) =
+      Curate.selectByTokenBudgetGrouped(df, "grp", "doc_id", "score", "tokens", 10L).count()
+    assert(global(ok) == 3L && grouped(ok) == 3L)
+    for ((what, df) <- bad) {
+      withClue(s"global form, $what: ") { intercept[IllegalArgumentException](global(df)) }
+      withClue(s"grouped form, $what: ") { intercept[IllegalArgumentException](grouped(df)) }
+    }
+    withClue("grouped form, NULL group: ") {
+      intercept[IllegalArgumentException](grouped(spoil("grp", lit(null))))
+    }
+  }
+
+  test("token-budget selections: one body, the only def that calls walkBudget") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.exists(root.resolve("graft/llm/Curate.scala")),
+      s"run from the repository root: $root has no graft/llm/Curate.scala")
+    // a call belongs to its OUTERMOST enclosing def: a local helper def
+    // nested in a body (by indentation) counts as that body
+    val defLine = "^(\\s*)(?:(?:private|protected|override|final|implicit|lazy)(?:\\[\\w+\\])? )*def (\\w+)".r
+    def isComment(l: String) = Seq("*", "/*", "//").exists(l.trim.startsWith)
+    val stream = Files.walk(root)
+    val callers = try stream.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        var defs = List.empty[(Int, String)] // (indent, name), innermost first
+        Files.readAllLines(p).asScala.flatMap { l =>
+          defLine.findFirstMatchIn(l).foreach { m =>
+            val indent = m.group(1).length
+            defs = (indent, m.group(2)) :: defs.dropWhile(_._1 >= indent)
+          }
+          if (isComment(l) || !l.contains("walkBudget(") || l.contains("def walkBudget")) None
+          else defs.lastOption.map(d => s"${root.relativize(p)}#${d._2}")
+        }
+      }.toSet
+    finally stream.close()
+    assert(callers.size == 1,
+      s"walkBudget is called from ${callers.size} defs, want one body: ${callers.mkString(", ")}")
+  }
+
   test("bloomSemiFilter: exact-semi-join superset, composed equality, map-side plan") {
     val df = (0L until 2000L).map(i => (i, i % 501)).toDF("id", "h")
     val keys = Seq(3L, 7L, 123L, 444L, 500L).toDF("h")
@@ -312,6 +421,9 @@ class CurateSpec extends SparkSpec {
       }.reduce(_ unionByName _).select("doc_id").as[Long].collect().toSet
       assert(grouped == looped,
         s"budget=$budget: grouped=${grouped.size} looped=${looped.size}")
+      val naive = naiveBudgetCut(df, "grp", budget)
+      assert(grouped == naive,
+        s"budget=$budget: grouped=${grouped.size} naive=${naive.size}")
     }
     // NULL group fails fast
     intercept[IllegalArgumentException] {
@@ -337,6 +449,9 @@ class CurateSpec extends SparkSpec {
       }.reduce(_ unionByName _).select("doc_id").as[Long].collect().toSet
       assert(grouped == looped,
         s"budget=$budget: grouped=${grouped.size} looped=${looped.size}")
+      val naive = naiveBudgetCut(df, "grp", budget)
+      assert(grouped == naive,
+        s"budget=$budget: grouped=${grouped.size} naive=${naive.size}")
     }
   }
 
