@@ -576,18 +576,22 @@ object Tables {
   def vacuumStoreUnlocked(spark: SparkSession, dest: String): Seq[String] = {
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    storeResidue(spark, dest).map { p => fs.delete(p, true); p.toString }
+  }
+
+  /** A store's crash-residue dirs: its `__next_*` / `__old_*` swap
+    * siblings and `__stage_*` append stages — what [[vacuumStore]]
+    * deletes and the store audits count. */
+  private[graft] def storeResidue(spark: SparkSession,
+                                  dest: String): Seq[org.apache.hadoop.fs.Path] = {
+    val destPath = new org.apache.hadoop.fs.Path(dest)
+    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parent = destPath.getParent
     val name = destPath.getName
     if (parent == null || !fs.exists(parent)) Seq.empty
-    else fs.listStatus(parent).iterator
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith(s"${name}__next_") || n.startsWith(s"${name}__old_") ||
-          n.startsWith(s"${name}__stage_")
-      }
-      .map { p => fs.delete(p, true); p.toString }
-      .toSeq
+    else fs.listStatus(parent).toSeq.map(_.getPath).filter { p =>
+      Seq("__next_", "__old_", "__stage_").exists(t => p.getName.startsWith(name + t))
+    }
   }
 
   /** Exclusive advisory lease over a swap-published store: runs `body`

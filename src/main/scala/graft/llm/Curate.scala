@@ -1061,18 +1061,20 @@ object Curate {
   /** The rate mixers' one driver collect: per-source token totals
     * (|sources| rows). Fails fast on a NULL source, which would NPE the
     * driver sort and whose rows would silently vanish in the rate join,
-    * and on an all-NULL tokens source, whose sum is NULL. */
+    * and on any NULL-tokens row, which the sum skips and the rate filter
+    * would then admit for free. */
   private def sourceTotals(op: String, docs: DataFrame, sourceCol: String,
                            tokensCol: String): Seq[(String, Long)] = {
     require(!docs.columns.exists(Set("__src", "rate_pm")),
       s"$op reserves the __src and rate_pm column names")
     docs.groupBy(col(sourceCol).cast("string").as("__src"))
-      .agg(sum(col(tokensCol)).as("__t"))
+      .agg(sum(col(tokensCol)).as("__t"), count_if(col(tokensCol).isNull).as("__nt"))
       .collect().map { r =>
         if (r.isNullAt(0)) throw new IllegalArgumentException(
           s"$op: NULL $sourceCol encountered — sources must be non-null")
-        if (r.isNullAt(1)) throw new IllegalArgumentException(
-          s"$op: source '${r.getString(0)}' has NULL sum($tokensCol)")
+        if (r.getLong(2) > 0) throw new IllegalArgumentException(
+          s"$op: source '${r.getString(0)}' has ${r.getLong(2)} rows with NULL " +
+            s"$tokensCol — every row must carry its token count")
         (r.getString(0), r.getLong(1))
       }.toSeq
   }

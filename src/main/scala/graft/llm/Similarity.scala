@@ -437,7 +437,7 @@ object Similarity {
     *
     * The LAYOUT is where the codes live:
     *  - flat: (cid, codes) in `path/codes`. An append takes the `codes`
-    *    store lock, as [[compactFlatCodes]] does, and adds plain files.
+    *    store lock, as [[compactIndex]] does, and adds plain files.
     *    A serve is a broadcast cross join of queries and codes.
     *  - IVF: the coarse sum table in `path/centroids`, codes partitioned
     *    by `label`. An append runs in [[graft.io.Tables.readMergePublish]]
@@ -567,13 +567,17 @@ object Similarity {
     * encodes against one artifact and lands beside another's codes. */
   private def writeAdc(path: String, codec: AdcCodec, cent: Option[DataFrame],
                        codes: DataFrame): Unit =
-    graft.io.Tables.withStoreLock(codes.sparkSession,
-        s"$path/${if (cent.isDefined) "centroids" else "codes"}") {
+    graft.io.Tables.withStoreLock(codes.sparkSession, adcLock(path, cent.isDefined)) {
       cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
       codec.artifact(codes.sparkSession).write.mode("overwrite")
         .parquet(s"$path/${codec.dir}")
       writeCodes(codes, path, ivf = cent.isDefined, append = false)
     }
+
+  /** The store whose lock an index's writers take: `centroids` for an
+    * IVF layout, `codes` for a flat one. */
+  private def adcLock(path: String, ivf: Boolean): String =
+    s"$path/${if (ivf) "centroids" else "codes"}"
 
   /** The one writer of a code store: flat files, or IVF files
     * partitioned by `label`, created or appended ([[appendPartitioned]]
@@ -869,50 +873,51 @@ object Similarity {
       .groupBy(col("label"), col("pos"))
       .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
 
-  /** Compact a persisted cluster-partitioned code store (IVF-SQ8 or
-    * IVFPQ) to one file per cluster — the small-files maintenance a
-    * long-lived append-only serving index needs (each tagged append
-    * adds one file per touched cluster; after thousands of deltas the
-    * DPP-pruned scan pays per FILE, not per byte). Runs under the
-    * index's own store lock so it serializes with appends; rows,
-    * partition layout, pruning behavior and serving answers are
-    * IDENTICAL before/after (spec'd + shared-oracle-checked).
-    * Recovery-order contract: a crashed tagged append must be retried
-    * BEFORE compacting — compaction absorbs its orphan code files and
-    * renames them away, after which the retry would re-place them.
-    *
-    * READER caveat: the two-rename publish leaves the codes dir
-    * ABSENT for the metadata-rename window — a concurrent serving
-    * read (which takes no lock) can fail with missing-path even
-    * during a healthy compaction. Serving paths must
-    * tolerate-and-retry a transient missing codes dir; the failure is
-    * loud and transient, never a torn read. */
-  def compactIndexCodes(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit =
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      graft.io.Tables.compactPartitionedParquet(spark, s"$path/codes", "label")
-    }
+  /** Rows per file of a compacted flat code store: codes are a few to
+    * ~70 bytes/row, so 8M rows lands near the conventional
+    * few-hundred-MB parquet file at dim=64. */
+  private val CompactRowsPerFile = 8L * 1024 * 1024
 
-  /** Compact a FLAT (unpartitioned) code store — PQ and SQ8, the two
-    * index families without cluster dirs — to a file-count budget
-    * derived from the store's rows (`targetRowsPerFile`; codes are a
-    * few to ~70 bytes/row, so the 8M default lands near the
-    * conventional few-hundred-MB parquet file at dim=64). Runs under
-    * the CODES store lock, which the flat appenders also take, so
-    * compaction serializes with appends; rows and serving answers are
-    * identical before/after (spec'd + shared-oracle-checked). Same
-    * reader caveat as [[compactIndexCodes]]: the codes dir is absent
-    * for the two-rename window — serving reads tolerate-and-retry. */
-  def compactFlatCodes(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
-                       targetRowsPerFile: Long = 8L * 1024 * 1024): Unit = {
-    require(targetRowsPerFile >= 1, s"targetRowsPerFile must be >= 1")
-    graft.io.Tables.withStoreLock(spark, s"$path/codes") {
-      val n = spark.read.parquet(s"$path/codes").count()
-      val files = math.max(1L,
-        (n + targetRowsPerFile - 1) / targetRowsPerFile)
-      graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
-        files.toInt)
+  /** Compact a persisted index's append-grown store to few files — the
+    * small-files maintenance a long-lived append-only index needs
+    * (each append adds files forever; after thousands of deltas a scan
+    * pays per FILE, not per byte). The layout is read from disk:
+    *  - a kNN-graph store (`vectors/`): one file per cell. Its `edges`
+    *    never need this — appends rewrite whole home partitions, one
+    *    file per dir;
+    *  - an IVF code store (`centroids/` beside `codes/label=…`): one
+    *    file per cluster;
+    *  - a flat PQ/SQ8 code store: a file budget derived from its rows
+    *    ([[CompactRowsPerFile]]), rewritten shuffle-free.
+    * It runs under the lock the store's appenders take ([[writeAdc]]'s
+    * rule: `centroids` when that store exists, else `codes`), so
+    * compaction serializes with appends. Rows, partition layout,
+    * pruning and serving answers are identical before and after.
+    *
+    * Recovery-order contract: retry a crashed tagged append BEFORE
+    * compacting — compaction absorbs its orphan staged files, after
+    * which the retry would re-place them.
+    *
+    * READER caveat: the two-rename publish leaves the store's dir
+    * ABSENT for the metadata-rename window, so a concurrent serving
+    * read (which takes no lock) can fail with a missing path even
+    * during a healthy compaction: loud and transient, never a torn
+    * read. Serving paths must tolerate-and-retry it. */
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def has(store: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$store"))
+    val ivf = has("centroids")
+    graft.io.Tables.withStoreLock(spark, adcLock(path, ivf)) {
+      if (has("vectors"))
+        graft.io.Tables.compactPartitionedParquet(spark, s"$path/vectors", "cell")
+      else if (ivf)
+        graft.io.Tables.compactPartitionedParquet(spark, s"$path/codes", "label")
+      else {
+        val n = spark.read.parquet(s"$path/codes").count()
+        graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
+          math.max(1L, (n + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt)
+      }
     }
   }
 
@@ -925,7 +930,7 @@ object Similarity {
     * bare [[graft.io.Tables.vacuumStore]] on them could race a live
     * append's stage; this wrapper cannot). The CODES store is swept
     * under the CODES lock taken INSIDE the centroids lock: the flat
-    * PQ/SQ8 appenders and [[compactFlatCodes]] serialize on the codes
+    * PQ/SQ8 appenders and [[compactIndex]] serialize on the codes
     * lock, not centroids, so sweeping codes under centroids alone
     * could delete a live flat compaction's in-flight `codes__next_*`
     * (worst interleaving: its failure-restore rename silently no-ops
@@ -1052,25 +1057,59 @@ object Similarity {
       concat(substring(bucket, 1, i), flip, substring(bucket, i + 2, nPlanes - i - 1))
     }): _*)
 
+  /** The degenerate-bucket cap every pair search applies BEFORE its
+    * self-join (same guard as Dedup.minHashLshPairs): rows whose `key`
+    * holds between 2 and `cap` rows. A bucket past the cap is dropped
+    * while still spillable in the window sort, never joined; the
+    * window's hash exchange on `key` is exactly the self-join's
+    * required partitioning, so the cap adds no extra shuffle.
+    * Singleton buckets yield no pairs, so the >= 2 bound is free
+    * pruning. */
+  private def capBuckets(df: DataFrame, key: String, cap: Int): DataFrame =
+    df.withColumn("__bc", count(lit(1)).over(Window.partitionBy(col(key))))
+      .filter(col("__bc").between(2, cap))
+      .drop("__bc")
+
+  /** The LSH prelude of the four bucketed searches: (vid, payload…,
+    * eq, bucket) over the [[planeDirs]] signature, capped at
+    * `maxBucket`. */
+  private def lshBuckets(df: DataFrame, idCol: String, embCol: String,
+                         payload: Seq[Column], nPlanes: Int, dim: Int,
+                         maxBucket: Int): DataFrame = {
+    val planes = planeDirs(nPlanes, dim)
+    capBuckets(df.select(col(idCol).as("vid") +: payload :+
+        quantize(col(embCol)).as("eq"): _*)
+      .withColumn("bucket", lshBucket(col("eq"), planes)), "bucket", maxBucket)
+  }
+
+  /** The one pair scorer: `x` joined to `y` under `cond` (the sides
+    * aliased `x` and `y`, each carrying (vid, eq)), scored by the exact
+    * cosine of the integer dot and norms, so the double math is
+    * bit-deterministic. Output (`keep`…, a, b, cosine), with `keep`
+    * taken from the `x` side. */
+  private def cosinePairs(x: DataFrame, y: DataFrame, cond: Column,
+                          keep: String*): DataFrame =
+    x.as("x").join(y.as("y"), cond)
+      .select(keep.map(c => col(s"x.$c").as(c)) ++ Seq(
+        col("x.vid").as("a"), col("y.vid").as("b"),
+        dotQ(col("x.eq"), col("y.eq")).cast("double").as("__dot"),
+        dotQ(col("x.eq"), col("x.eq")).cast("double").as("__na"),
+        dotQ(col("y.eq"), col("y.eq")).cast("double").as("__nb")): _*)
+      // zero-norm guard: a zero-quantized embedding (failed/padded
+      // vectors) gives 0/0 = NaN, and Spark orders NaN ABOVE every
+      // number, so without this filter NaN >= threshold admits every
+      // such pair as a "near-duplicate"
+      .filter(col("__na") > 0 && col("__nb") > 0)
+      .select(keep.map(col) ++ Seq(col("a"), col("b"),
+        (col("__dot") / (sqrt(col("__na")) * sqrt(col("__nb")))).as("cosine")): _*)
+
   /** Bucketed ANN: assign buckets, then exact top-k within each bucket.
     * The bucket column is also the pre-partitioning key for repeated
     * queries (write bucketed parquet → co-located joins, no shuffle). */
   def lshTopK(df: DataFrame, idCol: String, embCol: String,
               nPlanes: Int = 8, dim: Int = 64, k: Int = 1,
               maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val planes = planeDirs(nPlanes, dim)
-    // Count-window cap BEFORE the self-join (same guard as
-    // Dedup.minHashLshPairs): a degenerate bucket past `maxBucket` is
-    // dropped while still spillable in the window sort, never joined.
-    // The window's hash exchange on `bucket` is exactly the join's
-    // required partitioning and both self-join sides share it
-    // (ReuseExchange), so the cap adds no extra shuffle. Singleton
-    // buckets yield no pairs, so the >=2 bound is free pruning.
-    val bucketed = df.select(col(idCol).as("vid"), quantize(col(embCol)).as("eq"))
-      .withColumn("bucket", lshBucket(col("eq"), planes))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("__bc").between(2, maxBucket))
-      .drop("__bc")
+    val bucketed = lshBuckets(df, idCol, embCol, Nil, nPlanes, dim, maxBucket)
     val pairs = bucketed.as("x").join(bucketed.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vid") =!= col("y.vid"))
       .select(col("x.vid").as("vid"), col("x.bucket").as("bucket"),
@@ -1094,13 +1133,8 @@ object Similarity {
                     labelCol: String, k: Int, nPlanes: Int = 8,
                     dim: Int = 64,
                     maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val planes = planeDirs(nPlanes, dim)
-    val bucketed = df.select(col(idCol).as("vid"), col(labelCol).as("lbl"),
-        quantize(col(embCol)).as("eq"))
-      .withColumn("bucket", lshBucket(col("eq"), planes))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("__bc").between(2, maxBucket))
-      .drop("__bc")
+    val bucketed = lshBuckets(df, idCol, embCol, Seq(col(labelCol).as("lbl")),
+      nPlanes, dim, maxBucket)
     val pairs = bucketed.as("x").join(bucketed.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.lbl") =!= col("y.lbl"))
       .select(col("x.vid").as("vid"), col("x.lbl").as("label"),
@@ -1127,13 +1161,8 @@ object Similarity {
   def tripletMine(df: DataFrame, idCol: String, embCol: String,
                   labelCol: String, nPlanes: Int = 8, dim: Int = 64,
                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val planes = planeDirs(nPlanes, dim)
-    val bucketed = df.select(col(idCol).as("vid"), col(labelCol).as("lbl"),
-        quantize(col(embCol)).as("eq"))
-      .withColumn("bucket", lshBucket(col("eq"), planes))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("__bc").between(2, maxBucket))
-      .drop("__bc")
+    val bucketed = lshBuckets(df, idCol, embCol, Seq(col(labelCol).as("lbl")),
+      nPlanes, dim, maxBucket)
     val pairs = bucketed.as("x").join(bucketed.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vid") =!= col("y.vid"))
       .select(col("x.vid").as("vid"), col("x.lbl").as("label"),
@@ -1154,32 +1183,15 @@ object Similarity {
   }
 
   /** Embedding-cosine near-dup: candidate pairs from LSH buckets,
-    * kept when exact cosine (from exact integer dot/norms, so the
-    * double math is bit-deterministic) clears the threshold. */
+    * kept when the exact cosine ([[cosinePairs]]) clears the
+    * threshold. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, embCol: String,
                          threshold: Double, nPlanes: Int = 8,
                          dim: Int = 64,
                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val planes = planeDirs(nPlanes, dim)
-    // Same degenerate-bucket guard as lshTopK — see the comment there.
-    val bucketed = df.select(col(idCol).as("vid"), quantize(col(embCol)).as("eq"))
-      .withColumn("bucket", lshBucket(col("eq"), planes))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("__bc").between(2, maxBucket))
-      .drop("__bc")
-    bucketed.as("x").join(bucketed.as("y"),
+    val bucketed = lshBuckets(df, idCol, embCol, Nil, nPlanes, dim, maxBucket)
+    cosinePairs(bucketed, bucketed,
         col("x.bucket") === col("y.bucket") && col("x.vid") < col("y.vid"))
-      .select(col("x.vid").as("a"), col("y.vid").as("b"),
-        dotQ(col("x.eq"), col("y.eq")).cast("double").as("__dot"),
-        dotQ(col("x.eq"), col("x.eq")).cast("double").as("__na"),
-        dotQ(col("y.eq"), col("y.eq")).cast("double").as("__nb"))
-      // zero-norm guard: a zero-quantized embedding (failed/padded
-      // vectors) gives 0/0 = NaN, and Spark orders NaN ABOVE every
-      // number, so without this filter NaN >= threshold admits every
-      // such pair as a "near-duplicate"
-      .filter(col("__na") > 0 && col("__nb") > 0)
-      .select(col("a"), col("b"),
-        (col("__dot") / (sqrt(col("__na")) * sqrt(col("__nb")))).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -1354,15 +1366,17 @@ object Similarity {
       cents, maxCluster, nprobe, ordered)
 
   /** The capped (multi-probe) cell-assignment frame the pair joins
-    * build on, WITHOUT the pair join: (vid, eq, cluster, __nz) with
-    * __nz = the zero-norm guard per endpoint — checkpointed once. A
-    * recall/volume ledger uses this to count candidate pairs from
-    * METADATA (cluster sizes / (vid, cluster) joins) and to score
-    * cosines only for the eval slice it actually ranks, instead of
-    * materializing every candidate pair with its dot product (guide
-    * §2.3: decide with small rows; the cosine is payload). Same
-    * assignment kernel, cap window and zero-norm contract as
-    * [[cellPairsTrainedEq]]. */
+    * build on: (vid, eq, cluster, __nz) with __nz = the zero-norm guard
+    * per endpoint, checkpointed once — the lazy barrier through which
+    * one materialization feeds both self-join sides (two full corpus
+    * passes otherwise). Assignment is a map-side kernel column on the
+    * quantized frame itself: argmin at nprobe = 1, explode(top-n)
+    * above. A recall/volume ledger uses this frame alone to count
+    * candidate pairs from METADATA (cluster sizes / (vid, cluster)
+    * joins) and to score cosines only for the eval slice it actually
+    * ranks, instead of materializing every candidate pair with its dot
+    * product (guide §2.3: decide with small rows; the cosine is
+    * payload). */
   private[graft] def cappedCells(eq0: DataFrame,
                                  cents: Seq[(Long, Seq[Long])],
                                  maxCluster: Int, nprobe: Int): DataFrame = {
@@ -1373,9 +1387,7 @@ object Similarity {
       else eq0.select(col("vid"), col("eq"), explode(
           graft.expr.kernels.NativeFns.topNCentroids(col("eq"), cents, nprobe))
         .as("cluster"))
-    eq.withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("cluster"))))
-      .filter(col("__bc").between(2, maxCluster))
-      .drop("__bc")
+    capBuckets(eq, "cluster", maxCluster)
       .withColumn("__nz", dotQ(col("eq"), col("eq")) > 0)
       .localCheckpoint(false)
   }
@@ -1383,37 +1395,16 @@ object Similarity {
   /** [[cellPairsTrained]] over an ALREADY-QUANTIZED (vid, eq) frame —
     * the rebuild path's face (the store's vectors carry eq, not the
     * raw float embedding; re-quantizing quantized longs would be
-    * wrong). */
+    * wrong): [[cappedCells]], then the cell self-join scored by
+    * [[cosinePairs]]. */
   private[graft] def cellPairsTrainedEq(eq0: DataFrame,
                                         cents: Seq[(Long, Seq[Long])],
                                         maxCluster: Int, nprobe: Int,
                                         ordered: Boolean): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val eq =
-      if (nprobe == 1) eq0.withColumn("cluster",
-        graft.expr.kernels.NativeFns.argminCentroid(col("eq"), cents))
-      else eq0.select(col("vid"), col("eq"), explode(
-          graft.expr.kernels.NativeFns.topNCentroids(col("eq"), cents, nprobe))
-        .as("cluster"))
-    val capped = eq
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("cluster"))))
-      .filter(col("__bc").between(2, maxCluster))
-      .drop("__bc")
-      // lazy barrier: one materialization feeds both self-join sides
-      // (two full corpus passes otherwise)
-      .localCheckpoint(false)
-    val cond = col("x.cluster") === col("y.cluster") &&
-      (if (ordered) col("x.vid") < col("y.vid") else col("x.vid") =!= col("y.vid"))
-    val scored = capped.as("x").join(capped.as("y"), cond)
-      .select(col("x.cluster").as("cluster"),
-        col("x.vid").as("a"), col("y.vid").as("b"),
-        dotQ(col("x.eq"), col("y.eq")).cast("double").as("__dot"),
-        dotQ(col("x.eq"), col("x.eq")).cast("double").as("__na"),
-        dotQ(col("y.eq"), col("y.eq")).cast("double").as("__nb"))
-      // zero-norm guard — see cosineNearDupPairs
-      .filter(col("__na") > 0 && col("__nb") > 0)
-      .select(col("cluster"), col("a"), col("b"),
-        (col("__dot") / (sqrt(col("__na")) * sqrt(col("__nb")))).as("cosine"))
+    val capped = cappedCells(eq0, cents, maxCluster, nprobe)
+    val scored = cosinePairs(capped, capped, col("x.cluster") === col("y.cluster") &&
+      (if (ordered) col("x.vid") < col("y.vid") else col("x.vid") =!= col("y.vid")),
+      "cluster")
     if (nprobe == 1) scored
     else scored.select(col("a"), col("b"), col("cosine")).distinct()
   }
@@ -1559,25 +1550,13 @@ object Similarity {
     import spark.implicits._
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val trainEq = train.getOrElse(df)
-      .select(col(idCol).as("vid"), quantize(col(embCol)).as("eq"))
-    val cents = kmeansTrain(trainEq, nlist, iters)
-    val asg = graphAssignments(df, idCol, embCol, cents, nprobe)
-    asg.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
+    def quantized(d: DataFrame) =
+      d.select(col(idCol).as("vid"), quantize(col(embCol)).as("eq"))
+    val cents = kmeansTrain(quantized(train.getOrElse(df)), nlist, iters)
     Seq((k.toLong, nprobe.toLong, maxCluster.toLong))
       .toDF("k", "nprobe", "max_cluster")
       .write.mode("overwrite").parquet(s"$path/meta")
-    val graph = knnTopK(
-      cellPairsTrained(df, idCol, embCol, cents, maxCluster, nprobe,
-        ordered = false).select(col("a"), col("b"), col("cosine")), k)
-    // home rides a join keyed like the rank window's exchange (a), so
-    // it reuses that partitioning — no extra corpus-scale shuffle
-    val homes = asg.filter(col("probe") === 1L)
-      .select(col("cid").as("a"), col("home"))
-    graph.join(homes, "a")
-      .repartition(col("home"))
-      .write.mode("overwrite").partitionBy("home").parquet(s"$path/edges")
+    writeGraph(quantized(df), path, cents, k, nprobe, maxCluster)
     // the anchor publishes LAST: a store is live iff its centroids are
     graft.io.Tables.swapInParquet(spark, centsFrame(spark, cents),
       s"$path/centroids")
@@ -1762,7 +1741,9 @@ object Similarity {
           .select(col("cid").as("vid"), col("eq"), col("cell"))
         val mO = oldMembers.filter(col("cell").isin(valid: _*))
           .select(col("cid").as("vid"), col("eq"), col("cell"))
-        val cNew = scoreCellPairs(mN, mO.unionByName(mN)).distinct()
+        val cNew = cosinePairs(mN, mO.unionByName(mN),
+            col("x.cell") === col("y.cell") && col("x.vid") =!= col("y.vid"))
+          .distinct()
           .localCheckpoint(false)
         // old→new candidates are the MIRROR of cNew's new→old subset
         // (cosine is symmetric, the zero-norm guard too) — derived, not
@@ -1830,23 +1811,6 @@ object Similarity {
         "rebuild manually with a larger nlist")
   }
 
-  /** Compact the graph store's VECTORS side to one file per cell —
-    * tagged appends add one staged file per (batch, cell) forever,
-    * and the append path's touched-cell reads pay per FILE (the
-    * small-files failure [[compactIndexCodes]] fixes for code
-    * stores). The EDGES side never needs this: appends rewrite whole
-    * home partitions ([[graft.io.Tables.replacePartitions]]
-    * repartitions to one file per dir), so touched homes stay compact
-    * by construction. Same lock (centroids — what appenders hold),
-    * same recovery-order contract (retry crashed tagged appends
-    * FIRST: compaction absorbs orphan staged files), same transient
-    * missing-dir reader caveat. */
-  def compactGraphVectors(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit =
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      graft.io.Tables.compactPartitionedParquet(spark, s"$path/vectors", "cell")
-    }
-
   /** Retrain the graph store's CELL GEOMETRY from its own vectors —
     * the recovery for [[appendToKnnGraphStore]]'s cap-overflow
     * `require` (a store built at a small corpus eventually pushes
@@ -1906,6 +1870,17 @@ object Similarity {
       .localCheckpoint(true)
     val nlist = math.max(minNlist, (eq0.count() / targetCell).toInt)
     val cents = kmeansTrain(eq0, nlist, iters)
+    writeGraph(eq0, path, cents, k, nprobe, maxCluster)
+    cents
+  }
+
+  /** The one writer of the graph store's `vectors` and `edges` over a
+    * quantized (vid, eq) frame against trained `cents` — shared by the
+    * persist and the rebuild. The caller publishes the centroids
+    * after it. */
+  private def writeGraph(eq0: DataFrame, path: String,
+                         cents: Seq[(Long, Seq[Long])], k: Int, nprobe: Int,
+                         maxCluster: Int): Unit = {
     val asg = graphAssignmentsEq(eq0.select(col("vid").as("cid"), col("eq")),
       cents, nprobe)
     asg.repartition(col("cell"))
@@ -1913,60 +1888,37 @@ object Similarity {
     val graph = knnTopK(
       cellPairsTrainedEq(eq0, cents, maxCluster, nprobe, ordered = false)
         .select(col("a"), col("b"), col("cosine")), k)
+    // home rides a join keyed like the rank window's exchange (a), so
+    // it reuses that partitioning — no extra corpus-scale shuffle
     val homes = asg.filter(col("probe") === 1L)
       .select(col("cid").as("a"), col("home"))
     graph.join(homes, "a")
       .repartition(col("home"))
       .write.mode("overwrite").partitionBy("home").parquet(s"$path/edges")
-    cents
   }
 
   /** Maintenance diagnostic for the graph store (the k11 file-audit
     * convention): per partitioned store, partition-dir / file / row
     * counts plus crash-residue dirs — compaction debt is visible as
     * n_files > n_parts on `vectors` (tagged appends add one staged
-    * file per (batch, cell); [[compactGraphVectors]] folds them), and
+    * file per (batch, cell); [[compactIndex]] folds them), and
     * nonzero n_residue says a vacuum is due. Edges stay one file per
     * home by construction (replacePartitions repartitions). */
   def knnGraphStoreAudit(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def residue(name: String): Long = {
-      val parent = new org.apache.hadoop.fs.Path(path)
-      if (!fs.exists(parent)) 0L
-      else fs.listStatus(parent).count { st =>
-        val n = st.getPath.getName
-        n.startsWith(s"${name}__next_") || n.startsWith(s"${name}__old_") ||
-          n.startsWith(s"${name}__stage_")
-      }.toLong
-    }
     def one(name: String): (String, Long, Long, Long, Long) = {
       val r = spark.read.parquet(s"$path/$name")
         .withColumn("__f", input_file_name())
         .withColumn("__p", regexp_extract(col("__f"), "([^/]+)/[^/]+$", 1))
         .agg(countDistinct(col("__p")), countDistinct(col("__f")),
           count(lit(1))).head()
-      (name, r.getLong(0), r.getLong(1), r.getLong(2), residue(name))
+      (name, r.getLong(0), r.getLong(1), r.getLong(2),
+        graft.io.Tables.storeResidue(spark, s"$path/$name").size.toLong)
     }
     Seq(one("edges"), one("vectors"))
       .toDF("store", "n_parts", "n_files", "n_rows", "n_residue")
   }
-
-  /** Directed within-cell pair scoring shared by the store append —
-    * the [[cellPairsTrained]] cosine (exact-integer dot, zero-norm
-    * guard) over two member frames (vid, eq, cell). */
-  private def scoreCellPairs(x: DataFrame, y: DataFrame): DataFrame =
-    x.as("x").join(y.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vid") =!= col("y.vid"))
-      .select(col("x.vid").as("a"), col("y.vid").as("b"),
-        dotQ(col("x.eq"), col("y.eq")).cast("double").as("__dot"),
-        dotQ(col("x.eq"), col("x.eq")).cast("double").as("__na"),
-        dotQ(col("y.eq"), col("y.eq")).cast("double").as("__nb"))
-      .filter(col("__na") > 0 && col("__nb") > 0)
-      .select(col("a"), col("b"),
-        (col("__dot") / (sqrt(col("__na")) * sqrt(col("__nb")))).as("cosine"))
 
   /** Per-vector top-k window over a directed candidate-pair frame —
     * [[knnGraph]]'s tail, shared with the recall/volume ledger so the

@@ -59,7 +59,7 @@ object LlmQueries {
         maxCluster = SemMaxCluster, nprobe = 2, train = Some(emb))
       Similarity.appendToKnnGraphStore(emb.filter(col("vec_id") % 10 === 0),
         "vec_id", "embedding", path, batchTag = Some("delta-1"))
-      Similarity.compactGraphVectors(s, path)
+      Similarity.compactIndex(s, path)
       path
     })
 
@@ -179,7 +179,7 @@ object LlmQueries {
       Similarity.appendToIvfSq8Index(cands.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", p, labelCol = Some("label"),
         batchTag = Some("delta-1"))
-      Similarity.compactIndexCodes(s, p)
+      Similarity.compactIndex(s, p)
     }
 
   /** IVFPQ family store: build evens (codebooks trained on ALL
@@ -203,7 +203,7 @@ object LlmQueries {
         "vec_id", "embedding", p, train = Some(cands))
       Similarity.appendToSq8Index(cands.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", p)
-      Similarity.compactFlatCodes(s, p)
+      Similarity.compactIndex(s, p)
     }
 
   /** PQ family store: build evens (codebooks trained on ALL

@@ -556,6 +556,24 @@ class CurateSpec extends SparkSpec {
     }
   }
 
+  test("mixCorpus and temperatureMix refuse a NULL-tokens row, not only an all-NULL source") {
+    // source a: one 10-token row plus 100 NULL-token rows, whose sum
+    // reads as 10 tokens; admitting them would select them for free
+    val rows = Seq((0L, "a", Option(10L))) ++
+      (1L to 100L).map(i => (i, "a", Option.empty[Long])) ++
+      (101L to 200L).map(i => (i, "b", Option(10L)))
+    val df = rows.toDF("doc_id", "source", "tokens")
+    val mixers = Seq[(String, () => Unit)](
+      "mixCorpus" -> (() => Curate.mixCorpus(df, "source", "tokens", "doc_id", 20L)),
+      "temperatureMix" -> (() =>
+        Curate.temperatureMix(df, "source", "tokens", "doc_id", 20L)))
+    mixers.foreach { case (name, mix) =>
+      val e = withClue(s"$name: ")(intercept[IllegalArgumentException](mix()))
+      assert(e.getMessage.contains(name) && e.getMessage.contains("'a'") &&
+        e.getMessage.contains("100 rows"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("leakFreeFolds: cluster-atomic K folds, all folds populated, k<2 refused") {
     val sentence = "the quick brown fox jumps over the lazy dog again and again"
     val all = (1L to 60L).map { i =>

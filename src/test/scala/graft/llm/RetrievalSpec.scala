@@ -624,4 +624,27 @@ class RetrievalSpec extends SparkSpec {
       .map(_.getName).filter(n => n.contains("__next_") || n.contains("__old_"))
     assert(residue.isEmpty, s"swap residue: ${residue.toSeq}")
   }
+
+  test("pair searches: one cap window, one zero-norm cosine outside knnGraphExact, one edge writer") {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get("src/main/scala/graft/llm/Similarity.scala")
+    assert(Files.exists(src), s"run from the repository root: no $src")
+    val code = Files.readAllLines(src).asScala.toList
+      .filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
+    // knnGraphExact's body runs from its def to the next line at member
+    // indentation; it is the recall ledger's independent reference, so
+    // it keeps a cosine of its own
+    val start = code.indexWhere(_.contains("def knnGraphExact("))
+    assert(start >= 0, "knnGraphExact is gone")
+    val end = code.indexWhere(_.matches("^  \\S.*"), start + 1)
+    val (exact, rest) = (code.slice(start, end), code.take(start) ++ code.drop(end))
+    def sites(lines: Seq[String], pat: String) =
+      lines.map(_.sliding(pat.length).count(_ == pat)).sum
+    val cosine = "sqrt(col(\"__na\"))"
+    assert(sites(code, "count(lit(1)).over(Window.partitionBy(") === 1,
+      "one capped-bucket window for every pair search")
+    assert(sites(rest, cosine) === 1, "one zero-norm cosine outside knnGraphExact")
+    assert(sites(exact, cosine) === 1, "knnGraphExact keeps its own cosine")
+    assert(sites(code, "partitionBy(\"home\")") === 1, "one graph edge writer")
+  }
 }

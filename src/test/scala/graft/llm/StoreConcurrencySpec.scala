@@ -311,7 +311,7 @@ class StoreConcurrencySpec extends SparkSpec {
       .orderBy("cid").collect().toSeq
     assert(filesPerLabel().values.forall(_ >= 4),
       s"3 tagged appends must have accumulated files: ${filesPerLabel()}")
-    Similarity.compactIndexCodes(spark, path)
+    Similarity.compactIndex(spark, path)
     assert(filesPerLabel().values.forall(_ === 1),
       s"compaction must leave ONE file per cluster: ${filesPerLabel()}")
     assert(spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq
@@ -450,7 +450,7 @@ class StoreConcurrencySpec extends SparkSpec {
       s"the append must have accumulated files: ${vecFilesPerCell()}")
     val vecsBefore = spark.read.parquet(s"$path/vectors")
       .orderBy("cid", "probe").collect().toSeq
-    Similarity.compactGraphVectors(spark, path)
+    Similarity.compactIndex(spark, path)
     assert(vecFilesPerCell().values.forall(_ === 1),
       s"compaction must leave one file per cell: ${vecFilesPerCell()}")
     assert(spark.read.parquet(s"$path/vectors")
@@ -590,7 +590,7 @@ class StoreConcurrencySpec extends SparkSpec {
       s"3 appends must have accumulated files, saw ${codeFiles()}")
     val before = spark.read.parquet(s"$path/codes")
       .orderBy("cid").collect().toSeq
-    Similarity.compactFlatCodes(spark, path)
+    Similarity.compactIndex(spark, path)
     assert(codeFiles() === 1,
       s"compaction must meet the file budget, saw ${codeFiles()}")
     assert(spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq
@@ -598,7 +598,7 @@ class StoreConcurrencySpec extends SparkSpec {
     // a racing append and compaction serialize on the codes lock —
     // whichever order the lock grants, no rows are lost
     race(
-      Similarity.compactFlatCodes(spark, path),
+      Similarity.compactIndex(spark, path),
       Similarity.appendToSq8Index(vecs(16L to 19L), "vec_id", "embedding",
         path, dim = 4))
     assert(spark.read.parquet(s"$path/codes").count() === before.size + 4L,
@@ -820,7 +820,7 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(audit()("vectors")._4 === 1L)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/vectors__stage_dead")),
       "the audit is read-only")
-    Similarity.compactGraphVectors(spark, path)
+    Similarity.compactIndex(spark, path)
     Similarity.vacuumIndexStores(spark, path)
     val after = audit()
     assert(after("vectors")._2 === after("vectors")._1 &&
