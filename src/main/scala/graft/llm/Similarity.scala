@@ -567,17 +567,13 @@ object Similarity {
     * encodes against one artifact and lands beside another's codes. */
   private def writeAdc(path: String, codec: AdcCodec, cent: Option[DataFrame],
                        codes: DataFrame): Unit =
-    graft.io.Tables.withStoreLock(codes.sparkSession, adcLock(path, cent.isDefined)) {
+    graft.io.Tables.withStoreLock(codes.sparkSession,
+        s"$path/${if (cent.isDefined) "centroids" else "codes"}") {
       cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
       codec.artifact(codes.sparkSession).write.mode("overwrite")
         .parquet(s"$path/${codec.dir}")
       writeCodes(codes, path, ivf = cent.isDefined, append = false)
     }
-
-  /** The store whose lock an index's writers take: `centroids` for an
-    * IVF layout, `codes` for a flat one. */
-  private def adcLock(path: String, ivf: Boolean): String =
-    s"$path/${if (ivf) "centroids" else "codes"}"
 
   /** The one writer of a code store: flat files, or IVF files
     * partitioned by `label`, created or appended ([[appendPartitioned]]
@@ -889,10 +885,14 @@ object Similarity {
     *    file per cluster;
     *  - a flat PQ/SQ8 code store: a file budget derived from its rows
     *    ([[CompactRowsPerFile]]), rewritten shuffle-free.
-    * It runs under the lock the store's appenders take ([[writeAdc]]'s
-    * rule: `centroids` when that store exists, else `codes`), so
-    * compaction serializes with appends. Rows, partition layout,
-    * pruning and serving answers are identical before and after.
+    * It takes the `centroids` lock, then the `codes` lock inside it
+    * ([[vacuumIndexStores]]' order), and reads the layout only while
+    * both are held. Every writer of every layout holds one of the two,
+    * so no swap or overwrite is in flight when the layout is read and
+    * compaction serializes with appends. A `label`-partitioned code
+    * store without its centroids (a crashed IVF swap) fails loudly
+    * rather than compacting flat. Rows, partition layout, pruning and
+    * serving answers are identical before and after.
     *
     * Recovery-order contract: retry a crashed tagged append BEFORE
     * compacting — compaction absorbs its orphan staged files, after
@@ -903,23 +903,28 @@ object Similarity {
     * read (which takes no lock) can fail with a missing path even
     * during a healthy compaction: loud and transient, never a torn
     * read. Serving paths must tolerate-and-retry it. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(store: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$store"))
-    val ivf = has("centroids")
-    graft.io.Tables.withStoreLock(spark, adcLock(path, ivf)) {
-      if (has("vectors"))
-        graft.io.Tables.compactPartitionedParquet(spark, s"$path/vectors", "cell")
-      else if (ivf)
-        graft.io.Tables.compactPartitionedParquet(spark, s"$path/codes", "label")
-      else {
-        val n = spark.read.parquet(s"$path/codes").count()
-        graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
-          math.max(1L, (n + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt)
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
+      graft.io.Tables.withStoreLock(spark, s"$path/codes") {
+        val fs = new org.apache.hadoop.fs.Path(path)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def store(d: String) = new org.apache.hadoop.fs.Path(s"$path/$d")
+        if (fs.exists(store("vectors")))
+          graft.io.Tables.compactPartitionedParquet(spark, s"$path/vectors", "cell")
+        else if (fs.exists(store("centroids")))
+          graft.io.Tables.compactPartitionedParquet(spark, s"$path/codes", "label")
+        else {
+          if (fs.exists(store("codes")) && fs.listStatus(store("codes"))
+              .exists(_.getPath.getName.startsWith("label=")))
+            throw new IllegalStateException(s"compactIndex: $path/codes is " +
+              "partitioned by label but its centroids store is missing (a " +
+              "crashed IVF swap); restore centroids before compacting")
+          val n = spark.read.parquet(s"$path/codes").count()
+          graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
+            math.max(1L, (n + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt)
+        }
       }
     }
-  }
 
   /** Sweep crash residue (`__next_*`/`__old_*`/`__stage_*`) from ALL
     * of a persisted index's stores — centroids, quantizer, codebooks,
@@ -930,12 +935,10 @@ object Similarity {
     * bare [[graft.io.Tables.vacuumStore]] on them could race a live
     * append's stage; this wrapper cannot). The CODES store is swept
     * under the CODES lock taken INSIDE the centroids lock: the flat
-    * PQ/SQ8 appenders and [[compactIndex]] serialize on the codes
-    * lock, not centroids, so sweeping codes under centroids alone
-    * could delete a live flat compaction's in-flight `codes__next_*`
-    * (worst interleaving: its failure-restore rename silently no-ops
-    * and the codes store is lost). Lock order is always centroids →
-    * codes, never the reverse, so the nesting cannot deadlock.
+    * PQ/SQ8 writers hold the codes lock alone, so sweeping codes under
+    * centroids alone could race them. Lock order is always centroids →
+    * codes, never the reverse ([[compactIndex]] nests them the same
+    * way), so the nesting cannot deadlock.
     *
     * EDGES residue is special: after a crash inside
     * [[graft.io.Tables.replacePartitions]]'s rename window an
@@ -1087,8 +1090,8 @@ object Similarity {
     * cosine of the integer dot and norms, so the double math is
     * bit-deterministic. Output (`keep`…, a, b, cosine), with `keep`
     * taken from the `x` side. */
-  private def cosinePairs(x: DataFrame, y: DataFrame, cond: Column,
-                          keep: String*): DataFrame =
+  private[graft] def cosinePairs(x: DataFrame, y: DataFrame, cond: Column,
+                                 keep: String*): DataFrame =
     x.as("x").join(y.as("y"), cond)
       .select(keep.map(c => col(s"x.$c").as(c)) ++ Seq(
         col("x.vid").as("a"), col("y.vid").as("b"),
@@ -1366,17 +1369,16 @@ object Similarity {
       cents, maxCluster, nprobe, ordered)
 
   /** The capped (multi-probe) cell-assignment frame the pair joins
-    * build on: (vid, eq, cluster, __nz) with __nz = the zero-norm guard
-    * per endpoint, checkpointed once — the lazy barrier through which
-    * one materialization feeds both self-join sides (two full corpus
-    * passes otherwise). Assignment is a map-side kernel column on the
-    * quantized frame itself: argmin at nprobe = 1, explode(top-n)
-    * above. A recall/volume ledger uses this frame alone to count
-    * candidate pairs from METADATA (cluster sizes / (vid, cluster)
-    * joins) and to score cosines only for the eval slice it actually
-    * ranks, instead of materializing every candidate pair with its dot
-    * product (guide §2.3: decide with small rows; the cosine is
-    * payload). */
+    * build on: (vid, eq, cluster), checkpointed once — the lazy
+    * barrier through which one materialization feeds both self-join
+    * sides (two full corpus passes otherwise). Assignment is a
+    * map-side kernel column on the quantized frame itself: argmin at
+    * nprobe = 1, explode(top-n) above. A recall/volume ledger uses
+    * this frame alone to count candidate pairs from METADATA (cluster
+    * sizes / (vid, cluster) joins) and to score cosines only for the
+    * eval slice it actually ranks, instead of materializing every
+    * candidate pair with its dot product (guide §2.3: decide with
+    * small rows; the cosine is payload). */
   private[graft] def cappedCells(eq0: DataFrame,
                                  cents: Seq[(Long, Seq[Long])],
                                  maxCluster: Int, nprobe: Int): DataFrame = {
@@ -1387,9 +1389,7 @@ object Similarity {
       else eq0.select(col("vid"), col("eq"), explode(
           graft.expr.kernels.NativeFns.topNCentroids(col("eq"), cents, nprobe))
         .as("cluster"))
-    capBuckets(eq, "cluster", maxCluster)
-      .withColumn("__nz", dotQ(col("eq"), col("eq")) > 0)
-      .localCheckpoint(false)
+    capBuckets(eq, "cluster", maxCluster).localCheckpoint(false)
   }
 
   /** [[cellPairsTrained]] over an ALREADY-QUANTIZED (vid, eq) frame —

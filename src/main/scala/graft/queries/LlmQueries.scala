@@ -2544,7 +2544,8 @@ object LlmQueries {
           emb.select(col("vec_id").as("vid"),
             Similarity.quantize(col("embedding")).as("eq")),
           cents, SemMaxCluster, np)
-        val nz = cells.filter(col("__nz"))
+        // the zero-norm guard per endpoint, as the pair scorer applies it
+        val nz = cells.filter(Similarity.dotQ(col("eq"), col("eq")) > 0)
         val vol =
           if (np == 1)
             nz.groupBy(col("cluster")).agg(count(lit(1)).as("__m"))
@@ -2557,17 +2558,8 @@ object LlmQueries {
               .filter(col("a") =!= col("b"))
               .select(col("a"), col("b")).distinct()
               .agg(count(lit(1)).as("n_pairs"))
-        val xe = nz.filter(col("vid") < 150L)
-          .select(col("cluster"), col("vid").as("a"), col("eq").as("aeq"))
-        val scored0 = xe
-          .join(nz.select(col("cluster"), col("vid").as("b"),
-            col("eq").as("beq")), Seq("cluster"))
-          .filter(col("a") =!= col("b"))
-          .select(col("a"), col("b"),
-            (Similarity.dotQ(col("aeq"), col("beq")).cast("double") /
-              (sqrt(Similarity.dotQ(col("aeq"), col("aeq")).cast("double")) *
-                sqrt(Similarity.dotQ(col("beq"), col("beq")).cast("double"))))
-              .as("cosine"))
+        val scored0 = Similarity.cosinePairs(cells.filter(col("vid") < 150L),
+          cells, col("x.cluster") === col("y.cluster") && col("x.vid") =!= col("y.vid"))
         // nprobe=2: a pair meeting in both shared cells dedups, same
         // key as cellPairsTrained's distinct
         val scored = if (np == 1) scored0 else scored0.distinct()

@@ -1055,4 +1055,61 @@ class StoreConcurrencySpec extends SparkSpec {
       assert(codeIds === (0L until 25L), s"$name must land once the lock is free")
     }
   }
+
+  test("compactIndex waits for the centroids lock an IVF swap holds, and never flattens label-partitioned codes") {
+    def vecs(ids: Seq[Long]) = ids.map { i =>
+      (i, Array.tabulate(4)(d => (i * 4 + d).toDouble / 10.0), i % 2)
+    }.toDF("vec_id", "embedding", "label")
+    val path = Files.createTempDirectory("ivf_cmp_lock_").toString + "/idx"
+    Similarity.persistIvfSq8Index(vecs(0L to 3L), "vec_id", "embedding",
+      "label", path, train = Some(vecs(0L to 15L)))
+    (1 to 3).foreach { b =>
+      Similarity.appendToIvfSq8Index(vecs((b * 4L) to (b * 4L + 3L)),
+        "vec_id", "embedding", path, dim = 4, labelCol = Some("label"),
+        batchTag = Some(s"delta-$b"))
+    }
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def layout(): Map[String, Int] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/codes"))
+        .filterNot(_.getPath.getName.startsWith("_")).map { f =>
+          f.getPath.getName -> (if (f.isFile) 1 else fs.listStatus(f.getPath)
+            .count(g => g.isFile && !g.getPath.getName.startsWith("_")))
+        }.toMap
+    val before = spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq
+    val grown = layout()
+    assert(grown.keySet === Set("label=0", "label=1") && grown.values.forall(_ >= 4),
+      s"3 tagged appends must have accumulated files per cluster: $grown")
+    // an IVF swap's rename window: centroids/ moved aside, its lock held
+    val cent = new org.apache.hadoop.fs.Path(s"$path/centroids")
+    val aside = new org.apache.hadoop.fs.Path(s"$path/centroids__old_swap")
+    val lock = java.nio.file.Paths.get(s"$path/centroids__lock")
+    assert(fs.rename(cent, aside))
+    Files.createFile(lock)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val fut = pool.submit(new Runnable {
+        def run(): Unit = Similarity.compactIndex(spark, path)
+      })
+      Thread.sleep(2000) // > the lock's 250 ms retry interval
+      assert(!fut.isDone, "compactIndex must wait for the centroids lock")
+      assert(layout() === grown, "codes rewritten while the centroids lock was held")
+      assert(fs.rename(aside, cent))
+      Files.delete(lock)
+      fut.get(90, TimeUnit.SECONDS)
+    } finally {
+      Files.deleteIfExists(lock)
+      pool.shutdown()
+    }
+    assert(layout() === Map("label=0" -> 1, "label=1" -> 1),
+      s"compaction must leave ONE file per cluster: ${layout()}")
+    assert(spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq === before)
+    // a crash left in that window: the centroids are gone for good, and
+    // the partitioned codes must fail loudly, not compact flat
+    assert(fs.rename(cent, aside))
+    val e = intercept[IllegalStateException](Similarity.compactIndex(spark, path))
+    assert(e.getMessage.contains("centroids"))
+    assert(layout() === Map("label=0" -> 1, "label=1" -> 1),
+      s"a failed compaction must leave the codes as they were: ${layout()}")
+  }
 }
