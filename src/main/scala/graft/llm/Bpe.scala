@@ -128,7 +128,7 @@ object Bpe {
       (a: (Long, String, (String, String)), b: (Long, String, (String, String))) =>
         if (a._1 != b._1) java.lang.Long.compare(b._1, a._1)
         else if (a._2 == b._2) 0
-        else if (utf8Lt(a._2, b._2)) -1 else 1)
+        else if (Text.utf8Lt(a._2, b._2)) -1 else 1)
     def push(p: (String, String), n: Long): Unit =
       if (n >= 2L) heap.add((n, p._1 + " " + p._2, p))
     def addWord(w: Int, sign: Long): Unit = {
@@ -172,18 +172,6 @@ object Bpe {
       }
     }
     out.result()
-  }
-
-  /** `a < b` in UTF-8 byte order — Spark's UTF8String comparison. */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = (x(i) & 0xFF) - (y(i) & 0xFF)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
   }
 
   /** The [[applyMerge]] fold, driver-side: greedy leftmost-first, a
@@ -332,7 +320,7 @@ object Bpe {
   /** [[symbolIds]] from an already-built merged vocab frame. */
   private def symbolIdsOf(mergedVocab: DataFrame): Seq[(String, Long)] =
     mergedVocab.select(explode(col("syms")).as("sym")).distinct()
-      .collect().map(_.getString(0)).sortWith(utf8Lt)
+      .collect().map(_.getString(0)).sortWith(Text.utf8Lt)
       .zipWithIndex.map { case (s, i) => (s, (i + 1).toLong) }.toSeq
 
   /** Encode the corpus to its ordered BPE token-id stream

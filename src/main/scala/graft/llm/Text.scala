@@ -57,6 +57,19 @@ object Text {
     * in the llm_snapshot_delta oracle — one definition of "unchanged". */
   def contentHash(c: Column): Column = coalesce(md5(c), lit("__null__"))
 
+  /** `a < b` in UTF-8 byte order (Spark/DuckDB string order; Java
+    * compareTo is UTF-16 code-unit order and disagrees beyond the BMP).
+    * The driver-side order of the tokenizer trainers. */
+  private[llm] def utf8Lt(a: String, b: String): Boolean = {
+    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
+    var i = 0
+    while (i < x.length && i < y.length) {
+      if (x(i) != y(i)) return (x(i) & 0xff) < (y(i) & 0xff)
+      i += 1
+    }
+    x.length < y.length
+  }
+
   def hashedShingles(text: Column, n: Int = 3): Column =
     transform(shingles(words(text), n), s => md5Hash(s))
 

@@ -59,18 +59,6 @@ object Unigram {
       .select(explode(chunks(col("w0"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
-  /** UTF-8 byte order (Spark/DuckDB string order; Java compareTo is
-    * UTF-16 code-unit order and disagrees beyond the BMP). */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    while (i < x.length && i < y.length) {
-      if (x(i) != y(i)) return (x(i) & 0xff) < (y(i) & 0xff)
-      i += 1
-    }
-    x.length < y.length
-  }
-
   /** Driver-local Viterbi over one word: the segmentation maximizing
     * Σ score, ties to fewer pieces, then the UTF-8-smallest
     * space-joined piece string (total order shared with the
@@ -96,7 +84,7 @@ object Unigram {
             val cand = St(prev.sc + s, prev.np + 1, prev.seg :+ piece)
             if (cur == null || cand.sc > cur.sc ||
               (cand.sc == cur.sc && (cand.np < cur.np ||
-                (cand.np == cur.np && utf8Lt(cand.key, cur.key)))))
+                (cand.np == cur.np && Text.utf8Lt(cand.key, cur.key)))))
               cur = cand
           }
         }
@@ -127,7 +115,7 @@ object Unigram {
     }
     def before(a: St, b: St): Boolean =
       a.sc > b.sc || (a.sc == b.sc && (a.np < b.np ||
-        (a.np == b.np && utf8Lt(a.key, b.key))))
+        (a.np == b.np && Text.utf8Lt(a.key, b.key))))
     val best = Array.fill(w.length + 1)(Vector.empty[St])
     best(0) = Vector(St(0L, 0, Vector.empty))
     var j = 1
@@ -213,7 +201,7 @@ object Unigram {
     val chars = sub.iterator.filter(_._1.length == 1).toMap
     val multi = sub.iterator.filter(p => p._1.length > 1 && p._2 >= minCount)
       .toSeq
-      .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && utf8Lt(a._1, b._1)))
+      .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && Text.utf8Lt(a._1, b._1)))
       .take(seedSize)
     var counts: Map[String, Long] = chars ++ multi
     for (_ <- 1 to rounds) {
@@ -231,7 +219,7 @@ object Unigram {
       }.toMap
     }
     val total = counts.valuesIterator.sum
-    counts.toSeq.sortWith((a, b) => utf8Lt(a._1, b._1))
+    counts.toSeq.sortWith((a, b) => Text.utf8Lt(a._1, b._1))
       .map { case (p, c) => (p, c, microLn(c, total)) }
   }
 
@@ -246,7 +234,7 @@ object Unigram {
     *    distinct-chunk table (overlapping occurrences each count, the
     *    driver loop's semantics), with the multi-piece seed selected
     *    by a global TakeOrdered (count desc, UTF-8 asc — Spark's
-    *    binary string order IS utf8Lt) capped at `seedSize`;
+    *    binary string order IS Text.utf8Lt) capped at `seedSize`;
     *  - each EM round's E-step segments every distinct chunk with the
     *    DISTRIBUTED bounded-depth Viterbi ([[segmentWords]], already
     *    spec'd equal to the driver DP's total order) and re-counts
@@ -307,7 +295,7 @@ object Unigram {
       }.toMap
     }
     val total = counts.valuesIterator.sum
-    counts.toSeq.sortWith((a, b) => utf8Lt(a._1, b._1))
+    counts.toSeq.sortWith((a, b) => Text.utf8Lt(a._1, b._1))
       .map { case (p, c) => (p, c, microLn(c, total)) }
   }
 
@@ -367,12 +355,12 @@ object Unigram {
       (p, c, c * (s - alt))
     }
     val kept = multi.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 &&
-        (a._2 > b._2 || (a._2 == b._2 && utf8Lt(a._1, b._1)))))
+        (a._2 > b._2 || (a._2 == b._2 && Text.utf8Lt(a._1, b._1)))))
       .take(math.max(0, vocabSize - chars.size))
     val all = chars.map(c => (c._1, c._2, None: Option[Long])) ++
       kept.map(m => (m._1, m._2, Some(m._3)))
     val total = all.iterator.map(_._2).sum
-    all.sortWith((a, b) => utf8Lt(a._1, b._1))
+    all.sortWith((a, b) => Text.utf8Lt(a._1, b._1))
       .map { case (p, c, lo) => (p, c, lo, microLn(c, total)) }
   }
 
@@ -520,7 +508,7 @@ object Unigram {
     val rows = spark.read.parquet(s"$path/unigram").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     require(rows.nonEmpty, s"readTokenizer: no piece rows at $path/unigram")
-    rows.sortWith((a, b) => utf8Lt(a._1, b._1)).toSeq
+    rows.sortWith((a, b) => Text.utf8Lt(a._1, b._1)).toSeq
   }
 
   /** Sentinel score for characters ABSENT from a frozen tokenizer's

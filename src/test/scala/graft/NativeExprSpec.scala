@@ -17,25 +17,24 @@ class NativeExprSpec extends SparkSpec {
     g.pureApply(Gen.Parameters.default, Seed(seed)).toArray
   }
 
-  private val vecs = (0 until 50).map(i => (i.toLong, floats(64, i + 1))).toDF("id", "e")
+  // the differentials' inputs are RDDs, not local Seqs: the optimizer
+  // folds a projection over a LocalRelation interpreted
+  // (ConvertToLocalRelation), so the CODEGEN_ONLY arm would never run
+  // the generated code
+  private def rdd[T: scala.reflect.ClassTag](rows: Seq[T]) = spark.sparkContext.parallelize(rows, 2)
 
-  test("QuantizedDot == quantize+zip_with+aggregate on random vectors (both eval paths)") {
-    val pairs = vecs.as("x").crossJoin(vecs.as("y"))
-      .select(NativeFns.qdot(col("x.e"), col("y.e")).as("native"),
-        Similarity.dotQHof(Similarity.quantize(col("x.e")), Similarity.quantize(col("y.e"))).as("hof"))
-    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try assert(pairs.filter(col("native") =!= col("hof")).count() == 0, s"mode $mode")
-      finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-  }
+  private val vecs = rdd((0 until 50).map(i => (i.toLong, floats(64, i + 1)))).toDF("id", "e")
 
   test("LongDot == zip_with+aggregate; null propagates") {
     val q = vecs.select(Similarity.quantize(col("e")).as("eq"))
     val out = q.as("x").crossJoin(q.as("y"))
       .select(NativeFns.longDot(col("x.eq"), col("y.eq")).as("native"),
         Similarity.dotQHof(col("x.eq"), col("y.eq")).as("hof"))
-    assert(out.filter(col("native") =!= col("hof")).count() == 0)
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try assert(out.filter(col("native") =!= col("hof")).count() == 0, s"mode $mode")
+      finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
     val n = spark.sql("SELECT 1").select(
       NativeFns.longDot(lit(null).cast("array<bigint>"), array(lit(1L))).as("v"))
     assert(n.collect()(0).isNullAt(0))
@@ -45,8 +44,8 @@ class NativeExprSpec extends SparkSpec {
     val f = vecs.select(NativeFns.quantizeArr(col("e")).as("native"),
       Similarity.quantizeHof(col("e")).as("hof"))
     // double arrays too — the spec helpers build Seq[Double] embeddings
-    val dv = (0 until 40).map(i => (i.toLong,
-      floats(16, i + 900).map(_.toDouble * 3.7))).toDF("id", "e")
+    val dv = rdd((0 until 40).map(i => (i.toLong,
+      floats(16, i + 900).map(_.toDouble * 3.7)))).toDF("id", "e")
     val d = dv.select(NativeFns.quantizeArr(col("e")).as("native"),
       Similarity.quantizeHof(col("e")).as("hof"))
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
@@ -97,11 +96,11 @@ class NativeExprSpec extends SparkSpec {
     // NaN latches as the max in BOTH positions (array_max's ordering
     // treats NaN as greater than any double; a plain `>` comparison
     // would make the result order-dependent) — both eval paths
-    val nanRows = Seq(
+    val nanRows = rdd(Seq(
       (Seq(1.0f, Float.NaN), "nan-last"),
       (Seq(Float.NaN, 1.0f), "nan-first"),
       (Seq(Float.NaN, Float.NaN), "all-nan"),
-      (Seq(5.0f, Float.NaN, 2.0f), "nan-mid")).toDF("v", "tag")
+      (Seq(5.0f, Float.NaN, 2.0f), "nan-mid"))).toDF("v", "tag")
     val nanDiff = nanRows.select(col("tag"),
       NativeFns.absMaxArr(col("v")).as("native"),
       Similarity.absMaxHof(col("v")).as("hof"))
@@ -184,9 +183,9 @@ class NativeExprSpec extends SparkSpec {
   test("Sq8Encode/Sq8Decode == zip_with chains on random vectors incl. out-of-range (both eval paths)") {
     // grid trained on HALF the rows so the rest exercise the clamp;
     // one degenerate dim (vdiff = 0)
-    val dv = (0 until 60).map(i => (i.toLong,
+    val dv = rdd((0 until 60).map(i => (i.toLong,
       floats(8, i + 500).map(f => if (i % 2 == 0) f else f * 3f)
-        .updated(3, 0.25f))).toDF("id", "e")
+        .updated(3, 0.25f)))).toDF("id", "e")
     val quant = Similarity.sq8Train(dv.filter(col("id") % 2 === 0), "e")
     assert(quant(3)._2 == 0L, "dim 3 must be degenerate")
     val q = dv.select(Similarity.quantize(col("e")).as("q"))
@@ -242,10 +241,10 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("MinHashSig == minHashSignature on random shingle sets; empty => null") {
-    val texts = (0 until 80).map { i =>
+    val texts = rdd((0 until 80).map { i =>
       val words = (0 until (5 + i % 40)).map(j => s"w${(i * 31 + j * 7) % 50}")
       (i.toLong, words.mkString(" "))
-    }.toDF("id", "text")
+    }).toDF("id", "text")
     val hs = texts
       .withColumn("w", Text.words(col("text")))
       .withColumn("sh", Text.shingles(col("w")))
@@ -270,9 +269,9 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("SimHashExpr == HOF simHash on random word sets (both eval paths)") {
-    val texts = (0 until 60).map { i =>
+    val texts = rdd((0 until 60).map { i =>
       (i.toLong, (0 until (4 + i % 30)).map(j => s"t${(i * 13 + j * 3) % 40}").mkString(" "))
-    }.toDF("id", "text")
+    }).toDF("id", "text")
       .withColumn("wh", transform(Text.words(col("text")), w => Text.md5Hash(w)))
     val both = texts.select(NativeFns.simHash(col("wh")).as("native"),
       Dedup.simHash(col("wh")).as("hof"))
@@ -622,13 +621,14 @@ class NativeExprSpec extends SparkSpec {
         NativeFns.gopherRep(col("text")),
         NativeFns.simHash(Text.hashedShingles(col("text"), 2)),
         NativeFns.minHashSig(Text.hashedShingles(col("text"), 3)),
-        NativeFns.morton2(col("doc_id"), col("doc_id"))).collect()
+        NativeFns.morton2(col("doc_id"), col("doc_id")),
+        NativeFns.morton3(col("doc_id"), col("doc_id"), col("doc_id")),
+        NativeFns.searchSorted(col("doc_id"), Seq(0.5, 1.5, 9.0))).collect()
       Seq((1L, Seq.fill(8)(0.5f))).toDF("id", "e")
         .write.parquet(s"$dir/vecs")
       val q = spark.read.parquet(s"$dir/vecs")
         .select(col("e"), Similarity.quantize(col("e")).as("q"))
       q.select(NativeFns.longDot(col("q"), col("q")),
-        NativeFns.qdot(col("e"), col("e")),
         NativeFns.quantizeArr(col("e")),
         NativeFns.sq8Decode(NativeFns.sq8Encode(col("q"),
           Seq(0L -> 100L, 1L -> 200L)), Seq(0L -> 100L, 1L -> 200L)),
@@ -639,6 +639,8 @@ class NativeExprSpec extends SparkSpec {
         // only the reference-object kernel survives codegen here
         NativeFns.argminCentroid(col("q"), (0L until 600L).map(l =>
           l -> Seq.tabulate(8)(i => (l + i) % 37))),
+        NativeFns.topNCentroids(col("q"), (0L until 600L).map(l =>
+          l -> Seq.tabulate(8)(i => (l + i) % 37)), 3),
         NativeFns.ivfProbe(col("q"), for (l <- 0L until 600L; p <- 0 until 8)
           yield (l, p, (l + p) % 37, 1L + l % 5), 3),
         NativeFns.pqAdc(concat(NativeFns.pqSubLut(col("q"),
@@ -660,5 +662,36 @@ class NativeExprSpec extends SparkSpec {
       ctx.updateLoggers()
       app.stop()
     }
+  }
+
+  test("source scan: every kernel doGenCode emits one kernel-method call and no loop") {
+    // one implementation per kernel: a loop or kernel body written out
+    // as Java in doGenCode is a second copy of the interpreted path,
+    // kept in step only by the both-mode differentials above
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get("src/main/scala/graft/expr/kernels")
+    assert(Files.isDirectory(dir), s"run from the repository root: no $dir")
+    val files = {
+      val st = Files.list(dir)
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    }
+    val kernel = "case class (\\w+)".r
+    val call = "graft\\.expr\\.kernels\\.\\w+\\.\\w+\\(".r
+    val scanned = files.flatMap { p =>
+      val src = Files.readString(p)
+      "override protected def doGenCode".r.findAllMatchIn(src).map { m =>
+        val name = kernel.findAllMatchIn(src.substring(0, m.start)).map(_.group(1)).toSeq.last
+        val end = src.indexOf("withNewChild", m.end)
+        name -> src.substring(m.end, if (end < 0) src.length else end)
+      }
+    }
+    assert(scanned.size >= 20, s"found only ${scanned.size} doGenCode bodies")
+    val offenders = scanned.collect { case (name, body)
+      if body.contains("for (") || body.contains("while (") ||
+        call.findAllMatchIn(body).size != 1 => name }
+    assert(offenders.isEmpty, s"${offenders.size} kernels write their body in doGenCode " +
+      s"instead of calling one method the interpreted path shares: ${offenders.mkString(", ")}")
   }
 }

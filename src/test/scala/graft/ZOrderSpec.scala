@@ -36,14 +36,21 @@ class ZOrderSpec extends SparkSpec {
 
   test("native morton2/morton3 == composed-Column twins == reference; null-safe; SQL-callable") {
     val rnd = new scala.util.Random(11)
-    val df = Seq.fill(300)((rnd.nextLong().abs % (1L << 31),
-        rnd.nextLong().abs % (1L << 31))).toDF("a", "b")
+    // an RDD, not a local Seq, so the optimizer cannot fold the
+    // projection interpreted and CODEGEN_ONLY really runs generated code
+    val df = spark.sparkContext.parallelize(Seq.fill(300)((rnd.nextLong().abs % (1L << 31),
+        rnd.nextLong().abs % (1L << 31))), 2).toDF("a", "b")
       .select(col("a"), col("b"),
         ZOrder.zvalue2(col("a"), col("b")).as("zn"),
         ZOrder.zvalue2Composed(col("a"), col("b")).as("zc"),
         ZOrder.zvalue3(col("a") % (1L << 21), col("b") % (1L << 21), lit(7L)).as("z3n"),
         ZOrder.zvalue3Composed(col("a") % (1L << 21), col("b") % (1L << 21), lit(7L)).as("z3c"))
-    assert(df.filter(col("zn") =!= col("zc") || col("z3n") =!= col("z3c")).count() == 0)
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try assert(df.filter(col("zn") =!= col("zc") || col("z3n") =!= col("z3c")).count() == 0,
+        s"mode $mode")
+      finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
     // null propagates, not crashes
     val nu = Seq((Some(1L), Option.empty[Long])).toDF("a", "b")
       .select(ZOrder.zvalue2(col("a"), col("b")).as("z")).collect()
@@ -95,10 +102,14 @@ class ZOrderSpec extends SparkSpec {
     val bounds = Seq(1.0, 2.5, 7.0, 100.0)
     def refCell(v: Double): Long = bounds.count(_ <= v).toLong
     val vs = Seq(-5.0, 0.99, 1.0, 1.01, 2.5, 3.0, 7.0, 99.9, 100.0, 1e9)
-    val df = vs.toDF("v")
+    val df = spark.sparkContext.parallelize(vs, 2).toDF("v")
       .withColumn("c", graft.expr.kernels.NativeFns.searchSorted(col("v"), bounds))
-    df.collect().foreach { r =>
-      assert(r.getLong(1) == refCell(r.getDouble(0)), s"v=${r.getDouble(0)}")
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      // a fresh Dataset per mode, so each mode plans its own projection
+      try df.select(col("v"), col("c")).collect().foreach { r =>
+        assert(r.getLong(1) == refCell(r.getDouble(0)), s"v=${r.getDouble(0)} mode $mode")
+      } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
     val nu = Seq(Option.empty[Double]).toDF("v")
       .select(graft.expr.kernels.NativeFns.searchSorted(col("v"), bounds)).collect()
