@@ -229,6 +229,115 @@ object Tables {
       }
     }
 
+  /** A persisted vector index's generation token: one
+    * `_INDEX_GEN-<n>-<id>` file at the index root (underscore-prefixed,
+    * so parquet readers skip it). Every graft writer of the index
+    * stamps a fresh token inside the lock it holds, before its first
+    * write ([[withIndexLock]], [[readMergePublishIndex]]), so a writer
+    * that fails half way never leaves changed files under the old
+    * token. `n` counts the index's writes and `id` is random, as
+    * [[renamePublish]] names its dirs: a token is unique per write, and
+    * an index deleted and rebuilt at the same path never matches a
+    * handle of the old one. */
+  private val IndexGenPrefix = "_INDEX_GEN-"
+
+  private def stampIndexGeneration(spark: SparkSession, root: String): Unit = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old =
+      if (!fs.exists(rootPath)) Seq.empty
+      else fs.listStatus(rootPath).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith(IndexGenPrefix))
+    val n = old.flatMap(_.getName.stripPrefix(IndexGenPrefix).takeWhile(_ != '-')
+      .toLongOption).maxOption.getOrElse(0L) + 1L
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    fs.create(new org.apache.hadoop.fs.Path(rootPath, s"$IndexGenPrefix$n-$id"), false).close()
+    old.foreach(fs.delete(_, false))
+  }
+
+  /** The index's token when what a reader opens now may be reused under
+    * it: one listing of the root shows exactly one token and no
+    * writer's `__lock` (the index stores' locks sit in the root). None
+    * for a missing root, an index no graft writer stamped, or a writer
+    * inside its window. */
+  private def indexGeneration(spark: SparkSession, root: String): Option[String] = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names =
+      try fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val tokens = names.filter(_.startsWith(IndexGenPrefix))
+    if (tokens.size == 1 && !names.exists(_.endsWith("__lock"))) tokens.headOption
+    else None
+  }
+
+  /** Run an index writer's `write` under the lock of its store
+    * `root/store`, with a fresh generation token stamped first. */
+  private[graft] def withIndexLock[T](spark: SparkSession, root: String,
+                                      store: String)(write: => T): T =
+    withStoreLock(spark, s"$root/$store") {
+      stampIndexGeneration(spark, root)
+      write
+    }
+
+  /** [[readMergePublish]] on the index's `centroids` store, the IVF
+    * append window: a batch that is not a replay stamps a fresh token
+    * before `merge` writes anything. */
+  private[graft] def readMergePublishIndex(spark: SparkSession, root: String,
+                                           batchTag: Option[String])(
+      merge: Option[Long] => DataFrame): Unit =
+    readMergePublish(spark, s"$root/centroids", batchTag) { gen =>
+      stampIndexGeneration(spark, root)
+      merge(gen)
+    }
+
+  /** [[restoreOrphanedPartitions]] on a store of an index, stamping a
+    * fresh token when a partition came back (a live change). The
+    * caller holds the index's lock. */
+  private[graft] def restoreIndexPartitions(spark: SparkSession, root: String,
+                                            store: String): Seq[String] = {
+    val restored = restoreOrphanedPartitions(spark, s"$root/$store")
+    if (restored.nonEmpty) stampIndexGeneration(spark, root)
+    restored
+  }
+
+  /** Index handles by (session, index root, kind), each with the token
+    * it was opened under; the least recently used past
+    * [[MaxOpenIndexes]] are dropped. */
+  private val MaxOpenIndexes = 32
+  private val openIndexes =
+    new java.util.LinkedHashMap[(SparkSession, String, String), (String, AnyRef)](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, String, String), (String, AnyRef)]
+      ): Boolean = size() > MaxOpenIndexes
+    }
+
+  /** The one open of a persisted index for serving. While the root's
+    * token stays the same, every call in a session gets the handle the
+    * first one opened, for the cost of one driver-side listing of the
+    * root. Otherwise `open` runs — it must read everything the handle
+    * holds — between two reads of the token, and its handle is kept
+    * only when both reads gave the same token and no writer's lock. An
+    * unstamped index, or one a writer holds, is opened afresh on every
+    * call. `kind` names what `open` builds (callers key one handle
+    * type per kind). */
+  private[graft] def openPinned[H <: AnyRef](spark: SparkSession, root: String,
+                                             kind: String)(open: => H): H = {
+    val key = (spark, root, kind)
+    val before = indexGeneration(spark, root)
+    val kept = before.flatMap { t =>
+      openIndexes.synchronized(Option(openIndexes.get(key)))
+        .collect { case (`t`, h) => h.asInstanceOf[H] }
+    }
+    kept.getOrElse {
+      val h = open
+      if (before.nonEmpty && indexGeneration(spark, root) == before)
+        openIndexes.synchronized(openIndexes.put(key, (before.get, h)))
+      h
+    }
+  }
+
   /** The two-rename publish shared by every whole-store rewrite
     * ([[swapInParquet]], the compactions): `writer` writes the new
     * content to a sibling `__next_*` dir, `stamp` adds bookkeeping

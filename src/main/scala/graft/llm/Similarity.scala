@@ -449,7 +449,10 @@ object Similarity {
     *
     * Every serve ends in [[pqCoarseRescore]]. Create and replace writes
     * (`persist*`, [[writeAdc]]) overwrite under the same lock as the
-    * layout's appends, so a persist and an append serialize. */
+    * layout's appends, so a persist and an append serialize. Every
+    * writer stamps a fresh generation token at the index root
+    * ([[graft.io.Tables.withIndexLock]]), and the `read*Index` calls
+    * reuse one [[AdcIndex]] per token ([[openAdc]]). */
   private sealed trait AdcCodec {
     /** The artifact's directory under the index path. */
     def dir: String
@@ -567,8 +570,8 @@ object Similarity {
     * encodes against one artifact and lands beside another's codes. */
   private def writeAdc(path: String, codec: AdcCodec, cent: Option[DataFrame],
                        codes: DataFrame): Unit =
-    graft.io.Tables.withStoreLock(codes.sparkSession,
-        s"$path/${if (cent.isDefined) "centroids" else "codes"}") {
+    graft.io.Tables.withIndexLock(codes.sparkSession, path,
+        if (cent.isDefined) "centroids" else "codes") {
       cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
       codec.artifact(codes.sparkSession).write.mode("overwrite")
         .parquet(s"$path/${codec.dir}")
@@ -586,11 +589,47 @@ object Similarity {
       (if (ivf) w.partitionBy("label") else w).parquet(s"$path/codes")
     }
 
-  /** The one read body: the artifact (its one reader) and the codes. */
-  private def readAdc[A](spark: SparkSession, path: String,
-                         kind: AdcArtifact[A]): (A, DataFrame) =
-    (kind.parse(spark.read.parquet(s"$path/${kind.dir}").collect()),
-      spark.read.parquet(s"$path/codes"))
+  /** An ADC index's parts as read from `path`: the codec artifacts
+    * (their one reader), the `codes` frame, whose file index holds the
+    * store's listing, and the IVF centroid sum table collected to the
+    * driver. Each part is read on first use. */
+  private final class AdcIndex(spark: SparkSession, path: String) {
+    private val artifacts = scala.collection.concurrent.TrieMap.empty[String, Any]
+    def artifact[A](kind: AdcArtifact[A]): A = artifacts.getOrElseUpdate(kind.dir,
+      kind.parse(spark.read.parquet(s"$path/${kind.dir}").collect())).asInstanceOf[A]
+    lazy val codes: DataFrame = spark.read.parquet(s"$path/codes")
+    /** A driver-local frame of the centroid rows, whose probe rows
+      * [[centroidRows]] finds without another collect. */
+    lazy val centroids: DataFrame = {
+      val stored = spark.read.parquet(s"$path/centroids")
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+      openCentroidRows.put(local, centroidRows(local))
+      local
+    }
+  }
+
+  /** The probe rows of every centroid frame an [[AdcIndex]] handed out,
+    * by frame identity (a Dataset has no value equality). */
+  private val openCentroidRows = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Array[(Long, Int, Long, Long)]]())
+
+  /** The one open of an ADC index for serving: every part of the
+    * index, centroids included when the layout is IVF, read once per
+    * generation token and reused by later calls in the session
+    * ([[graft.io.Tables.openPinned]]). A serve against an unchanged
+    * index then runs no Spark job before scoring. */
+  private def openAdc(spark: SparkSession, path: String,
+                      kind: AdcArtifact[_]): AdcIndex =
+    graft.io.Tables.openPinned(spark, path, kind.dir) {
+      val idx = new AdcIndex(spark, path)
+      idx.artifact(kind)
+      idx.codes
+      val cent = new org.apache.hadoop.fs.Path(s"$path/centroids")
+      if (cent.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cent))
+        idx.centroids
+      idx
+    }
 
   /** An IVF append's batch: its cell column (None labels each vector
     * with its nearest current centroid, [[assignClusters]]) and its
@@ -598,26 +637,27 @@ object Similarity {
   private final case class IvfBatch(labelCol: Option[String],
                                     batchTag: Option[String])
 
-  /** The one append body, flat when `ivf` is None. `codec` is read
-    * from the index inside the store lock or publish window. */
+  /** The one append body, flat when `ivf` is None. `codec` is built
+    * from the index as read inside the store lock or publish window. */
   private def appendAdc(df: DataFrame, idCol: String, embCol: String,
-                        path: String, codec: => AdcCodec,
+                        path: String, codec: AdcIndex => AdcCodec,
                         ivf: Option[IvfBatch]): Unit = {
     val spark = df.sparkSession
+    def guarded(idx: AdcIndex) = appendGuard(codec(idx), idx.codes, path)
     ivf match {
       case None =>
-        graft.io.Tables.withStoreLock(spark, s"$path/codes") {
-          writeCodes(encodeRows(appendGuard(spark, codec, path), df, idCol, embCol),
+        graft.io.Tables.withIndexLock(spark, path, "codes") {
+          writeCodes(encodeRows(guarded(new AdcIndex(spark, path)), df, idCol, embCol),
             path, ivf = false, append = true)
         }
       case Some(IvfBatch(labelCol, batchTag)) =>
-        graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
-          val c = appendGuard(spark, codec, path)
+        graft.io.Tables.readMergePublishIndex(spark, path, batchTag) { _ =>
+          val idx = new AdcIndex(spark, path)
+          val c = guarded(idx)
           val (labeled, lc) = labelCol match {
             case Some(lc) => (df, lc)
             case None =>
-              val assigned = assignClusters(df, idCol, embCol,
-                  spark.read.parquet(s"$path/centroids"))
+              val assigned = assignClusters(df, idCol, embCol, idx.centroids)
                 .select(col(idCol).as("__cid"), col("label").as("__albl"))
               (df.join(assigned, col(idCol) === col("__cid")).drop("__cid"), "__albl")
           }
@@ -635,7 +675,7 @@ object Similarity {
     * the code length against ONE stored code row, since the artifact
     * alone cannot catch a wrong-but-divisible m (m=2 against an m=4
     * index at the same dim). Returns `codec`. */
-  private def appendGuard(spark: SparkSession, codec: AdcCodec,
+  private def appendGuard(codec: AdcCodec, codes: DataFrame,
                           path: String): AdcCodec = {
     def mismatch(what: String, n: Int) =
       s"append: ${codec.shape} does not match the index at $path — $what " +
@@ -643,7 +683,7 @@ object Similarity {
     require(codec.artifactDims.nonEmpty, s"append: no ${codec.dir} found under $path")
     val bad = codec.artifactDims.find(_ != codec.dim)
     require(bad.isEmpty, mismatch(s"${codec.dir} vectors have", bad.get))
-    spark.read.parquet(s"$path/codes").select(size(col("codes"))).head(1)
+    codes.select(size(col("codes"))).head(1)
       .foreach(r => require(r.getInt(0) == codec.codeLen,
         mismatch("stored code arrays have", r.getInt(0))))
     codec
@@ -705,12 +745,14 @@ object Similarity {
   def appendToPqIndex(df: DataFrame, idCol: String, embCol: String,
                       path: String, m: Int = 4, dim: Int = 64): Unit =
     appendAdc(df, idCol, embCol, path,
-      PqCodec(readAdc(df.sparkSession, path, PqCodec)._1, m, dim), None)
+      idx => PqCodec(idx.artifact(PqCodec), m, dim), None)
 
   /** Reload a persisted PQ index → (codebooks map, codes frame). */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  path: String): (Map[Long, IndexedSeq[Long]], DataFrame) =
-    readAdc(spark, path, PqCodec)
+                  path: String): (Map[Long, IndexedSeq[Long]], DataFrame) = {
+    val idx = openAdc(spark, path, PqCodec)
+    (idx.artifact(PqCodec), idx.codes)
+  }
 
   /** Trained per-dimension scalar quantizer (the FAISS ScalarQuantizer
     * QT_8bit family — public method): per-dim [vmin, vmax] learned
@@ -805,7 +847,7 @@ object Similarity {
   def appendToSq8Index(df: DataFrame, idCol: String, embCol: String,
                        path: String, dim: Int = 64): Unit =
     appendAdc(df, idCol, embCol, path,
-      Sq8Codec(readAdc(df.sparkSession, path, Sq8Codec)._1, dim), None)
+      idx => Sq8Codec(idx.artifact(Sq8Codec), dim), None)
 
   /** [[appendToSq8Index]] against a grid the caller loaded earlier —
     * the streamed SQ8 sink's batch write, which freezes the grid at
@@ -813,12 +855,14 @@ object Similarity {
   private[graft] def appendToSq8IndexWith(df: DataFrame, idCol: String,
                                           embCol: String, path: String,
                                           quant: IndexedSeq[(Long, Long)]): Unit =
-    appendAdc(df, idCol, embCol, path, Sq8Codec(quant), None)
+    appendAdc(df, idCol, embCol, path, _ => Sq8Codec(quant), None)
 
   /** Reload a persisted SQ8 index → (quantizer, codes frame). */
   def readSq8Index(spark: org.apache.spark.sql.SparkSession,
-                   path: String): (IndexedSeq[(Long, Long)], DataFrame) =
-    readAdc(spark, path, Sq8Codec)
+                   path: String): (IndexedSeq[(Long, Long)], DataFrame) = {
+    val idx = openAdc(spark, path, Sq8Codec)
+    (idx.artifact(Sq8Codec), idx.codes)
+  }
 
   /** Persist an IVF-SQ8 index — the FAISS `IndexIVFScalarQuantizer`
     * composition: coarse cells plus dim-byte scalar codes, the middle
@@ -842,7 +886,7 @@ object Similarity {
                           labelCol: Option[String] = None,
                           batchTag: Option[String] = None): Unit =
     appendAdc(df, idCol, embCol, path,
-      Sq8Codec(readAdc(df.sparkSession, path, Sq8Codec)._1, dim),
+      idx => Sq8Codec(idx.artifact(Sq8Codec), dim),
       Some(IvfBatch(labelCol, batchTag)))
 
   /** The side-file append of the IVF-family and graph-store appenders:
@@ -902,10 +946,15 @@ object Similarity {
     * ABSENT for the metadata-rename window, so a concurrent serving
     * read (which takes no lock) can fail with a missing path even
     * during a healthy compaction: loud and transient, never a torn
-    * read. Serving paths must tolerate-and-retry it. */
+    * read. Serving paths must tolerate-and-retry it. A compaction
+    * stamps a fresh generation token, so no `read*Index` call after it
+    * reuses a handle opened before it: the next serve opens the
+    * compacted store. A frame taken from an older handle and kept (a
+    * stream pins its index at start) still lists the replaced files and
+    * fails loudly on its next scan; read the index again. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      graft.io.Tables.withStoreLock(spark, s"$path/codes") {
+      graft.io.Tables.withIndexLock(spark, path, "codes") {
         val fs = new org.apache.hadoop.fs.Path(path)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         def store(d: String) = new org.apache.hadoop.fs.Path(s"$path/$d")
@@ -919,7 +968,7 @@ object Similarity {
             throw new IllegalStateException(s"compactIndex: $path/codes is " +
               "partitioned by label but its centroids store is missing (a " +
               "crashed IVF swap); restore centroids before compacting")
-          val n = spark.read.parquet(s"$path/codes").count()
+          val n = new AdcIndex(spark, path).codes.count()
           graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
             math.max(1L, (n + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt)
         }
@@ -944,14 +993,15 @@ object Similarity {
     * [[graft.io.Tables.replacePartitions]]'s rename window an
     * `edges__old_*` partition dir may be the ONLY copy of a store
     * partition — sweeping it would destroy the recovery copy. The
-    * sweep therefore runs [[graft.io.Tables.restoreOrphanedPartitions]]
-    * on edges FIRST; what remains in `__old_*` is by construction a
-    * stale aside of a completed swap, safe to delete. Returns the
-    * deleted paths. */
+    * sweep therefore runs [[graft.io.Tables.restoreIndexPartitions]]
+    * on edges FIRST (a partition that comes back is the one live change
+    * a vacuum makes, and stamps a fresh generation token); what remains
+    * in `__old_*` is by construction a stale aside of a completed swap,
+    * safe to delete. Returns the deleted paths. */
   def vacuumIndexStores(spark: org.apache.spark.sql.SparkSession,
                         path: String): Seq[String] =
     graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
+      graft.io.Tables.restoreIndexPartitions(spark, path, "edges")
       val underCentroids =
         Seq("centroids", Sq8Codec.dir, PqCodec.dir, "vectors", "edges",
           "meta").flatMap { d =>
@@ -967,8 +1017,8 @@ object Similarity {
     * codes). */
   def readIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
                       path: String): (DataFrame, IndexedSeq[(Long, Long)], DataFrame) = {
-    val (quant, codes) = readAdc(spark, path, Sq8Codec)
-    (spark.read.parquet(s"$path/centroids"), quant, codes)
+    val idx = openAdc(spark, path, Sq8Codec)
+    (idx.centroids, idx.artifact(Sq8Codec), idx.codes)
   }
 
   /** IVF-SQ8 serving: the [[serveAdc]] body with the scalar codec and
@@ -2200,11 +2250,13 @@ object Similarity {
   }
 
   /** The centroid sum table as (label, pos, s, cnt) tuples — one
-    * bounded collect (nlist × dim rows). */
+    * bounded collect (nlist × dim rows), none for the centroid frame of
+    * an opened index ([[AdcIndex]]). */
   private def centroidRows(cent: DataFrame): Array[(Long, Int, Long, Long)] =
-    cent.select(col("label").cast("long"), col("pos").cast("int"),
-        col("s").cast("long"), col("cnt").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    Option(openCentroidRows.get(cent)).getOrElse(
+      cent.select(col("label").cast("long"), col("pos").cast("int"),
+          col("s").cast("long"), col("cnt").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))))
 
   /** Persist an IVFPQ index — the FAISS IVFPQ composition (Jégou,
     * Douze & Schmid, TPAMI 2011 §V; the non-residual variant, so every
@@ -2234,14 +2286,14 @@ object Similarity {
                          labelCol: String, path: String, m: Int = 4,
                          dim: Int = 64, batchTag: Option[String] = None): Unit =
     appendAdc(df, idCol, embCol, path,
-      PqCodec(readAdc(df.sparkSession, path, PqCodec)._1, m, dim),
+      idx => PqCodec(idx.artifact(PqCodec), m, dim),
       Some(IvfBatch(Some(labelCol), batchTag)))
 
   /** Load a persisted IVFPQ index → (centroids, codebooks, codes). */
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String): (DataFrame, Map[Long, IndexedSeq[Long]], DataFrame) = {
-    val (byLabel, codes) = readAdc(spark, path, PqCodec)
-    (spark.read.parquet(s"$path/centroids"), byLabel, codes)
+    val idx = openAdc(spark, path, PqCodec)
+    (idx.centroids, idx.artifact(PqCodec), idx.codes)
   }
 
   /** IVFPQ serving: the [[serveAdc]] body with the PQ codec and the

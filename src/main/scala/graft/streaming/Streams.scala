@@ -825,11 +825,12 @@ object Streams {
   /** Streaming ANN serving against a persisted IVFPQ index — the
     * online half of the index story: a stream of (qid, embedding)
     * query vectors is answered per micro-batch over the FROZEN index.
-    * The tiny tables (centroids, codebooks) load and pin once at
-    * stream start; the cluster-partitioned code store stays a lazy
-    * scan, so every micro-batch's probe still drives dynamic
-    * partition pruning — each batch reads only its probed clusters'
-    * code files, exactly the batch serving plan.
+    * The index opens once at stream start: the tiny tables (centroids,
+    * codebooks) are driver-side values from then on, and the
+    * cluster-partitioned code store keeps the file listing it had at
+    * the start but stays a lazy scan, so every micro-batch's probe
+    * still drives dynamic partition pruning — each batch reads only its
+    * probed clusters' code files, exactly the batch serving plan.
     *
     * `foreachBatch` rather than a stream-static join, deliberately:
     * ADC serving ends in per-query top-k rank windows, which have no
@@ -847,11 +848,10 @@ object Streams {
                     (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = queries.sparkSession
     val (cent, byCode, codes) = graft.llm.Similarity.readIvfPqIndex(spark, indexPath)
-    val centPinned = cent.localCheckpoint(true)
     queries.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = graft.llm.Similarity.ivfPqTopK(centPinned, byCode, codes,
+        val out = graft.llm.Similarity.ivfPqTopK(cent, byCode, codes,
           store, batch, qId, embCol, k, m, dim, coarse, nprobe)
         sink(out, batchId)
       }
@@ -871,9 +871,8 @@ object Streams {
                       coarse: Int = 20, nprobe: Int = 1): StreamingQuery = {
     val spark = queries.sparkSession
     val (cent, byCode, codes) = graft.llm.Similarity.readIvfPqIndex(spark, indexPath)
-    val centPinned = cent.localCheckpoint(true)
     startBatches(queries, checkpointDir) { (batch, batchId) =>
-      annServeBatch(batch, centPinned, byCode, codes, store, qId, embCol,
+      annServeBatch(batch, cent, byCode, codes, store, qId, embCol,
         k, m, dim, coarse, nprobe, ansTable, checkpointDir, batchId)
     }
   }

@@ -647,4 +647,32 @@ class RetrievalSpec extends SparkSpec {
     assert(sites(exact, cosine) === 1, "knnGraphExact keeps its own cosine")
     assert(sites(code, "partitionBy(\"home\")") === 1, "one graph edge writer")
   }
+
+  test("annIvfPqTopK: a second batch on an unchanged index skips the six open jobs") {
+    // 64 cells, so listing `codes/` is a parallel listing job, as in the
+    // ann_serve benchmark
+    val dim = 8
+    val df = (0 until 64).flatMap { c =>
+      (0 until 6).map(i => (c * 100L + i,
+        Seq.tabulate(dim)(d => ((c * 7 + d * 3 + i) % 17) * 0.05f - 0.4f), c.toLong))
+    }.toDF("vec_id", "embedding", "label")
+    val path = graft.util.Scratch.dir("ivfpq_open_jobs") + "/idx"
+    graft.Graft.persistIvfPqIndex(df, "vec_id", "embedding", "label", path,
+      m = 2, dim = dim)
+    val store = df.select(col("vec_id").as("cid"),
+      Similarity.quantize(col("embedding")).as("ce"))
+    val queries = df.filter(col("vec_id") % 100 === 2)
+    var answers = Seq.empty[Seq[org.apache.spark.sql.Row]]
+    def serve(): Int = graft.SparkJobs.count(spark) {
+      answers :+= graft.Graft.annIvfPqTopK(spark, path, store, queries,
+        "vec_id", "embedding", k = 3, m = 2, dim = dim, coarse = 10, nprobe = 2)
+        .orderBy("qid", "rank").collect().toSeq
+    }
+    val (first, second) = (serve(), serve())
+    // the open: codebooks schema + collect, codes listing + schema,
+    // centroids schema + collect
+    assert(first - second === 6,
+      s"first batch ran $first jobs, second $second: the second must skip the index open")
+    assert(answers(0) === answers(1))
+  }
 }

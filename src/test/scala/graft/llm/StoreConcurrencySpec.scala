@@ -943,6 +943,92 @@ class StoreConcurrencySpec extends SparkSpec {
       "the refused persist must leave the store untouched")
   }
 
+  test("a reused index handle serves what a fresh session reads, after every index writer") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    val dim = 8
+    def vec(i: Long) = Seq.tabulate(dim)(d => ((i * (d + 3) + d) % 13) * 0.05f - 0.3f)
+    def frame(s: SparkSession, ids: Seq[Long]) =
+      s.createDataFrame(ids.map(i => (i, vec(i), i % 4))).toDF("vec_id", "embedding", "label")
+    def queries(s: SparkSession) = frame(s, 1000L until 1008L)
+    // every id any phase writes, so the exact rescore finds each candidate
+    def store(s: SparkSession) = frame(s, (0L until 400L) ++ (1000L until 1008L))
+      .select(col("vec_id").as("cid"), Similarity.quantize(col("embedding")).as("ce"))
+    def ivfServe(s: SparkSession, path: String): Seq[Row] =
+      graft.Graft.annIvfPqTopK(s, path, store(s), queries(s), "vec_id", "embedding",
+        k = 4, m = 2, dim = dim, coarse = 12, nprobe = 2)
+        .orderBy("qid", "rank").collect().toSeq
+    def sq8Serve(s: SparkSession, path: String): Seq[Row] = {
+      val (quant, codes) = Similarity.readSq8Index(s, path)
+      Similarity.sq8Serve(quant, codes, store(s), queries(s), "vec_id", "embedding",
+        k = 4, coarse = 12).orderBy("qid", "rank").collect().toSeq
+    }
+    def deleteRoot(path: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    val cases = Seq[(String, (SparkSession, String) => Seq[Row], Seq[(String, String => Unit)])](
+      ("IVF-PQ", ivfServe, Seq(
+        "persist" -> (p => Similarity.persistIvfPqIndex(frame(spark, 0L until 60L),
+          "vec_id", "embedding", "label", p, m = 2, dim = dim)),
+        "persist of other vectors" -> (p => Similarity.persistIvfPqIndex(
+          frame(spark, 100L until 160L), "vec_id", "embedding", "label", p, m = 2, dim = dim)),
+        "tagged append" -> (p => Similarity.appendToIvfPqIndex(frame(spark, 1000L until 1008L),
+          "vec_id", "embedding", "label", p, m = 2, dim = dim, batchTag = Some("t1"))),
+        "its replay" -> (p => Similarity.appendToIvfPqIndex(frame(spark, 1000L until 1008L),
+          "vec_id", "embedding", "label", p, m = 2, dim = dim, batchTag = Some("t1"))),
+        "untagged append" -> (p => Similarity.appendToIvfPqIndex(frame(spark, 160L until 180L),
+          "vec_id", "embedding", "label", p, m = 2, dim = dim)),
+        "compactIndex" -> (p => Similarity.compactIndex(spark, p)),
+        "vacuumIndexStores" -> (p => Similarity.vacuumIndexStores(spark, p)),
+        "delete the root, then persist" -> { p =>
+          deleteRoot(p)
+          Similarity.persistIvfPqIndex(frame(spark, 200L until 260L),
+            "vec_id", "embedding", "label", p, m = 2, dim = dim)
+        })),
+      ("flat SQ8", sq8Serve, Seq(
+        "persist" -> (p => Similarity.persistSq8Index(frame(spark, 0L until 60L),
+          "vec_id", "embedding", p)),
+        "persist of other vectors" -> (p => Similarity.persistSq8Index(
+          frame(spark, 100L until 160L), "vec_id", "embedding", p)),
+        "untagged flat append" -> (p => Similarity.appendToSq8Index(
+          frame(spark, 1000L until 1008L), "vec_id", "embedding", p, dim = dim)),
+        "second flat append" -> (p => Similarity.appendToSq8Index(
+          frame(spark, 160L until 180L), "vec_id", "embedding", p, dim = dim)),
+        "compactIndex" -> (p => Similarity.compactIndex(spark, p)),
+        "vacuumIndexStores" -> (p => Similarity.vacuumIndexStores(spark, p)),
+        "delete the root, then persist" -> { p =>
+          deleteRoot(p)
+          Similarity.persistSq8Index(frame(spark, 200L until 260L), "vec_id", "embedding", p)
+        })))
+    for ((name, serve, writers) <- cases) {
+      val path = Files.createTempDirectory("handle_gen_").toString + "/idx"
+      var answers = Seq.empty[Seq[Row]]
+      for ((writer, write) <- writers) {
+        write(path)
+        val reused = serve(spark, path)
+        assert(reused === serve(spark.newSession(), path),
+          s"$name after $writer: the session's serve differs from a fresh session's")
+        assert(reused.nonEmpty, s"$name after $writer")
+        answers :+= reused
+      }
+      assert(answers.distinct.size >= 3,
+        s"$name: the writers must change the answers for this check to bite")
+    }
+
+    // a serve while a writer's lock is held reads afresh and keeps nothing
+    val path = Files.createTempDirectory("handle_lock_").toString + "/idx"
+    Similarity.persistIvfPqIndex(frame(spark, 0L until 60L), "vec_id", "embedding",
+      "label", path, m = 2, dim = dim)
+    val lock = java.nio.file.Paths.get(s"$path/centroids__lock")
+    Files.createFile(lock)
+    val underLock = try ivfServe(spark, path) finally Files.delete(lock)
+    assert(underLock === ivfServe(spark.newSession(), path))
+    val afterLock = graft.SparkJobs.count(spark)(ivfServe(spark, path))
+    val reusing = graft.SparkJobs.count(spark)(ivfServe(spark, path))
+    assert(afterLock > reusing, s"the serve after the lock ran $afterLock jobs, the " +
+      s"next $reusing: the serve under the lock must not have kept its handle")
+  }
+
   test("the store commit protocol lives only in io/Tables.scala") {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(Files.exists(root.resolve("graft/io/Tables.scala")),
@@ -963,9 +1049,12 @@ class StoreConcurrencySpec extends SparkSpec {
       }
     finally stream.close()
     // the ledger check, wrap warning and generation read are the
-    // read-merge-publish window's internals: every other module goes
-    // through Tables.readMergePublish instead of re-implementing them
-    val protocol = "storeAppliedLedger|warnIfLedgerWrapped|storeGeneration\\(".r
+    // read-merge-publish window's internals, and the index token's read
+    // and stamp are those of the index lock and open: every other
+    // module goes through Tables.readMergePublish, withIndexLock and
+    // openPinned instead of re-implementing them
+    val protocol = ("storeAppliedLedger|warnIfLedgerWrapped|storeGeneration\\(|" +
+      "indexGeneration\\(|stampIndexGeneration\\(").r
     val offenders = lines.collect {
       case (f, _, l, at) if f != "graft/io/Tables.scala" &&
         protocol.findFirstIn(l).nonEmpty => at
@@ -974,14 +1063,16 @@ class StoreConcurrencySpec extends SparkSpec {
       "store commit protocol copied out of io/Tables.scala — route the " +
         s"store through Tables.readMergePublish:\n${offenders.mkString("\n")}")
     // the vector indexes' stores have one body each: one site adds rows
-    // to a `codes` store (compactions rewrite it through Tables), and one
+    // to a `codes` store (compactions rewrite it through Tables), one
     // site names each codec artifact, which the shared read and write
-    // bodies then reach through the codec
+    // bodies then reach through the codec, and one site reads `codes` or
+    // an artifact: the index handle every serve opens once per generation
     val adcStores = Seq(
       "adds code rows" ->
         """(?<!read)\.parquet\(s"[^"]*/codes"|(appendPartitioned|stagedPartitionedAppend)\(.*/codes"""".r,
       "names the codebooks artifact" -> """["/]codebooks"""".r,
-      "names the quantizer artifact" -> """["/]quantizer"""".r)
+      "names the quantizer artifact" -> """["/]quantizer"""".r,
+      "opens an ADC index" -> """read\.parquet\(s"[^"]*/(codes|\$\{\w+\.dir\})"""".r)
     for ((what, re) <- adcStores) {
       val sites = lines.collect {
         case (_, site, l, at) if !isComment(l) && re.findFirstIn(l).nonEmpty => site -> at
