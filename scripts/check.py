@@ -10,8 +10,11 @@ while performance rots (round 14: a Java-keyword package name broke
 every generated kernel reference and only a log grep found it). The
 NativeExprSpec tripwire covers sbt test; this covers the two surfaces
 the driver actually runs. Lines marked `(tripwire self-check)` (the
-spec's synthetic error) are excluded."""
-import sys, json, glob, re
+spec's synthetic error) are excluded.
+
+DuckDB spills to a `.duckdb_tmp` directory under the output dir (not
+the working directory) and the directory is removed when the run ends."""
+import sys, json, glob, os, re, shutil
 import duckdb
 import pandas as pd
 import numpy as np
@@ -74,7 +77,14 @@ def check_log(path):
 
 
 def main(sfdir, outdir, runlog=None):
-    con = duckdb.connect()
+    spill = os.path.join(outdir, ".duckdb_tmp")
+    try:
+        return run(duckdb.connect(config={"temp_directory": spill}),
+                   sfdir, outdir, runlog)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+def run(con, sfdir, outdir, runlog):
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -180,29 +180,14 @@ object Similarity {
     pqServe(byLabel, codes, store, queries, qId, embCol, k, m, dim, coarse)
   }
 
-  /** PQ codebook training: per (label, pos) floor-mean of the
-    * candidate corpus — one deterministic Lloyd half-step from the
-    * label init, exact integer arithmetic. Collects k×dim longs (tiny
-    * by contract). */
+  /** PQ codebook training: one deterministic Lloyd half-step from the
+    * label init — each label's codeword is its candidates' floor-mean
+    * by the shared [[lloydMeans]] step, i.e. the IVF cell means of the
+    * same labels. Collects k×dim longs (tiny by contract). */
   def pqCodebooks(candidates: DataFrame, embCol: String,
                   labelCol: String): Map[Long, IndexedSeq[Long]] =
-    pqCodebooksQ(candidates, quantize(col(embCol)), col(labelCol))
-
-  /** The trainer over a PRE-QUANTIZED long-array column and an
-    * arbitrary group init — shared by [[pqCodebooks]] (label init over
-    * raw quantized vectors) and the residual codebooks of
-    * [[persistIvfPqResidualIndex]] (cid-modulo init over residual
-    * arrays: the label init degenerates there, since per-label
-    * residual means are ~zero by construction). */
-  private def pqCodebooksQ(df: DataFrame, qCol: Column,
-                           groupCol: Column): Map[Long, IndexedSeq[Long]] =
-    df.select(groupCol.cast("long").as("lbl"),
-        posexplode(qCol).as(Seq("pos", "v")))
-      .groupBy(col("lbl"), col("pos"))
-      .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("c"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(1)).map(_.getLong(2)).toIndexedSeq).toMap
+    cellVectors(lloydMeans(candidates.select(col(labelCol).cast("long").as("label"),
+      posexplode(quantize(col(embCol))).as(Seq("pos", "v")))))
 
   /** Encode vectors to their m-code PQ representation: per-subspace
     * argmin over the codewords (exact integer distances; ties take the
@@ -250,10 +235,10 @@ object Similarity {
     * is the label init plus a single half-step: each round re-assigns
     * every sub-vector to its nearest codeword (the [[pqEncodeKeepCe]]
     * argmin — exact integer distances, ties on lowest codeword) and
-    * recomputes each codeword as the floor-mean of its assigned
-    * sub-vectors, keeping a codeword UNCHANGED when no vector picks
-    * it (the deterministic empty-cell rule; in SQL a LEFT JOIN +
-    * coalesce, so the whole training replays in the oracle like
+    * recomputes each codeword by [[lloydMeans]] over (codeword, pos),
+    * so a codeword keeps its old values in each subspace no vector
+    * picks it in (the deterministic empty-cell rule; in SQL a LEFT JOIN
+    * + coalesce, so the whole training replays in the oracle like
     * [[kmeansClusters]]' unrolled rounds). Per round: ONE map-side
     * encode + ONE k×dim-bounded collect (the k-means contract) —
     * assignments never leave the cluster. The recall win is measured
@@ -285,14 +270,12 @@ object Similarity {
     val sub = dim / m
     var books = init
     for (_ <- 0 until rounds) {
-      val upd = pqEncodeKeepCe(dfQ, books, m, dim)
-        .select(col("codes"), posexplode(col("ce")).as(Seq("pos", "v")))
-        .select(element_at(col("codes"),
-            (expr(s"pos div $sub") + 1).cast("int")).as("l"),
-          col("pos"), col("v"))
-        .groupBy(col("l"), col("pos"))
-        .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("c"))
-        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val upd = lloydMeans(pqEncodeKeepCe(dfQ, books, m, dim)
+          .select(col("codes"), posexplode(col("ce")).as(Seq("pos", "v")))
+          .select(element_at(col("codes"),
+              (expr(s"pos div $sub") + 1).cast("int")).as("label"),
+            col("pos"), col("v")))
+        .map { case (l, p, c) => (l, p) -> c }.toMap
       books = books.map { case (l, vec) =>
         l -> vec.indices.map(p => upd.getOrElse((l, p), vec(p))).toIndexedSeq
       }
@@ -475,9 +458,9 @@ object Similarity {
     def score: Column
   }
 
-  /** A codec's persisted artifact: its directory and row parser. */
+  /** A codec's persisted artifact: its directory and reader. */
   private sealed abstract class AdcArtifact[A](val dir: String) {
-    def parse(rows: Array[Row]): A
+    def parse(stored: DataFrame): A
   }
 
   /** Product quantization (codebooks in `codebooks/` as (lbl, pos, c)):
@@ -486,12 +469,7 @@ object Similarity {
   private final case class PqCodec(byLabel: Map[Long, IndexedSeq[Long]],
                                    m: Int, dim: Int) extends AdcCodec {
     def dir: String = PqCodec.dir
-    def artifact(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      byLabel.toSeq.sortBy(_._1)
-        .flatMap { case (l, cw) => cw.zipWithIndex.map { case (c, p) => (l, p, c) } }
-        .toDF("lbl", "pos", "c")
-    }
+    def artifact(spark: SparkSession): DataFrame = vectorRows(spark, "lbl", byLabel)
     def codeLen: Int = m
     def shape: String = s"(m=$m, dim=$dim)"
     def artifactDims: Iterable[Int] = byLabel.values.map(_.length)
@@ -504,8 +482,7 @@ object Similarity {
   }
 
   private object PqCodec extends AdcArtifact[Map[Long, IndexedSeq[Long]]]("codebooks") {
-    def parse(rows: Array[Row]): Map[Long, IndexedSeq[Long]] = rows.groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(1)).map(_.getLong(2)).toIndexedSeq).toMap
+    def parse(stored: DataFrame): Map[Long, IndexedSeq[Long]] = readVectors(stored)
   }
 
   /** Scalar quantization (the grid in `quantizer/` as (pos, vmin,
@@ -532,8 +509,8 @@ object Similarity {
   }
 
   private object Sq8Codec extends AdcArtifact[IndexedSeq[(Long, Long)]]("quantizer") {
-    def parse(rows: Array[Row]): IndexedSeq[(Long, Long)] =
-      rows.sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(2))).toIndexedSeq
+    def parse(stored: DataFrame): IndexedSeq[(Long, Long)] =
+      stored.collect().sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(2))).toIndexedSeq
     /** The codec of a grid at its own dimension. */
     def apply(quant: IndexedSeq[(Long, Long)]): Sq8Codec = Sq8Codec(quant, quant.length)
   }
@@ -543,14 +520,12 @@ object Similarity {
                          embCol: String): DataFrame =
     codec.encode(df.select(col(idCol).as("cid"), quantize(col(embCol)).as("ce")))
 
-  /** A batch's IVF frames: its centroid sums and its codes with their
-    * `label` cell ([[buildIvfIndex]] over `labelCol`). */
+  /** A batch's IVF codes with their `label` cell, from the
+    * assignments `eq` of its [[buildIvfIndex]]. */
   private def ivfCodes(codec: AdcCodec, df: DataFrame, idCol: String,
-                       embCol: String, labelCol: String): (DataFrame, DataFrame) = {
-    val (cent, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
-    (cent, encodeRows(codec, df, idCol, embCol)
-      .join(eq.select(col("cid"), col("label")), "cid"))
-  }
+                       embCol: String, eq: DataFrame): DataFrame =
+    encodeRows(codec, df, idCol, embCol)
+      .join(eq.select(col("cid"), col("label")), "cid")
 
   /** The one persist body: flat when `labelCol` is None, else IVF with
     * its cells from `labelCol`. */
@@ -559,8 +534,8 @@ object Similarity {
                          codec: AdcCodec): Unit = labelCol match {
     case None => writeAdc(path, codec, None, encodeRows(codec, df, idCol, embCol))
     case Some(lc) =>
-      val (cent, codes) = ivfCodes(codec, df, idCol, embCol, lc)
-      writeAdc(path, codec, Some(cent), codes)
+      val (cent, eq) = buildIvfIndex(df, idCol, embCol, lc)
+      writeAdc(path, codec, Some(cent), ivfCodes(codec, df, idCol, embCol, eq))
   }
 
   /** Overwrites an index's stores: the centroid table (IVF), the
@@ -596,21 +571,22 @@ object Similarity {
   private final class AdcIndex(spark: SparkSession, path: String) {
     private val artifacts = scala.collection.concurrent.TrieMap.empty[String, Any]
     def artifact[A](kind: AdcArtifact[A]): A = artifacts.getOrElseUpdate(kind.dir,
-      kind.parse(spark.read.parquet(s"$path/${kind.dir}").collect())).asInstanceOf[A]
+      kind.parse(spark.read.parquet(s"$path/${kind.dir}"))).asInstanceOf[A]
     lazy val codes: DataFrame = spark.read.parquet(s"$path/codes")
-    /** A driver-local frame of the centroid rows, whose probe rows
-      * [[centroidRows]] finds without another collect. */
-    lazy val centroids: DataFrame = {
-      val stored = spark.read.parquet(s"$path/centroids")
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(stored.collect(): _*), stored.schema)
-      openCentroidRows.put(local, centroidRows(local))
-      local
-    }
+    lazy val centroids: DataFrame = localCentroids(spark.read.parquet(s"$path/centroids"))
   }
 
-  /** The probe rows of every centroid frame an [[AdcIndex]] handed out,
-    * by frame identity (a Dataset has no value equality). */
+  /** A centroid sum table collected ONCE into a driver-local frame
+    * (same rows and schema) whose [[centroidRows]] need no collect. */
+  private def localCentroids(cent: DataFrame): DataFrame = {
+    val local = cent.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cent.collect(): _*), cent.schema)
+    openCentroidRows.put(local, centroidRows(local))
+    local
+  }
+
+  /** The probe rows of every centroid frame [[localCentroids]] handed
+    * out, by frame identity (a Dataset has no value equality). */
   private val openCentroidRows = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, Array[(Long, Int, Long, Long)]]())
 
@@ -661,8 +637,9 @@ object Similarity {
                 .select(col(idCol).as("__cid"), col("label").as("__albl"))
               (df.join(assigned, col(idCol) === col("__cid")).drop("__cid"), "__albl")
           }
-          val (centNew, codes) = ivfCodes(c, labeled, idCol, embCol, lc)
-          writeCodes(codes, path, ivf = true, append = true, batchTag)
+          val (centNew, eq) = buildIvfIndex(labeled, idCol, embCol, lc)
+          writeCodes(ivfCodes(c, labeled, idCol, embCol, eq), path, ivf = true,
+            append = true, batchTag)
           mergeCentroidSums(path, centNew)
         }
     }
@@ -722,7 +699,7 @@ object Similarity {
         val (side, score) =
           if (!residual) (probed, codec.score)
           else (probed.withColumn("__qc", dotQ(col("qe"),
-            centroidArrCol(centroidMeans(rows)))), codec.score + col("__qc"))
+            centroidArrCol(cellVectors(centroidMeans(rows))))), codec.score + col("__qc"))
         codec.codeStep(codes).join(broadcast(side.drop("qe")), "label")
           .withColumn("adc", score)
     }
@@ -1251,12 +1228,12 @@ object Similarity {
   /** Distributed Lloyd's k-means over quantized embeddings — the IVF
     * coarse-quantizer trainer. Deterministic end to end: seeds are the
     * k lowest-id vectors, distances are exact integer L2², centroid
-    * updates are floor(sum/count) with IEEE double division (identical
-    * in any engine), ties break on cluster id. Scale shape per
-    * iteration = MLlib's: centroids broadcast as literals into a
-    * codegen'd map-side argmin (no join), then ONE shuffle
-    * (groupBy cluster,pos) for the sums; driver holds only k×dim longs.
-    * Fixed `iters` keeps the computation replayable as unrolled SQL. */
+    * updates are the floor-mean step every trainer shares
+    * ([[lloydMeans]]), ties break on cluster id. Scale shape per
+    * iteration = MLlib's: a codegen'd map-side argmin (no join), then
+    * ONE shuffle (the (cluster, pos) sums); driver holds only k×dim
+    * longs. Fixed `iters` keeps the computation replayable as
+    * unrolled SQL. */
   def kmeansClusters(df: DataFrame, idCol: String, embCol: String,
                      k: Int, iters: Int): DataFrame = {
     val eq = df.select(col(idCol).as("vid"), quantize(col(embCol)).as("eq"))
@@ -1310,11 +1287,11 @@ object Similarity {
 
   /** The deterministic Lloyd trainer shared by [[kmeansClusters]] and
     * [[kmeansClustersProbe]]: seeds are the k lowest-id vectors,
-    * distances exact integer L2², centroid updates floor(sum/count),
-    * ties to the lower cluster id; fixed `iters` keeps the whole
-    * computation replayable as unrolled SQL. Per iteration = MLlib's
-    * shape: a codegen'd map-side argmin (no join) then ONE shuffle for
-    * the sums; the driver holds only k×dim longs. `eq` is (vid, eq). */
+    * distances exact integer L2², updates the shared [[lloydMeans]]
+    * step (a cluster no vector picks drops out), ties to the lower
+    * cluster id; fixed `iters` keeps the whole computation replayable
+    * as unrolled SQL. Per iteration: a codegen'd map-side argmin then
+    * ONE shuffle for the sums; the driver holds k×dim longs. */
   private[graft] def kmeansTrain(eq: DataFrame, k: Int,
                                  iters: Int): Seq[(Long, Seq[Long])] = {
     def assign(cents: Seq[(Long, Seq[Long])]): Column =
@@ -1323,17 +1300,11 @@ object Similarity {
     var cents: Seq[(Long, Seq[Long])] = eq.orderBy(col("vid")).limit(k)
       .select(col("eq")).collect().toSeq
       .map(_.getSeq[Long](0).toSeq).zipWithIndex.map { case (c, i) => (i.toLong, c) }
-    for (_ <- 1 until iters) {
-      val updated = eq.withColumn("cluster", assign(cents))
-        .select(col("cluster"), posexplode(col("eq")).as(Seq("pos", "v")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("c"))
-        .collect()
-      cents = updated.groupBy(_.getAs[Long]("cluster")).toSeq
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getAs[Int]("pos")).map(_.getAs[Long]("c")).toSeq
-        }.sortBy(_._1)
-    }
+    // the argmin is a column BEFORE the explode, so it runs once per
+    // vector, not once per (vector, pos)
+    for (_ <- 1 until iters)
+      cents = cellVectors(lloydMeans(eq.withColumn("label", assign(cents))
+        .select(col("label"), posexplode(col("eq")).as(Seq("pos", "v"))))).toSeq.sortBy(_._1)
     cents
   }
 
@@ -1608,7 +1579,7 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/meta")
     writeGraph(quantized(df), path, cents, k, nprobe, maxCluster)
     // the anchor publishes LAST: a store is live iff its centroids are
-    graft.io.Tables.swapInParquet(spark, centsFrame(spark, cents),
+    graft.io.Tables.swapInParquet(spark, vectorRows(spark, "cid", cents),
       s"$path/centroids")
   }
 
@@ -1637,21 +1608,9 @@ object Similarity {
       .select(col("cid"), col("eq"), (col("__p") + 1).cast("long").as("probe"),
         col("home"), col("cell"))
 
-  private def centsFrame(spark: org.apache.spark.sql.SparkSession,
-                         cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    import spark.implicits._
-    cents.flatMap { case (cid, c) =>
-      c.zipWithIndex.map { case (v, p) => (cid, p, v) }
-    }.toDF("cid", "pos", "c")
-  }
-
   private def readCents(spark: org.apache.spark.sql.SparkSession,
                         path: String): Seq[(Long, Seq[Long])] =
-    spark.read.parquet(s"$path/centroids").collect()
-      .groupBy(_.getLong(0)).toSeq
-      .map { case (cid, rows) =>
-        cid -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
-      }.sortBy(_._1)
+    readVectors(spark.read.parquet(s"$path/centroids")).toSeq.sortBy(_._1)
 
   /** Reload → (trained cells, edges frame, vectors frame). The edges
     * frame IS the product (a, b, rank, cosine [, home]). */
@@ -1784,7 +1743,7 @@ object Similarity {
         val minNlist = math.max(4L, (nStored + nBatch + target - 1L) / target)
         val rebuilt = retrain(minNlist.toInt, Some(batchEq))
         nl = rebuilt.size
-        centsFrame(spark, rebuilt)
+        vectorRows(spark, "cid", rebuilt)
       } else {
         val valid = cellCounts.filter(_._2 >= 2L).map(_._1)
         val mN = newAsg.filter(col("cell").isin(valid: _*))
@@ -1831,7 +1790,7 @@ object Similarity {
         appendPartitioned(newAsg, s"$path/vectors", "cell", batchTag)
         if (homes.nonEmpty)
           graft.io.Tables.replacePartitions(spark, content, s"$path/edges", "home")
-        centsFrame(spark, cents)
+        vectorRows(spark, "cid", cents)
       }
     }
     // kmeans gives NO balance guarantee, so sizing nlist for a target
@@ -1848,7 +1807,7 @@ object Similarity {
     while (overCap && attempts < 3) {
       nl = math.max(nl * 2, nl + 1); attempts += 1
       graft.io.Tables.readMergePublish(spark, s"$path/centroids") { _ =>
-        centsFrame(spark, retrain(nl, None))
+        vectorRows(spark, "cid", retrain(nl, None))
       }
     }
     require(!overCap,
@@ -1889,7 +1848,7 @@ object Similarity {
                            path: String, targetCell: Long = 500L,
                            minNlist: Int = 4, iters: Int = 2): Unit =
     graft.io.Tables.readMergePublish(spark, s"$path/centroids") { _ =>
-      centsFrame(spark, rebuildGraph(spark, path, targetCell, minNlist, iters))
+      vectorRows(spark, "cid", rebuildGraph(spark, path, targetCell, minNlist, iters))
     }
 
   /** Retrain the cells and rewrite vectors + edges, returning the new
@@ -2103,13 +2062,26 @@ object Similarity {
     * and the build cost disappears from the serving path entirely. */
   def buildIvfIndex(df: DataFrame, idCol: String, embCol: String,
                     labelCol: String): (DataFrame, DataFrame) = {
-    val eq = df.select(col(idCol).as("cid"), col(labelCol).as("label"),
+    // a NULL cell would persist a NULL centroid row that fails every
+    // later serve; refused inside the build's own jobs
+    val label = coalesce(col(labelCol), raise_error(
+      lit(s"IVF build: NULL in the label column '$labelCol'; every vector needs a cell")))
+    val eq = df.select(col(idCol).as("cid"), label.as("label"),
       quantize(col(embCol)).as("eq")).localCheckpoint(false)
-    val expl = eq.select(col("label"), posexplode(col("eq")).as(Seq("pos", "v")))
-    val cent = expl.groupBy(col("label"), col("pos"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("cnt"))
-    (cent, eq)
+    (centroidSums(eq.select(col("label"), posexplode(col("eq")).as(Seq("pos", "v")))), eq)
   }
+
+  /** The one per-(group, pos) centroid aggregate: exact (label, pos,
+    * s, cnt) sums of an exploded (label, pos, v) frame — the IVF
+    * centroid table and, through [[lloydMeans]], every trainer's. */
+  private def centroidSums(expl: DataFrame): DataFrame =
+    expl.groupBy(col("label"), col("pos"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("cnt"))
+
+  /** One Lloyd update: the floor-means of `expl`'s [[centroidSums]],
+    * one bounded collect; a (group, pos) no row reached is absent. */
+  private def lloydMeans(expl: DataFrame): Array[(Long, Int, Long)] =
+    centroidMeans(centroidRows(centroidSums(expl)))
 
   /** Write the IVF index as the SERVING layout: assignments
     * partitioned BY CLUSTER — one directory per label, the partition-
@@ -2146,7 +2118,7 @@ object Similarity {
                      cent: DataFrame): DataFrame = {
     val rows = centroidRows(cent)
     require(rows.nonEmpty, "assignClusters: empty centroid table")
-    val cents = centroidMeans(rows).toSeq.sortBy(_._1)
+    val cents = cellVectors(centroidMeans(rows)).toSeq.sortBy(_._1)
     // materialize the quantized vector once, then the dot-identity
     // argmin as in kmeansClusters/pqEncodeFrame — same order, same
     // ties; the native kernel keeps the generated code fixed-size at
@@ -2262,14 +2234,21 @@ object Similarity {
     * Douze & Schmid, TPAMI 2011 §V; the non-residual variant, so every
     * score stays exact-integer and oracle-replayable): cells from
     * `labelCol` (label a new corpus with [[assignClusters]] first) plus
-    * PQ codes whose books train on [[pqCodebooks]]' label init, over
-    * `train` when given. A query batch reads ~nprobe/nlist of the code
-    * bytes and never the vectors. */
+    * PQ codes whose books are [[pqCodebooks]]' label init over `train`,
+    * or without `train` the cells' own floor-means — the same books,
+    * from the one collected centroid table. A query batch reads
+    * ~nprobe/nlist of the code bytes and never the vectors. */
   def persistIvfPqIndex(df: DataFrame, idCol: String, embCol: String,
                         labelCol: String, path: String, m: Int = 4,
-                        dim: Int = 64, train: Option[DataFrame] = None): Unit =
-    persistAdc(df, idCol, embCol, Some(labelCol), path,
-      PqCodec(pqCodebooks(train.getOrElse(df), embCol, labelCol), m, dim))
+                        dim: Int = 64, train: Option[DataFrame] = None): Unit = train match {
+    case Some(t) => persistAdc(df, idCol, embCol, Some(labelCol), path,
+      PqCodec(pqCodebooks(t, embCol, labelCol), m, dim))
+    case None =>
+      val (sums, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
+      val cent = localCentroids(sums)
+      val codec = PqCodec(cellVectors(centroidMeans(centroidRows(cent))), m, dim)
+      writeAdc(path, codec, Some(cent), ivfCodes(codec, df, idCol, embCol, eq))
+  }
 
   /** Append a batch to a (non-residual) IVFPQ index against its
     * frozen codebooks, its cells from `labelCol`; `batchTag` makes the
@@ -2329,20 +2308,32 @@ object Similarity {
     pqCoarseRescore(scored, quantizedQueries(queries, qId, embCol), store, k, coarse)
   }
 
-  /** Per-cluster exact-integer mean vectors from the centroid SUM
-    * table: floor(s / cnt) computed driver-side with `math.floorDiv`
-    * (floor, NOT truncation — embedding sums go negative, and the two
-    * roundings differ there; the oracle replays it as
-    * floor(CAST(s AS DOUBLE) / cnt), identical for |s| < 2^53).
-    * nlist × dim longs — tiny by the k-means contract. */
-  private def centroidMeans(cent: DataFrame): Map[Long, IndexedSeq[Long]] =
-    centroidMeans(centroidRows(cent))
+  /** The one floor-mean: per-(group, pos) exact-integer means of
+    * centroid SUM rows, floor(s / cnt) computed driver-side with
+    * `math.floorDiv` (floor, NOT truncation — embedding sums go
+    * negative, and the two roundings differ there; the oracle replays
+    * it as floor(CAST(s AS DOUBLE) / cnt), identical for |s| < 2^53).
+    * groups × dim longs — tiny by the k-means contract. */
+  private def centroidMeans(rows: Array[(Long, Int, Long, Long)]): Array[(Long, Int, Long)] =
+    rows.map { case (l, p, s, cnt) => (l, p, math.floorDiv(s, math.max(cnt, 1L))) }
 
-  private def centroidMeans(rows: Array[(Long, Int, Long, Long)]): Map[Long, IndexedSeq[Long]] =
-    rows.groupBy(_._1)
-      .view.mapValues(_.sortBy(_._2)
-        .map(t => math.floorDiv(t._3, math.max(t._4, 1L))).toIndexedSeq)
-      .toMap
+  /** The one parse of (id, pos, value) rows: each id's pos-ordered vector. */
+  private def cellVectors(rows: Array[(Long, Int, Long)]): Map[Long, IndexedSeq[Long]] =
+    rows.groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toIndexedSeq).toMap
+
+  /** The vectors of a stored (id, pos, c) table ([[vectorRows]]). */
+  private def readVectors(stored: DataFrame): Map[Long, IndexedSeq[Long]] =
+    cellVectors(stored.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))))
+
+  /** The one writer of an (id, pos, c) vector table, in id order:
+    * codebooks as (lbl, …), kNN-graph centroids as (cid, …). */
+  private def vectorRows(spark: SparkSession, idCol: String,
+                         vecs: Iterable[(Long, Seq[Long])]): DataFrame = {
+    import spark.implicits._
+    vecs.toSeq.sortBy(_._1)
+      .flatMap { case (id, v) => v.zipWithIndex.map { case (c, p) => (id, p, c) } }
+      .toDF(idCol, "pos", "c")
+  }
 
   /** Literal per-label centroid array column. Coarse labels are DENSE
     * 0..nlist-1 for every trained quantizer ([[kmeansClusters]] seeds
@@ -2426,12 +2417,13 @@ object Similarity {
                              refineRounds: Int = 0,
                              init: Option[Map[Long, IndexedSeq[Long]]] = None): (DataFrame, Map[Long, IndexedSeq[Long]], DataFrame) = {
     require(refineRounds >= 0, s"refineRounds must be >= 0, got $refineRounds")
-    val means = centroidMeans(cent)
+    val means = cellVectors(centroidMeans(centroidRows(cent)))
     val resid = eq.withColumn("__c", centroidArrCol(means))
       .select(col("cid"), col("label"),
         zip_with(col("eq"), col("__c"), (x, c) => x - c).as("ce"))
     val initBooks = init.getOrElse(
-      pqCodebooksQ(resid, col("ce"), pmod(col("cid"), lit(nCodewords))))
+      cellVectors(lloydMeans(resid.select(pmod(col("cid"), lit(nCodewords)).cast("long")
+        .as("label"), posexplode(col("ce")).as(Seq("pos", "v"))))))
     val byCode =
       if (refineRounds == 0) initBooks
       else refineBooksQ(resid.select(col("cid"), col("ce")), initBooks, m, dim,

@@ -4900,9 +4900,11 @@ object LlmQueries {
   /** Label-propagation oracle tail (2 unrolled rounds + final select)
     * over any edge-producing graph CTE — shared by llm_graph_labelprop
     * (single-probe `kg`) and llm_graph_labelprop_probe2 (multi-probe
-    * `kgp`) so the propagation replay cannot drift between them. */
+    * `kgp`) so the propagation replay cannot drift between them.
+    * `lpe` is MATERIALIZED: inlined, DuckDB re-evaluates the graph CTE
+    * per use (~19 GB of spill on `kgp`); the answer is the same. */
   private def labelpropTail(graphCte: String): String =
-    s"""lpe AS (SELECT a, b, CAST(floor(cosine * 1000000) AS BIGINT) AS w FROM $graphCte),
+    s"""lpe AS MATERIALIZED (SELECT a, b, CAST(floor(cosine * 1000000) AS BIGINT) AS w FROM $graphCte),
        |seeds AS (SELECT vec_id AS vid,
        |    (CASE WHEN label = 0 THEN 1000000 ELSE 0 END)::BIGINT AS seed
        |  FROM embeddings WHERE vec_id < 100 AND label IN (0, 1)),

@@ -1193,4 +1193,116 @@ class LlmSpec extends SparkSpec {
         k = 3, nprobe = 0)
     }
   }
+
+  test("trainers equal a naive driver-side Lloyd; IVF-PQ label-init books are pqCodebooks") {
+    // an independent reference over collected rows: SQL floor-means
+    // (floor of the double quotient), exact L2² argmin with ties to the
+    // lowest id, and each trainer's empty-group rule
+    val (dim, m) = (8, 2)
+    val sub = dim / m
+    var seed = 7L
+    def next(): Float = {
+      seed = (seed * 6364136223846793005L + 1442695040888963407L)
+      (((seed >>> 33) % 2001) - 1000).toFloat / 997f
+    }
+    val base = (0 until 10).map(_ => Seq.fill(dim)(next()))
+    // label 2 repeats label 1's subspace-0 values, so its codeword ties
+    // label 1's there and (ties to the lowest id) no row picks it in
+    // subspace 0; ids 0 and 1 hold one vector, so k-means cluster 1
+    // ties cluster 0 on every row and empties
+    val rows = (0 until 10).flatMap { i =>
+      val third = Seq.fill(dim)(next())
+      Seq((i.toLong, base(i), 0L),
+        (100L + i, base(i).map(_ + 0.5f), 1L),
+        (200L + i, base(i).take(sub).map(_ + 0.5f) ++ third.drop(sub), 2L),
+        (300L + i, third.map(_ - 0.25f), 3L))
+    }.map { case (id, v, l) => if (id == 1L) (id, base(0), l) else (id, v, l) }
+    val df = rows.toDF("vec_id", "embedding", "label")
+    val q = df.select(col("vec_id"), Similarity.quantize(col("embedding")).as("eq"),
+        col("label")).as[(Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
+    def floorMean(vs: Seq[Long]): Long = math.floor(vs.sum.toDouble / vs.size).toLong
+    def means(picks: Seq[((Long, Int), Long)]): Map[(Long, Int), Long] =
+      picks.groupBy(_._1).map { case (k, vs) => k -> floorMean(vs.map(_._2)) }
+    def nearest(x: Seq[Long], cands: Seq[(Long, Seq[Long])]): Long =
+      cands.sortBy(_._1).minBy { case (_, c) =>
+        x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum }._1
+    val init = means(q.flatMap { case (_, v, l) => v.indices.map(p => (l, p) -> v(p)) })
+    val initBooks = init.keys.map(_._1).toSeq.distinct
+      .map(l => l -> (0 until dim).map(p => init((l, p)))).toMap
+    var unpicked = false
+    def refined(rounds: Int): Map[Long, IndexedSeq[Long]] =
+      (0 until rounds).foldLeft(initBooks) { (books, _) =>
+        val picks = q.flatMap { case (_, v, _) =>
+          (0 until m).flatMap { s =>
+            val code = nearest(v.slice(s * sub, (s + 1) * sub),
+              books.toSeq.map { case (l, c) => l -> c.slice(s * sub, (s + 1) * sub) })
+            (s * sub until (s + 1) * sub).map(p => (code, p) -> v(p))
+          }
+        }
+        val upd = means(picks)
+        unpicked ||= books.keys.exists(l => (0 until dim).exists(p => !upd.contains((l, p))))
+        books.map { case (l, c) => l -> c.indices.map(p => upd.getOrElse((l, p), c(p))) }
+      }
+    val trained = Similarity.pqCodebooks(df, "embedding", "label")
+    assert(trained == initBooks, "pqCodebooks is the per-label floor-mean")
+    for (r <- Seq(0, 1, 2))
+      assert(Similarity.pqCodebooksRefined(df, "vec_id", "embedding", "label",
+        m = m, dim = dim, rounds = r) == refined(r), s"pqCodebooksRefined rounds=$r")
+    assert(unpicked, "the input must leave some codeword unpicked in some subspace")
+    val k = 4
+    var emptied = false
+    def kmeans(iters: Int): Seq[(Long, Seq[Long])] =
+      (1 until iters).foldLeft(q.take(k).zipWithIndex.map { case ((_, v, _), i) => i.toLong -> v }) {
+        (cents, _) =>
+          val upd = means(q.flatMap { case (_, v, _) =>
+            val c = nearest(v, cents)
+            v.indices.map(p => (c, p) -> v(p))
+          })
+          val next = upd.keys.map(_._1).toSeq.distinct.sorted
+            .map(c => c -> (0 until dim).map(p => upd((c, p))))
+          emptied ||= next.size < cents.size
+          next
+      }
+    val eqDf = q.map { case (id, v, _) => (id, v) }.toDF("vid", "eq")
+    for (it <- Seq(1, 2, 3))
+      assert(Similarity.kmeansTrain(eqDf, k, it) == kmeans(it), s"kmeansTrain iters=$it")
+    assert(emptied, "the input must empty a k-means cluster")
+    val path = graft.util.Scratch.dir("ivfpq_label_init") + "/idx"
+    Similarity.persistIvfPqIndex(df, "vec_id", "embedding", "label", path, m = m, dim = dim)
+    assert(Similarity.readIvfPqIndex(spark, path)._2 == trained,
+      "persistIvfPqIndex's label-init books equal pqCodebooks over the same frame")
+  }
+
+  test("IVF builds refuse a NULL label, naming the label column") {
+    val dim = 8
+    def vec(base: Float): Seq[Float] = Seq.tabulate(dim)(i => base + i * 0.01f)
+    val df = Seq((1L, vec(0.1f), Option(0L)), (2L, vec(0.2f), Option(0L)),
+        (3L, vec(-0.3f), Option(1L)), (4L, vec(-0.4f), Option.empty[Long]))
+      .toDF("vec_id", "embedding", "cell")
+    val dir = graft.util.Scratch.dir("ivf_null_label")
+    def refused(what: String)(build: => Unit): Unit = {
+      val e = intercept[Exception](build)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("NULL in the label column 'cell'"))),
+        s"$what: expected the NULL label to be refused, got: $e")
+    }
+    refused("persistIvfSq8Index")(
+      Similarity.persistIvfSq8Index(df, "vec_id", "embedding", "cell", s"$dir/sq8"))
+    refused("persistIvfPqIndex")(
+      Similarity.persistIvfPqIndex(df, "vec_id", "embedding", "cell", s"$dir/pq", m = 2, dim = dim))
+    refused("persistIvfIndex")(
+      Similarity.persistIvfIndex(df, "vec_id", "embedding", "cell", s"$dir/raw"))
+    val valid = df.filter(col("cell").isNotNull)
+    Similarity.persistIvfPqIndex(valid, "vec_id", "embedding", "cell", s"$dir/app", m = 2, dim = dim)
+    refused("appendToIvfPqIndex")(Similarity.appendToIvfPqIndex(
+      df.withColumn("vec_id", col("vec_id") + 10), "vec_id", "embedding", "cell",
+      s"$dir/app", m = 2, dim = dim))
+    // the refused append left the index serving as it was
+    val (cent, books, codes) = Similarity.readIvfPqIndex(spark, s"$dir/app")
+    assert(codes.count() == 3 && cent.filter(col("label").isNull).count() == 0)
+    assert(Similarity.ivfPqTopK(cent, books, codes,
+      valid.select(col("vec_id").as("cid"), Similarity.quantize(col("embedding")).as("ce")),
+      valid, "vec_id", "embedding", k = 1, m = 2, dim = dim, coarse = 2, nprobe = 2)
+      .count() == 3)
+  }
 }

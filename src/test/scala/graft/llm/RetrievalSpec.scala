@@ -646,6 +646,13 @@ class RetrievalSpec extends SparkSpec {
     assert(sites(rest, cosine) === 1, "one zero-norm cosine outside knnGraphExact")
     assert(sites(exact, cosine) === 1, "knnGraphExact keeps its own cosine")
     assert(sites(code, "partitionBy(\"home\")") === 1, "one graph edge writer")
+    // every trainer's Lloyd step is the one (group, pos) sum/count
+    // aggregate and the one driver-side floorDiv
+    assert(sites(code, "floor(sum(") === 0, "no SQL floor-mean")
+    assert(sites(code, "sum(col(\"v\"))") === 1, "one per-(group, pos) centroid aggregate")
+    val parse = "sortBy\\((_\\.getInt\\(1\\)|_\\.getAs\\[Int\\]\\(\"pos\"\\)|_\\._2)\\)".r
+    assert(code.map(parse.findAllIn(_).size).sum === 1, "one centroid-row parse site")
+    assert(sites(code, "\"pos\", \"c\")") === 1, "one (id, pos, value) writer")
   }
 
   test("annIvfPqTopK: a second batch on an unchanged index skips the six open jobs") {
