@@ -145,10 +145,10 @@ object Tables {
     * (underscore-prefixed — invisible to parquet readers).
     * `expectedGen` is the CAS: a publisher that read the store at
     * generation g passes g, and the publish FAILS LOUDLY if the store
-    * moved past g since — two concurrent swappers each merging the
-    * same base either serialize (every merge runs inside
-    * [[readMergePublish]], under [[withStoreLock]]) or raise, and the
-    * second never silently drops the first's contribution.
+    * moved past g since, so a stale swap never silently drops a later
+    * writer's contribution. Graft's writers publish through
+    * [[readMergePublish]] and [[replacePublish]], whose lock serializes
+    * them.
     *
     * `ledger` is the applied-tag ledger: its lines publish INSIDE the
     * swapped dir, so "data merged" and "batch recorded as applied"
@@ -161,7 +161,25 @@ object Tables {
   def swapInParquet(spark: SparkSession, df: DataFrame,
                     dest: String, expectedGen: Long = -1L,
                     ledger: Seq[String] = Nil): Unit =
+    publish(spark, df, dest, ledger) {
+      val state = readStoreState(spark, dest)
+      if (expectedGen >= 0L && state.gen != expectedGen)
+        throw new java.io.IOException(
+          s"swapInParquet: $dest is at generation ${state.gen} but this publish " +
+            s"merged against generation $expectedGen — a concurrent writer " +
+            "advanced the store since it was read (single-writer contract; " +
+            "re-run the merge against the current generation)")
+      state
+    }
+
+  /** The one publish of a store generation: `df` through
+    * [[renamePublish]], stamped with the ledger file and the next
+    * `_GEN-<n>` marker, both derived from `state` — the state the new
+    * generation follows, which the stamp evaluates once. */
+  private def publish(spark: SparkSession, df: DataFrame, dest: String,
+                      ledger: Seq[String])(state: => StoreState): Unit =
     renamePublish(spark, dest, df.write.mode("overwrite")) { next =>
+      val prior = state
       val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // ONE small file per publish (a file per batch would grow the
       // listing forever), bounded to the most recent MaxAppliedLedger
@@ -178,25 +196,16 @@ object Tables {
         // ancient backup) was not already applied — see
         // [[storeLedgerWrapped]].
         val distinctLedger = ledger.distinct
-        val (priorRetained, priorTotal) = storeLedgerCounts(spark, dest)
-        val total = math.max(priorTotal, priorRetained.toLong) +
-          math.max(0, distinctLedger.size - priorRetained)
+        val retained = prior.applied.size
+        val total = math.max(prior.total, retained.toLong) +
+          math.max(0, distinctLedger.size - retained)
         val out = fs.create(new org.apache.hadoop.fs.Path(next, AppliedLedgerFile), true)
         out.write((s"#TOTAL-$total\n" +
           distinctLedger.takeRight(MaxAppliedLedger).mkString("", "\n", "\n"))
           .getBytes("UTF-8"))
         out.close()
       }
-      val gen = storeGeneration(spark, dest)
-      if (expectedGen >= 0L && gen != expectedGen) {
-        fs.delete(next, true)
-        throw new java.io.IOException(
-          s"swapInParquet: $dest is at generation $gen but this publish " +
-            s"merged against generation $expectedGen — a concurrent writer " +
-            "advanced the store since it was read (single-writer contract; " +
-            "re-run the merge against the current generation)")
-      }
-      fs.create(new org.apache.hadoop.fs.Path(next, s"_GEN-${gen + 1L}"),
+      fs.create(new org.apache.hadoop.fs.Path(next, s"_GEN-${prior.gen + 1L}"),
         true).close()
     }
 
@@ -207,25 +216,45 @@ object Tables {
     * returns before any side effect; otherwise `merge` runs, given the
     * store's current generation (`None` when the store does not exist
     * yet, so a create-or-merge caller picks its create face), and the
-    * frame it returns publishes through [[swapInParquet]] with that
-    * generation as the CAS and the tag appended to the ledger. `merge`
-    * may write sibling stores before it returns (staged code files,
-    * graph edges); those writes must converge when a crashed window is
-    * re-run, because the tag only commits with the publish. */
+    * frame it returns publishes with the tag appended to the ledger.
+    * `merge` may write sibling stores before it returns (staged code
+    * files, graph edges); those writes must converge when a crashed
+    * window is re-run, because the tag only commits with the publish. */
   def readMergePublish(spark: SparkSession, dest: String,
                        batchTag: Option[String] = None)(
       merge: Option[Long] => DataFrame): Unit =
+    publishWindow(spark, dest, batchTag, replace = false)(merge)
+
+  /** The create/replace face of [[readMergePublish]]: under the store's
+    * lock, `body` runs (it may check or write sibling stores first) and
+    * the frame it returns replaces the store, with a fresh ledger — the
+    * batch tag's line, or none. No applied-tag check: a persist always
+    * lands. Every graft persist of a swap-published store goes through
+    * here, so a persist and an append of the same store serialize. */
+  private[graft] def replacePublish(spark: SparkSession, dest: String,
+                                    batchTag: Option[String] = None)(
+      body: => DataFrame): Unit =
+    publishWindow(spark, dest, batchTag, replace = true)(_ => body)
+
+  /** The body of both windows. The store's state is read once, under
+    * the lock, and the publish follows it: nothing else writes the
+    * store while the lock is held. */
+  private def publishWindow(spark: SparkSession, dest: String,
+                            batchTag: Option[String], replace: Boolean)(
+      body: Option[Long] => DataFrame): Unit =
     withStoreLock(spark, dest) {
-      val applied = storeAppliedLedger(spark, dest)
+      val state = readStoreState(spark, dest)
       val tagLine = batchTag.map(appliedLedgerLine)
-      if (!tagLine.exists(applied.contains)) {
-        warnIfLedgerWrapped(spark, dest, tagLine)
-        val destPath = new org.apache.hadoop.fs.Path(dest)
-        val exists = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(destPath)
-        val gen = storeGeneration(spark, dest)
-        swapInParquet(spark, merge(if (exists) Some(gen) else None), dest,
-          gen, ledger = applied ++ tagLine)
+      if (replace || !tagLine.exists(state.applied.contains)) {
+        if (!replace && tagLine.nonEmpty && state.wrapped)
+          System.err.println(
+            s"[graft] WARNING: applied-tag ledger at $dest has wrapped " +
+              s"(retention ${MaxAppliedLedger}); tag '${tagLine.get}' was not found " +
+              "but may have been applied before the retained window — if this " +
+              "batch replays history older than the window (e.g. a checkpoint " +
+              "restored from backup), it will double-apply on a sum-monoid store")
+        val ledger = if (replace) tagLine.toSeq else state.applied ++ tagLine
+        publish(spark, body(Option.when(state.exists)(state.gen)), dest, ledger)(state)
       }
     }
 
@@ -257,9 +286,9 @@ object Tables {
 
   /** The index's token when what a reader opens now may be reused under
     * it: one listing of the root shows exactly one token and no
-    * writer's `__lock` (the index stores' locks sit in the root). None
-    * for a missing root, an index no graft writer stamped, or a writer
-    * inside its window. */
+    * writer's `__lock` (the index lock sits in the root). None for a
+    * missing root, an index no graft writer stamped, or a writer inside
+    * its window. */
   private def indexGeneration(spark: SparkSession, root: String): Option[String] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -271,18 +300,20 @@ object Tables {
     else None
   }
 
-  /** Run an index writer's `write` under the lock of its store
-    * `root/store`, with a fresh generation token stamped first. */
-  private[graft] def withIndexLock[T](spark: SparkSession, root: String,
-                                      store: String)(write: => T): T =
-    withStoreLock(spark, s"$root/$store") {
+  /** Run an index writer's `write` under the index lock, with a fresh
+    * generation token stamped first. The index lock is the lock of the
+    * index's `centroids` store in every layout; every writer of the
+    * index holds it. */
+  private[graft] def withIndexLock[T](spark: SparkSession, root: String)(
+      write: => T): T =
+    withStoreLock(spark, s"$root/centroids") {
       stampIndexGeneration(spark, root)
       write
     }
 
-  /** [[readMergePublish]] on the index's `centroids` store, the IVF
-    * append window: a batch that is not a replay stamps a fresh token
-    * before `merge` writes anything. */
+  /** [[readMergePublish]] on the index's `centroids` store (so under
+    * the index lock), the IVF append window: a batch that is not a
+    * replay stamps a fresh token before `merge` writes anything. */
   private[graft] def readMergePublishIndex(spark: SparkSession, root: String,
                                            batchTag: Option[String])(
       merge: Option[Long] => DataFrame): Unit =
@@ -293,7 +324,7 @@ object Tables {
 
   /** [[restoreOrphanedPartitions]] on a store of an index, stamping a
     * fresh token when a partition came back (a live change). The
-    * caller holds the index's lock. */
+    * caller holds the index lock. */
   private[graft] def restoreIndexPartitions(spark: SparkSession, root: String,
                                             store: String): Seq[String] = {
     val restored = restoreOrphanedPartitions(spark, s"$root/$store")
@@ -318,10 +349,10 @@ object Tables {
     * first one opened, for the cost of one driver-side listing of the
     * root. Otherwise `open` runs — it must read everything the handle
     * holds — between two reads of the token, and its handle is kept
-    * only when both reads gave the same token and no writer's lock. An
-    * unstamped index, or one a writer holds, is opened afresh on every
-    * call. `kind` names what `open` builds (callers key one handle
-    * type per kind). */
+    * only when both reads gave the same token and no lock in the root
+    * (where the index lock sits). An unstamped index, or one a writer
+    * holds, is opened afresh on every call. `kind` names what `open`
+    * builds (callers key one handle type per kind). */
   private[graft] def openPinned[H <: AnyRef](spark: SparkSession, root: String,
                                              kind: String)(open: => H): H = {
     val key = (spark, root, kind)
@@ -341,7 +372,7 @@ object Tables {
   /** The two-rename publish shared by every whole-store rewrite
     * ([[swapInParquet]], the compactions): `writer` writes the new
     * content to a sibling `__next_*` dir, `stamp` adds bookkeeping
-    * files to it (or deletes it and throws to abort), then the live dir
+    * files to it (or throws to abort, which deletes it), then the live dir
     * moves aside to `__old_*` and `__next_*` renames into place. A
     * failed publish rename restores the previous generation. */
   private def renamePublish(spark: SparkSession, dest: String,
@@ -353,7 +384,8 @@ object Tables {
     val next = new org.apache.hadoop.fs.Path(s"${dest}__next_$tag")
     val old = new org.apache.hadoop.fs.Path(s"${dest}__old_$tag")
     writer.parquet(next.toString)
-    stamp(next)
+    try stamp(next)
+    catch { case e: Throwable => fs.delete(next, true); throw e }
     if (fs.exists(destPath) && !fs.rename(destPath, old))
       throw new java.io.IOException(s"publish: cannot move $destPath aside")
     if (!fs.rename(next, destPath)) {
@@ -363,31 +395,44 @@ object Tables {
     fs.delete(old, true)
   }
 
-  /** The store's current generation number: max `_GEN-<n>` marker in
-    * the published dir (0 for a missing store or one predating the
-    * markers — the first stamped publish moves it to 1). */
-  def storeGeneration(spark: SparkSession, dest: String): Long = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(destPath)) 0L
-    else fs.listStatus(destPath).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_GEN-") => n.drop(5).toLong }
-      .maxOption.getOrElse(0L)
+  /** A store's current generation as one listing of its dir and at
+    * most one open of its ledger read it: whether it exists, its
+    * generation (max `_GEN-<n>` marker; 0 for a missing store or one
+    * predating the markers), its applied-tag lines (legacy `_APPLIED-*`
+    * marker files, then ledger lines) and the cumulative applied total
+    * (the `#TOTAL-` header, else the retained count: headers publish
+    * with every ledger write since they were introduced). */
+  private final case class StoreState(exists: Boolean, gen: Long,
+                                      applied: Seq[String], total: Long) {
+    def wrapped: Boolean = total > applied.size
   }
 
-  /** The underscore-prefixed provenance markers in the store's current
-    * generation — legacy one-empty-file-per-batch `_APPLIED-*` markers
-    * from stores written before the single-file ledger. `_GEN-*`
-    * stamps, Hadoop `_SUCCESS` files and the ledger file itself are
-    * excluded — they are bookkeeping, not batch provenance. */
-  def storeMarkers(spark: SparkSession, dest: String): Seq[String] = {
+  private def readStoreState(spark: SparkSession, dest: String): StoreState = {
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(destPath)) Seq.empty
-    else fs.listStatus(destPath).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith("_") && !n.startsWith("_GEN-") &&
-        n != "_SUCCESS" && n != AppliedLedgerFile).toSeq.sorted
+    val listing =
+      try Some(fs.listStatus(destPath).toSeq.map(_.getPath.getName))
+      catch { case _: java.io.FileNotFoundException => None }
+    listing.fold(StoreState(exists = false, 0L, Nil, 0L)) { names =>
+      val gen = names.collect { case n if n.startsWith("_GEN-") => n.drop(5).toLong }
+        .maxOption.getOrElse(0L)
+      val ledger =
+        if (!names.contains(AppliedLedgerFile)) Nil
+        else {
+          val in = fs.open(new org.apache.hadoop.fs.Path(destPath, AppliedLedgerFile))
+          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+          finally in.close()
+        }
+      val applied = (names.filter(_.startsWith("_APPLIED-")).sorted ++
+        ledger.filter(l => l.nonEmpty && !l.startsWith("#"))).distinct
+      val total = ledger.find(_.startsWith("#TOTAL-")).map(_.stripPrefix("#TOTAL-").toLong)
+      StoreState(exists = true, gen, applied, total.getOrElse(applied.size.toLong))
+    }
   }
+
+  /** The store's current generation number ([[StoreState]]). */
+  def storeGeneration(spark: SparkSession, dest: String): Long =
+    readStoreState(spark, dest).gen
 
   /** The single-file applied-tag ledger published with a store
     * generation (see [[swapInParquet]] `ledger`). */
@@ -411,44 +456,17 @@ object Tables {
   }
 
   /** Every applied-batch record on the store's current generation:
-    * ledger-file lines plus any legacy `_APPLIED-*` marker files
-    * (pre-ledger stores fold their history into the ledger on the
-    * next publish and the marker files vanish with the swapped dir). */
-  def storeAppliedLedger(spark: SparkSession, dest: String): Seq[String] = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ledgerPath = new org.apache.hadoop.fs.Path(destPath, AppliedLedgerFile)
-    val lines =
-      if (!fs.exists(ledgerPath)) Seq.empty[String]
-      else {
-        val in = fs.open(ledgerPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(l => l.nonEmpty && !l.startsWith("#")).toList
-        finally in.close()
-      }
-    val legacy = storeMarkers(spark, dest).filter(_.startsWith("_APPLIED-"))
-    (legacy ++ lines).distinct
-  }
+    * legacy `_APPLIED-*` marker files plus ledger-file lines
+    * (pre-ledger stores fold their history into the ledger on the next
+    * publish and the marker files vanish with the swapped dir). */
+  def storeAppliedLedger(spark: SparkSession, dest: String): Seq[String] =
+    readStoreState(spark, dest).applied
 
   /** (retained applied-tag lines, cumulative applied total) for a
-    * store's ledger. Total falls back to the retained count for
-    * pre-header ledgers (which by construction never wrapped more than
-    * the header's absence can hide — headers publish with every ledger
-    * write from the version that introduced them). */
+    * store's ledger ([[StoreState]]). */
   def storeLedgerCounts(spark: SparkSession, dest: String): (Int, Long) = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ledgerPath = new org.apache.hadoop.fs.Path(destPath, AppliedLedgerFile)
-    val header =
-      if (!fs.exists(ledgerPath)) None
-      else {
-        val in = fs.open(ledgerPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .find(_.startsWith("#TOTAL-")).map(_.stripPrefix("#TOTAL-").toLong)
-        finally in.close()
-      }
-    val retained = storeAppliedLedger(spark, dest).size
-    (retained, header.getOrElse(retained.toLong))
+    val state = readStoreState(spark, dest)
+    (state.applied.size, state.total)
   }
 
   /** True when the store's applied-tag ledger has TRUNCATED history:
@@ -457,27 +475,12 @@ object Tables {
     * is absent from a WRAPPED ledger cannot distinguish "new batch"
     * from "batch applied before the window" — replaying a tag older
     * than the window (a streaming checkpoint restored from an old
-    * backup) silently double-applies on count-SUM stores. Appenders
-    * surface a loud stderr warning on this state; operators restoring
-    * checkpoints from backup must rebuild or reconcile the store
-    * rather than resume-append into it. */
-  def storeLedgerWrapped(spark: SparkSession, dest: String): Boolean = {
-    val (retained, total) = storeLedgerCounts(spark, dest)
-    total > retained
-  }
-
-  /** The loud-warning side of [[storeLedgerWrapped]], shared by the
-    * tag-checked appenders: called when a tag was NOT found applied,
-    * right before the append proceeds. */
-  def warnIfLedgerWrapped(spark: SparkSession, dest: String,
-                          tag: Option[String]): Unit =
-    if (tag.nonEmpty && storeLedgerWrapped(spark, dest))
-      System.err.println(
-        s"[graft] WARNING: applied-tag ledger at $dest has wrapped " +
-          s"(retention ${MaxAppliedLedger}); tag '${tag.get}' was not found " +
-          "but may have been applied before the retained window — if this " +
-          "batch replays history older than the window (e.g. a checkpoint " +
-          "restored from backup), it will double-apply on a sum-monoid store")
+    * backup) silently double-applies on count-SUM stores. The
+    * [[readMergePublish]] window prints a loud stderr warning on this
+    * state; operators restoring checkpoints from backup must rebuild or
+    * reconcile the store rather than resume-append into it. */
+  def storeLedgerWrapped(spark: SparkSession, dest: String): Boolean =
+    readStoreState(spark, dest).wrapped
 
   /** Idempotent staged append of a batch's PARTITIONED files into a
     * `partitionBy(partCol)` parquet store — the crash-replay-safe
@@ -664,24 +667,18 @@ object Tables {
     * exactly-once recovery (unlike compaction, which absorbs placed
     * files and must come AFTER the retry). Returns the deleted paths.
     *
-    * LOCK-SCOPE CAVEAT: this takes the lock of THE STORE IT SWEEPS,
-    * which protects against concurrent publishers of that same store —
-    * but the persisted-index appenders stage codes under
-    * `codes__stage_*` while holding the CENTROIDS lock, so a bare
-    * `vacuumStore(.../codes)` racing a live tagged append can delete
-    * the append's in-flight stage dir (loud failure; the retry
-    * recovers exactly-once — availability, not corruption). Vacuum a
-    * persisted ANN index through
+    * LOCK-SCOPE CAVEAT: this takes the lock of THE STORE IT SWEEPS. A
+    * persisted ANN index's writers hold the index lock
+    * ([[withIndexLock]]) instead, so vacuum an index through
     * [[graft.llm.Similarity.vacuumIndexStores]], which sweeps all of
-    * the index's stores under the centroids lock the appenders
-    * actually hold. */
+    * its stores under that lock. */
   def vacuumStore(spark: SparkSession, dest: String): Seq[String] =
     withStoreLock(spark, dest) { vacuumStoreUnlocked(spark, dest) }
 
   /** [[vacuumStore]] body without the lock — for composite callers
     * that already hold the lock governing the store's writers (the
-    * index-level vacuum holds the centroids lock while sweeping the
-    * codes/quantizer siblings). */
+    * index-level vacuum holds the index lock while sweeping every
+    * store of the index). */
   def vacuumStoreUnlocked(spark: SparkSession, dest: String): Seq[String] = {
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -432,9 +432,9 @@ object Bpe {
     * (`kind` = 'merge' rows carry (step, a, b); 'symbol' rows carry
     * (sym, token_id)) so the publish is a SINGLE atomic swap — two
     * sibling tables could tear between swaps (new merges + old ids =
-    * a tokenizer that never existed). Published under the store lock
-    * with the generation CAS like every other store. Returns the
-    * trained merge list. */
+    * a tokenizer that never existed). Published in the store's locked
+    * replace window ([[graft.io.Tables.replacePublish]]) like every
+    * other persist. Returns the trained merge list. */
   def persistTokenizer(docs: DataFrame, textCol: String, path: String,
                        nMerges: Int): Seq[(String, String)] =
     persistTokenizerTrained(docs, textCol, path,
@@ -444,7 +444,7 @@ object Bpe {
     * face a caller holding a shared/memoized training uses; `docs`
     * still derives the id table (the symbol alphabet is a corpus
     * property) unless the caller supplies a precomputed one. Identical
-    * store layout and lock discipline. */
+    * store layout and replace window. */
   def persistTokenizerTrained(docs: DataFrame, textCol: String, path: String,
                               trained: Seq[(Int, String, String, Long)],
                               precomputedIds: Option[Seq[(String, Long)]] = None): Seq[(String, String)] = {
@@ -457,10 +457,8 @@ object Bpe {
         ("merge", step.toLong, a, b, n, null: String, 0L) } ++
       ids.map { case (s, i) =>
         ("symbol", 0L, null: String, null: String, 0L, s, i) }
-    graft.io.Tables.withStoreLock(spark, s"$path/tokenizer") {
-      graft.io.Tables.swapInParquet(spark,
-        rows.toDF("kind", "step", "a", "b", "n", "sym", "token_id"),
-        s"$path/tokenizer")
+    graft.io.Tables.replacePublish(spark, s"$path/tokenizer") {
+      rows.toDF("kind", "step", "a", "b", "n", "sym", "token_id")
     }
     merges
   }

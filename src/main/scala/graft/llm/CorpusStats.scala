@@ -443,16 +443,17 @@ object CorpusStats {
     * ENTIRELY tiny — ≤ m × |sources| register rows — so each batch
     * merge rewrites it cell-wise-max and publishes crash-consistently
     * ([[graft.io.Tables.swapInParquet]]: old generation or loud
-    * missing-table, never a silent torn merge). Register max is
+    * missing-table, never a silent torn merge); the persist itself
+    * publishes in the store's locked replace window
+    * ([[graft.io.Tables.replacePublish]]). Register max is
     * idempotent, so re-running a batch after a crash is safe (the
     * same registers max to the same values — appends here need no
     * commit log). Store-after-append EQUALS build-from-scratch
     * bit-for-bit; `llm_hll_incremental` shares the full-build oracle. */
   def persistHllProfile(docs: DataFrame, sourceCol: String, textCol: String,
                         path: String, n: Int = 2): Unit =
-    graft.io.Tables.withStoreLock(docs.sparkSession, s"$path/registers") {
-      graft.io.Tables.swapInParquet(docs.sparkSession,
-        hllNgramRegisters(docs, sourceCol, textCol, n), s"$path/registers")
+    graft.io.Tables.replacePublish(docs.sparkSession, s"$path/registers") {
+      hllNgramRegisters(docs, sourceCol, textCol, n)
     }
 
   /** Merge a new batch's registers into a persisted profile —
@@ -688,14 +689,15 @@ object CorpusStats {
     * running maintenance stream would otherwise accumulate one marker
     * FILE per micro-batch forever — O(n) creates per publish, O(n²)
     * cumulative); pre-ledger marker files are folded in on the first
-    * new-style publish. */
+    * new-style publish. The persist publishes in the store's locked
+    * replace window ([[graft.io.Tables.replacePublish]]), the tag's
+    * line its fresh ledger. */
   def persistLogHist(df: DataFrame, groupCol: String, value: Column,
                      path: String, subBits: Int = 5,
                      batchTag: Option[String] = None): Unit =
-    graft.io.Tables.withStoreLock(df.sparkSession, s"$path/registers") {
-      graft.io.Tables.swapInParquet(df.sparkSession,
-        logHistRegisters(df, groupCol, value, subBits), s"$path/registers",
-        ledger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
+    graft.io.Tables.replacePublish(df.sparkSession, s"$path/registers",
+        batchTag) {
+      logHistRegisters(df, groupCol, value, subBits)
     }
 
   /** Merge a new batch's registers into a persisted store — cell-wise

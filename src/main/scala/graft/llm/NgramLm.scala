@@ -237,13 +237,15 @@ object NgramLm {
     * persists the raw gram counts, which are ADDITIVE across doc
     * batches (n-grams never cross documents), so the reference model
     * can grow as curated data arrives. One flat atomic-swap table
-    * under the store lock, applied-tag ledger for exactly-once batch
-    * replay (the graph-store recipe). Scores derive at read time via
+    * published in the store's locked replace window
+    * ([[graft.io.Tables.replacePublish]]) with the batch tag as its
+    * fresh ledger, for exactly-once batch replay (the graph-store
+    * recipe). Scores derive at read time via
     * the SAME [[deriveModel]] as the direct trainer. */
   def persistBackoffCounts(ref: DataFrame, textCol: String, path: String,
                            batchTag: Option[String] = None): Unit = {
     val spark = ref.sparkSession
-    graft.io.Tables.withStoreLock(spark, s"$path/counts") {
+    graft.io.Tables.replacePublish(spark, s"$path/counts", batchTag) {
       // refuse to clobber a live store — an overwrite here would
       // silently reset the applied ledger, losing every previously
       // merged batch's replay guard
@@ -253,9 +255,7 @@ object NgramLm {
         s"persistBackoffCounts: a counts store already exists at $path/counts " +
           "— overwriting would reset its applied ledger and drop merged " +
           "batches; use appendToBackoffCounts/upsertBackoffCounts")
-      graft.io.Tables.swapInParquet(spark, flatCounts(ref, textCol),
-        s"$path/counts",
-        ledger = batchTag.map(graft.io.Tables.appliedLedgerLine).toSeq)
+      flatCounts(ref, textCol)
     }
   }
 
@@ -296,10 +296,9 @@ object NgramLm {
       .localCheckpoint(true)
 
   /** Sweep crash residue (swap leftovers) from the backoff stores.
-    * Unlike the ANN index families — whose appenders stage SIBLING
-    * stores under the centroids lock, needing
-    * [[graft.llm.Similarity.vacuumIndexStores]]'s composite locking —
-    * every writer of these two stores holds exactly its own store
+    * Unlike the ANN index families — whose writers stage SIBLING
+    * stores under the index lock, needing
+    * [[graft.llm.Similarity.vacuumIndexStores]] — every writer of these two stores holds exactly its own store
     * lock, so the bare [[graft.io.Tables.vacuumStore]] (which takes
     * that same lock) is already race-free here. Covers the
     * frozen-scores store and the incremental counts store (whichever
@@ -369,8 +368,8 @@ object NgramLm {
   /** Persist a trained backoff model as ONE flat table — (n, w2, w1,
     * w, s): n = gram order with the token total at n = 0 — so the
     * publish is a single atomic swap (three separate tables could be
-    * read half-swapped). The [[Bpe.persistTokenizer]] store-lock
-    * convention. */
+    * read half-swapped), published in the store's locked replace
+    * window as [[Bpe.persistTokenizer]] is. */
   def persistBackoffModel(model: BackoffModel, path: String): Unit = {
     val spark = model.uni.sparkSession
     import spark.implicits._
@@ -384,9 +383,7 @@ object NgramLm {
         col("s2").as("s")))
       .unionByName(model.tri.select(lit(3L).as("n"), col("w2"), col("w1"),
         col("w"), col("s3").as("s")))
-    graft.io.Tables.withStoreLock(spark, s"$path/backoff") {
-      graft.io.Tables.swapInParquet(spark, flat, s"$path/backoff")
-    }
+    graft.io.Tables.replacePublish(spark, s"$path/backoff")(flat)
   }
 
   /** Reload a persisted backoff model. The gram tables come back as

@@ -183,10 +183,12 @@ object Similarity {
   /** PQ codebook training: one deterministic Lloyd half-step from the
     * label init — each label's codeword is its candidates' floor-mean
     * by the shared [[lloydMeans]] step, i.e. the IVF cell means of the
-    * same labels. Collects k×dim longs (tiny by contract). */
+    * same labels. Collects k×dim longs (tiny by contract). A NULL
+    * label is refused by name ([[cellLabel]]). */
   def pqCodebooks(candidates: DataFrame, embCol: String,
                   labelCol: String): Map[Long, IndexedSeq[Long]] =
-    cellVectors(lloydMeans(candidates.select(col(labelCol).cast("long").as("label"),
+    cellVectors(lloydMeans(candidates.select(
+      cellLabel(labelCol, "PQ training").cast("long").as("label"),
       posexplode(quantize(col(embCol))).as(Seq("pos", "v")))))
 
   /** Encode vectors to their m-code PQ representation: per-subspace
@@ -419,8 +421,8 @@ object Similarity {
     * the trained range clamp, the FAISS convention).
     *
     * The LAYOUT is where the codes live:
-    *  - flat: (cid, codes) in `path/codes`. An append takes the `codes`
-    *    store lock, as [[compactIndex]] does, and adds plain files.
+    *  - flat: (cid, codes) in `path/codes`. An append takes the index
+    *    lock, as [[compactIndex]] does, and adds plain files.
     *    A serve is a broadcast cross join of queries and codes.
     *  - IVF: the coarse sum table in `path/centroids`, codes partitioned
     *    by `label`. An append runs in [[graft.io.Tables.readMergePublish]]
@@ -430,12 +432,12 @@ object Similarity {
     *    broadcast-joins them on `label`, which prunes the code scan to
     *    the probed cells' files and the code column.
     *
-    * Every serve ends in [[pqCoarseRescore]]. Create and replace writes
-    * (`persist*`, [[writeAdc]]) overwrite under the same lock as the
-    * layout's appends, so a persist and an append serialize. Every
-    * writer stamps a fresh generation token at the index root
-    * ([[graft.io.Tables.withIndexLock]]), and the `read*Index` calls
-    * reuse one [[AdcIndex]] per token ([[openAdc]]). */
+    * Every serve ends in [[pqCoarseRescore]]. Every writer holds the
+    * one index lock ([[graft.io.Tables.withIndexLock]]), so create and
+    * replace writes (`persist*`, [[writeAdc]]) and appends serialize.
+    * Every ADC writer stamps a fresh generation token at the index
+    * root, and the `read*Index` calls reuse one [[AdcIndex]] per token
+    * ([[openAdc]]). */
   private sealed trait AdcCodec {
     /** The artifact's directory under the index path. */
     def dir: String
@@ -538,15 +540,14 @@ object Similarity {
       writeAdc(path, codec, Some(cent), ivfCodes(codec, df, idCol, embCol, eq))
   }
 
-  /** Overwrites an index's stores: the centroid table (IVF), the
-    * codec's artifact — the one writer of `codebooks/` and
-    * `quantizer/` — and the codes. Runs under the lock the layout's
-    * appends take (`codes` flat, `centroids` IVF), so an append never
-    * encodes against one artifact and lands beside another's codes. */
+  /** Overwrites an index's stores in place: the centroid table (IVF),
+    * the codec's artifact — the one writer of `codebooks/` and
+    * `quantizer/` — and the codes. Runs under the index lock every
+    * append takes, so an append never encodes against one artifact and
+    * lands beside another's codes. */
   private def writeAdc(path: String, codec: AdcCodec, cent: Option[DataFrame],
                        codes: DataFrame): Unit =
-    graft.io.Tables.withIndexLock(codes.sparkSession, path,
-        if (cent.isDefined) "centroids" else "codes") {
+    graft.io.Tables.withIndexLock(codes.sparkSession, path) {
       cent.foreach(_.write.mode("overwrite").parquet(s"$path/centroids"))
       codec.artifact(codes.sparkSession).write.mode("overwrite")
         .parquet(s"$path/${codec.dir}")
@@ -622,7 +623,7 @@ object Similarity {
     def guarded(idx: AdcIndex) = appendGuard(codec(idx), idx.codes, path)
     ivf match {
       case None =>
-        graft.io.Tables.withIndexLock(spark, path, "codes") {
+        graft.io.Tables.withIndexLock(spark, path) {
           writeCodes(encodeRows(guarded(new AdcIndex(spark, path)), df, idCol, embCol),
             path, ivf = false, append = true)
         }
@@ -906,13 +907,11 @@ object Similarity {
     *    file per cluster;
     *  - a flat PQ/SQ8 code store: a file budget derived from its rows
     *    ([[CompactRowsPerFile]]), rewritten shuffle-free.
-    * It takes the `centroids` lock, then the `codes` lock inside it
-    * ([[vacuumIndexStores]]' order), and reads the layout only while
-    * both are held. Every writer of every layout holds one of the two,
-    * so no swap or overwrite is in flight when the layout is read and
-    * compaction serializes with appends. A `label`-partitioned code
-    * store without its centroids (a crashed IVF swap) fails loudly
-    * rather than compacting flat. Rows, partition layout, pruning and
+    * It reads the layout only under the index lock, which every writer
+    * of every layout holds, so no swap or overwrite is in flight when
+    * the layout is read and compaction serializes with appends. A
+    * `label`-partitioned code store without its centroids (a crashed
+    * IVF swap) fails loudly rather than compacting flat. Rows, partition layout, pruning and
     * serving answers are identical before and after.
     *
     * Recovery-order contract: retry a crashed tagged append BEFORE
@@ -930,41 +929,34 @@ object Similarity {
     * stream pins its index at start) still lists the replaced files and
     * fails loudly on its next scan; read the index again. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
-      graft.io.Tables.withIndexLock(spark, path, "codes") {
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def store(d: String) = new org.apache.hadoop.fs.Path(s"$path/$d")
-        if (fs.exists(store("vectors")))
-          graft.io.Tables.compactPartitionedParquet(spark, s"$path/vectors", "cell")
-        else if (fs.exists(store("centroids")))
-          graft.io.Tables.compactPartitionedParquet(spark, s"$path/codes", "label")
-        else {
-          if (fs.exists(store("codes")) && fs.listStatus(store("codes"))
-              .exists(_.getPath.getName.startsWith("label=")))
-            throw new IllegalStateException(s"compactIndex: $path/codes is " +
-              "partitioned by label but its centroids store is missing (a " +
-              "crashed IVF swap); restore centroids before compacting")
-          val n = new AdcIndex(spark, path).codes.count()
-          graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
-            math.max(1L, (n + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt)
-        }
+    graft.io.Tables.withIndexLock(spark, path) {
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def store(d: String) = new org.apache.hadoop.fs.Path(s"$path/$d")
+      if (fs.exists(store("vectors")))
+        graft.io.Tables.compactPartitionedParquet(spark, s"$path/vectors", "cell")
+      else if (fs.exists(store("centroids")))
+        graft.io.Tables.compactPartitionedParquet(spark, s"$path/codes", "label")
+      else {
+        if (fs.exists(store("codes")) && fs.listStatus(store("codes"))
+            .exists(_.getPath.getName.startsWith("label=")))
+          throw new IllegalStateException(s"compactIndex: $path/codes is " +
+            "partitioned by label but its centroids store is missing (a " +
+            "crashed IVF swap); restore centroids before compacting")
+        val n = new AdcIndex(spark, path).codes.count()
+        graft.io.Tables.compactFlatParquet(spark, s"$path/codes",
+          math.max(1L, (n + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt)
       }
     }
 
   /** Sweep crash residue (`__next_*`/`__old_*`/`__stage_*`) from ALL
-    * of a persisted index's stores — centroids, quantizer, codebooks,
-    * and the graph store's vectors/edges/meta — under the CENTROIDS
-    * lock, which every appender of THOSE stores holds while staging
-    * (`codes__stage_*` for the IVF families and `vectors__stage_*`
-    * for the graph store are created under the centroids lock, so a
-    * bare [[graft.io.Tables.vacuumStore]] on them could race a live
-    * append's stage; this wrapper cannot). The CODES store is swept
-    * under the CODES lock taken INSIDE the centroids lock: the flat
-    * PQ/SQ8 writers hold the codes lock alone, so sweeping codes under
-    * centroids alone could race them. Lock order is always centroids →
-    * codes, never the reverse ([[compactIndex]] nests them the same
-    * way), so the nesting cannot deadlock.
+    * of a persisted index's stores — centroids, codes, quantizer,
+    * codebooks, and the graph store's vectors/edges/meta — under the
+    * index lock ([[graft.io.Tables.withIndexLock]]), which every writer
+    * of every one of them holds while staging (`codes__stage_*`,
+    * `vectors__stage_*`), so a live writer's in-flight dir is never
+    * swept; a bare [[graft.io.Tables.vacuumStore]] on one store could
+    * race it.
     *
     * EDGES residue is special: after a crash inside
     * [[graft.io.Tables.replacePartitions]]'s rename window an
@@ -977,17 +969,13 @@ object Similarity {
     * safe to delete. Returns the deleted paths. */
   def vacuumIndexStores(spark: org.apache.spark.sql.SparkSession,
                         path: String): Seq[String] =
+    // the index lock, without a token stamp unless a partition returns
     graft.io.Tables.withStoreLock(spark, s"$path/centroids") {
       graft.io.Tables.restoreIndexPartitions(spark, path, "edges")
-      val underCentroids =
-        Seq("centroids", Sq8Codec.dir, PqCodec.dir, "vectors", "edges",
-          "meta").flatMap { d =>
-          graft.io.Tables.vacuumStoreUnlocked(spark, s"$path/$d")
-        }
-      val underCodes = graft.io.Tables.withStoreLock(spark, s"$path/codes") {
-        graft.io.Tables.vacuumStoreUnlocked(spark, s"$path/codes")
+      Seq("centroids", Sq8Codec.dir, PqCodec.dir, "vectors", "edges",
+        "meta", "codes").flatMap { d =>
+        graft.io.Tables.vacuumStoreUnlocked(spark, s"$path/$d")
       }
-      underCentroids ++ underCodes
     }
 
   /** Reload → (centroid sum table, quantizer, cluster-partitioned
@@ -1548,6 +1536,8 @@ object Similarity {
     *    after build (the frozen-codebook convention — retraining is a
     *    deliberate offline rebuild). Swap-published: this store is the
     *    index's lock anchor, generation stamp and applied-tag ledger.
+    *    The persist writes every store in its locked replace window
+    *    ([[graft.io.Tables.replacePublish]]).
     *  - `meta` (k, nprobe, max_cluster): the build knobs, validated on
     *    append (a mismatched k would silently serve a differently-cut
     *    graph).
@@ -1574,13 +1564,14 @@ object Similarity {
     def quantized(d: DataFrame) =
       d.select(col(idCol).as("vid"), quantize(col(embCol)).as("eq"))
     val cents = kmeansTrain(quantized(train.getOrElse(df)), nlist, iters)
-    Seq((k.toLong, nprobe.toLong, maxCluster.toLong))
-      .toDF("k", "nprobe", "max_cluster")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    writeGraph(quantized(df), path, cents, k, nprobe, maxCluster)
     // the anchor publishes LAST: a store is live iff its centroids are
-    graft.io.Tables.swapInParquet(spark, vectorRows(spark, "cid", cents),
-      s"$path/centroids")
+    graft.io.Tables.replacePublish(spark, s"$path/centroids") {
+      Seq((k.toLong, nprobe.toLong, maxCluster.toLong))
+        .toDF("k", "nprobe", "max_cluster")
+        .write.mode("overwrite").parquet(s"$path/meta")
+      writeGraph(quantized(df), path, cents, k, nprobe, maxCluster)
+      vectorRows(spark, "cid", cents)
+    }
   }
 
   /** Map-side probe assignments: (cid, eq, probe 1-based, cell, home)
@@ -2062,14 +2053,17 @@ object Similarity {
     * and the build cost disappears from the serving path entirely. */
   def buildIvfIndex(df: DataFrame, idCol: String, embCol: String,
                     labelCol: String): (DataFrame, DataFrame) = {
-    // a NULL cell would persist a NULL centroid row that fails every
-    // later serve; refused inside the build's own jobs
-    val label = coalesce(col(labelCol), raise_error(
-      lit(s"IVF build: NULL in the label column '$labelCol'; every vector needs a cell")))
-    val eq = df.select(col(idCol).as("cid"), label.as("label"),
+    val eq = df.select(col(idCol).as("cid"), cellLabel(labelCol, "IVF build").as("label"),
       quantize(col(embCol)).as("eq")).localCheckpoint(false)
     (centroidSums(eq.select(col("label"), posexplode(col("eq")).as(Seq("pos", "v")))), eq)
   }
+
+  /** `labelCol` as the cell of an IVF or PQ label-init build, refusing a
+    * NULL label by name inside the build's own jobs (a NULL cell would
+    * persist a NULL centroid row, or fail the trainer's collect opaquely). */
+  private def cellLabel(labelCol: String, build: String): Column =
+    coalesce(col(labelCol), raise_error(
+      lit(s"$build: NULL in the label column '$labelCol'; every vector needs a cell")))
 
   /** The one per-(group, pos) centroid aggregate: exact (label, pos,
     * s, cnt) sums of an exploded (label, pos, v) frame — the IVF
@@ -2094,7 +2088,7 @@ object Similarity {
     * corpus bytes instead of scanning everything. */
   def persistIvfIndex(df: DataFrame, idCol: String, embCol: String,
                       labelCol: String, path: String): Unit =
-    // the centroids lock, which appendToIvfIndex's publish window holds
+    // the index lock, which appendToIvfIndex's publish window holds
     graft.io.Tables.withStoreLock(df.sparkSession, s"$path/centroids") {
       val (cent, eq) = buildIvfIndex(df, idCol, embCol, labelCol)
       eq.write.mode("overwrite").partitionBy("label").parquet(s"$path/assignments")

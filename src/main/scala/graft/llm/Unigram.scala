@@ -475,8 +475,9 @@ object Unigram {
   }
 
   /** Persist a trained unigram tokenizer (the [[Bpe.persistTokenizer]]
-    * convention): train, then swap-publish the piece table under the
-    * store lock. Returns the trained pieces for immediate use. */
+    * convention): train, then publish the piece table in the store's
+    * locked replace window. Returns the trained pieces for immediate
+    * use. */
   def persistTokenizer(docs: DataFrame, textCol: String, path: String,
                        rounds: Int = 2, maxPieceLen: Int = 4,
                        minCount: Long = 2L,
@@ -487,16 +488,15 @@ object Unigram {
     pieces
   }
 
-  /** Swap-publish an ALREADY-TRAINED piece table (the
-    * [[persistTokenizer]] store layer without the training pass) — the
-    * face a caller holding a shared/memoized training uses; identical
-    * store layout and lock discipline. */
+  /** Publish an ALREADY-TRAINED piece table in the store's locked
+    * replace window ([[graft.io.Tables.replacePublish]]) — the
+    * [[persistTokenizer]] store layer without the training pass, for a
+    * caller holding a shared/memoized training. */
   def persistPieces(spark: org.apache.spark.sql.SparkSession,
                     pieces: Seq[(String, Long, Long)], path: String): Unit = {
     import spark.implicits._
-    graft.io.Tables.withStoreLock(spark, s"$path/unigram") {
-      graft.io.Tables.swapInParquet(spark,
-        pieces.toDF("piece", "cnt", "logp_micro"), s"$path/unigram")
+    graft.io.Tables.replacePublish(spark, s"$path/unigram") {
+      pieces.toDF("piece", "cnt", "logp_micro")
     }
   }
 

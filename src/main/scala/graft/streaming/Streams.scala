@@ -1154,7 +1154,7 @@ object Streams {
 
   /** One SQ8 streaming-append micro-batch — factored for
     * replay-semantics testing without a running stream. The codes land
-    * through the flat index append (`codes` store lock, dim guard). The
+    * through the flat index append (index lock, dim guard). The
     * log lives under the index path, since the index lives at a path,
     * not in the catalog. */
   private[graft] def sq8AppendBatch(batch: DataFrame, idCol: String,

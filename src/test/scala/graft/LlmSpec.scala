@@ -1305,4 +1305,24 @@ class LlmSpec extends SparkSpec {
       valid, "vec_id", "embedding", k = 1, m = 2, dim = dim, coarse = 2, nprobe = 2)
       .count() == 3)
   }
+
+  test("PQ trainers refuse a NULL label, naming the label column") {
+    val dim = 8
+    def vec(base: Float): Seq[Float] = Seq.tabulate(dim)(i => base + i * 0.01f)
+    val df = Seq((1L, vec(0.1f), Option(0L)), (2L, vec(0.2f), Option(0L)),
+        (3L, vec(-0.3f), Option(1L)), (4L, vec(-0.4f), Option.empty[Long]))
+      .toDF("vec_id", "embedding", "cell")
+    val dir = graft.util.Scratch.dir("pq_null_label")
+    def refused(what: String)(build: => Unit): Unit = {
+      val e = intercept[Exception](build)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("NULL in the label column 'cell'"))),
+        s"$what: expected the NULL label to be refused, got: $e")
+    }
+    refused("pqCodebooks")(Similarity.pqCodebooks(df, "embedding", "cell"))
+    refused("persistPqIndex")(
+      Similarity.persistPqIndex(df, "vec_id", "embedding", "cell", s"$dir/pq", m = 2, dim = dim))
+    refused("pqTopK")(Similarity.pqTopK(df, df, "vec_id", "vec_id", "embedding", "cell",
+      k = 1, m = 2, dim = dim, coarse = 2).collect())
+  }
 }

@@ -595,7 +595,7 @@ class StoreConcurrencySpec extends SparkSpec {
       s"compaction must meet the file budget, saw ${codeFiles()}")
     assert(spark.read.parquet(s"$path/codes").orderBy("cid").collect().toSeq
       === before, "compaction must not change a single code row")
-    // a racing append and compaction serialize on the codes lock —
+    // a racing append and compaction serialize on the index lock —
     // whichever order the lock grants, no rows are lost
     race(
       Similarity.compactIndex(spark, path),
@@ -833,38 +833,35 @@ class StoreConcurrencySpec extends SparkSpec {
 
   test("vacuumIndexStores sweeps the codes store under the CODES lock flat writers hold") {
     // fabricate an index layout with centroids + codes stores and
-    // residue under both, then hold the codes lock (what a live flat
-    // PQ/SQ8 compaction holds): the centroids-family sweep lands
-    // immediately, the codes sweep must WAIT for the lock
+    // residue under both, then hold the index lock (what every index
+    // writer holds, a live flat PQ/SQ8 compaction included): no store
+    // may sweep while it is held, and every store's residue sweeps
+    // once it frees
     val root = Files.createTempDirectory("vac_codes_lock_").toString + "/idx"
     Seq((0L, 1L)).toDF("label", "x").write.parquet(s"$root/centroids")
     Seq((0L, Array[Byte](1, 2))).toDF("cid", "codes")
       .write.parquet(s"$root/codes")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/centroids__old_a"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/codes__next_b"))
-    val codesLock = java.nio.file.Paths.get(s"$root/codes__lock")
-    java.nio.file.Files.createFile(codesLock)
+    val residue = Seq("centroids__old_a", "codes__next_b")
+      .map(d => new org.apache.hadoop.fs.Path(s"$root/$d"))
+    residue.foreach(fs.mkdirs)
+    val indexLock = java.nio.file.Paths.get(s"$root/centroids__lock")
+    java.nio.file.Files.createFile(indexLock)
     val pool = Executors.newSingleThreadExecutor()
     val fut = pool.submit(new java.util.concurrent.Callable[Seq[String]] {
       def call(): Seq[String] = Similarity.vacuumIndexStores(spark, root)
     })
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (fs.exists(new org.apache.hadoop.fs.Path(s"$root/centroids__old_a"))
-      && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/centroids__old_a")),
-      "centroids residue must sweep while the codes lock is still held")
-    Thread.sleep(600) // > the lock's 250 ms retry interval
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/codes__next_b")),
-      "codes residue swept while the codes lock was held — a live flat " +
+    Thread.sleep(2000) // > the lock's 250 ms retry interval
+    assert(residue.forall(fs.exists),
+      "residue swept while the index lock was held — a live flat " +
         "compaction's in-flight next dir would be destroyed")
-    java.nio.file.Files.delete(codesLock)
+    java.nio.file.Files.delete(indexLock)
     val swept = fut.get(90, TimeUnit.SECONDS)
     pool.shutdown()
-    assert(swept.exists(_.contains("codes__next_b")),
-      s"codes residue must sweep once the lock frees, got $swept")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/codes__next_b")))
+    assert(residue.forall(p => swept.exists(_.contains(p.getName))),
+      s"every store's residue must sweep once the lock frees, got $swept")
+    assert(!residue.exists(fs.exists))
   }
 
   test("backoff counts store: racing appends serialize to the one-shot model; replays no-op") {
@@ -1062,6 +1059,24 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(offenders.isEmpty,
       "store commit protocol copied out of io/Tables.scala — route the " +
         s"store through Tables.readMergePublish:\n${offenders.mkString("\n")}")
+    // every store publishes through the windows (readMergePublish,
+    // replacePublish), so no module calls swapInParquet itself
+    val swaps = lines.collect {
+      case (f, _, l, at) if f != "graft/io/Tables.scala" && !isComment(l) &&
+        l.contains("swapInParquet(") => at
+    }
+    assert(swaps.isEmpty, s"${swaps.size} swapInParquet call(s) outside " +
+      s"io/Tables.scala — publish through Tables.replacePublish:\n${swaps.mkString("\n")}")
+    // every writer of a vector index takes the one index lock
+    // (Tables.withIndexLock), never a lock on its `codes` store: the
+    // lock call up to its body's brace, across continuation lines
+    val codesLock = """with(?:Store|Index)Lock\([^{]*?codes"\)\s*\{""".r
+    val codeLocks = lines.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (f, ls) =>
+      val text = ls.map { case (_, _, l, _) => if (isComment(l)) "" else l }.mkString("\n")
+      codesLock.findAllMatchIn(text).map(m => ls(text.take(m.start).count(_ == '\n'))._4)
+    }
+    assert(codeLocks.isEmpty, s"${codeLocks.size} lock(s) taken on a codes " +
+      s"store — take the index lock:\n${codeLocks.mkString("\n")}")
     // the vector indexes' stores have one body each: one site adds rows
     // to a `codes` store (compactions rewrite it through Tables), one
     // site names each codec artifact, which the shared read and write
@@ -1083,6 +1098,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("sq8AppendBatch waits for the codes lock flat compactions hold, then lands once") {
+    // the lock flat compactions hold is the index lock
     def vecs(ids: Seq[Long]) = ids.map { i =>
       (i, Seq.tabulate(8)(d => ((i * (d + 1)) % 13) * 0.05f - 0.3f))
     }.toDF("vec_id", "embedding")
@@ -1093,18 +1109,18 @@ class StoreConcurrencySpec extends SparkSpec {
       vecs(20L until 25L), "vec_id", "embedding", quant, path, "lockCk", 0L)
     def codeIds = spark.read.parquet(s"$path/codes").select("cid").as[Long]
       .collect().toSeq.sorted
-    val codesLock = java.nio.file.Paths.get(s"$path/codes__lock")
-    Files.createFile(codesLock)
+    val indexLock = java.nio.file.Paths.get(s"$path/centroids__lock")
+    Files.createFile(indexLock)
     val pool = Executors.newSingleThreadExecutor()
     try {
       val fut = pool.submit(new Runnable { def run(): Unit = batch() })
       Thread.sleep(2000) // > the lock's 250 ms retry interval
       assert(codeIds === (0L until 20L),
-        "a streamed SQ8 batch landed while the codes lock was held")
-      Files.delete(codesLock)
+        "a streamed SQ8 batch landed while the index lock was held")
+      Files.delete(indexLock)
       fut.get(90, TimeUnit.SECONDS)
     } finally {
-      Files.deleteIfExists(codesLock)
+      Files.deleteIfExists(indexLock)
       pool.shutdown()
     }
     assert(codeIds === (0L until 25L), "the batch must land exactly once")
@@ -1116,18 +1132,18 @@ class StoreConcurrencySpec extends SparkSpec {
     def vecs(ids: Seq[Long]) = ids.map { i =>
       (i, Array.tabulate(4)(d => (i * 4 + d).toDouble / 10.0), i % 2)
     }.toDF("vec_id", "embedding", "label")
-    // (entry point, the store whose lock the layout's appends hold, persist)
-    val inputs = Seq[(String, String, (DataFrame, String) => Unit)](
-      ("persistPqIndex", "codes", (df, path) => Similarity.persistPqIndex(df,
+    // (entry point, persist); every layout's appends hold the index lock
+    val inputs = Seq[(String, (DataFrame, String) => Unit)](
+      ("persistPqIndex", (df, path) => Similarity.persistPqIndex(df,
         "vec_id", "embedding", "label", path, m = 2, dim = 4)),
-      ("persistIvfPqIndex", "centroids", (df, path) => Similarity.persistIvfPqIndex(df,
+      ("persistIvfPqIndex", (df, path) => Similarity.persistIvfPqIndex(df,
         "vec_id", "embedding", "label", path, m = 2, dim = 4)))
-    for ((name, store, persist) <- inputs) {
+    for ((name, persist) <- inputs) {
       val path = Files.createTempDirectory("persist_lock_").toString + "/idx"
       persist(vecs(0L until 20L), path)
       def codeIds = spark.read.parquet(s"$path/codes").select("cid").as[Long]
         .collect().toSeq.sorted
-      val lock = java.nio.file.Paths.get(s"$path/${store}__lock")
+      val lock = java.nio.file.Paths.get(s"$path/centroids__lock")
       Files.createFile(lock)
       val pool = Executors.newSingleThreadExecutor()
       try {
@@ -1136,7 +1152,7 @@ class StoreConcurrencySpec extends SparkSpec {
         })
         Thread.sleep(2000) // > the lock's 250 ms retry interval
         assert(codeIds === (0L until 20L),
-          s"$name overwrote the codes while the $store lock was held")
+          s"$name overwrote the codes while the index lock was held")
         Files.delete(lock)
         fut.get(90, TimeUnit.SECONDS)
       } finally {
@@ -1145,6 +1161,38 @@ class StoreConcurrencySpec extends SparkSpec {
       }
       assert(codeIds === (0L until 25L), s"$name must land once the lock is free")
     }
+  }
+
+  test("persistKnnGraphStore waits for the index lock its appends and rebuilds take, then lands") {
+    def persist(ids: Seq[Long], path: String): Unit =
+      Similarity.persistKnnGraphStore(gvecs(ids), "vec_id", "embedding", path,
+        k = 3, nlist = 2, iters = 2, maxCluster = 100, nprobe = 2)
+    def dump(path: String): Seq[Seq[String]] =
+      Seq("meta", "vectors", "edges", "centroids").map(d =>
+        spark.read.parquet(s"$path/$d").collect().map(_.toString).toSeq.sorted)
+    val path = Files.createTempDirectory("knn_persist_lock_").toString + "/g"
+    persist(0L until 20L, path)
+    val before = dump(path)
+    val lock = java.nio.file.Paths.get(s"$path/centroids__lock")
+    Files.createFile(lock)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val fut = pool.submit(new Runnable {
+        def run(): Unit = persist(20L until 40L, path)
+      })
+      Thread.sleep(2000) // > the lock's 250 ms retry interval
+      val unchanged = dump(path) == before
+      assert(unchanged, "persistKnnGraphStore wrote the store while the index lock was held")
+      Files.delete(lock)
+      fut.get(90, TimeUnit.SECONDS)
+    } finally {
+      Files.deleteIfExists(lock)
+      pool.shutdown()
+    }
+    val fresh = Files.createTempDirectory("knn_persist_fresh_").toString + "/g"
+    persist(20L until 40L, fresh)
+    assert(dump(path) === dump(fresh), "the persist must land once the lock is free")
+    assert(dump(path) !== before)
   }
 
   test("compactIndex waits for the centroids lock an IVF swap holds, and never flattens label-partitioned codes") {
