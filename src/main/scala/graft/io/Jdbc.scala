@@ -48,7 +48,7 @@ object Jdbc {
                   orderCol: String, p: Properties = props()): DataFrame =
     readQuery(spark, url, s"SELECT * FROM $table ORDER BY $orderCol", p)
 
-  /** S13 — existing-keys snapshot feeding the J2 anti-join
+  /** S13 — existing-keys snapshot feeding the J2 conflict join
     * (postgres_loader.py:54-86): project the key column only, so the
     * wire cost is one column, then broadcast it into the join. */
   def readKeys(spark: SparkSession, url: String, table: String, keyCol: String,
@@ -78,36 +78,30 @@ object Jdbc {
     * failure class — key conflicts, both against the table and within
     * the batch — set-at-a-time BEFORE any insert. Good rows still land
     * as batched partition-parallel appends; bad rows come back as an
-    * error-channel DataFrame (original columns + `error`). At scale
-    * the pre-flight is one broadcast anti-join over a keys-only
-    * projection, so only the key column crosses the wire. Residual
-    * non-key violations (races, check constraints) are the province of
+    * error-channel DataFrame (original columns + `error`). The
+    * pre-flight labels each row in one broadcast left join against the
+    * table's distinct keys, so only the key column crosses the wire.
+    * Non-key violations (races, check constraints) are the province of
     * `appendRowIsolated`. Returns (insertedCount, conflicts). */
   def appendIsolated(df: DataFrame, url: String, table: String, keyCol: String,
                      p: Properties = props(), batchSize: Int = 10000): (Long, DataFrame) = {
-    val existing = readKeys(df.sparkSession, url, table, keyCol, p)
-      .toDF(keyCol).select(col(keyCol).cast(df.schema(keyCol).dataType))
-      // eager snapshot: the conflict report must reflect the table BEFORE
-      // this append — a lazy JDBC read re-evaluated after the write would
-      // flag our own freshly-inserted rows as conflicts
-      .localCheckpoint(true)
-    // deterministic keep-first within the batch: order by every column.
-    // Eager snapshot here too: conflicts is typically collected AFTER
-    // the append, and a lazy `df` (sample/limit/shuffle upstream, or a
-    // read of the very table being appended to) re-evaluated then could
-    // disagree with the rows that were actually written.
+    val existing = readQuery(df.sparkSession, url, s"SELECT DISTINCT $keyCol FROM $table", p)
+      .toDF(keyCol).select(col(keyCol).cast(df.schema(keyCol).dataType), lit(true).as("__hit"))
+    // deterministic keep-first within the batch: order by every column
     val w = Window.partitionBy(col(keyCol)).orderBy(df.columns.toIndexedSeq.map(col): _*)
-    val ranked = df.withColumn("__rn", row_number().over(w)).localCheckpoint(true)
-    val firstPerKey = ranked.filter(col("__rn") === 1).drop("__rn")
-    val dupInBatch = ranked.filter(col("__rn") > 1).drop("__rn")
-      .withColumn("error", lit("duplicate key within batch"))
-    val clean = firstPerKey.join(broadcast(existing), Seq(keyCol), "left_anti")
-      .localCheckpoint(true) // one computation feeds both the write and the count
-    val conflicts = firstPerKey.join(broadcast(existing), Seq(keyCol), "left_semi")
-      .withColumn("error", lit("key already exists"))
-      .unionByName(dupInBatch)
+    val labelled = df.withColumn("__rn", row_number().over(w))
+      .join(broadcast(existing), Seq(keyCol), "left_outer")
+      .select(df.columns.map(col) :+
+        when(col("__rn") > 1, lit("duplicate key within batch"))
+          .when(col("__hit"), lit("key already exists")).as("error"): _*)
+      // one eager snapshot feeds the write, the count and the report, so
+      // neither the JDBC key read nor a lazy `df` (sample/limit upstream,
+      // or a read of this very table) re-evaluates after the append and
+      // flags our own rows or disagrees with the rows written
+      .localCheckpoint(true)
+    val clean = labelled.filter(col("error").isNull).drop("error")
     append(clean, url, table, p, batchSize)
-    (clean.count(), conflicts)
+    (clean.count(), labelled.filter(col("error").isNotNull))
   }
 
   /** K3 per-row isolated append — the reference's exact semantics (one

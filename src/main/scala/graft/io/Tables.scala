@@ -254,7 +254,10 @@ object Tables {
               "batch replays history older than the window (e.g. a checkpoint " +
               "restored from backup), it will double-apply on a sum-monoid store")
         val ledger = if (replace) tagLine.toSeq else state.applied ++ tagLine
-        publish(spark, body(Option.when(state.exists)(state.gen)), dest, ledger)(state)
+        // a replace starts a fresh ledger: its #TOTAL- header counts its
+        // own lines only; the generation still follows the prior one
+        val prior = if (replace) state.copy(applied = Nil, total = 0L) else state
+        publish(spark, body(Option.when(state.exists)(state.gen)), dest, ledger)(prior)
       }
     }
 

@@ -162,15 +162,14 @@ object Ops {
 
   /** J2 — id-conflict resolution (main.py:143-157): incoming rows whose
     * id exists get a fresh uuid-20; the reference's O(n·m) Python list
-    * scan becomes a broadcast anti/semi join pair + union (§2.9). */
+    * scan becomes one broadcast left join flagging those ids (§2.9). */
   def resolveIdConflicts(incoming: DataFrame, existing: DataFrame, idCol: String,
                          newId: Column = Exprs.uuid20): DataFrame = {
     // broadcast matches the reference's in-memory id list
-    val keys = broadcast(existing.select(col(idCol)).distinct())
-    val clean = incoming.join(keys, Seq(idCol), "left_anti")
-    val rewritten = incoming.join(keys, Seq(idCol), "left_semi")
-      .withColumn(idCol, newId.cast(incoming.schema(idCol).dataType))
-    clean.unionByName(rewritten)
+    val keys = broadcast(existing.select(col(idCol)).distinct().withColumn("__hit", lit(true)))
+    val id = when(col("__hit"), newId.cast(incoming.schema(idCol).dataType)).otherwise(col(idCol))
+    incoming.join(keys, Seq(idCol), "left_outer")
+      .select(incoming.columns.map(c => if (c == idCol) id.as(c) else col(c)): _*)
   }
 
   /** Connected components by min-label propagation — the final step of

@@ -146,18 +146,15 @@ object CoreQueries {
         .orderBy(col("o_orderkey"))
     }),
 
-    // J2 — left-anti conflict detection + key rewrite + union
-    // (main.py:143-157); md5-surrogate for uuid20 (SURVEY.md §7.4.3)
+    // J2 — conflict detection + key rewrite (main.py:143-157) through
+    // Ops.resolveIdConflicts; md5-surrogate for uuid20 (SURVEY.md §7.4.3)
     "j2_anti_conflict_rewrite" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val existing = t(s, dir, "customer")
-        .filter(col("c_custkey") % 3 === 0).select(col("c_custkey").as("user_id"))
-      val clean = e.join(existing, Seq("user_id"), "left_anti")
-        .withColumn("resolved_key", col("user_id").cast("string"))
-      val conflicted = e.join(existing, Seq("user_id"), "left_semi")
-        .withColumn("resolved_key",
-          Exprs.deterministicKey20(concat(lit("conflict:"), col("event_id").cast("string"))))
-      clean.unionByName(conflicted)
+      val existing = t(s, dir, "customer").filter(col("c_custkey") % 3 === 0)
+        .select(col("c_custkey").cast("string").as("resolved_key"))
+      Ops.resolveIdConflicts(
+        t(s, dir, "events").withColumn("resolved_key", col("user_id").cast("string")),
+        existing, "resolved_key",
+        Exprs.deterministicKey20(concat(lit("conflict:"), col("event_id").cast("string"))))
         .select(col("event_id"), col("user_id"), col("resolved_key"))
         .orderBy(col("event_id"))
     }),

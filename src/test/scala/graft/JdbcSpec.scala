@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Jdbc
 
@@ -86,6 +88,62 @@ class JdbcSpec extends SparkSpec {
       "u3" -> "duplicate key within batch"))
     assert(Jdbc.readTable(spark, iurl, "accounts").count() == 3, "u2(pre), u1, u3")
 
+    // against the anti/semi form the labelled join replaced: a key column
+    // that is not unique (k = 1 twice in the table), a key both in the
+    // table and twice in the batch (k = 2), NULL keys twice in the batch
+    // and once in the table, and a key twice in the batch only (k = 4)
+    def referenceIsolated(df: DataFrame, table: String, keyCol: String): (Long, DataFrame) = {
+      val existing = Jdbc.readKeys(spark, iurl, table, keyCol).toDF(keyCol)
+        .select(col(keyCol).cast(df.schema(keyCol).dataType)).localCheckpoint(true)
+      val w = Window.partitionBy(col(keyCol)).orderBy(df.columns.toIndexedSeq.map(col): _*)
+      val ranked = df.withColumn("__rn", row_number().over(w)).localCheckpoint(true)
+      val firstPerKey = ranked.filter(col("__rn") === 1).drop("__rn")
+      val dupInBatch = ranked.filter(col("__rn") > 1).drop("__rn")
+        .withColumn("error", lit("duplicate key within batch"))
+      val clean = firstPerKey.join(broadcast(existing), Seq(keyCol), "left_anti")
+        .localCheckpoint(true)
+      val conflicts = firstPerKey.join(broadcast(existing), Seq(keyCol), "left_semi")
+        .withColumn("error", lit("key already exists"))
+        .unionByName(dupInBatch)
+      Jdbc.append(clean, iurl, table)
+      (clean.count(), conflicts)
+    }
+    val pre = Seq[(String, Option[Int], Int)](
+      ("t1", Some(1), 1), ("t2", Some(1), 2), ("t3", Some(2), 3), ("t4", None, 4))
+      .toDF("id", "k", "score")
+    val batch = Seq[(String, Option[Int], Int)](
+      ("b1", Some(1), 10), ("b2", Some(2), 11), ("b3", Some(2), 12),
+      ("b4", None, 13), ("b5", None, 14), ("b6", Some(3), 15),
+      ("b7", Some(4), 16), ("b8", Some(4), 17))
+      .toDF("id", "k", "score")
+    Seq("multi_got", "multi_ref").foreach { tb =>
+      Jdbc.createTableIfAbsent(iurl, tb, "id VARCHAR(20), k INT, score INT")
+      Jdbc.append(pre, iurl, tb)
+    }
+    def rows(df: DataFrame, cols: String*): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    val (gotN, gotConf) = Jdbc.appendIsolated(batch, iurl, "multi_got", "k")
+    val (refN, refConf) = referenceIsolated(batch, "multi_ref", "k")
+    assert(gotN === refN && gotN === 3L, "the first NULL, b6 and b7 land")
+    assert(rows(Jdbc.readTable(spark, iurl, "multi_got"), "ID", "K", "SCORE") ===
+      rows(Jdbc.readTable(spark, iurl, "multi_ref"), "ID", "K", "SCORE"))
+    assert(gotConf.columns.toSeq === batch.columns.toSeq :+ "error",
+      "the original columns plus error")
+    assert(rows(gotConf, "id", "k", "score", "error") ===
+      rows(refConf, "id", "k", "score", "error"))
+    assert(rows(gotConf, "k", "error") === Seq(
+      "[1,key already exists]", "[2,duplicate key within batch]",
+      "[2,key already exists]", "[4,duplicate key within batch]",
+      "[null,duplicate key within batch]"))
+
+    // tripwire: one eager snapshot of the labelled frame, then the append
+    // and the count — 6 jobs here, where the anti/semi form's three
+    // snapshots ran 8
+    Jdbc.createTableIfAbsent(iurl, "multi_jobs", "id VARCHAR(20), k INT, score INT")
+    Jdbc.append(pre, iurl, "multi_jobs")
+    assert(graft.SparkJobs.count(spark)(
+      Jdbc.appendIsolated(batch, iurl, "multi_jobs", "k")) === 6)
+
     // per-row fallback: the reference's one-transaction-per-row semantics
     val residue = Seq(("u4", "e@x.com", 40), ("u1", "dup@x.com", 41))
       .toDF("id", "email", "score")
@@ -93,6 +151,39 @@ class JdbcSpec extends SparkSpec {
     assert(rowErrs.select("id").as[String].collect().toSeq == Seq("u1"),
       "only the duplicate key errors")
     assert(Jdbc.readTable(spark, iurl, "accounts").count() == 4, "u4 landed despite u1 failing")
+  }
+
+  test("key-conflict checks: one labelled join each, no anti/semi split, one snapshot in appendIsolated") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def code(file: String): List[String] = {
+      val p = Paths.get("src/main/scala/graft", file)
+      assert(Files.exists(p), s"run from the repository root: no $p")
+      Files.readAllLines(p).asScala.toList
+        .filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
+    }
+    // a member's body runs from its first line to the next line at its
+    // own indentation or less
+    def body(lines: List[String], first: String, indent: Int): List[String] = {
+      val start = lines.indexWhere(_.contains(first))
+      assert(start >= 0, s"$first is gone")
+      val end = lines.indexWhere(l => l.trim.nonEmpty &&
+        l.takeWhile(_ == ' ').length <= indent, start + 1)
+      lines.slice(start, if (end < 0) lines.size else end)
+    }
+    def sites(lines: Seq[String], pat: String) =
+      lines.map(_.sliding(pat.length).count(_ == pat)).sum
+    val jdbc = code("io/Jdbc.scala")
+    val resolve = body(code("ops/Ops.scala"), "def resolveIdConflicts(", 2)
+    val j2 = body(code("queries/CoreQueries.scala"),
+      "\"j2_anti_conflict_rewrite\" -> ((s, dir)", 4)
+    Seq("io/Jdbc.scala" -> jdbc, "Ops.resolveIdConflicts" -> resolve,
+        "j2_anti_conflict_rewrite" -> j2).foreach { case (where, lines) =>
+      assert(sites(lines, "left_semi") === 0, s"an anti/semi split is back in $where")
+    }
+    assert(sites(j2, "Ops.resolveIdConflicts(") === 1, "J2's query runs the module code")
+    assert(sites(body(jdbc, "def appendIsolated(", 2), "localCheckpoint") === 1,
+      "one eager snapshot in appendIsolated")
   }
 
   test("W2 in-DB cleanup: DELETE keeps newest per key, ties break on id") {

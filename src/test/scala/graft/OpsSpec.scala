@@ -101,6 +101,35 @@ class OpsSpec extends SparkSpec {
     assert(out.contains("a") && out.contains("c"))
     assert(!out.contains("b") && !out.contains("d"))
     assert((out -- Set("a", "c")).forall(_.length == 20)) // uuid-20 rewrites
+
+    // idCol not first, duplicate and NULL keys in existing, a NULL id in
+    // incoming: against the anti/semi/union form the flagged join replaced
+    val wide = Seq[(Long, Option[String], String)](
+      (1L, Some("a"), "p"), (2L, Some("b"), "q"), (3L, None, "r"),
+      (4L, Some("d"), "s"), (5L, Some("b"), "t"))
+      .toDF("n", "id", "tag")
+    val known = Seq[Option[String]](Some("b"), Some("b"), None, Some("d"), Some("zz"))
+      .toDF("id")
+    val newId = Exprs.deterministicKey20(concat(lit("conflict:"), col("n").cast("string")))
+    val got = Ops.resolveIdConflicts(wide, known, "id", newId)
+    assert(got.columns.toSeq == wide.columns.toSeq, "incoming's column order is kept")
+    val keys = broadcast(known.select(col("id")).distinct())
+    val reference = wide.join(keys, Seq("id"), "left_anti")
+      .unionByName(wide.join(keys, Seq("id"), "left_semi")
+        .withColumn("id", newId.cast("string")))
+      .select(wide.columns.map(col): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(reference))
+    val byN = got.select("n", "id").as[(Long, String)].collect().toMap
+    assert(byN(3L) == null, "a NULL id passes through unchanged")
+    assert(byN(1L) == "a" && byN(4L) != "d" && byN(2L) != byN(5L))
+
+    // incoming is read once: one scan of a parquet-backed input, not two
+    val dir = java.nio.file.Files.createTempDirectory("j2_scan_").toString + "/in"
+    wide.write.parquet(dir)
+    val plan = Ops.resolveIdConflicts(spark.read.parquet(dir), known, "id", newId)
+      .queryExecution.executedPlan.toString
+    assert("FileScan parquet".r.findAllMatchIn(plan).size == 1, plan)
   }
 
   test("§2.8 validateSplit: rows fail, not the job; report counts") {

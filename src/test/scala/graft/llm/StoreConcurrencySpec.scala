@@ -644,6 +644,31 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(Tables.storeLedgerWrapped(spark, store))
   }
 
+  test("a replace window's fresh ledger counts only its own line, not the old total") {
+    def docsN(i: Int) = Seq(("s0", i.toLong * 10)).toDF("source", "v")
+    val path = Files.createTempDirectory("loghist_replace_").toString + "/q"
+    val store = s"$path/registers"
+    CorpusStats.persistLogHist(docsN(0), "source", col("v"), path,
+      batchTag = Some("b0"))
+    (1 to 2).foreach { i =>
+      CorpusStats.appendToLogHist(docsN(i), "source", col("v"), path,
+        batchTag = Some(s"b$i"))
+    }
+    assert(Tables.storeLedgerCounts(spark, store) === ((3, 3L)))
+    val gen = Tables.storeGeneration(spark, store)
+    CorpusStats.persistLogHist(docsN(3), "source", col("v"), path,
+      batchTag = Some("r0"))
+    assert(Tables.storeLedgerCounts(spark, store) === ((1, 1L)),
+      "a re-persist's ledger must not inherit the replaced store's total")
+    assert(!Tables.storeLedgerWrapped(spark, store))
+    assert(Tables.storeGeneration(spark, store) === gen + 1L,
+      "the generation still follows the replaced one")
+    // and the next tagged append sees an unwrapped two-line ledger
+    CorpusStats.appendToLogHist(docsN(4), "source", col("v"), path,
+      batchTag = Some("r1"))
+    assert(Tables.storeLedgerCounts(spark, store) === ((2, 2L)))
+  }
+
   test("vacuumIndexStores: sweeps residue of every index store under the centroids lock") {
     def vecs(ids: Seq[Long]) = ids.map { i =>
       (i, Array.tabulate(4)(d => (i * 4 + d).toDouble / 10.0), i % 2)
