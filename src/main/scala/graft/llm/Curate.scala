@@ -615,19 +615,6 @@ object Curate {
       .groupBy(col("__d"), col("__h")).agg(count(lit(1)).as("__c"))
   }
 
-  /** Per-group rank normalization in exact integer per-mille: a row's
-    * `pm_rank` is its rank position within `groupCol` scaled to
-    * [0, 1000] (`(rank-1)·1000 div (count-1)`; singleton groups at 0;
-    * ties on `idCol` so the ranking is total). The curation use:
-    * quality scores are not comparable ACROSS sources (a mid-tier
-    * encyclopedia page outscores a top-tier forum post on raw
-    * features), so budget selection on the raw score silently drains
-    * whole sources — selecting on `pm_rank >= x` instead takes the
-    * same top fraction of every source. Integer division end to end,
-    * so thresholds replay in any engine.
-    *
-    * Shape: two windows over ONE hash exchange on `groupCol` (the
-    * unordered count window shares the rank window's partitioning). */
   /** Calibration report of a trained quality classifier on its OWN
     * labeled seed: score the seed, rank-normalize (one group — raw
     * scores are only comparable within the model), band into ten
@@ -656,6 +643,19 @@ object Curate {
       .select(col("decile"), col("n_docs"), col("n_pos"), col("pos_pm"))
   }
 
+  /** Per-group rank normalization in exact integer per-mille: a row's
+    * `pm_rank` is its rank position within `groupCol` scaled to
+    * [0, 1000] (`(rank-1)·1000 div (count-1)`; singleton groups at 0;
+    * ties on `idCol` so the ranking is total). The curation use:
+    * quality scores are not comparable ACROSS sources (a mid-tier
+    * encyclopedia page outscores a top-tier forum post on raw
+    * features), so budget selection on the raw score silently drains
+    * whole sources — selecting on `pm_rank >= x` instead takes the
+    * same top fraction of every source. Integer division end to end,
+    * so thresholds replay in any engine.
+    *
+    * Shape: two windows over ONE hash exchange on `groupCol` (the
+    * unordered count window shares the rank window's partitioning). */
   def rankNormalize(df: DataFrame, groupCol: String, scoreCol: String,
                     idCol: String): DataFrame = {
     require(!df.columns.exists(Set("pm_rank", "__rnk", "__cnt")),

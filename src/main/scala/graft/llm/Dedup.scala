@@ -209,13 +209,6 @@ object Dedup {
     inter / (size(a) + size(b) - inter)
   }
 
-  /** MinHash+LSH near-dup pairs over (id, text):
-    * shingle+hash → signature → explode bands → self-join on band key →
-    * distinct candidates → verify with exact Jaccard ≥ threshold.
-    * The only shuffles are the band-key join and the verify join on id —
-    * both linear in data. `maxBucket` drops degenerate buckets (stop
-    * phrases / boilerplate) that would otherwise go quadratic — the
-    * standard guard at 100 TB. */
   /** Shared band-bucket cap, interpolated into the DuckDB oracle SQL so
     * the two engines can't silently drift. */
   val DefaultMaxBucket = 1000
@@ -282,6 +275,13 @@ object Dedup {
   def bandIndexFrom(prepared: DataFrame, idCol: String): DataFrame =
     bandsOf(prepared, idCol)
 
+  /** MinHash+LSH near-dup pairs over (id, text):
+    * shingle+hash → signature → explode bands → self-join on band key →
+    * distinct candidates → verify with exact Jaccard ≥ threshold.
+    * The only shuffles are the band-key join and the verify join on id —
+    * both linear in data. `maxBucket` drops degenerate buckets (stop
+    * phrases / boilerplate) that would otherwise go quadratic — the
+    * standard guard at 100 TB. */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.5, shingleN: Int = 3,
                       maxBucket: Int = DefaultMaxBucket): DataFrame =

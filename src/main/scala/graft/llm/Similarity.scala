@@ -624,19 +624,21 @@ object Similarity {
     ivf match {
       case None =>
         graft.io.Tables.withIndexLock(spark, path) {
-          writeCodes(encodeRows(guarded(new AdcIndex(spark, path)), df, idCol, embCol),
+          val c = guarded(new AdcIndex(spark, path))
+          writeCodes(encodeRows(c, lengthChecked(df, embCol, c.dim, path), idCol, embCol),
             path, ivf = false, append = true)
         }
       case Some(IvfBatch(labelCol, batchTag)) =>
         graft.io.Tables.readMergePublishIndex(spark, path, batchTag) { _ =>
           val idx = new AdcIndex(spark, path)
           val c = guarded(idx)
+          val batch = lengthChecked(df, embCol, c.dim, path)
           val (labeled, lc) = labelCol match {
-            case Some(lc) => (df, lc)
+            case Some(lc) => (batch, lc)
             case None =>
-              val assigned = assignClusters(df, idCol, embCol, idx.centroids)
+              val assigned = assignClusters(batch, idCol, embCol, idx.centroids)
                 .select(col(idCol).as("__cid"), col("label").as("__albl"))
-              (df.join(assigned, col(idCol) === col("__cid")).drop("__cid"), "__albl")
+              (batch.join(assigned, col(idCol) === col("__cid")).drop("__cid"), "__albl")
           }
           val (centNew, eq) = buildIvfIndex(labeled, idCol, embCol, lc)
           writeCodes(ivfCodes(c, labeled, idCol, embCol, eq), path, ivf = true,
@@ -644,6 +646,20 @@ object Similarity {
           mergeCentroidSums(path, centNew)
         }
     }
+  }
+
+  /** `df` with `embCol` refused row by row, inside the append's own
+    * jobs, when its length is not the index's `dim` (the [[cellLabel]]
+    * pattern): a wrong-length row would otherwise encode, assign and
+    * serve silently — SQ8 pads NULL codes, PQ slices what arrives, an
+    * IVF centroid sum takes the extra positions. A NULL embedding
+    * passes unchanged. */
+  private def lengthChecked(df: DataFrame, embCol: String, dim: Int,
+                            path: String): DataFrame = {
+    val n = size(col(embCol))
+    df.withColumn(embCol, when(col(embCol).isNull || n === dim, col(embCol))
+      .otherwise(raise_error(concat(lit("append: a batch embedding has length "),
+        n.cast("string"), lit(s" but the index at $path has dim $dim")))))
   }
 
   /** The one append guard: the caller's layout must match the
@@ -1622,7 +1638,10 @@ object Similarity {
     * degenerate cap: the append FAILS LOUDLY if the batch would push
     * a cell past `maxCluster` (a full rebuild would silently drop the
     * whole cell — at that point the geometry is stale and the honest
-    * move is a rebuild with a larger nlist, see [[autoNlist]]).
+    * move is [[rebuildKnnGraphStore]] with a larger nlist, see
+    * [[autoNlist]]); the check precedes every store mutation. A batch
+    * row whose embedding length differs from the store's dim fails the
+    * same way ([[lengthChecked]]).
     *
     * Scale: reads ONLY the touched cells' vector partitions and the
     * affected homes' edge partitions (both partition-pruned);
@@ -1633,44 +1652,12 @@ object Similarity {
     * files, the edge-partition rewrite is IDEMPOTENT (re-merging into
     * an already-merged list is a no-op, so a retry over a
     * half-published edge store converges to the same content), and
-    * the tag publishes inside the centroid swap's atomic rename.
-    *
-    * `autoRebuild` turns the cap-overflow failure into the documented
-    * recovery, inline: the geometry retrains on stored ∪ batch under
-    * the SAME held lock (sized against the store's own maxCluster
-    * with 2x headroom), and since the rebuild rewrites vectors and
-    * edges wholesale from the quantized rows, the batch lands THROUGH
-    * it — equivalent to a from-scratch build over everything at the
-    * fresh geometry, which is exactly what the overflow's manual
-    * remedy produces. The overflow check precedes every store
-    * mutation, so the rebuild always starts from a consistent store;
-    * the batch tag commits through the rebuild's centroid swap, so
-    * replays still no-op. If kmeans leaves a cell over the cap, the
-    * geometry retrains at doubled nlist, each retrain publishing in
-    * its own window. Cost is corpus-scale when it fires (a
-    * rebuild IS corpus-scale) — the flag is for unattended ingest
-    * where loud failure is worse than a rare retrain. */
+    * the tag publishes inside the centroid swap's atomic rename. */
   def appendToKnnGraphStore(df: DataFrame, idCol: String, embCol: String,
                             path: String,
-                            batchTag: Option[String] = None,
-                            autoRebuild: Boolean = false): Unit = {
+                            batchTag: Option[String] = None): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // autoRebuild's cap verification: the nlist of the last retrain,
-    // and whether a cell still exceeds the cap after it
-    var nl = 0
-    var overCap = false
-    def retrain(minNlist: Int,
-                extraEq: Option[DataFrame]): Seq[(Long, Seq[Long])] = {
-      val maxCluster = spark.read.parquet(s"$path/meta").head().getLong(2)
-      val cents = rebuildGraph(spark, path,
-        targetCell = math.max(1L, maxCluster / 2L), minNlist = minNlist,
-        iters = 2, extraEq = extraEq)
-      overCap = spark.read.parquet(s"$path/vectors")
-        .groupBy(col("cell")).agg(count(lit(1)).as("__n"))
-        .agg(max(col("__n"))).head().getLong(0) > maxCluster
-      cents
-    }
     graft.io.Tables.readMergePublish(spark, s"$path/centroids", batchTag) { _ =>
       // heal a prior append that crashed inside replacePartitions'
       // rename window BEFORE deriving retry content — a home partition
@@ -1681,16 +1668,10 @@ object Similarity {
       val metaRow = spark.read.parquet(s"$path/meta").head()
       val (k, nprobe, maxCluster) =
         (metaRow.getLong(0).toInt, metaRow.getLong(1).toInt, metaRow.getLong(2))
-      // fail-loud dim guard (the [[appendGuard]] precedent): the
-      // assignment kernel dots over min(dim, |centroid|), so a
-      // wrong-dim batch would silently mis-assign instead of erroring
-      val storeDim = cents.head._2.length
-      df.select(size(col(embCol))).head(1).foreach(r =>
-        require(r.getInt(0) == storeDim,
-          s"appendToKnnGraphStore: batch embeddings have dim ${r.getInt(0)} " +
-            s"but the store at $path was built at dim $storeDim — pass the " +
-            "dim the store was built with"))
-      val newAsg = graphAssignments(df, idCol, embCol, cents, nprobe)
+      // the assignment kernel dots over min(dim, |centroid|), so a
+      // wrong-length row would silently mis-assign instead of erroring
+      val newAsg = graphAssignments(lengthChecked(df, embCol, cents.head._2.length, path),
+          idCol, embCol, cents, nprobe)
         .localCheckpoint(false)
       val batchIds = newAsg.select(col("cid")).distinct()
       val touched = newAsg.select(col("cell")).distinct().as[Long].collect().toSeq
@@ -1709,114 +1690,66 @@ object Similarity {
           (coalesce(col("o"), lit(0L)) + coalesce(col("n"), lit(0L))).as("bc"))
         .collect().map(r => r.getLong(0) -> r.getLong(1))
       val over = cellCounts.filter(_._2 > maxCluster)
-      if (over.nonEmpty && !autoRebuild) throw new IllegalArgumentException(
+      if (over.nonEmpty) throw new IllegalArgumentException(
         s"appendToKnnGraphStore: batch pushes cell(s) ${over.map(_._1).mkString(", ")} " +
           s"past maxCluster=$maxCluster at $path — the cell geometry is stale; " +
-          "rebuild the store with a larger nlist (autoNlist), or pass " +
-          "autoRebuild = true")
-      if (over.nonEmpty) {
-        // auto mode: the overflow means the geometry is stale for
-        // stored ∪ batch, so retraining on the STORE ALONE could
-        // leave cells the batch still floods (a batch from a region
-        // the store never saw). Instead, rebuild on stored ∪ batch
-        // inside this same window (the cap check above preceded every
-        // mutation): the rebuild rewrites vectors and edges from the
-        // quantized rows wholesale, so it IS the append — the batch
-        // lands through it and the batch tag commits with the rebuilt
-        // cells (replays keep no-oping). Geometry sized against the
-        // store's own maxCluster with 2x headroom.
-        val batchEq = df.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("eq"))
-        val nStored = spark.read.parquet(s"$path/vectors")
-          .filter(col("probe") === 1L).count()
-        val nBatch = batchEq.count()
-        val target = math.max(1L, maxCluster / 2L)
-        val minNlist = math.max(4L, (nStored + nBatch + target - 1L) / target)
-        val rebuilt = retrain(minNlist.toInt, Some(batchEq))
-        nl = rebuilt.size
-        vectorRows(spark, "cid", rebuilt)
-      } else {
-        val valid = cellCounts.filter(_._2 >= 2L).map(_._1)
-        val mN = newAsg.filter(col("cell").isin(valid: _*))
-          .select(col("cid").as("vid"), col("eq"), col("cell"))
-        val mO = oldMembers.filter(col("cell").isin(valid: _*))
-          .select(col("cid").as("vid"), col("eq"), col("cell"))
-        val cNew = cosinePairs(mN, mO.unionByName(mN),
-            col("x.cell") === col("y.cell") && col("x.vid") =!= col("y.vid"))
-          .distinct()
-          .localCheckpoint(false)
-        // old→new candidates are the MIRROR of cNew's new→old subset
-        // (cosine is symmetric, the zero-norm guard too) — derived, not
-        // re-joined: this halves the append's pair-scoring work
-        val cOld = cNew
-          .join(broadcast(batchIds.withColumnRenamed("cid", "b")),
-            Seq("b"), "left_anti")
-          .select(col("b").as("a"), col("a").as("b"), col("cosine"))
-          .localCheckpoint(false)
-        val newLists = knnTopK(cNew, k)
-        val affected = cOld.select(col("a")).distinct()
-        val oldHome = oldMembers.select(col("cid").as("a"), col("home")).distinct()
-        val affHomes = oldHome.join(affected, "a")
-          .select(col("home")).distinct().as[Long].collect().toSeq
-        val edgesStore = spark.read.parquet(s"$path/edges")
-        val storedAff = edgesStore.filter(col("home").isin(affHomes: _*))
-          .join(affected, Seq("a"))
-          .select(col("a"), col("b"), col("cosine"))
-        // distinct: a retry re-generates candidates a half-published
-        // store already merged — identical (a, b, cosine) rows collapse
-        val mergedOld = knnTopK(storedAff.unionByName(cOld).distinct(), k)
-        val newHome = newAsg.select(col("cid").as("a"), col("home")).distinct()
-        val updated = newLists.join(broadcast(newHome), "a")
-          .unionByName(mergedOld.join(oldHome, "a"))
-          .localCheckpoint(false)
-        val homes = updated.select(col("home")).distinct().as[Long].collect().toSeq
-        val keep = edgesStore.filter(col("home").isin(homes: _*))
-          .join(updated.select(col("a")).distinct(), Seq("a"), "left_anti")
-        val content = keep.select(col("a"), col("b"), col("rank"),
-            col("cosine"), col("home"))
-          .unionByName(updated.select(col("a"), col("b"), col("rank"),
-            col("cosine"), col("home")))
-        // publish order: vectors (staged, skip-placed) -> edges
-        // (idempotent partition rewrite) -> centroids (tag commits)
-        appendPartitioned(newAsg, s"$path/vectors", "cell", batchTag)
-        if (homes.nonEmpty)
-          graft.io.Tables.replacePartitions(spark, content, s"$path/edges", "home")
-        vectorRows(spark, "cid", cents)
-      }
+          "retrain it with rebuildKnnGraphStore (a larger nlist, see autoNlist), " +
+          "then append the batch again")
+      val valid = cellCounts.filter(_._2 >= 2L).map(_._1)
+      val mN = newAsg.filter(col("cell").isin(valid: _*))
+        .select(col("cid").as("vid"), col("eq"), col("cell"))
+      val mO = oldMembers.filter(col("cell").isin(valid: _*))
+        .select(col("cid").as("vid"), col("eq"), col("cell"))
+      val cNew = cosinePairs(mN, mO.unionByName(mN),
+          col("x.cell") === col("y.cell") && col("x.vid") =!= col("y.vid"))
+        .distinct()
+        .localCheckpoint(false)
+      // old→new candidates are the MIRROR of cNew's new→old subset
+      // (cosine is symmetric, the zero-norm guard too) — derived, not
+      // re-joined: this halves the append's pair-scoring work
+      val cOld = cNew
+        .join(broadcast(batchIds.withColumnRenamed("cid", "b")),
+          Seq("b"), "left_anti")
+        .select(col("b").as("a"), col("a").as("b"), col("cosine"))
+        .localCheckpoint(false)
+      val newLists = knnTopK(cNew, k)
+      val affected = cOld.select(col("a")).distinct()
+      val oldHome = oldMembers.select(col("cid").as("a"), col("home")).distinct()
+      val affHomes = oldHome.join(affected, "a")
+        .select(col("home")).distinct().as[Long].collect().toSeq
+      val edgesStore = spark.read.parquet(s"$path/edges")
+      val storedAff = edgesStore.filter(col("home").isin(affHomes: _*))
+        .join(affected, Seq("a"))
+        .select(col("a"), col("b"), col("cosine"))
+      // distinct: a retry re-generates candidates a half-published
+      // store already merged — identical (a, b, cosine) rows collapse
+      val mergedOld = knnTopK(storedAff.unionByName(cOld).distinct(), k)
+      val newHome = newAsg.select(col("cid").as("a"), col("home")).distinct()
+      val updated = newLists.join(broadcast(newHome), "a")
+        .unionByName(mergedOld.join(oldHome, "a"))
+        .localCheckpoint(false)
+      val homes = updated.select(col("home")).distinct().as[Long].collect().toSeq
+      val keep = edgesStore.filter(col("home").isin(homes: _*))
+        .join(updated.select(col("a")).distinct(), Seq("a"), "left_anti")
+      val content = keep.select(col("a"), col("b"), col("rank"),
+          col("cosine"), col("home"))
+        .unionByName(updated.select(col("a"), col("b"), col("rank"),
+          col("cosine"), col("home")))
+      // publish order: vectors (staged, skip-placed) -> edges
+      // (idempotent partition rewrite) -> centroids (tag commits)
+      appendPartitioned(newAsg, s"$path/vectors", "cell", batchTag)
+      if (homes.nonEmpty)
+        graft.io.Tables.replacePartitions(spark, content, s"$path/edges", "home")
+      vectorRows(spark, "cid", cents)
     }
-    // kmeans gives NO balance guarantee, so sizing nlist for a target
-    // cell is a heuristic, not the invariant — the retrain verified the
-    // cap the appender relies on against the published geometry (total
-    // probed members per cell, the same count the overflow check uses);
-    // retrain at doubled nlist until it holds. The batch already landed
-    // and its tag committed, so each retry is a pure geometry retrain
-    // from the store alone, published in its own window. Without this,
-    // a skewed kmeans could leave a still-over-cap store and the NEXT
-    // append would immediately re-trigger another corpus-scale rebuild
-    // (or throw without autoRebuild).
-    var attempts = 0
-    while (overCap && attempts < 3) {
-      nl = math.max(nl * 2, nl + 1); attempts += 1
-      graft.io.Tables.readMergePublish(spark, s"$path/centroids") { _ =>
-        vectorRows(spark, "cid", retrain(nl, None))
-      }
-    }
-    require(!overCap,
-      s"appendToKnnGraphStore autoRebuild: the batch LANDED and its " +
-        s"tag committed, but retraining up to nlist=$nl could not " +
-        s"bring every cell under the store's maxCluster — the store " +
-        s"at $path is PUBLISHED over-cap (a replay of this call " +
-        "no-ops on the applied tag and will not shrink it); the data " +
-        "is too concentrated for this cap: raise maxCluster or " +
-        "rebuild manually with a larger nlist")
   }
 
   /** Retrain the graph store's CELL GEOMETRY from its own vectors —
     * the recovery for [[appendToKnnGraphStore]]'s cap-overflow
-    * `require` (a store built at a small corpus eventually pushes
-    * every cell past maxCluster as appends accumulate; until now the
-    * fix was a manual persist-over). Re-derives nlist from the stored
-    * corpus via the [[autoNlist]] rule, re-trains cells, and rewrites
+    * failure (a store built at a small corpus eventually pushes
+    * every cell past maxCluster as appends accumulate). Re-derives
+    * nlist from the stored corpus via the [[autoNlist]] rule,
+    * re-trains cells, and rewrites
     * vectors + edges from the stored probe-1 (cid, eq) rows — the
     * quantized form is the store's source of truth, so no raw
     * embeddings are needed. The applied-tag ledger and generation
@@ -1839,44 +1772,26 @@ object Similarity {
                            path: String, targetCell: Long = 500L,
                            minNlist: Int = 4, iters: Int = 2): Unit =
     graft.io.Tables.readMergePublish(spark, s"$path/centroids") { _ =>
-      vectorRows(spark, "cid", rebuildGraph(spark, path, targetCell, minNlist, iters))
+      graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
+      val metaRow = spark.read.parquet(s"$path/meta").head()
+      val (k, nprobe, maxCluster) =
+        (metaRow.getLong(0).toInt, metaRow.getLong(1).toInt,
+          metaRow.getLong(2).toInt)
+      // EAGER snapshot: the rewrite below overwrites the dir this
+      // frame reads — a lazy checkpoint would race the truncation
+      val eq0 = spark.read.parquet(s"$path/vectors")
+        .filter(col("probe") === 1L)
+        .select(col("cid").as("vid"), col("eq"))
+        .localCheckpoint(true)
+      val nlist = math.max(minNlist, (eq0.count() / targetCell).toInt)
+      val cents = kmeansTrain(eq0, nlist, iters)
+      writeGraph(eq0, path, cents, k, nprobe, maxCluster)
+      vectorRows(spark, "cid", cents)
     }
-
-  /** Retrain the cells and rewrite vectors + edges, returning the new
-    * cells for the caller's centroid publish — shared by the public
-    * rebuild and [[appendToKnnGraphStore]]'s autoRebuild overflow
-    * path, both inside the centroids' read-merge-publish window.
-    * `extraEq` rows (vid, eq) join the stored rows for training AND
-    * the vectors/edges rewrite (stored rows with the same vid are
-    * superseded — replay safety for a batch a crashed attempt half
-    * placed), which makes the rebuild double as an append. */
-  private def rebuildGraph(spark: org.apache.spark.sql.SparkSession,
-                           path: String, targetCell: Long,
-                           minNlist: Int, iters: Int,
-                           extraEq: Option[DataFrame] = None): Seq[(Long, Seq[Long])] = {
-    graft.io.Tables.restoreOrphanedPartitions(spark, s"$path/edges")
-    val metaRow = spark.read.parquet(s"$path/meta").head()
-    val (k, nprobe, maxCluster) =
-      (metaRow.getLong(0).toInt, metaRow.getLong(1).toInt,
-        metaRow.getLong(2).toInt)
-    // EAGER snapshot: the rewrite below overwrites the dir this
-    // frame reads — a lazy checkpoint would race the truncation
-    val stored = spark.read.parquet(s"$path/vectors")
-      .filter(col("probe") === 1L)
-      .select(col("cid").as("vid"), col("eq"))
-    val eq0 = extraEq.fold(stored)(x =>
-        stored.join(x.select(col("vid")), Seq("vid"), "left_anti")
-          .unionByName(x))
-      .localCheckpoint(true)
-    val nlist = math.max(minNlist, (eq0.count() / targetCell).toInt)
-    val cents = kmeansTrain(eq0, nlist, iters)
-    writeGraph(eq0, path, cents, k, nprobe, maxCluster)
-    cents
-  }
 
   /** The one writer of the graph store's `vectors` and `edges` over a
     * quantized (vid, eq) frame against trained `cents` — shared by the
-    * persist and the rebuild. The caller publishes the centroids
+    * persist and [[rebuildKnnGraphStore]]. The caller publishes the centroids
     * after it. */
   private def writeGraph(eq0: DataFrame, path: String,
                          cents: Seq[(Long, Seq[Long])], k: Int, nprobe: Int,

@@ -709,31 +709,41 @@ object Ops {
             (col("n") * col("syy") - col("sy") * col("sy")))).as("corr"))
   }
 
+  /** A8 — deterministic summary statistics (sql_extraction.py:574's
+    * `describe()`): count/min/max/mean/std from exact decimal sums so
+    * results don't depend on partitioning (see Exprs.dsum). `scale`
+    * must make the column exact; squares use 2×scale. */
+  def summaryStats(df: DataFrame, c: String, scale: Int = 2): DataFrame =
+    describe(df, Nil, c, scale)
+
   /** Per-group describe — [[summaryStats]] with a GROUP BY: the
     * per-source/per-type profile every pipeline report wants. Same
     * exact-decimal-sum discipline, so values are partitioning-
     * independent and replay bit-identically in any engine; one
     * partial+final aggregation, group count never matters. */
   def groupedSummaryStats(df: DataFrame, groupCol: String, c: String,
-                          scale: Int = 2): DataFrame = {
+                          scale: Int = 2): DataFrame =
+    describe(df, Seq(col(groupCol)), c, scale)
+
+  /** The one describe body over `df.groupBy(groups: _*)`. With no
+    * groups it is the global aggregate, so an empty input still yields
+    * one row. */
+  private def describe(df: DataFrame, groups: Seq[Column], c: String,
+                       scale: Int): DataFrame = {
     val x = col(c)
-    df.groupBy(col(groupCol)).agg(
+    df.groupBy(groups: _*).agg(
       count(x).as("cnt"),
       min(x).cast("double").as("min_v"),
       max(x).cast("double").as("max_v"),
       Exprs.dsum(x, scale).as("sum_v"),
       Exprs.dsum(x * x, scale * 2).as("sum_sq"))
-      .select(col(groupCol), col("cnt"), col("min_v"), col("max_v"), col("sum_v"),
+      .select(groups ++ Seq(col("cnt"), col("min_v"), col("max_v"), col("sum_v"),
         (col("sum_v") / col("cnt")).as("mean_v"),
         sqrt(greatest(lit(0.0),
           (col("sum_sq") - col("sum_v") * col("sum_v") / col("cnt")) / (col("cnt") - 1)))
-          .as("std_v"))
+          .as("std_v")): _*)
   }
 
-  /** A8 — deterministic summary statistics (sql_extraction.py:574's
-    * `describe()`): count/min/max/mean/std from exact decimal sums so
-    * results don't depend on partitioning (see Exprs.dsum). `scale`
-    * must make the column exact; squares use 2×scale. */
   /** Join-blowup audit — the "estimate before you shuffle" diagnostic
     * a 100 TB join needs: per-key multiplicities on both sides, the
     * exact output cardinality each key will produce (nl·nr), and its
@@ -849,21 +859,6 @@ object Ops {
             col("__turn").as("s")))),
           x => x.getField("s")), "\n")).as("convo_hash"))
       .withColumn("alternation_ok", col("n_repeats") === 0L)
-  }
-
-  def summaryStats(df: DataFrame, c: String, scale: Int = 2): DataFrame = {
-    val x = col(c)
-    df.agg(
-      count(x).as("cnt"),
-      min(x).cast("double").as("min_v"),
-      max(x).cast("double").as("max_v"),
-      Exprs.dsum(x, scale).as("sum_v"),
-      Exprs.dsum(x * x, scale * 2).as("sum_sq"))
-      .select(col("cnt"), col("min_v"), col("max_v"), col("sum_v"),
-        (col("sum_v") / col("cnt")).as("mean_v"),
-        sqrt(greatest(lit(0.0),
-          (col("sum_sq") - col("sum_v") * col("sum_v") / col("cnt")) / (col("cnt") - 1)))
-          .as("std_v"))
   }
 
   /** Gate with ZERO-extra-pass accounting: filter `df` on `cond`

@@ -4486,10 +4486,6 @@ object LlmQueries {
        |  WHERE na > 0 AND nb > 0) t
        |  WHERE cosine >= $EmbDedupThreshold)""".stripMargin
 
-  /** DSIR CTE chain (`wsum` = per-doc (n_toks, dsir_micro) for docs
-    * with ≥1 token) — shared by llm_dsir_weights and llm_dsir_sample
-    * so hashing, smoothing and the micro-nat quantization can't
-    * drift. Target = the src0 slice. */
   /** The labeled quality seed shared by every quality-LR query:
     * doc_id < 250, y = membership in the five target sources. */
   private def qualityLrSeed(s: SparkSession, dir: String): DataFrame =
@@ -4650,6 +4646,10 @@ object LlmQueries {
        |    (SELECT bias FROM b2) + coalesce(s, 0) AS score_micro
        |  FROM documents d LEFT JOIN scsum USING (doc_id))""".stripMargin
 
+  /** DSIR CTE chain (`wsum` = per-doc (n_toks, dsir_micro) for docs
+    * with ≥1 token) — shared by llm_dsir_weights and llm_dsir_sample
+    * so hashing, smoothing and the micro-nat quantization can't
+    * drift. Target = the src0 slice. */
   private lazy val dsirCtes: String =
     s"""tok AS (SELECT doc_id, w FROM (
        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS w
@@ -5047,10 +5047,6 @@ object LlmQueries {
   /** Fixed BM25 query-term set, shared by the Spark query and oracle. */
   private val BmQueryTerms = Seq("spark", "vector", "hash")
 
-  /** BM25 oracle: every constant cast to DOUBLE so DuckDB performs the
-    * same IEEE double sequence as the Spark fold (its bare decimal
-    * literals are DECIMAL-typed and would pre-fold 1.2 + 1 to an exact
-    * 2.2, a different double than 1.2d + 1.0d). */
   /** BM25 scoring CTE chain (`bmscored` = (doc_id, bm25)) — shared by
     * llm_bm25 and the RRF hybrid oracle so tokenization, idf
     * quantization and the float fold can't drift between them. */
@@ -5077,6 +5073,10 @@ object LlmQueries {
        |  FROM t, stats)""".stripMargin
   }
 
+  /** BM25 oracle: every constant cast to DOUBLE so DuckDB performs the
+    * same IEEE double sequence as the Spark fold (its bare decimal
+    * literals are DECIMAL-typed and would pre-fold 1.2 + 1 to an exact
+    * 2.2, a different double than 1.2d + 1.0d). */
   private lazy val Bm25OracleSql: String =
     s"""WITH $Bm25Ctes
        |SELECT doc_id, bm25 FROM bmscored ORDER BY doc_id""".stripMargin

@@ -1,11 +1,5 @@
 package graft.sources
 
-/** Shared HTTP transport for the live-service clients (RTDB, Datastore,
-  * Auth). One retry policy in one place: requests here are all
-  * idempotent reads (GETs or read-only query POSTs), so 5xx, 429/408
-  * and transport errors retry with exponential backoff; any other 4xx
-  * fails fast (a bad token, path or body never heals by retrying). Any
-  * 2xx is success. No sleep is wasted after the final failed attempt. */
 /** Fail-fast non-retryable HTTP status. Subclasses
   * IllegalArgumentException so existing catch-and-degrade sites keep
   * working, while callers that must distinguish "endpoint unsupported"
@@ -14,6 +8,12 @@ package graft.sources
 private[sources] final class HttpStatusException(val code: Int, url: String)
   extends IllegalArgumentException(s"HTTP $code from $url (not retryable)")
 
+/** Shared HTTP transport for the live-service clients (RTDB, Datastore,
+  * Auth). One retry policy in one place: requests here are all
+  * idempotent reads (GETs or read-only query POSTs), so 5xx, 429/408
+  * and transport errors retry with exponential backoff; any other 4xx
+  * fails fast (a bad token, path or body never heals by retrying). Any
+  * 2xx is success. No sleep is wasted after the final failed attempt. */
 private[sources] object Http {
 
   def request(url: String, method: String = "GET", body: Option[String] = None,

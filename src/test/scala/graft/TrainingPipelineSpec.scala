@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The full training-data curation pipeline composed end to end through
-  * the facade — raw crawl to shard files — with ground truth injected
-  * at every stage: exact duplicates, near-duplicates, benchmark
-  * contamination, and PII, each of which exactly one stage must
+/** The full training-data curation pipeline composed end to end from
+  * the facade and the module methods — raw crawl to shard files — with
+  * ground truth injected at every stage: exact duplicates,
+  * near-duplicates, benchmark contamination, and PII, each of which
+  * exactly one stage must
   * remove, so the final corpus is a known id set and any stage
   * regression shows as a precise diff. The per-operator semantics are
   * oracle-checked elsewhere; this spec proves the stages COMPOSE (the
@@ -44,12 +45,13 @@ class TrainingPipelineSpec extends SparkSpec {
     // 2. near-dup dedup, and the clusters feeding it are split-atomic
     val pairs = Graft.nearDupPairs(exact, "doc_id", "text", threshold = 0.8)
     val comp = graft.ops.Ops.connectedComponents(pairs, "a", "b")
-    val split = Graft.leakFreeSplit(exact, comp, "doc_id")
+    val split = graft.llm.Curate.leakFreeSplit(exact, comp, "doc_id")
     val leaky = split.join(comp, split("doc_id") === comp("node"))
       .groupBy("label").agg(countDistinct("split").as("n"))
       .filter(col("n") > 1).count()
     assert(leaky == 0, "a duplicate cluster must never span train and val")
-    val deduped = Graft.dedupNearDuplicates(exact, "doc_id", "text", threshold = 0.8)
+    // one survivor per cluster: the non-representative members drop
+    val deduped = graft.llm.Dedup.keepOnePerCluster(exact, "doc_id", comp)
     assert(deduped.select("doc_id").as[Long].collect().toSet ==
       ((1 to 40) ++ (121 to 123)).map(_.toLong).toSet,
       "near-dup copies drop; their originals and all distinct docs survive")
@@ -72,7 +74,7 @@ class TrainingPipelineSpec extends SparkSpec {
       "only the docs embedding benchmark text are removed")
 
     // 4. PII scrub redacts in place — same rows, no addresses left
-    val scrubbed = Graft.scrubPii(clean, "text")
+    val scrubbed = clean.withColumn("text", graft.llm.Text.scrubPii(col("text")))
     assert(scrubbed.count() == 40)
     assert(scrubbed.filter(col("text").contains("@")).count() == 0)
     assert(scrubbed.filter(col("doc_id") === 11L)
@@ -84,7 +86,7 @@ class TrainingPipelineSpec extends SparkSpec {
     val withTokens = scrubbed.withColumn("tokens",
       graft.llm.Text.wsTokenCount(col("text")))
     val total = withTokens.agg(sum("tokens")).as[Long].head()
-    val mixed = Graft.mixCorpus(withTokens, "source", "tokens", "doc_id", total / 2)
+    val mixed = graft.llm.Curate.mixCorpus(withTokens, "source", "tokens", "doc_id", total / 2)
     val rates = mixed.groupBy("source").agg(max("rate_pm").as("r"))
       .as[(String, Long)].collect().toMap
     assert(rates("books") == 1000L, "the small source is never starved")
@@ -100,6 +102,6 @@ class TrainingPipelineSpec extends SparkSpec {
     // and a mid-run resume reads the exact remainder
     val cursor = back.orderBy("shard", "pos")
       .select("shard", "pos").as[(Long, Long)].collect()(19)
-    assert(Graft.readShardsFrom(spark, dir, cursor._1, cursor._2).count() == 20)
+    assert(graft.llm.Order.readShardsFrom(spark, dir, cursor._1, cursor._2).count() == 20)
   }
 }

@@ -41,6 +41,10 @@ class StoreConcurrencySpec extends SparkSpec {
     if (!errs.isEmpty) throw errs.peek()
   }
 
+  /** `e` and its causes, outermost first. */
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
   private def regsSorted(path: String) =
     CorpusStats.readHllProfile(spark, path)
       .orderBy("source", "idx").collect().toSeq
@@ -373,6 +377,70 @@ class StoreConcurrencySpec extends SparkSpec {
       e.getMessage.contains("stored code"))
   }
 
+  test("index appends refuse a batch whose second row has the wrong embedding length") {
+    val dim = 8
+    def vecs(rows: Seq[(Long, Int)]) = rows.map { case (i, n) =>
+      (i, Array.tabulate(n)(d => math.sin(i * 8.0 + d)), i % 2)
+    }.toDF("vec_id", "embedding", "label")
+    val base = vecs((0L to 11L).map(_ -> dim))
+    // the SECOND row is short: a probe of the first row cannot see it
+    val bad = vecs(Seq(100L -> dim, 101L -> 5))
+    val store = base.select(col("vec_id").as("cid"),
+      Similarity.quantize(col("embedding")).as("ce"))
+    val dir = Files.createTempDirectory("append_len_").toString
+    def answers(serve: => DataFrame): Seq[String] =
+      serve.collect().map(_.toString).toSeq.sorted
+    /** The append is refused, naming the index and both lengths, and
+      * the index then serves what it served before. */
+    def refused(what: String, path: String, serve: => DataFrame)(append: => Unit): Unit = {
+      val before = answers(serve)
+      assert(before.nonEmpty)
+      val e = intercept[Exception](append)
+      assert(causes(e).exists(t => Option(t.getMessage).exists(m =>
+        m.contains(path) && m.contains("length 5") && m.contains(s"dim $dim"))),
+        s"$what: expected the short row to be refused, got: $e")
+      assert(answers(serve) === before, s"$what: the refused batch changed the index")
+    }
+    val pq = s"$dir/pq"
+    Similarity.persistPqIndex(base, "vec_id", "embedding", "label", pq, m = 2, dim = dim)
+    refused("appendToPqIndex", pq, {
+      val (books, codes) = Similarity.readPqIndex(spark, pq)
+      Similarity.pqServe(books, codes, store, base, "vec_id", "embedding",
+        k = 2, m = 2, dim = dim, coarse = 4)
+    })(Similarity.appendToPqIndex(bad, "vec_id", "embedding", pq, m = 2, dim = dim))
+    val sq8 = s"$dir/sq8"
+    Similarity.persistSq8Index(base, "vec_id", "embedding", sq8)
+    refused("appendToSq8Index", sq8, {
+      val (quant, codes) = Similarity.readSq8Index(spark, sq8)
+      Similarity.sq8Serve(quant, codes, store, base, "vec_id", "embedding", k = 2, coarse = 4)
+    })(Similarity.appendToSq8Index(bad, "vec_id", "embedding", sq8, dim = dim))
+    val ivfSq8 = s"$dir/ivfsq8"
+    Similarity.persistIvfSq8Index(base, "vec_id", "embedding", "label", ivfSq8)
+    refused("appendToIvfSq8Index", ivfSq8, {
+      val (cent, quant, codes) = Similarity.readIvfSq8Index(spark, ivfSq8)
+      Similarity.ivfSq8TopK(cent, quant, codes, store, base, "vec_id", "embedding",
+        k = 2, coarse = 4, nprobe = 2)
+    })(Similarity.appendToIvfSq8Index(bad, "vec_id", "embedding", ivfSq8, dim = dim,
+      labelCol = Some("label"), batchTag = Some("len-b")))
+    val ivfPq = s"$dir/ivfpq"
+    Similarity.persistIvfPqIndex(base, "vec_id", "embedding", "label", ivfPq,
+      m = 2, dim = dim)
+    refused("appendToIvfPqIndex", ivfPq, {
+      val (cent, books, codes) = Similarity.readIvfPqIndex(spark, ivfPq)
+      Similarity.ivfPqTopK(cent, books, codes, store, base, "vec_id", "embedding",
+        k = 2, m = 2, dim = dim, coarse = 4, nprobe = 2)
+    })(Similarity.appendToIvfPqIndex(bad, "vec_id", "embedding", "label", ivfPq,
+      m = 2, dim = dim, batchTag = Some("len-b")))
+    val graph = s"$dir/graph"
+    Similarity.persistKnnGraphStore(gvecs(0L to 19L), "vec_id", "embedding", graph,
+      k = 3, nlist = 2, iters = 2, maxCluster = 100, nprobe = 2)
+    refused("appendToKnnGraphStore", graph,
+      spark.read.parquet(s"$graph/edges").crossJoin(
+        spark.read.parquet(s"$graph/vectors").agg(count(lit(1)).as("n_vectors")))
+    )(Similarity.appendToKnnGraphStore(bad.drop("label"), "vec_id", "embedding",
+      graph, batchTag = Some("len-b")))
+  }
+
   // shared fixture for the kNN-graph store rows: two loose clusters
   // with jitter (the multi-probe case), ids interleaved across them
   private def gvecs(ids: Seq[Long]) = {
@@ -517,57 +585,18 @@ class StoreConcurrencySpec extends SparkSpec {
         "embedding", tiny, batchTag = Some("cap-b"))
     }
     assert(e.getMessage.contains("maxCluster") &&
-      e.getMessage.contains("rebuild"))
-    // autoRebuild: the SAME call retrains on stored ∪ batch under the
-    // held lock and lands the batch through the rebuild. The derived
-    // sizing (stored 10 + batch 50 against maxCluster 12 ->
-    // targetCell 6, nlist 10) targets PROBE-1 cell size maxCluster/2,
-    // but the cap the appender enforces counts ALL probed members
-    // (nprobe=2 doubles the average), so kmeans skew routinely leaves
-    // that first geometry over-cap — the auto path must then VERIFY
-    // the published cells and retrain at doubled nlist until the cap
-    // invariant actually holds (else the very next append re-triggers
-    // a corpus-scale rebuild, or throws without autoRebuild). The
-    // failed attempt above wrote NOTHING (cap check precedes all
-    // mutation), so `tiny` is still the pristine 10-vector store.
-    Similarity.appendToKnnGraphStore(gvecs(10L to 59L), "vec_id",
-      "embedding", tiny, batchTag = Some("cap-b"), autoRebuild = true)
-    // whatever nlist the verification converged to, the result equals
-    // a from-scratch build over everything at THAT geometry (the
-    // rebuild trains on the same (vid, eq) set with the same rule)
-    val convergedNlist = spark.read.parquet(s"$tiny/centroids")
-      .select(col("cid")).distinct().count().toInt
-    assert(convergedNlist >= 10,
-      "verification may only widen the derived geometry, never shrink it")
-    val scratch2 = Files.createTempDirectory("knn_store_cap2_").toString + "/g"
-    Similarity.persistKnnGraphStore(all, "vec_id", "embedding", scratch2,
-      k = 3, nlist = convergedNlist, iters = 2, maxCluster = 12, nprobe = 2)
-    assert(graphEdges(tiny) === graphEdges(scratch2),
-      "autoRebuild must equal a from-scratch build at the converged geometry")
-    // the cap the APPENDER relies on holds on the published store:
-    // ALL probed members per cell (probe 1 and 2), not just homes —
-    // the same count the overflow check uses
-    val v = spark.read.parquet(s"$tiny/vectors")
-    assert(v.filter(col("probe") === 1).count() === 60L)
-    assert(v.groupBy(col("cell")).count()
-      .filter(col("count") > 12).count() === 0L,
-      "no retrained cell may exceed maxCluster (all probes) after the auto append")
-    // the tag committed through the auto path: a replay is a no-op
-    val edgesBefore = graphEdges(tiny)
-    Similarity.appendToKnnGraphStore(gvecs(10L to 59L), "vec_id",
-      "embedding", tiny, batchTag = Some("cap-b"), autoRebuild = true)
-    assert(graphEdges(tiny) === edgesBefore,
-      "a replayed tag must no-op through the autoRebuild path too")
+      e.getMessage.contains("rebuildKnnGraphStore"))
     // wrong-dim batch fails loudly instead of silently mis-assigning
     // (the assignment kernel dots over min(dim, |centroid|))
     val wrongDim = (200L to 203L).map(i =>
       (i, Array.tabulate(4)(d => (i + d).toDouble)))
       .toDF("vec_id", "embedding")
-    val e2 = intercept[IllegalArgumentException] {
+    val e2 = intercept[Exception] {
       Similarity.appendToKnnGraphStore(wrongDim, "vec_id", "embedding",
         tiny, batchTag = Some("dim-b"))
     }
-    assert(e2.getMessage.contains("dim 4") && e2.getMessage.contains("dim 8"))
+    assert(causes(e2).exists(t => Option(t.getMessage)
+      .exists(m => m.contains("length 4") && m.contains("dim 8"))), s"got: $e2")
   }
 
   test("compactFlatCodes: file budget met, rows identical, appends serialize with compaction") {
